@@ -3,10 +3,10 @@ package graft
 /** Minimal warning channel for registry-maintenance code paths whose
   * degraded/compat arms are CORRECT but expensive or lossy-looking —
   * silence there lets a mis-deployed production registry pay a decayed
-  * cost curve with no operator-visible signal (ADVICE r18: the
-  * pre-stats fallback arm of `impactIndexStats`). Warnings go to stderr
-  * (the local-mode operator channel; a cluster deployment would wire a
-  * real logger here) and into a small in-memory ring so specs can
+  * cost curve with no operator-visible signal (ADVICE r18; e.g.
+  * `impactIndexStats` serving across an incomplete retention). Warnings
+  * go to stderr (the local-mode operator channel; a cluster deployment
+  * would wire a real logger here) and into a small in-memory ring so specs can
   * assert that a given arm actually fired — a log line nobody can test
   * for regresses to silence on the first refactor.
   */

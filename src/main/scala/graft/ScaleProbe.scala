@@ -2054,7 +2054,7 @@ object ScaleProbe {
         .delete(iregPath, true)
       time(s"zipfreg registry ingest ${factor}x ($nDocs docs)") {
         graft.streaming.Incremental.impactBatchIngest(spark, ireg, docsM,
-          "doc_id", "text")
+          "doc_id", "text", epoch = 0L)
         spark.read.parquet(s"$ireg/impact").count()
       }
       graft.Caches.clearAll(spark)
@@ -2176,98 +2176,50 @@ object ScaleProbe {
         "layout removed)")
       graft.Caches.clearAll(spark)
     }
-    // Retention economics (r20, VERDICT r19 #1/#6): price the epoch-
-    // SEGMENTED retention against the monolithic whole-registry rebuild
-    // at a fixed retired share. Four equal ingest epochs; retire the
-    // oldest (25% — below a 50% threshold, so the segmented form is
-    // DROP-ONLY: directory deletes + delta-log filters, no surviving
-    // byte rewritten and no index rebuild), then retire the next
-    // (cumulative 50% ≥ a 25% threshold → the segmented form rebuilds
-    // the truncated index from survivors — its one corpus-proportional
-    // READ, amortized by the threshold rule). The monolithic form
-    // rewrites postings+dl+stats+corpus+impact+meta on BOTH events.
-    // Serve hash-equality asserted at the half-corpus point (both forms
-    // retain the same doc set and recalibrate to the same pow2 depth).
-    // Requires a prior `zipfreg` run's artifacts.
+    // Retention economics (r20, VERDICT r19 #1/#6): price the epoch
+    // cut at a fixed retired share. Four equal ingest epochs; retire the
+    // oldest (25% — below a 50% threshold, so the cut is DROP-ONLY:
+    // directory deletes + delta-log filters, no surviving byte rewritten
+    // and no index rebuild), then retire the next (cumulative 50% ≥ a 25%
+    // threshold → the truncated index rebuilds from survivors — the
+    // cut's one corpus-proportional READ, amortized by the threshold
+    // rule). Requires a prior `zipfreg` run's artifacts.
     if (want("zipfretain")) for (factor <- probeFactors) {
-      import graft.operators.TermStats
       import graft.streaming.Incremental
       require(new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory,
         s"zipfretain needs a prior zipfreg run (missing zrdocs$factor)")
       val docsM = spark.read.parquet(s"/tmp/scale/zrdocs$factor")
       val nDocs = 10000L * factor
       val quarter = nDocs / 4
-      val segReg = s"/tmp/scale/ztseg$factor"
-      val monoReg = s"/tmp/scale/ztmono$factor"
-      for (r <- Seq(segReg, monoReg)) {
-        val p = new org.apache.hadoop.fs.Path(r)
+      val reg = s"/tmp/scale/ztseg$factor"
+      locally {
+        val p = new org.apache.hadoop.fs.Path(reg)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(p, true)
       }
-      def epochSlice(e: Long) = docsM.filter(
-        col("doc_id") >= e * quarter && col("doc_id") < (e + 1) * quarter)
-      time(s"zipfretain SEGMENTED ingest 4 epochs ${factor}x ($nDocs docs)") {
+      time(s"zipfretain ingest 4 epochs ${factor}x ($nDocs docs)") {
         for (e <- 0L until 4L)
-          Incremental.impactBatchIngestSegmented(spark, segReg,
-            epochSlice(e), "doc_id", "text", epoch = e)
-        spark.read.parquet(s"$segReg/impact").count()
+          Incremental.impactBatchIngest(spark, reg,
+            docsM.filter(col("doc_id") >= e * quarter &&
+              col("doc_id") < (e + 1) * quarter),
+            "doc_id", "text", epoch = e)
+        spark.read.parquet(s"$reg/impact").count()
       }
       graft.Caches.clearAll(spark)
-      time(s"zipfretain MONOLITHIC ingest 4 folds ${factor}x") {
-        for (e <- 0L until 4L)
-          Incremental.impactBatchIngest(spark, monoReg,
-            epochSlice(e), "doc_id", "text")
-        spark.read.parquet(s"$monoReg/impact").count()
-      }
-      graft.Caches.clearAll(spark)
-      time(s"zipfretain retire-25% MONOLITHIC (full rewrite) ${factor}x") {
-        Incremental.retainImpactRegistry(spark, monoReg,
-          docsM.filter(col("doc_id") >= quarter)
-            .select(col("doc_id").as("doc")))
-        spark.read.parquet(s"$monoReg/meta").count()
-      }
-      graft.Caches.clearAll(spark)
-      time(s"zipfretain retire-25% SEGMENTED (drop-only) ${factor}x") {
-        Incremental.retainImpactSegments(spark, segReg, minEpoch = 1L,
+      time(s"zipfretain retire-25% (drop-only) ${factor}x") {
+        Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L,
           rebuildSharePm = 500000L)
-        spark.read.parquet(s"$segReg/meta").count()
+        spark.read.parquet(s"$reg/meta").count()
       }
       graft.Caches.clearAll(spark)
-      time(s"zipfretain retire-to-50% MONOLITHIC (full rewrite) ${factor}x") {
-        Incremental.retainImpactRegistry(spark, monoReg,
-          docsM.filter(col("doc_id") >= 2 * quarter)
-            .select(col("doc_id").as("doc")))
-        spark.read.parquet(s"$monoReg/meta").count()
-      }
-      graft.Caches.clearAll(spark)
-      time(s"zipfretain retire-to-50% SEGMENTED (threshold rebuild) ${factor}x") {
-        Incremental.retainImpactSegments(spark, segReg, minEpoch = 2L,
+      time(s"zipfretain retire-to-50% (threshold rebuild) ${factor}x") {
+        Incremental.retainImpactRegistry(spark, reg, minEpoch = 2L,
           rebuildSharePm = 250000L)
-        spark.read.parquet(s"$segReg/meta").count()
+        spark.read.parquet(s"$reg/meta").count()
       }
-      graft.Caches.clearAll(spark)
-      // hash equality between the two retained forms (VERDICT r19 #6)
-      val qFixed = docsM.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-      val (mp, mdf, mdl, mcorp) = Incremental.impactIndexStats(spark, monoReg)
-      val monoServe = TermStats.bm25TopKImpact(
-          Incremental.impactIndexRegistry(spark, monoReg), mp, mdf, mdl,
-          mcorp, qFixed, "q_id", "qt", 5)
-        .collect().map(_.toString).sorted.toSeq
-      val (sp, sdf, sdl, scorp) =
-        Incremental.impactIndexStatsSegmented(spark, segReg)
-      val segServe = TermStats.bm25TopKImpact(
-          Incremental.impactIndexRegistry(spark, segReg), sp, sdf, sdl,
-          scorp, qFixed, "q_id", "qt", 5)
-        .collect().map(_.toString).sorted.toSeq
-      require(monoServe == segServe, s"zipfretain ${factor}x: segmented " +
-        "and monolithic retained serves DIVERGED")
-      println(s"[scale] zipfretain ${factor}x serve hash-equal: " +
-        s"${segServe.size} rows (segmented == monolithic)")
       graft.Caches.clearAll(spark)
     }
-    // Segmented-registry compaction economics (r20): epochs below the
+    // Impact-registry compaction economics (r20): epochs below the
     // newest are SEALED (monotone-epoch require), so `compact_mark`
     // lets compaction skip once-compacted sealed segments and the
     // delta-log fold prune its dl membership read to the epochs still
@@ -2305,13 +2257,13 @@ object ScaleProbe {
           .delete(p, true)
       }
       for (e <- 0L until 4L)
-        Incremental.impactBatchIngestSegmented(spark, reg,
+        Incremental.impactBatchIngest(spark, reg,
           docsM.filter(col("doc_id") >= e * quarter &&
             col("doc_id") < (e + 1) * quarter),
           "doc_id", "text", epoch = e)
       graft.Caches.clearAll(spark)
       time(s"segcompact COLD compaction (4 segments, $nDocs docs) ${factor}x") {
-        Incremental.compactImpactSegments(spark, reg)
+        Incremental.compactImpactRegistry(spark, reg)
         spark.read.parquet(s"$reg/stats").count()
       }
       // two fixed-size tail epochs: the first seals the corpus-sized
@@ -2320,15 +2272,15 @@ object ScaleProbe {
       def tail(i: Long) = docsM.filter(col("doc_id") < 10000L)
         .select((col("doc_id") + nDocs + i * 10000L).as("doc_id"),
           col("text"))
-      Incremental.impactBatchIngestSegmented(spark, reg, tail(0L),
+      Incremental.impactBatchIngest(spark, reg, tail(0L),
         "doc_id", "text", epoch = 4L)
-      Incremental.compactImpactSegments(spark, reg) // advances mark to 3
-      Incremental.impactBatchIngestSegmented(spark, reg, tail(1L),
+      Incremental.compactImpactRegistry(spark, reg) // advances mark to 3
+      Incremental.impactBatchIngest(spark, reg, tail(1L),
         "doc_id", "text", epoch = 5L)
       graft.Caches.clearAll(spark)
       time(s"segcompact STEADY compaction (sealed skipped; " +
         s"current 10k docs) ${factor}x") {
-        Incremental.compactImpactSegments(spark, reg)
+        Incremental.compactImpactRegistry(spark, reg)
         spark.read.parquet(s"$reg/stats").count()
       }
       graft.Caches.clearAll(spark)
@@ -2412,7 +2364,8 @@ object ScaleProbe {
       val input = MemoryStream[(Long, String)]
       val query = graft.streaming.Incremental.streamingImpactIndex(
         input.toDF().toDF("doc_id", "text"),
-        s"/tmp/scale/impinc$factor/ckpt", reg, "doc_id", "text")
+        s"/tmp/scale/impinc$factor/ckpt", reg, "doc_id", "text",
+        epochOf = _ => 0L)
       try {
         // seed the standing corpus as one batch (this fold pays the
         // first build — excluded from the steady-state reading)

@@ -1124,6 +1124,91 @@ object Curation {
     } finally { postings.unpersist(); () }
   }
 
+  /** The impact serve (k = 5) for the query slice `doc_id % querySlice
+    * = 0` (each query = its doc's first four tokens), every returned doc
+    * flagged `hit_exact` when the full-scoring exact top-5 returns it
+    * too — the one row shape q204 and q206–q210 pin, against the one
+    * oracle template ([[Oracles]] `impactServeSql`). `healedAudit`: the
+    * exact leg heals crash-replay duplicates on ITS OWN candidate
+    * footprint (`bm25TopKFromIndexHealed`, r20 — registry-read frames
+    * may carry them; an upstream postings/dl distinct would pay two
+    * full-registry exchanges for the same rows); q204's in-lineage
+    * frames cannot carry any. Eagerly checkpointed, so the result is
+    * computed while the caller's inputs are still live (q204 unpersists
+    * its frames right after).
+    */
+  private def impactServeAudit(docs: DataFrame, querySlice: Int,
+                               trunc: DataFrame, postings: DataFrame,
+                               dfq: DataFrame, dl: DataFrame,
+                               corp: DataFrame,
+                               healedAudit: Boolean = true): DataFrame = {
+    val qs = docs.filter(col("doc_id") % querySlice === 0)
+      .select(col("doc_id").as("q_id"),
+        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
+      qs, "q_id", "qt", k = 5)
+    val exact =
+      (if (healedAudit)
+        TermStats.bm25TopKFromIndexHealed(postings, dfq, dl, corp, qs,
+          "q_id", "qt", k = 5)
+      else
+        TermStats.bm25TopKFromIndex(postings, dfq, dl, corp, qs,
+          "q_id", "qt", k = 5))
+        .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
+    served.join(exact, Seq("q", "doc"), "left_outer")
+      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
+      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
+        col("n_terms"), col("score_pm"), col("hit_exact"))
+      .localCheckpoint(true)
+  }
+
+  /** An impact-registry directory for one query run: deterministic per
+    * (session, data dir, `tag`) — the q117 artifact convention — and
+    * CLEARED at entry: the registry is append-only, so a stale copy from
+    * a resident engine's previous pass would anti-join the whole corpus
+    * away.
+    */
+  private def freshRegistryDir(spark: SparkSession, d: String,
+                               tag: String): String = {
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_impact_${tag}_" + spark.sparkContext.applicationId + "_" +
+        java.lang.Integer.toHexString(d.hashCode)).toString
+    val hPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(hPath)) fs.delete(hPath, true)
+    dir
+  }
+
+  /** The registry-served impact serve + audit: the truncated index and
+    * the serve inputs read ONLY from registry artifacts
+    * ([[graft.streaming.Incremental.impactIndexRegistry]] +
+    * [[graft.streaming.Incremental.impactIndexStats]] — postings plus
+    * the MATERIALIZED df/corpus delta logs, never a per-serve rollup of
+    * the full postings registry, the zipfreg decay shape; plan-pinned in
+    * PlanSpec).
+    */
+  private def registryServeAudit(spark: SparkSession, docs: DataFrame,
+                                 dir: String, querySlice: Int): DataFrame = {
+    import graft.streaming.Incremental
+    val (postings, dfq, dl, corp) = Incremental.impactIndexStats(spark, dir)
+    impactServeAudit(docs, querySlice, Incremental.impactIndexRegistry(
+      spark, dir), postings, dfq, dl, corp)
+  }
+
+  /** The table-served impact serve + audit: all three corpus-scale frames
+    * from the bucketed catalog tables under `prefix`, only the tiny
+    * df/corpus stats from the registry's delta logs.
+    */
+  private def tableServeAudit(spark: SparkSession, docs: DataFrame,
+                              dir: String, prefix: String,
+                              querySlice: Int): DataFrame = {
+    val (_, dfq, _, corp) =
+      graft.streaming.Incremental.impactIndexStats(spark, dir)
+    impactServeAudit(docs, querySlice, spark.table(s"${prefix}_impact"),
+      spark.table(s"${prefix}_postings"), dfq, spark.table(s"${prefix}_dl"),
+      corp)
+  }
+
   /** q204: impact-ordered truncated-index BM25 serve + exact-recall
     * audit ([[TermStats.bm25ImpactIndex]] at the CALIBRATED depth
     * [[TermStats.impactM]] m(n) →
@@ -1147,23 +1232,12 @@ object Curation {
     val dl = dl0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val corp = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("a_tok"))
-      val qs = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
       // n from the corpus stats row (docs with ≥1 token — the oracle's
       // n_docs), not docs.count(): the two differ on empty-text docs
       val trunc = TermStats.bm25ImpactIndex(postings, dl,
         m = TermStats.impactM(corp.head.getLong(0)))
-      val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-        qs, "q_id", "qt", k = 5)
-      val exact = TermStats.bm25TopKFromIndex(postings, dfq, dl, corp, qs,
-          "q_id", "qt", k = 5)
-        .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-      served.join(exact, Seq("q", "doc"), "left_outer")
-        .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-        .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-          col("n_terms"), col("score_pm"), col("hit_exact"))
-        .localCheckpoint(true)
+      impactServeAudit(docs, 50, trunc, postings, dfq, dl, corp,
+        healedAudit = false)
     } finally { postings.unpersist(); dl.unpersist(); () }
   }
 
@@ -1207,64 +1281,30 @@ object Curation {
     * the production deployment q204 only rehearses in lineage. The
     * corpus lands in an on-disk impact registry through TWO
     * [[graft.streaming.Incremental.impactBatchIngest]] folds (even ids
-    * as the standing corpus, odd ids as the arriving batch — the second
-    * fold takes the MONOTONE MERGE arm) with a
+    * as the standing corpus in epoch 0, odd ids as the arriving batch in
+    * epoch 1 — the second fold takes the MONOTONE MERGE arm) with a
     * [[graft.streaming.Incremental.compactImpactRegistry]] fold between
-    * them; the serve then reads ONLY registry artifacts:
-    * [[graft.streaming.Incremental.impactIndexRegistry]] for the
-    * truncated index and
-    * [[graft.streaming.Incremental.impactIndexStats]] for postings +
-    * the MATERIALIZED df/corpus stats (the additive `stats/`/`corpus/`
-    * delta logs — never a per-serve rollup of the full postings
-    * registry, the zipfreg decay shape; plan-pinned in PlanSpec). The
-    * oracle computes the identical serve from full-corpus CTEs, so one
-    * hash pins ingest additivity, the merge theorem on disk, the
-    * materialized-stats arithmetic, the calibrated depth, the rescore,
-    * and the hit_exact audit at once. `quantizeDepth = false`: a batch
-    * build lands on the exact calibrated m(n) the oracle computes
-    * (pow2 amortization is the streaming maintainer's policy, pinned in
-    * StreamBatchEquivalenceSpec).
-    *
-    * Registry path: deterministic per (session, data dir) — the q117
-    * artifact convention — CLEARED at entry: the registry is
-    * append-only, so a stale copy from a resident engine's previous
-    * pass would anti-join the whole corpus away.
+    * them; the serve then reads ONLY registry artifacts
+    * ([[registryServeAudit]]). The oracle computes the identical serve
+    * from full-corpus CTEs, so one hash pins ingest additivity, the merge
+    * theorem on disk, the materialized-stats arithmetic, the calibrated
+    * depth, the rescore, and the hit_exact audit at once.
+    * `quantizeDepth = false`: a batch build lands on the exact
+    * calibrated m(n) the oracle computes (pow2 amortization is the
+    * streaming maintainer's policy, pinned in StreamBatchEquivalenceSpec).
     */
   def q206ImpactRegistryServe(spark: SparkSession, d: String): DataFrame = {
     import graft.streaming.Incremental
     val docs = Tables.balanced(spark, d, "documents")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_impact_reg_" + spark.sparkContext.applicationId + "_" +
-        java.lang.Integer.toHexString(d.hashCode)).toString
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true)
+    val dir = freshRegistryDir(spark, d, "reg")
     Incremental.impactBatchIngest(spark, dir,
-      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", epoch = 0L,
       quantizeDepth = false)
     Incremental.compactImpactRegistry(spark, dir)
     Incremental.impactBatchIngest(spark, dir,
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
+      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", epoch = 1L,
       quantizeDepth = false)
-    val trunc = Incremental.impactIndexRegistry(spark, dir)
-    val (postings, dfq, dl, corp) = Incremental.impactIndexStats(spark, dir)
-    val qs = docs.filter(col("doc_id") % 40 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-      qs, "q_id", "qt", k = 5)
-    // audit leg: full-scoring exact reference, replay-healed on ITS OWN
-    // candidate footprint (bm25TopKFromIndexHealed, r20) - the pre-r20
-    // upstream postings.distinct()/dl.distinct() paid two full-registry
-    // exchanges per run for the same rows
-    val exact = TermStats.bm25TopKFromIndexHealed(postings, dfq,
-        dl, corp, qs, "q_id", "qt", k = 5)
-      .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-    served.join(exact, Seq("q", "doc"), "left_outer")
-      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-        col("n_terms"), col("score_pm"), col("hit_exact"))
-      .localCheckpoint(true)
+    registryServeAudit(spark, docs, dir, 40)
   }
 
   /** q207: impact-registry RETENTION pinned in the oracle gate — the
@@ -1273,61 +1313,35 @@ object Curation {
     * impact registry and checked end-to-end through real registry I/O,
     * the treatment the append path got with q206. The corpus lands in
     * the registry through two [[graft.streaming.Incremental
-    * .impactBatchIngest]] folds (even then odd ids), then
-    * [[graft.streaming.Incremental.retainImpactRegistry]] retires every
-    * third doc (`doc_id % 3 = 0` — the "oldest segment" stand-in; the
-    * registry stores no timestamps, the window predicate lives with the
-    * caller's doc metadata) — a REBUILD event: postings/dl rewritten
-    * semi-joined to the kept set, stats/corpus re-materialized folded,
-    * impact/meta rebuilt at the depth RECALIBRATED to the retained
-    * count. The serve then reads ONLY registry artifacts, exactly
-    * q206's shape. The oracle computes the identical serve from
+    * .impactBatchIngest]] folds — epoch 0 = every third doc
+    * (`doc_id % 3 = 0`, the "oldest segment"), epoch 1 = the rest — then
+    * [[graft.streaming.Incremental.retainImpactRegistry]] retires epoch
+    * 0. The retired 1/3 share crosses the 25% default threshold, so the
+    * cut takes the REBUILD arm: segment directories dropped, stats/corpus
+    * filtered per epoch, impact/meta rebuilt at the depth RECALIBRATED to
+    * the retained count. The serve then reads ONLY registry artifacts,
+    * exactly q206's shape. The oracle computes the identical serve from
     * full-corpus CTEs filtered to the retained predicate — so one hash
-    * pins the retention rewrite, the re-materialized stats arithmetic,
-    * the recalibrated depth m(n_retained), the truncation on the
-    * retained corpus, the rescore, and the hit_exact audit. Queries
-    * come from the UNRETAINED doc table (`%80` slice): a query whose
-    * source doc was retired must still serve — against retained docs
-    * only (the score join is dl-inner; the oracle's CTEs encode the
-    * same).
+    * pins the retention cut, the filtered stats arithmetic, the
+    * recalibrated depth m(n_retained), the truncation on the retained
+    * corpus, the rescore, and the hit_exact audit. Queries come from the
+    * UNRETAINED doc table (`%80` slice): a query whose source doc was
+    * retired must still serve — against retained docs only (the score
+    * join is dl-inner; the oracle's CTEs encode the same).
     */
   def q207ImpactRetainServe(spark: SparkSession, d: String): DataFrame = {
     import graft.streaming.Incremental
     val docs = Tables.balanced(spark, d, "documents")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_impact_ret_" + spark.sparkContext.applicationId + "_" +
-        java.lang.Integer.toHexString(d.hashCode)).toString
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true)
+    val dir = freshRegistryDir(spark, d, "ret")
     Incremental.impactBatchIngest(spark, dir,
-      docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
+      docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", epoch = 0L,
       quantizeDepth = false)
     Incremental.impactBatchIngest(spark, dir,
-      docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
+      docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", epoch = 1L,
       quantizeDepth = false)
-    Incremental.retainImpactRegistry(spark, dir,
-      docs.filter(col("doc_id") % 3 =!= 0).select(col("doc_id").as("doc")),
+    Incremental.retainImpactRegistry(spark, dir, minEpoch = 1L,
       quantizeDepth = false)
-    val trunc = Incremental.impactIndexRegistry(spark, dir)
-    val (postings, dfq, dl, corp) = Incremental.impactIndexStats(spark, dir)
-    val qs = docs.filter(col("doc_id") % 80 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-      qs, "q_id", "qt", k = 5)
-    // audit leg: full-scoring exact reference, replay-healed on ITS OWN
-    // candidate footprint (bm25TopKFromIndexHealed, r20) - the pre-r20
-    // upstream postings.distinct()/dl.distinct() paid two full-registry
-    // exchanges per run for the same rows
-    val exact = TermStats.bm25TopKFromIndexHealed(postings, dfq,
-        dl, corp, qs, "q_id", "qt", k = 5)
-      .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-    served.join(exact, Seq("q", "doc"), "left_outer")
-      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-        col("n_terms"), col("score_pm"), col("hit_exact"))
-      .localCheckpoint(true)
+    registryServeAudit(spark, docs, dir, 80)
   }
 
   /** q208: the BUCKETED serving layout pinned in the oracle gate — the
@@ -1339,112 +1353,58 @@ object Curation {
     * postings/dl doc-bucketed, the truncated index term-bucketed; the
     * write-time shuffle the serve then never pays), and the serve reads
     * `spark.table(…)` for all three corpus-scale frames with only the
-    * tiny df/corpus stats coming from the registry's delta logs. The
-    * oracle computes the identical serve from full-corpus CTEs — one
-    * hash pins that the layout change moves ZERO rows: publication,
-    * bucketed scans, the co-located doc-keyed rescore, truncation,
-    * depth, scores, and the hit_exact audit. (BucketedServeSpec
-    * additionally pins the PLAN claim — no shuffle over a bare
-    * published-registry scan under a forced sort-merge regime — which a
-    * row hash cannot see.) Query slice `%48`: distinct from q206's so
-    * the two rows never mask each other.
+    * tiny df/corpus stats coming from the registry's delta logs
+    * ([[tableServeAudit]]). The oracle computes the identical serve from
+    * full-corpus CTEs — one hash pins that the layout change moves ZERO
+    * rows: publication, bucketed scans, the co-located doc-keyed
+    * rescore, truncation, depth, scores, and the hit_exact audit.
+    * (BucketedServeSpec additionally pins the PLAN claim — no shuffle
+    * over a bare published-registry scan under a forced sort-merge
+    * regime — which a row hash cannot see.) Query slice `%48`: distinct
+    * from q206's so the two rows never mask each other.
     */
   def q208BucketedServe(spark: SparkSession, d: String): DataFrame = {
     import graft.streaming.Incremental
     val docs = Tables.balanced(spark, d, "documents")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_impact_bkt_" + spark.sparkContext.applicationId + "_" +
-        java.lang.Integer.toHexString(d.hashCode)).toString
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true)
+    val dir = freshRegistryDir(spark, d, "bkt")
     Incremental.impactBatchIngest(spark, dir, docs, "doc_id", "text",
-      quantizeDepth = false)
+      epoch = 0L, quantizeDepth = false)
     val prefix = "graft_q208_" + java.lang.Integer.toHexString(d.hashCode)
     Incremental.publishImpactServeTables(spark, dir, prefix)
-    val (_, dfq, _, corp) = Incremental.impactIndexStats(spark, dir)
-    val trunc = spark.table(s"${prefix}_impact")
-    val postings = spark.table(s"${prefix}_postings")
-    val dl = spark.table(s"${prefix}_dl")
-    val qs = docs.filter(col("doc_id") % 48 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-      qs, "q_id", "qt", k = 5)
-    // the AUDIT leg full-scores the exact reference, replay-healed on
-    // its own candidate footprint (bm25TopKFromIndexHealed, r20) so a
-    // crash-replayed registry can't double-count tf. Corpus-
-    // proportional, like the audit itself.
-    val exact = TermStats.bm25TopKFromIndexHealed(postings, dfq,
-        dl, corp, qs, "q_id", "qt", k = 5)
-      .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-    served.join(exact, Seq("q", "doc"), "left_outer")
-      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-        col("n_terms"), col("score_pm"), col("hit_exact"))
-      .localCheckpoint(true)
+    tableServeAudit(spark, docs, dir, prefix, 48)
   }
 
-  /** q209: SEGMENTED retention pinned in the oracle gate — the
-    * O(retired + delta-log) retention
-    * ([[graft.streaming.Incremental.retainImpactSegments]], VERDICT r19
-    * #1) checked end-to-end through real registry I/O, the treatment
-    * q207 gives the monolithic rebuild form. The corpus lands through
-    * THREE epoch folds of
-    * [[graft.streaming.Incremental.impactBatchIngestSegmented]]
-    * (epoch e = the `doc_id % 3 = e` slice — the epoch IS the
-    * retirement unit, the reference's per-follower-epoch T4 cadence,
-    * `src/etl.py:94-97`), then `retainImpactSegments(minEpoch = 1)`
-    * retires epoch 0: its segment directories DROP (no surviving byte
-    * rewritten), the stats/corpus delta logs filter their epoch-0 rows
-    * (exact — per-epoch deltas are additive), and the retired share
-    * (1/3 ≥ the 25% default threshold) triggers the index rebuild from
-    * survivors at the depth recalibrated to the retained count. The
-    * retained predicate is therefore q207's (`doc_id % 3 <> 0`), so the
-    * oracle is q207's from-scratch SQL with a distinct query slice
-    * (`%60`, from the unretained doc table — a retired query doc still
-    * serves, against retained docs only) — one hash pins the segmented
-    * ingest equivalence, the directory-drop retention, the filtered-log
-    * stats arithmetic, the recalibrated depth, the rescore, and the
-    * hit_exact audit. The drop-only (below-threshold) arm and the crash
-    * contract are spec-pinned in ImpactSegmentsSpec — an oracle hash
-    * can't see them.
+  /** q209: multi-epoch retention pinned in the oracle gate — the
+    * O(retired + delta-log) epoch cut
+    * ([[graft.streaming.Incremental.retainImpactRegistry]], VERDICT r19
+    * #1) over THREE epoch folds of
+    * [[graft.streaming.Incremental.impactBatchIngest]] (epoch e = the
+    * `doc_id % 3 = e` slice — the epoch IS the retirement unit, the
+    * reference's per-follower-epoch T4 cadence, `src/etl.py:94-97`),
+    * then `retainImpactRegistry(minEpoch = 1)` retires epoch 0: its
+    * segment directories DROP (no surviving byte rewritten), the
+    * stats/corpus delta logs filter their epoch-0 rows (exact —
+    * per-epoch deltas are additive), and the retired share (1/3 ≥ the
+    * 25% default threshold) triggers the index rebuild from survivors at
+    * the depth recalibrated to the retained count. The retained
+    * predicate is therefore q207's (`doc_id % 3 <> 0`), here spread over
+    * two surviving epochs, so the oracle is q207's from-scratch SQL
+    * with a distinct query slice (`%60`, from the unretained doc table —
+    * a retired query doc still serves, against retained docs only). The
+    * drop-only (below-threshold) arm and the crash contract are
+    * spec-pinned in ImpactSegmentsSpec — an oracle hash can't see them.
     */
   def q209SegmentedRetainServe(spark: SparkSession, d: String): DataFrame = {
     import graft.streaming.Incremental
     val docs = Tables.balanced(spark, d, "documents")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_impact_seg_" + spark.sparkContext.applicationId + "_" +
-        java.lang.Integer.toHexString(d.hashCode)).toString
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true)
+    val dir = freshRegistryDir(spark, d, "seg")
     for (e <- 0L until 3L)
-      Incremental.impactBatchIngestSegmented(spark, dir,
+      Incremental.impactBatchIngest(spark, dir,
         docs.filter(col("doc_id") % 3 === e), "doc_id", "text", epoch = e,
         quantizeDepth = false)
-    Incremental.retainImpactSegments(spark, dir, minEpoch = 1L,
+    Incremental.retainImpactRegistry(spark, dir, minEpoch = 1L,
       quantizeDepth = false)
-    val trunc = Incremental.impactIndexRegistry(spark, dir)
-    val (postings, dfq, dl, corp) =
-      Incremental.impactIndexStatsSegmented(spark, dir)
-    val qs = docs.filter(col("doc_id") % 60 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-      qs, "q_id", "qt", k = 5)
-    // audit leg: full-scoring exact reference, replay-healed on ITS OWN
-    // candidate footprint (bm25TopKFromIndexHealed, r20) - the pre-r20
-    // upstream postings.distinct()/dl.distinct() paid two full-registry
-    // exchanges per run for the same rows
-    val exact = TermStats.bm25TopKFromIndexHealed(postings, dfq,
-        dl, corp, qs, "q_id", "qt", k = 5)
-      .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-    served.join(exact, Seq("q", "doc"), "left_outer")
-      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-        col("n_terms"), col("score_pm"), col("hit_exact"))
-      .localCheckpoint(true)
+    registryServeAudit(spark, docs, dir, 60)
   }
 
   /** q210: the STREAM-GROWN bucketed serving tables pinned in the
@@ -1469,12 +1429,7 @@ object Curation {
   def q210StreamGrownServe(spark: SparkSession, d: String): DataFrame = {
     import graft.streaming.Incremental
     val docs = Tables.balanced(spark, d, "documents")
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_impact_sgs_" + spark.sparkContext.applicationId + "_" +
-        java.lang.Integer.toHexString(d.hashCode)).toString
-    val hPath = new org.apache.hadoop.fs.Path(base)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) fs.delete(hPath, true)
+    val base = freshRegistryDir(spark, d, "sgs")
     val prefix = "graft_q210_" + java.lang.Integer.toHexString(d.hashCode)
     for (sfx <- Seq("postings", "dl", "impact"))
       spark.sql(s"DROP TABLE IF EXISTS `${prefix}_$sfx`")
@@ -1492,25 +1447,7 @@ object Curation {
       s"$base/ckpt", s"$base/reg", prefix, "doc_id", "text",
       quantizeDepth = false)
     try query.processAllAvailable() finally query.stop()
-    val (_, dfq, _, corp) =
-      Incremental.impactIndexStats(spark, s"$base/reg")
-    val trunc = spark.table(s"${prefix}_impact")
-    val postings = spark.table(s"${prefix}_postings")
-    val dl = spark.table(s"${prefix}_dl")
-    val qs = docs.filter(col("doc_id") % 72 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-      qs, "q_id", "qt", k = 5)
-    // audit leg: exact reference, footprint-healed (q208's convention)
-    val exact = TermStats.bm25TopKFromIndexHealed(postings, dfq,
-        dl, corp, qs, "q_id", "qt", k = 5)
-      .select(col("q"), col("doc"), lit(1L).as("hit_exact"))
-    served.join(exact, Seq("q", "doc"), "left_outer")
-      .withColumn("hit_exact", coalesce(col("hit_exact"), lit(0L)))
-      .select(col("q").as("q_id"), col("rank"), col("doc").as("doc_id"),
-        col("n_terms"), col("score_pm"), col("hit_exact"))
-      .localCheckpoint(true)
+    tableServeAudit(spark, docs, s"$base/reg", prefix, 72)
   }
 
   /** q197: quality-calibration card — "are duplicates low-quality?",

@@ -4005,6 +4005,67 @@ object Oracles {
        |FROM cab JOIN cw ca ON cab.a = ca.w JOIN cw cb ON cab.b = cb.w
        |CROSS JOIN tot""".stripMargin
 
+  /** The impact serve + `hit_exact` audit SQL shared by q204 and
+    * q206–q210 (the engine side is `Curation.impactServeAudit`): the
+    * full-corpus truncated-index serve (per term top-m(n) by tf desc, dl
+    * asc, doc asc; m(n) = GREATEST(64, ceil(n_docs/625)) — the calibrated
+    * TermStats.impactM, integer arithmetic on both sides), the exact
+    * rescore, and the unpruned top-5 the audit flags against. `keep`:
+    * the retained-doc predicate the corpus CTEs are filtered to (a
+    * retention query's surviving docs; queries still come from the
+    * unretained table). `querySlice`: queries are the docs with
+    * `doc_id % querySlice = 0`.
+    */
+  private def impactServeSql(querySlice: Int,
+                             keep: Option[String] = None): String = {
+    val retained = keep.fold("")(p => s"\n       |     WHERE $p")
+    s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
+       |    (SELECT doc_id, unnest($Toks) AS term FROM documents$retained)
+       |  WHERE length(term) >= 1 GROUP BY 1, 2),
+       |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
+       |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
+       |qt AS (SELECT DISTINCT q_id, term FROM
+       |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
+       |     FROM documents WHERE doc_id % $querySlice = 0)
+       |  WHERE length(term) >= 1),
+       |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
+       |    row_number() OVER (PARTITION BY tf.term
+       |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
+       |  FROM tf JOIN dl USING (doc))
+       |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
+       |               FROM corpus)),
+       |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
+       |  JOIN trunc USING (term)),
+       |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
+       |  JOIN tf p ON p.doc = c.doc
+       |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
+       |sc AS (SELECT q_id, doc,
+       |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
+       |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
+       |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
+       |       CROSS JOIN corpus),
+       |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
+       |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
+       |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
+       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
+       |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
+       |esc AS (SELECT q_id, doc,
+       |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
+       |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
+       |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
+       |       JOIN dl USING (doc) CROSS JOIN corpus),
+       |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
+       |  FROM esc GROUP BY 1, 2),
+       |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
+       |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
+       |  FROM ea) WHERE rk <= 5)
+       |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
+       |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+       |    AS hit_exact
+       |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin
+  }
+
   private val curationBase: Map[String, String] = Map(
     // q197: quality deciles (exact rank arithmetic, the naive global
     // window form) × near-dup membership (q43's cluster nodes), with
@@ -4166,334 +4227,33 @@ object Oracles {
          |  CAST(sum(dl) AS BIGINT) AS dl_sum
          |FROM idx GROUP BY 1""".stripMargin,
 
-    // q204: impact-truncated index (per term top-m(n) by tf desc, dl
-    // asc, doc asc; m(n) = GREATEST(64, ceil(n_docs/625)) — the
-    // calibrated TermStats.impactM, integer arithmetic on both sides)
-    // + exact rescore + the same hit_exact audit.
-    "q204_bm25_impact" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 50 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
-
-    // q206: the registry-SERVED impact path — the engine ingests the
-    // corpus into an on-disk registry in two folds (+ a compaction) and
-    // serves from the materialized stats/impact artifacts; this SQL
-    // computes the identical serve from full-corpus CTEs (same shape as
-    // q204, %40 query slice), never seeing the registry. Hash equality
-    // pins ingest additivity + the on-disk merge + the materialized
-    // df/corpus arithmetic in one row shape.
-    "q206_impact_registry_serve" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 40 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
-
-    // q207: impact-registry RETENTION → registry-only serve — the
-    // engine ingests the full corpus in two folds, retires every third
-    // doc through retainImpactRegistry (postings/dl rewritten, stats
-    // re-materialized, depth RECALIBRATED to the retained count), and
-    // serves from the rebuilt artifacts; this SQL computes the
-    // identical serve from full-corpus CTEs filtered to the retained
-    // predicate, never seeing the registry. Queries come from the
-    // UNRETAINED doc table (%80 slice) — a retired query doc still
-    // serves, against retained docs only.
-    "q207_impact_retain_serve" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents
-         |     WHERE doc_id % 3 <> 0)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 80 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
-
-    // q209: SEGMENTED retention → registry-only serve — the engine
-    // ingests three epoch folds (epoch e = doc_id % 3 = e), retires
-    // epoch 0 through retainImpactSegments (segment directories
-    // DROPPED, delta logs filtered per epoch, index rebuilt from
-    // survivors at the recalibrated depth — never a surviving-byte
-    // rewrite), and serves from the registry. The retained corpus is
-    // q207's predicate, so this is q207's from-scratch SQL with the
-    // %60 query slice; the drop-only arm and crash contract are
-    // spec-pinned (ImpactSegmentsSpec) — a row hash can't see them.
-    "q209_segmented_retain_serve" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents
-         |     WHERE doc_id % 3 <> 0)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 60 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
-
-    // q208: the bucketed serving layout — the engine publishes the
-    // registry's serve artifacts as doc/term-bucketed catalog tables
-    // and serves from them; the layout must move ZERO rows, so this
-    // SQL is the same full-corpus serve as q206's (the %48 query
-    // slice). Plan-level claims (no shuffle over a bare registry scan)
-    // live in BucketedServeSpec — a row hash cannot see them.
-    "q208_bucketed_serve" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 48 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
-
-    // q210: the STREAM-GROWN serving tables — the engine grows the
-    // bucketed postings/dl tables by O(batch) appends across three
-    // micro-batches (streamingImpactServePublish; the published dl
-    // table is the exactly-once membership set) and republishes the
-    // impact snapshot per landing batch, then serves from the tables.
-    // The grown layout must equal the from-scratch build row-for-row,
-    // so this is q208's full-corpus serve SQL with the %72 query
-    // slice; stream ≡ one-shot publish and the no-registry-shuffle
-    // plan live in StreamBatchEquivalenceSpec / BucketedServeSpec —
-    // a row hash cannot see them.
-    "q210_stream_grown_serve" ->
-      s"""WITH tf AS (SELECT doc_id AS doc, term, count(*) AS tf FROM
-         |    (SELECT doc_id, unnest($Toks) AS term FROM documents)
-         |  WHERE length(term) >= 1 GROUP BY 1, 2),
-         |dl AS (SELECT doc, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |corpus AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS a_tok FROM dl),
-         |qt AS (SELECT DISTINCT q_id, term FROM
-         |    (SELECT doc_id AS q_id, unnest(($Toks)[1:4]) AS term
-         |     FROM documents WHERE doc_id % 72 = 0)
-         |  WHERE length(term) >= 1),
-         |trunc AS (SELECT doc, term FROM (SELECT tf.doc, tf.term,
-         |    row_number() OVER (PARTITION BY tf.term
-         |      ORDER BY tf.tf DESC, dl.dl ASC, tf.doc ASC) AS ir
-         |  FROM tf JOIN dl USING (doc))
-         |  WHERE ir <= (SELECT GREATEST(64, (n_docs + 624) // 625)
-         |               FROM corpus)),
-         |cand AS (SELECT DISTINCT qt.q_id, trunc.doc FROM qt
-         |  JOIN trunc USING (term)),
-         |resc AS (SELECT c.q_id, p.doc, p.term, p.tf FROM cand c
-         |  JOIN tf p ON p.doc = c.doc
-         |  JOIN qt ON qt.q_id = c.q_id AND qt.term = p.term),
-         |sc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM resc JOIN dfq USING (term) JOIN dl USING (doc)
-         |       CROSS JOIN corpus),
-         |agg AS (SELECT q_id, doc, CAST(count(*) AS BIGINT) AS n_terms,
-         |    CAST(sum(s_pm) AS BIGINT) AS score_pm FROM sc GROUP BY 1, 2),
-         |p5 AS (SELECT q_id, doc, n_terms, score_pm, CAST(rk AS BIGINT) AS "rank"
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score_pm DESC, doc ASC) AS rk FROM agg) WHERE rk <= 5),
-         |esc AS (SELECT q_id, doc,
-         |    (CAST((1000000 * n_docs) // df AS HUGEINT) * tf * 44 * a_tok) //
-         |    (20 * CAST(a_tok AS HUGEINT) * tf + 6 * a_tok + 18 * n_docs * dl) AS s_pm
-         |  FROM qt JOIN tf USING (term) JOIN dfq USING (term)
-         |       JOIN dl USING (doc) CROSS JOIN corpus),
-         |ea AS (SELECT q_id, doc, CAST(sum(s_pm) AS BIGINT) AS score_pm
-         |  FROM esc GROUP BY 1, 2),
-         |e5 AS (SELECT q_id, doc FROM (SELECT *, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY score_pm DESC, doc ASC) AS rk
-         |  FROM ea) WHERE rk <= 5)
-         |SELECT p5.q_id, p5."rank", p5.doc AS doc_id, p5.n_terms, p5.score_pm,
-         |  CAST(CASE WHEN e5.doc IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-         |    AS hit_exact
-         |FROM p5 LEFT JOIN e5 ON p5.q_id = e5.q_id AND p5.doc = e5.doc""".stripMargin,
+    // q204 and q206–q210 share one serve + audit SQL (impactServeSql);
+    // each engine side lands the corpus differently, and hash equality
+    // with this from-scratch form pins that landing path:
+    //  - q204: in-lineage truncation at the calibrated depth;
+    //  - q206: two registry folds (+ a compaction) served from the
+    //    materialized stats/impact artifacts — ingest additivity, the
+    //    on-disk merge, the materialized df/corpus arithmetic;
+    //  - q207: two epoch folds, epoch 0 (doc_id % 3 = 0) retired, the
+    //    index rebuilt at the depth RECALIBRATED to the retained count;
+    //  - q209: the same retained corpus reached through three epoch
+    //    folds (the drop-only arm and crash contract are spec-pinned in
+    //    ImpactSegmentsSpec — a row hash can't see them);
+    //  - q208: the registry published as doc/term-bucketed catalog
+    //    tables — the layout must move ZERO rows;
+    //  - q210: the same tables grown by O(batch) appends across three
+    //    micro-batches (stream ≡ one-shot publish and the no-registry-
+    //    shuffle plan live in StreamBatchEquivalenceSpec /
+    //    BucketedServeSpec).
+    // Retention queries draw queries from the UNRETAINED doc table — a
+    // retired query doc still serves, against retained docs only. Each
+    // query has its own slice so no two rows mask each other.
+    "q204_bm25_impact" -> impactServeSql(50),
+    "q206_impact_registry_serve" -> impactServeSql(40),
+    "q207_impact_retain_serve" -> impactServeSql(80, Some("doc_id % 3 <> 0")),
+    "q208_bucketed_serve" -> impactServeSql(48),
+    "q209_segmented_retain_serve" -> impactServeSql(60, Some("doc_id % 3 <> 0")),
+    "q210_stream_grown_serve" -> impactServeSql(72),
 
     // q202: retrieval serve capstone — the q168 RM3 chain on the
     // doc∩emb slice (%50 queries, feedback pass self-inclusive), the

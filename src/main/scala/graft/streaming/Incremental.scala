@@ -1687,134 +1687,252 @@ object Incremental {
       }
       .start()
 
-  /** The impact-index registry's layout: `postings/` + `dl/` (append-only
-    * — BM25's stats are additive over disjoint doc ids), `stats/` +
-    * `corpus/` (append-only ADDITIVE delta logs: per-batch df increments
-    * per term, and one (n_docs, a_tok) row per batch — the materialized
-    * rollups the zipfreg probe proved are the only flat serve curve;
-    * re-deriving them from the full postings/dl registries per serve
-    * call converges to rebuild cost, SCALE.md zipfreg), `impact/` (the
-    * truncated index, carrying `dl` so per-term re-ranking never
-    * rejoins), and `meta/` (one row: the depth the standing index was
-    * built at, and the doc count it was calibrated against). The current
-    * batch's (doc, term, tf, dl) snapshot — the lineage-severed frame
-    * the steady-state merge arm reads so it never scans the postings
-    * registry — lives as an eager localCheckpoint inside the fold, not
-    * on disk (r20; pre-r20 it was an `inflight/` parquet swap-replaced
-    * per batch, one write + one read-back per fold for rows nothing
-    * ever read across a crash — replay re-derives them; a leftover
-    * `inflight/` dir from an older layout is inert). See
-    * [[impactBatchIngest]].
-    *
-    * Crash contract (the write order is postings → stats → corpus → dl →
-    * impact swap → meta swap): a batch is DURABLE once its dl append
-    * committed — dl is the seen-doc set the replay anti-join reads, so a
-    * crash any earlier replays the whole batch. A replayed batch can
-    * re-append rows its crashed predecessor already committed (dl
-    * hadn't, so the docs still read as fresh); those are EXACT duplicate
-    * rows — postings rows are per-(doc, term) aggregates of a
-    * deterministic tokenizer, and every stats/corpus delta carries
-    * `dkey` = min fresh doc id, which discriminates batches (durable
-    * fresh sets are disjoint, and a min is a member, so two batches
-    * can never share one) while a replay re-derives the identical key —
-    * and every reader in this family collapses them where its OWN
-    * volume lives: the serve on the query footprint (the post-join
-    * distinct in `TermStats.rescoreCandidates` — never a full-registry
-    * pass), the stats/corpus sums on the O(batches) delta logs
-    * ([[impactIndexStats]]), and [[compactImpactRegistry]] folds them
-    * out of the raw files on the fold cadence, the Merge delta-log
-    * convention.
-    * The impact/meta swaps are atomic ([[Merge.replaceParquet]]) and
-    * recomputed idempotently from the registries, never from in-flight
-    * frames.
+  // -------------------------------------------------------------------
+  // The impact-index REGISTRY — the on-disk, incrementally maintained
+  // form of the impact-truncated BM25 serve index
+  // ([[graft.operators.TermStats.bm25ImpactIndex]]). One layout,
+  // segmented by INGEST EPOCH (the reference's T4 cadence is per
+  // follower epoch, src/etl.py:94-97, so an epoch is both the unit a
+  // fold appends to and the unit retention retires):
+  //
+  //   postings/epoch=E/  (doc, term, tf) — append-only, Hive-partitioned
+  //   dl/epoch=E/        (doc, dl) — append-only; the seen-doc set the
+  //                      replay anti-join reads, and the durability mark
+  //   stats/             (term, df, dkey, epoch) — ADDITIVE per-batch df
+  //                      deltas (BM25's stats are additive over disjoint
+  //                      doc ids)
+  //   corpus/            (n_docs, a_tok, dkey, epoch) — one additive row
+  //                      per batch
+  //   stats_serve/       the epoch-blind df rollup of every SEALED epoch
+  //                      (see [[compactImpactRegistry]])
+  //   impact/            the truncated index, carrying `dl` so per-term
+  //                      re-ranking never rejoins
+  //   meta/              (m_built, n_docs, n_retired): the depth the
+  //                      standing index was built at, the doc count it
+  //                      was calibrated against, and the retired docs
+  //                      whose entries it may still hold
+  //
+  // The materialized stats/corpus rollups are the only flat serve curve
+  // (re-deriving them from the full postings/dl registries per serve
+  // call converges to rebuild cost, SCALE.md zipfreg). A registry that is
+  // never retired is simply one epoch.
+  //
+  // Crash contract (write order postings → stats → corpus → dl → impact
+  // swap → meta swap): a batch is DURABLE once its dl append committed —
+  // a crash any earlier replays the whole batch, under its own epoch. A
+  // replayed batch can re-append rows its crashed predecessor already
+  // committed; those are EXACT duplicates — postings rows are per-(doc,
+  // term) aggregates of a deterministic tokenizer, and every stats/corpus
+  // delta carries `dkey` = min fresh doc id, which discriminates batches
+  // (durable fresh sets are disjoint, and a min is a member) while a
+  // replay re-derives the identical key. Every reader collapses them
+  // where its OWN volume lives: the serve on the query footprint
+  // (`TermStats.rescoreCandidates`' post-join distinct — never a
+  // full-registry pass), the stats/corpus sums on the O(batches) delta
+  // logs ([[impactIndexStats]]), and [[compactImpactRegistry]] folds them
+  // out of the raw files on the fold cadence, the Merge delta-log
+  // convention. The impact/meta swaps are atomic ([[Merge.replaceParquet]])
+  // and recomputed idempotently from the registries.
+  //
+  // Retention ([[retainImpactRegistry]]) is an epoch cut:
+  //
+  //   - drop retired segment DIRECTORIES       — O(retired) fs deletes
+  //   - filter retired rows out of stats/corpus — O(delta-log) rows,
+  //     EXACT because per-epoch folds are additive by construction
+  //   - rebuild impact/ from surviving segments ONLY when the retired
+  //     share crosses a threshold — the compaction-cadence rule
+  //
+  // A cut can resurrect postings below the truncation cut that were
+  // never kept, so the standing index cannot be patched; between
+  // rebuilds it may still carry retired docs' entries. The serve stays
+  // CORRECT (the rescore joins dl INNER, so a retired candidate can never
+  // be returned — the same inner-join argument as the crash-window
+  // staleness contract) but each retired entry wastes one top-m slot in
+  // its term's window, so effective depth degrades by at most the
+  // retired share — exactly what the threshold bounds, and a rebuild
+  // restores. Recall floor between rebuilds: ≥ recall(m·(1−share)).
+  // -------------------------------------------------------------------
+
+  /** The truncated serve index: `(doc, term, tf, dl)`, read with
+    * [[impactIndexStats]]' frames by `TermStats.bm25TopKImpact`.
     */
   def impactIndexRegistry(spark: SparkSession, registryPath: String)
       : DataFrame = spark.read.parquet(s"$registryPath/impact")
 
+  /** Epoch ids of the segment directories under `base` (committed or
+    * not — torn-swap siblings like `epoch=5.old-…` count toward their
+    * core epoch so [[healRegistry]] can repair a target that is wholly
+    * absent).
+    */
+  private[streaming] def segmentEpochs(spark: SparkSession, base: String): Seq[Long] = {
+    val p = new Path(base)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .map { n =>
+        val t = n.indexOf(".tmp-"); val o = n.indexOf(".old-")
+        if (t >= 0) n.substring(0, t)
+        else if (o >= 0) n.substring(0, o) else n
+      }
+      .filter(_.startsWith("epoch="))
+      .flatMap(n => scala.util.Try(n.stripPrefix("epoch=").toLong).toOption)
+      .distinct.sorted
+  }
+
+  /** The maintainer-entry torn-swap repair ([[Merge.healSwap]]): every
+    * postings/dl segment directory (the swap targets of
+    * [[compactImpactRegistry]] are the segment dirs, so their torn
+    * siblings live INSIDE the base dir) plus the named flat artifacts. A
+    * crash between commitSwap's two renames leaves an artifact absent
+    * with a recoverable sibling — for the ACCUMULATING stats/corpus logs
+    * that absence would otherwise be silently recreated batch-only and
+    * every later serve would undercount (ADVICE r18).
+    */
+  private def healRegistry(spark: SparkSession, registryPath: String,
+                           flat: String*): Unit = {
+    for (base <- Seq(s"$registryPath/postings", s"$registryPath/dl");
+         e <- segmentEpochs(spark, base))
+      Merge.healSwap(spark, s"$base/epoch=$e")
+    flat.foreach(sub => Merge.healSwap(spark, s"$registryPath/$sub"))
+  }
+
+  /** True when at least one committed segment exists under `base`. */
+  private def readableSegments(spark: SparkSession, base: String): Boolean =
+    segmentEpochs(spark, base)
+      .exists(e => readableParquet(spark, s"$base/epoch=$e"))
+
+  /** All live segments of a segmented artifact, projected to the
+    * canonical columns (the Hive partition column `epoch` exists for
+    * retention's directory drops and partition pruning; every consumer
+    * of the ROWS is epoch-blind, and no published table may carry it).
+    */
+  private def readSegments(spark: SparkSession, base: String,
+                           cols: String*): DataFrame =
+    spark.read.parquet(base).select(cols.map(col).toSeq: _*)
+
+  private def postingsOf(spark: SparkSession, registryPath: String)
+      : DataFrame =
+    readSegments(spark, s"$registryPath/postings", "doc", "term", "tf")
+
+  private def dlOf(spark: SparkSession, registryPath: String): DataFrame =
+    readSegments(spark, s"$registryPath/dl", "doc", "dl")
+
+  /** (n_docs, a_tok) summed over the corpus delta log — O(batches) rows,
+    * never a dl recount; a_tok bounds the registry's postings rows (the
+    * shuffle-sizing operand of every registry-shaped rewrite).
+    */
+  private def corpusTotals(spark: SparkSession, registryPath: String)
+      : (Long, Long) = {
+    val r = spark.read.parquet(s"$registryPath/corpus").distinct()
+      .agg(sum(col("n_docs")), sum(col("a_tok"))).head
+    (if (r.isNullAt(0)) 0L else r.getLong(0),
+      if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** The calibrated depth m(n) ([[graft.operators.TermStats.impactM]]),
+    * with `quantize` rounded up to the next power of two (saturating
+    * past 2^30, where the shift would wrap) — see [[impactBatchIngest]]
+    * step 3 for why.
+    */
+  private def depthFor(nDocs: Long, docsPerSlot: Long, mMin: Int,
+                       quantize: Boolean): Int = {
+    val mCal = graft.operators.TermStats.impactM(nDocs, docsPerSlot, mMin)
+    if (!quantize || mCal >= (1 << 30)) mCal
+    else if (mCal <= 1) 1
+    else Integer.highestOneBit(mCal - 1) << 1
+  }
+
+  /** Rebuild the truncated index at depth `m` from the LIVE segments —
+    * which also evicts any retired docs' stale entries. Replay
+    * duplicates are healed ON the window's own term partitioning
+    * (r20), not by two upstream full-registry distinct exchanges: the
+    * one O(registry) read of the family, amortized by the pow2 depth
+    * policy and the retention threshold.
+    */
+  private def rebuildIndex(spark: SparkSession, registryPath: String,
+                           m: Int): Unit =
+    Merge.replaceParquet(spark, s"$registryPath/impact",
+      graft.operators.TermStats.bm25ImpactIndexWithDlHealed(
+        postingsOf(spark, registryPath), dlOf(spark, registryPath), m))
+
+  private def writeMeta(spark: SparkSession, registryPath: String,
+                        mBuilt: Int, nDocs: Long, nRetired: Long): Unit = {
+    import spark.implicits._
+    Merge.replaceParquet(spark, s"$registryPath/meta",
+      Seq((mBuilt, nDocs, nRetired)).toDF("m_built", "n_docs", "n_retired"))
+  }
+
+  /** The text of a small marker file, if present. */
+  private def readMarker(fs: FileSystem, p: Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
+    }
+
+  private def writeMarker(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
   /** The registry-derived serve inputs for
     * [[graft.operators.TermStats.bm25TopKImpact]]: `(postings, dfreq,
-    * dl, corpus)` — postings/dl handed back as RAW LAZY frames (they
-    * may carry byte-identical crash-replay duplicates until the next
-    * compaction; the impact serve touches them only through keyed
-    * candidate joins and heals them on the query footprint —
-    * `TermStats.rescoreCandidates`'s post-join distinct. The pre-r19
-    * form healed here with a full-registry `distinct()` per serve call:
-    * an all-columns HashAggregate + Exchange over the ENTIRE postings
-    * registry UPSTREAM of the doc-keyed join that would have shrunk it
-    * to Σ_cand dl(doc) rows — VERDICT r18 #1, the same
-    * O(registry)-in-O(query)-clothing class the stats logs removed from
-    * ingest. A consumer that needs healed RAW frames for something
-    * other than the keyed serve — e.g. a full-corpus audit via
-    * `bm25TopKFromIndex` against a possibly-uncompacted registry —
-    * runs [[compactImpactRegistry]] first or distincts its own read);
-    * dfreq/corpus read from the MATERIALIZED `stats/`/`corpus/` delta
-    * logs (distinct-healed, summed — O(batches·batch_vocab) rows,
-    * corpus-size-independent), never re-derived from the full postings
-    * registry: the per-serve `postings.groupBy(term)` rollup this
-    * replaces is the "postings-only halfway house" the zipfreg probe
-    * measured decaying to rebuild cost (19.2 s vs 3.1 s flat at 16×,
-    * SCALE.md).
+    * dl, corpus)`. postings/dl come back as RAW LAZY frames over the
+    * live segments, the partition column projected away (they may carry
+    * byte-identical crash-replay duplicates until the next compaction;
+    * the impact serve touches them only through keyed candidate joins
+    * and heals them on the query footprint — a full-registry
+    * `distinct()` here would be an all-columns HashAggregate + Exchange
+    * over the ENTIRE postings registry upstream of the doc-keyed join
+    * that shrinks it, VERDICT r18 #1. A consumer that needs healed RAW
+    * frames for something other than the keyed serve runs
+    * [[compactImpactRegistry]] first or distincts its own read).
+    * dfreq/corpus read the MATERIALIZED delta logs, never re-derived
+    * from the postings registry.
     *
-    * Registries written before the stats artifacts existed (or built by
-    * hand from postings+dl) fall back to the one-scan rollup — the
-    * compat arm, not the production path, and it WARNS (a lost or
-    * mis-deployed stats log would otherwise silently pay the decayed
-    * zipfreg curve forever); the first [[impactBatchIngest]] against
-    * such a registry backfills the logs from the durable registry state
-    * and resumes the additive path.
+    * df assembly is O(vocab + recent), not O(vocab × live epochs): the
+    * per-(term, epoch) fold the retention cut needs makes the stats log
+    * vocab×epochs rows, so the serve unions `stats_serve` (the rollup of
+    * every SEALED epoch, its `folded_through` column recording the seal
+    * line) with only the log rows ABOVE that line. With no
+    * `stats_serve` (never compacted, or deleted by a retention cut — its
+    * pre-aggregated rows can't be epoch-filtered), the serve falls back
+    * to the full log: always correct, one compaction from cheap.
     *
     * Crash-window staleness contract: a serve issued BETWEEN a batch's
     * crash and its replay may see that batch's postings/stats/corpus
     * deltas without its dl rows (dl is the last append) — candidates
     * rescore only against docs present in dl (the score join is inner),
     * so no phantom doc can be returned, while df/corpus read at most
-    * one partial batch ahead; the replay converges them. This window
-    * existed identically in the pre-r18 rollup form (postings appended
-    * before dl there too) — stated here because the materialized logs
-    * make it look new. A serve issued between a retention crash and its
-    * re-run can additionally read retired docs' stale deltas — that
-    * state is MARKED on disk and warned about here; see
-    * [[retainImpactRegistry]]'s intent marker.
+    * one partial batch ahead; the replay converges them. A serve issued
+    * between a retention crash and its re-run can additionally read
+    * retired docs' stale deltas — that state is MARKED on disk and
+    * warned about here; see [[retainImpactRegistry]]'s intent marker.
+    * NO torn-swap heal here: this is the READ path, and serves may run
+    * concurrently with a maintainer's commitSwap.
     */
   def impactIndexStats(spark: SparkSession, registryPath: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // NO healSwap here: this is the READ path, and serves may run
-    // concurrently with a maintainer's commitSwap — a reader racing the
-    // writer's rename pair could steal or delete its siblings. Torn-swap
-    // repair belongs to the single-writer maintainers (ingest/compact/
-    // retention); a serve that lands inside the torn window reads the
-    // missing-artifact state it would have read pre-heal (stats/corpus
-    // fall back with a warning; postings/dl fail loudly).
     if (retentionPending(spark, registryPath))
-      graft.Log.warn(s"impactIndexStats: $registryPath has an incomplete " +
-        "retention (intent marker present) — df/corpus may still count " +
-        "retired docs until retainImpactRegistry is re-run")
-    val postings = spark.read.parquet(s"$registryPath/postings")
-    val dl = spark.read.parquet(s"$registryPath/dl")
+      graft.Log.warn(s"impactIndexStats: $registryPath has an " +
+        "incomplete retention (intent marker present) — df/corpus may " +
+        "still count retired docs until retainImpactRegistry is re-run")
+    val statsLog = spark.read.parquet(s"$registryPath/stats").distinct()
+    val servePath = s"$registryPath/stats_serve"
     val dfreq =
-      if (readableParquet(spark, s"$registryPath/stats"))
-        spark.read.parquet(s"$registryPath/stats").distinct()
+      if (readableParquet(spark, servePath)) {
+        val srv = spark.read.parquet(servePath)
+        // folded_through is constant across rows; one-row read
+        val ft = srv.select(col("folded_through")).head.getLong(0)
+        srv.select(col("term"), col("df"))
+          .unionByName(statsLog.filter(col("epoch") > ft)
+            .select(col("term"), col("df")))
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      else {
-        graft.Log.warn(s"impactIndexStats: $registryPath/stats missing — " +
-          "pre-stats compat arm re-rolls df from the FULL postings " +
-          "registry per serve call (the zipfreg decay); run " +
-          "impactBatchIngest once to backfill the delta logs")
-        postings.distinct().groupBy(col("term")).agg(count(lit(1)).as("df"))
-      }
-    val corpus =
-      if (readableParquet(spark, s"$registryPath/corpus"))
-        spark.read.parquet(s"$registryPath/corpus").distinct()
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("a_tok")).as("a_tok"))
-      else {
-        graft.Log.warn(s"impactIndexStats: $registryPath/corpus missing — " +
-          "pre-stats compat arm recounts (n_docs, a_tok) from the FULL dl " +
-          "registry per serve call; run impactBatchIngest once to " +
-          "backfill the delta logs")
-        dl.distinct().agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).as("a_tok"))
-      }
-    (postings, dfreq, dl, corpus)
+      } else statsLog.groupBy(col("term")).agg(sum(col("df")).as("df"))
+    val corpus = spark.read.parquet(s"$registryPath/corpus").distinct()
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("a_tok")).as("a_tok"))
+    (postingsOf(spark, registryPath), dfreq, dlOf(spark, registryPath),
+      corpus)
   }
 
   /** True while a [[retainImpactRegistry]] intent marker is on disk — a
@@ -1826,34 +1944,6 @@ object Incremental {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Publish the impact registry's SERVE artifacts as bucketed catalog
-    * tables — the 100 TB serving layout (SCALE.md zipfbucket): once the
-    * candidate set of a serve batch outgrows the broadcast threshold
-    * (deep calibrated m × many queries), the doc-keyed rescore joins
-    * plan as sort-merge and shuffle BOTH sides, so a plain-parquet
-    * registry re-shuffles its corpus-proportional postings/dl frames
-    * per serve batch. Published doc-bucketed (postings, dl) and
-    * term-bucketed (impact), the registry side arrives pre-partitioned
-    * and only the candidate side (∝ query footprint) shuffles —
-    * measured −2 exchanges / −37% wall at the probe's 64× rung.
-    *
-    * A SNAPSHOT republication, not a maintainer: O(registry) per call,
-    * run on the compaction cadence (or per epoch) like
-    * [[compactImpactRegistry]] — the bucketed write IS the shuffle the
-    * serve then never pays, amortized over every serve batch until the
-    * next publish. Rows are distinct-healed on the way out (the tables
-    * are read raw by the serve; `rescoreCandidates`' footprint heal
-    * stays correct but should have nothing to do). The tiny
-    * `stats/`/`corpus/` delta logs are NOT published — serve them from
-    * the registry as always ([[impactIndexStats]]).
-    *
-    * Serve: `bm25TopKImpact(spark.table(s"${prefix}_impact"),
-    * spark.table(s"${prefix}_postings"), dfreq,
-    * spark.table(s"${prefix}_dl"), corpus, …)` with dfreq/corpus from
-    * [[impactIndexStats]]. BucketedServeSpec pins result equality and
-    * that no shuffle feeds off a bare published-registry scan even
-    * under a forced sort-merge plan.
-    */
   /** A crashed publish (or a fresh catalog over a surviving warehouse
     * dir — the catalog is per-session, the directory is not) leaves an
     * ORPHANED table location that CTAS refuses; clear both halves so a
@@ -1868,278 +1958,65 @@ object Incremental {
     ()
   }
 
+  /** `rows` repartitioned onto the bucket key FIRST, then
+    * distinct-healed: one exchange (the same Murmur3 family as the
+    * bucket assignment — the compactBucketed trick, r20) feeds both the
+    * healing distinct (HashPartitioning(key) satisfies the all-columns
+    * grouping distribution) and the bucketed write, and each bucket lands
+    * in ONE task → ≤1 file per bucket, deterministic, instead of files ∝
+    * whatever partitioning AQE left on the distinct. PlanSpec-pinned.
+    */
+  private[graft] def bucketHealed(rows: DataFrame, buckets: Int,
+                                  key: String): DataFrame =
+    rows.repartition(buckets, col(key)).distinct()
+
+  /** Publish the impact registry's SERVE artifacts as bucketed catalog
+    * tables — the 100 TB serving layout (SCALE.md zipfbucket): once the
+    * candidate set of a serve batch outgrows the broadcast threshold
+    * (deep calibrated m × many queries), the doc-keyed rescore joins
+    * plan as sort-merge and shuffle BOTH sides, so a plain-parquet
+    * registry re-shuffles its corpus-proportional postings/dl frames
+    * per serve batch. Published doc-bucketed (postings, dl) and
+    * term-bucketed (impact), the registry side arrives pre-partitioned
+    * and only the candidate side (∝ query footprint) shuffles —
+    * measured −2 exchanges / −37% wall at the probe's 64× rung.
+    *
+    * A SNAPSHOT republication, not a maintainer: O(registry) per call,
+    * run on the compaction cadence (or per epoch) — the bucketed write
+    * IS the shuffle the serve then never pays, amortized over every
+    * serve batch until the next publish. Every live segment is folded
+    * into the tables, projected to the canonical columns (the `epoch`
+    * partition column never reaches a published table), and
+    * distinct-healed on the way out ([[bucketHealed]]; the serve's
+    * footprint heal stays correct but should have nothing to do). The
+    * tiny `stats/`/`corpus/` delta logs are NOT published — serve them
+    * from the registry as always ([[impactIndexStats]]).
+    *
+    * Serve: `bm25TopKImpact(spark.table(s"${prefix}_impact"),
+    * spark.table(s"${prefix}_postings"), dfreq,
+    * spark.table(s"${prefix}_dl"), corpus, …)` with dfreq/corpus from
+    * [[impactIndexStats]]. BucketedServeSpec pins result equality and
+    * that no shuffle feeds off a bare published-registry scan even
+    * under a forced sort-merge plan.
+    */
   def publishImpactServeTables(spark: SparkSession, registryPath: String,
                                prefix: String, buckets: Int = 32): Unit = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    for (sub <- Seq("postings", "dl", "impact"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
+    healRegistry(spark, registryPath, "impact")
     for (suffix <- Seq("postings", "dl", "impact"))
       clearStaleTable(spark, s"${prefix}_$suffix")
-    // repartition onto the bucket key FIRST (same Murmur3 family as the
-    // bucket assignment — the compactBucketed trick, r20): one exchange
-    // feeds both the healing distinct (HashPartitioning(doc) satisfies
-    // the all-columns grouping distribution) and the bucketed write, and
-    // each bucket lands in ONE task → ≤1 file per bucket, deterministic,
-    // instead of files ∝ whatever partitioning AQE left on the distinct
     graft.sources.Bucketing.writeBucketed(
-      spark.read.parquet(s"$registryPath/postings")
-        .repartition(buckets, col("doc")).distinct(),
+      bucketHealed(postingsOf(spark, registryPath), buckets, "doc"),
       s"${prefix}_postings", buckets, "doc")
     graft.sources.Bucketing.writeBucketed(
-      spark.read.parquet(s"$registryPath/dl")
-        .repartition(buckets, col("doc")).distinct(),
+      bucketHealed(dlOf(spark, registryPath), buckets, "doc"),
       s"${prefix}_dl", buckets, "doc")
     graft.sources.Bucketing.writeBucketed(
-      spark.read.parquet(s"$registryPath/impact")
+      impactIndexRegistry(spark, registryPath)
         .repartition(buckets, col("term")),
       s"${prefix}_impact", buckets, "term")
   }
 
-  /** The impact registry's COMPACTION — the LSM fold the crash contract
-    * defers to (see [[impactIndexRegistry]]): rewrite `postings/` and
-    * `dl/` deduplicated, and FOLD the `stats/`/`corpus/` delta logs —
-    * durable deltas (their `dkey` is in the dl doc set) and previously
-    * folded rows (`dkey` null) collapse into one row per term / one
-    * global row, while deltas of a crashed not-yet-durable batch are
-    * kept verbatim so their replay still distinct-heals. After the fold
-    * the per-serve healing `distinct()` runs over already-unique rows
-    * and crash-replay duplicates stop accumulating. Run on the fold
-    * cadence (per epoch / every N batches —
-    * [[streamingImpactIndex]]'s `compactEvery` wires exactly that), not
-    * per batch: one O(registry) rewrite amortized over many O(batch)
-    * appends, the Merge delta-log economics. Atomic swaps; the impact/
-    * and meta/ artifacts are untouched (they are recomputed snapshots,
-    * never accumulating logs).
-    *
-    * Run it from the ingest cadence or at rest — never concurrently with
-    * a crashed batch's replay (the stream's own cadence satisfies this:
-    * a restart replays the wedged batch before any later batch can
-    * trigger a fold).
-    */
-  def compactImpactRegistry(spark: SparkSession, registryPath: String): Unit = {
-    for (sub <- Seq("postings", "dl", "stats", "corpus"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
-    // registry-sized loop-conf scope (the retainImpactRegistry rationale):
-    // one O(batches) corpus-log read sizes every rewrite below; legacy
-    // registries without the log run at session conf, as before
-    val aTokPre =
-      if (!readableParquet(spark, s"$registryPath/corpus")) None
-      else {
-        val r = spark.read.parquet(s"$registryPath/corpus").distinct()
-          .agg(sum(col("a_tok"))).head
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
-    def scoped[T](body: => T): T = aTokPre match {
-      case Some(a) => graft.functions.Cols.withLoopConf(spark,
-        graft.functions.Cols.loopParts(
-          spark.range(1).toDF("i"), a))(body)
-      case None => body
-    }
-    scoped {
-    for (sub <- Seq("postings", "dl")) {
-      val path = s"$registryPath/$sub"
-      if (readableParquet(spark, path))
-        Merge.replaceParquet(spark, path, spark.read.parquet(path).distinct())
-    }
-    val dlPath = s"$registryPath/dl"
-    if (readableParquet(spark, dlPath)) {
-      val durableKeys = spark.read.parquet(dlPath)
-        .select(col("doc").as("dkey")).distinct()
-      def fold(path: String, combine: DataFrame => DataFrame): Unit =
-        if (readableParquet(spark, path)) {
-          val deltas = spark.read.parquet(path).distinct()
-          val dkeyType = deltas.schema("dkey").dataType
-          val durable = deltas.filter(col("dkey").isNull).unionByName(
-            deltas.filter(col("dkey").isNotNull)
-              .join(durableKeys, Seq("dkey"), "left_semi"))
-          val pending = deltas.filter(col("dkey").isNotNull)
-            .join(durableKeys, Seq("dkey"), "left_anti")
-          val folded = combine(durable)
-            .withColumn("dkey", lit(null).cast(dkeyType))
-            .select(deltas.columns.map(col).toSeq: _*)
-          Merge.replaceParquet(spark, path, folded.unionByName(pending))
-        }
-      fold(s"$registryPath/stats",
-        _.groupBy(col("term")).agg(sum(col("df")).as("df")))
-      fold(s"$registryPath/corpus",
-        // a global agg of ZERO durable rows yields one all-null row —
-        // drop it (nothing durable to fold), where the stats groupBy
-        // correctly yields no rows
-        _.agg(sum(col("n_docs")).as("n_docs"), sum(col("a_tok")).as("a_tok"))
-          .filter(col("n_docs").isNotNull))
-    }
-    }
-  }
-
-  /** Retention for the impact registry — the T4-style sliding-window
-    * story the serve contract needs when the corpus is NOT append-only
-    * (the reference retires witness edges older than 5 days,
-    * `src/arango_queries.py:90-99`). The monotone-merge theorem is
-    * append-only by assumption — a delete can resurrect postings below
-    * the truncation cut that were never kept — so retention is a
-    * REBUILD event, never an incremental one: postings/dl are rewritten
-    * semi-joined to the kept doc set (healed in the same pass — an
-    * O(registry) rewrite is a compaction too), the additive stats/corpus
-    * logs are re-materialized in their folded forms from the retained
-    * postings (subtracting deltas would be exact but leaves the logs
-    * unbounded and replay-entangled; the rebuild IS the fold), and
-    * impact/meta rebuild at the depth recalibrated to the retained
-    * count. Subsequent [[impactBatchIngest]] folds resume the monotone
-    * merge from the new base — append-only again, theorem restored.
-    *
-    * `keepDocs`: one `doc` column, the retained doc-id set (the registry
-    * stores no timestamps; the window predicate lives with the caller's
-    * doc metadata — filter there, pass ids here). An at-rest maintenance
-    * op like [[compactImpactRegistry]]: every swap is atomic and the
-    * whole op is idempotent (re-filtering retained logs is a no-op), so
-    * a crash mid-sequence is healed by re-running — and the re-run is
-    * ENFORCED, not hoped for (ADVICE r18): an intent marker
-    * (`retain_intent`) is written before the first rewrite and removed
-    * after the last swap; while it is present [[impactBatchIngest]]
-    * refuses to ingest (a half-retained registry's stale deltas would
-    * read as forever-pending rows once new batches resume) and
-    * [[impactIndexStats]] warns. Only a completed retention clears it.
-    */
-  def retainImpactRegistry(spark: SparkSession, registryPath: String,
-                           keepDocs: DataFrame, docsPerSlot: Long = 625L,
-                           mMin: Int = 64, quantizeDepth: Boolean = true)
-      : Unit = {
-    import graft.operators.TermStats
-    val postPath = s"$registryPath/postings"
-    val dlPath = s"$registryPath/dl"
-    for (sub <- Seq("postings", "dl", "stats", "corpus", "impact", "meta"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
-    val marker = new org.apache.hadoop.fs.Path(s"$registryPath/retain_intent")
-    val markerFs =
-      marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    markerFs.create(marker, true).close()
-    val keep = keepDocs.select(col("doc")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // whole-op loop-conf scope (the q120/q174 convention): the event is
-      // a sequence of registry-proportional rewrites — planned partitions
-      // ∝ the registry's token mass (its postings-row bound, from the
-      // O(batches) corpus delta log; PRE-retention, an upper bound),
-      // scale-adaptive up to defaultParallelism, never the session
-      // constant. Legacy registries without the corpus log run at
-      // session conf, as before (loopParts floors at 1 — an unknown mass
-      // must not plan a 1-partition rewrite of a possibly-huge registry).
-      val aTokPre =
-        if (!readableParquet(spark, s"$registryPath/corpus")) None
-        else {
-          val r = spark.read.parquet(s"$registryPath/corpus").distinct()
-            .agg(sum(col("a_tok"))).head
-          if (r.isNullAt(0)) None else Some(r.getLong(0))
-        }
-      def scoped[T](body: => T): T = aTokPre match {
-        case Some(a) => graft.functions.Cols.withLoopConf(spark,
-          graft.functions.Cols.loopParts(keep, a))(body)
-        case None => body
-      }
-      scoped {
-      Merge.replaceParquet(spark, postPath, spark.read.parquet(postPath)
-        .distinct().join(keep, Seq("doc"), "left_semi"))
-      Merge.replaceParquet(spark, dlPath, spark.read.parquet(dlPath)
-        .distinct().join(keep, Seq("doc"), "left_semi"))
-      val post = spark.read.parquet(postPath)
-      val dl = spark.read.parquet(dlPath)
-      val dkeyType = dl.schema("doc").dataType
-      Merge.replaceParquet(spark, s"$registryPath/stats",
-        post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .withColumn("dkey", lit(null).cast(dkeyType)))
-      // one dl pass for the corpus rollup AND nTotal: the rollup values
-      // land on the driver and the corpus frame is reassembled as a
-      // local 1-row relation (session 4; before, the dl registry was
-      // scanned twice — once inside the rollup write, once for the
-      // count). Zero rows when the cut retired everything, matching the
-      // old n_docs > 0 filter.
-      val cstat = dl.agg(count(lit(1)), sum(col("dl"))).head
-      val nTotal = cstat.getLong(0)
-      val corpusRows: java.util.List[org.apache.spark.sql.Row] =
-        if (nTotal > 0)
-          java.util.Collections.singletonList(org.apache.spark.sql.Row(
-            nTotal,
-            if (cstat.isNullAt(1)) null else cstat.getLong(1), null))
-        else java.util.Collections.emptyList()
-      Merge.replaceParquet(spark, s"$registryPath/corpus",
-        spark.createDataFrame(corpusRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("n_docs",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("a_tok",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("dkey", dkeyType)))))
-      val mCal = TermStats.impactM(nTotal, docsPerSlot, mMin)
-      val mQ = if (!quantizeDepth) mCal
-        else if (mCal >= (1 << 30)) mCal
-        else if (mCal <= 1) 1
-        else Integer.highestOneBit(mCal - 1) << 1
-      Merge.replaceParquet(spark, s"$registryPath/impact",
-        TermStats.bm25ImpactIndexWithDl(post, dl, mQ))
-      import spark.implicits._
-      Merge.replaceParquet(spark, s"$registryPath/meta",
-        Seq((mQ, nTotal)).toDF("m_built", "n_docs"))
-      }
-      // last: only a COMPLETED retention clears the intent marker — a
-      // crash anywhere above leaves it, and ingest refuses until the
-      // re-run lands here
-      markerFs.delete(marker, false)
-      ()
-    } finally { keep.unpersist(); () }
-  }
-
-  /** One ingest fold of the impact registry — the batch form of
-    * [[streamingImpactIndex]]'s per-micro-batch step, public so a batch
-    * backfill (or a test/oracle twin) drives the IDENTICAL write path
-    * the stream does. See [[impactIndexRegistry]] for the layout and
-    * crash contract; per call:
-    *
-    *  1. `postings/`, `stats/`, `corpus/` and `dl/` extend by the
-    *     batch's rows, in that order — dl last, the durability mark
-    *     (append-only; replayed doc ids anti-join away against the dl
-    *     registry — the first-wins convention; empty appends are
-    *     SKIPPED, the schema-only-part lesson from the segmented
-    *     curriculum). The stats/corpus deltas are O(batch) aggregates
-    *     of the batch's own postings, keyed by `dkey` = min fresh doc
-    *     id so a crash replay appends byte-identical rows that
-    *     distinct-heal — the corpus rollups are ADDITIVE, maintained
-    *     incrementally, never recounted (the zipfreg finding).
-    *  2. `impact/` re-truncates per term over (standing index ∪ the
-    *     batch docs' postings).distinct — EXACT by the monotone top-m
-    *     property on an append-only corpus: a posting outside top-m(P)
-    *     is dominated by ≥ m postings that all remain in P ∪ B, so
-    *     top-m(P ∪ B) ⊆ top-m(P) ∪ B. An entirely-fresh batch (the
-    *     steady state) merges the IN-FLIGHT postings frame —
-    *     byte-identical to the rows just appended, zero registry scan;
-    *     only when some batch docs anti-joined away (a crash-window
-    *     replay, or a source re-delivering ingested docs) does the
-    *     recovery arm re-read those docs' rows from the registry with a
-    *     batch-keyed join, so the replay still lands the crashed
-    *     batch's rows in the swap — the merge's distinct de-dups
-    *     re-merged rows instead of double-counting them toward m.
-    *  3. The depth follows the calibrated
-    *     [[graft.operators.TermStats.impactM]] m(n) with n read from
-    *     the corpus delta log (O(batches) rows — NOT a per-batch
-    *     distinct+count of the whole dl registry, which is an O(n_docs)
-    *     shuffle hiding in what must be O(batch) maintenance). With
-    *     `quantizeDepth` (the streaming default) m is QUANTIZED to the
-    *     next power of two: a depth increase invalidates the monotone
-    *     merge (rows below the old cut were never kept), so it triggers
-    *     a REBUILD from the postings registry — pow2 quantization makes
-    *     that a corpus-doubling event, amortized O(1) rebuilds per
-    *     doubling, while the standing depth stays ≥ the calibration (so
-    *     the serve contract's recall floor holds between rebuilds). A
-    *     one-shot batch build passes `quantizeDepth = false` to land on
-    *     the exact calibrated depth.
-    *
-    * Write cost per batch: O(batch) appends + an O(m·|vocab|) index swap
-    * (the index IS the registry's tail — m·V rows by construction, the
-    * bounded artifact the truncation exists to produce; the raw postings
-    * are never rewritten). Serve via [[impactIndexRegistry]] +
-    * `bm25TopKImpact`, bit-identical to a from-scratch build (pinned in
-    * StreamBatchEquivalenceSpec; the registry-SERVED path is pinned in
-    * the oracle gate as q206).
-    */
   /** The rows a fold LANDED (one `(doc, term, tf, dl)` row per fresh
     * posting, lineage-severed by an eager localCheckpoint) plus their
     * fresh-doc count — handed back to the caller so a same-process
@@ -2182,68 +2059,109 @@ object Incremental {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(blocking = false))
 
+  /** One ingest fold of the impact registry into epoch `epoch` — the
+    * batch form of [[streamingImpactIndex]]'s per-micro-batch step,
+    * public so a batch backfill (or a test/oracle twin) drives the
+    * IDENTICAL write path the stream does. See the section comment for
+    * the layout and crash contract; per call:
+    *
+    *  1. `postings/epoch=E/`, `stats/`, `corpus/` and `dl/epoch=E/`
+    *     extend by the batch's rows, in that order — dl last, the
+    *     durability mark (append-only; replayed doc ids anti-join away
+    *     against the dl registry — the first-wins convention; empty
+    *     appends are SKIPPED, the schema-only-part lesson from the
+    *     segmented curriculum). The stats/corpus deltas are O(batch)
+    *     aggregates of the batch's own postings, keyed by `dkey` = min
+    *     fresh doc id so a crash replay appends byte-identical rows that
+    *     distinct-heal, and tagged with `epoch` so a retention cut can
+    *     filter them — the corpus rollups are ADDITIVE, maintained
+    *     incrementally, never recounted (the zipfreg finding).
+    *  2. `impact/` re-truncates per term over (standing index ∪ the
+    *     batch docs' postings).distinct — EXACT by the monotone top-m
+    *     property on an append-only corpus: a posting outside top-m(P)
+    *     is dominated by ≥ m postings that all remain in P ∪ B, so
+    *     top-m(P ∪ B) ⊆ top-m(P) ∪ B. An entirely-fresh batch (the
+    *     steady state) merges the IN-FLIGHT snapshot ([[Landed]]) —
+    *     byte-identical to the rows just appended, zero registry scan;
+    *     only when some batch docs anti-joined away (a crash-window
+    *     replay, or a source re-delivering ingested docs) does the
+    *     recovery arm re-read those docs' rows from the registry with a
+    *     batch-keyed join, so the replay still lands the crashed
+    *     batch's rows in the swap — the merge's distinct de-dups
+    *     re-merged rows instead of double-counting them toward m.
+    *  3. The depth follows the calibrated
+    *     [[graft.operators.TermStats.impactM]] m(n) with n read from
+    *     the corpus delta log. With `quantizeDepth` (the streaming
+    *     default) m is QUANTIZED to the next power of two: a depth
+    *     increase invalidates the monotone merge (rows below the old cut
+    *     were never kept), so it triggers a REBUILD from the live
+    *     segments — pow2 quantization makes that a corpus-doubling
+    *     event, amortized O(1) rebuilds per doubling, while the standing
+    *     depth stays ≥ the calibration (so the serve contract's recall
+    *     floor holds between rebuilds). A one-shot batch build passes
+    *     `quantizeDepth = false` to land on the exact calibrated depth.
+    *     A rebuild also resets `meta.n_retired` (it evicts any retired
+    *     docs' stale entries — see [[retainImpactRegistry]]).
+    *
+    * `epoch` must be non-decreasing across folds (a replay re-passes its
+    * own epoch): appending BELOW the newest segment would let a past
+    * retention cut resurrect, and the reference's follower epochs are
+    * monotone anyway (`src/etl.py:94-97`). Multiple batches may share
+    * one epoch (micro-batches within a follower epoch). A doc
+    * re-delivered AFTER its epoch was retired reads as fresh (its dl rows
+    * are gone) and re-ingests into the CURRENT epoch: the registry
+    * resumes append-only from the retained base.
+    *
+    * Write cost per batch: O(batch) appends + an O(m·|vocab|) index swap
+    * (the index IS the registry's tail — m·V rows by construction, the
+    * bounded artifact the truncation exists to produce; the raw postings
+    * are never rewritten). Serve via [[impactIndexRegistry]] +
+    * `bm25TopKImpact`, bit-identical to a from-scratch build (pinned in
+    * StreamBatchEquivalenceSpec; the registry-SERVED path is pinned in
+    * the oracle gate as q206).
+    */
   def impactBatchIngest(spark: SparkSession, registryPath: String,
                         batch: DataFrame, id: String, text: String,
-                        minTermLen: Int = 1, docsPerSlot: Long = 625L,
-                        mMin: Int = 64, quantizeDepth: Boolean = true,
+                        epoch: Long, minTermLen: Int = 1,
+                        docsPerSlot: Long = 625L, mMin: Int = 64,
+                        quantizeDepth: Boolean = true,
                         needLanded: Boolean = false)
       : Option[Landed] = {
     import graft.operators.TermStats
-    val postPath = s"$registryPath/postings"
-    val dlPath = s"$registryPath/dl"
+    require(epoch >= 0, s"epoch must be >= 0, got $epoch")
+    val postBase = s"$registryPath/postings"
+    val dlBase = s"$registryPath/dl"
     val statsPath = s"$registryPath/stats"
     val corpusPath = s"$registryPath/corpus"
     val impactPath = s"$registryPath/impact"
     val metaPath = s"$registryPath/meta"
-    // torn-swap repair first (a crash between commitSwap's two renames
-    // leaves an artifact absent with a recoverable sibling — for the
-    // ACCUMULATING stats/corpus logs that absence would otherwise be
-    // silently recreated batch-only below and every later serve would
-    // undercount, ADVICE r18), then the retention gate: a half-finished
+    // flat files directly under postings/ are an older, unsegmented
+    // layout this engine no longer reads — refuse loudly instead of
+    // interleaving the two formats
+    if (readableParquet(spark, postBase))
+      throw new IllegalStateException(s"impactBatchIngest: $registryPath " +
+        "holds a flat (unsegmented) impact registry — flat files under " +
+        "postings/ are no longer a supported layout; rebuild the registry " +
+        "from the source corpus")
+    // torn-swap repair first, then the retention gate: a half-finished
     // retention must be completed by its owner before ingest resumes,
-    // or retired docs' stale deltas survive as forever-pending rows.
-    for (sub <- Seq("postings", "dl", "stats", "corpus", "impact", "meta"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
+    // or retired docs' stale deltas survive as forever-pending rows
+    healRegistry(spark, registryPath, "stats", "corpus", "impact", "meta")
     if (retentionPending(spark, registryPath))
       throw new IllegalStateException(s"impactBatchIngest: $registryPath " +
         "has an incomplete retention (intent marker present) — re-run " +
         "retainImpactRegistry to completion before ingesting")
-    // Legacy upgrade (ADVICE r18, medium): a registry written before the
-    // stats artifacts existed has postings/dl but no stats//corpus/.
-    // Starting the delta logs with ONLY this batch's deltas would
-    // undercount the entire pre-existing corpus (wrong idf, wrong n for
-    // the depth calibration) the moment the logs become readable — so
-    // BACKFILL the folded rollups from the DURABLE registry state first
-    // (postings semi-joined to the dl doc set: rows of a crashed
-    // not-yet-durable batch stay out of the fold and re-append their
-    // deltas on replay, compactImpactRegistry's durable/pending rule).
-    // One O(registry) migration event, idempotent — a crash between the
-    // two swaps re-triggers the same rebuild.
-    if (readableParquet(spark, dlPath) &&
-        (!readableParquet(spark, statsPath) ||
-          !readableParquet(spark, corpusPath))) {
-      graft.Log.warn(s"impactBatchIngest: backfilling stats/corpus delta " +
-        s"logs from the pre-stats registry at $registryPath (one-time " +
-        "O(registry) upgrade)")
-      val dlReg = spark.read.parquet(dlPath).distinct()
-      val durablePost = spark.read.parquet(postPath).distinct()
-        .join(dlReg.select(col("doc")), Seq("doc"), "left_semi")
-      val dkeyType = dlReg.schema("doc").dataType
-      Merge.replaceParquet(spark, statsPath,
-        durablePost.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .withColumn("dkey", lit(null).cast(dkeyType)))
-      Merge.replaceParquet(spark, corpusPath,
-        dlReg.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("a_tok"))
-          .withColumn("dkey", lit(null).cast(dkeyType))
-          .filter(col("n_docs") > 0))
-    }
+    val lastEpoch = segmentEpochs(spark, dlBase).lastOption.getOrElse(-1L)
+    require(epoch >= lastEpoch, s"impactBatchIngest: epoch $epoch is " +
+      s"below the newest segment $lastEpoch — epochs are monotone (a " +
+      "retention cut must never resurrect)")
     val docsIn = batch.select(col(id).as("doc"), col(text).as("__text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // replay safety: the dl registry is the seen-doc-id set
       val fresh =
-        if (readableParquet(spark, dlPath))
-          docsIn.join(spark.read.parquet(dlPath).select(col("doc")),
+        if (readableSegments(spark, dlBase))
+          docsIn.join(readSegments(spark, dlBase, "doc"),
             Seq("doc"), "left_anti")
         else docsIn
       val newPost = TermStats.bm25Postings(
@@ -2256,11 +2174,7 @@ object Incremental {
         // one action materializes both persists and reads the batch size,
         // token mass AND corpus dkey (a_tok bounds the batch's postings
         // rows — the in-fold shuffle sizing operand below; min(doc) is
-        // the corpus delta row's replay key): pre-r20 this was a bare
-        // count(), and until session 4 the dkey/corpus values were
-        // re-aggregated TWICE more per fold (a broadcast job feeding the
-        // stats append's crossJoin + a recompute inside the corpus
-        // append) for numbers this single action already determines
+        // the corpus delta row's replay key)
         val bstat =
           newDl.agg(count(lit(1)), sum(col("dl")), min(col("doc"))).head
         val nFresh = bstat.getLong(0)
@@ -2269,17 +2183,13 @@ object Incremental {
         // (needLanded — the serve-table publisher), or the merge arm —
         // which requires a standing impact/ artifact, whose readability
         // the appends below cannot change (impact/ is swap-replaced only
-        // at the end of this fold). A first build takes the rebuild arm
-        // unconditionally, so eagerly checkpointing the batch join there
-        // was one whole materialization job per fold for rows nothing
-        // ever read (r20).
+        // at the end of this fold).
         val snapNeeded = needLanded || readableParquet(spark, impactPath)
         // Batch-shaped work below runs under the loop-conf scope (the
         // q120/q174 convention): planned partitions ∝ the batch's token
-        // mass instead of the session constant — scale-adaptive (grows
-        // to defaultParallelism on real batches), never a local[32]
-        // constant. The tokenize/rollup shuffles above already ran at
-        // session conf (their size was unknown until this point).
+        // mass instead of the session constant. The tokenize/rollup
+        // shuffles above already ran at session conf (their size was
+        // unknown until this point).
         val landed: Option[DataFrame] =
           if (nFresh == 0) None // empty append = schema-only part file
           else graft.functions.Cols.withLoopConf(spark,
@@ -2293,477 +2203,29 @@ object Incremental {
             // (every batch doc now reads as seen). The EAGER
             // localCheckpoint materializes the O(batch) rows and
             // truncates lineage to a LogicalRDD scan refreshByPath
-            // cannot touch (the streamingImpactServePublish newDocs
-            // pattern); the merge arm reads it after the appends, and
-            // the caller gets it back ([[Landed]]). Pre-r20 this was an
-            // `inflight/` parquet swap-replaced per batch — one extra
-            // write + read-back per fold for rows that never outlive
-            // the fold (a crash replays the whole batch and re-derives
-            // them; dl is the durability mark).
+            // cannot touch; the merge arm reads it after the appends,
+            // and the caller gets it back ([[Landed]]).
             val snap =
               if (!snapNeeded) None
               else Some(newPost.join(newDl, "doc")
                 .select(col("doc"), col("term"), col("tf"), col("dl"))
                 .localCheckpoint(true))
-            // postings FIRST, dl LAST: dl is the durability mark (see
-            // impactIndexRegistry's crash contract); the additive deltas
-            // land in between, all derived from the SAME deterministic
-            // newPost so a replay re-appends byte-identical rows
-            newPost.write.mode("append").parquet(postPath)
-            // the batch's corpus delta (n_docs, a_tok, dkey) is already
-            // on the driver from the bstat action above — count/sum/min
-            // over the deterministic newDl, so a replay reassembles
-            // byte-identical rows; the literal dkey and the local 1-row
-            // corpus frame keep the old schema exactly (n_docs required,
-            // a_tok/dkey optional — parquet append mixes footers)
-            val dkeyType = newDl.schema("doc").dataType
-            newPost.groupBy(col("term")).agg(count(lit(1)).as("df"))
-              .withColumn("dkey", // when() keeps the column NULLABLE like the
-              // min() it replaces — the stats log's folded rows carry
-              // null dkeys, and a required-typed footer must never win
-              // schema inference over them
-              when(lit(true), lit(bstat.get(2)).cast(dkeyType)))
-              .write.mode("append").parquet(statsPath)
-            spark.createDataFrame(
-              java.util.Collections.singletonList(
-                org.apache.spark.sql.Row(nFresh, batchATok, bstat.get(2))),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("n_docs",
-                  org.apache.spark.sql.types.LongType, nullable = false),
-                org.apache.spark.sql.types.StructField("a_tok",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("dkey", dkeyType))))
-              .write.mode("append").parquet(corpusPath)
-            newDl.write.mode("append").parquet(dlPath)
-            snap
-          }
-        if (readableParquet(spark, dlPath)) {
-          // n AND token mass from the corpus delta log (O(batches) rows;
-          // a_tok bounds the registry's postings rows — the rebuild
-          // arm's shuffle sizing operand); the dl-recount fallback
-          // serves registries that predate the stats artifacts
-          val (nTotal, aTokTotal) =
-            if (readableParquet(spark, corpusPath)) {
-              val r = spark.read.parquet(corpusPath).distinct()
-                .agg(sum(col("n_docs")), sum(col("a_tok"))).head
-              (if (r.isNullAt(0)) 0L else r.getLong(0),
-                if (r.isNullAt(1)) 0L else r.getLong(1))
-            } else {
-              val r = spark.read.parquet(dlPath).distinct()
-                .agg(count(lit(1)), sum(col("dl"))).head
-              (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-            }
-          val mCal = TermStats.impactM(nTotal, docsPerSlot, mMin)
-          // next power of two ≥ mCal (mCal ≤ 2^30 in any real corpus;
-          // past that the shift would wrap, so saturate)
-          val mQ = if (!quantizeDepth) mCal
-            else if (mCal >= (1 << 30)) mCal
-            else if (mCal <= 1) 1
-            else Integer.highestOneBit(mCal - 1) << 1
-          val builtM: Int =
-            if (readableParquet(spark, metaPath))
-              spark.read.parquet(metaPath).head.getInt(0)
-            else -1
-          val dlRaw = spark.read.parquet(dlPath)
-          // registry-shaped maintenance (rebuild window / merge + the
-          // two swaps) under a loop-conf scope sized by the REGISTRY's
-          // token mass — the rebuild's per-term window is registry-
-          // proportional where the batch scope above is not
-          graft.functions.Cols.withLoopConf(spark,
-            graft.functions.Cols.loopParts(dlRaw,
-              math.max(aTokTotal, batchATok))) {
-          val next =
-            if (mQ > builtM || !readableParquet(spark, impactPath)) {
-              // depth grew (or first build): the merge property can't
-              // reach below the old cut — rebuild from the registry.
-              // Replay duplicates must still be healed (a duplicated dl
-              // row would double its doc's postings inside the window
-              // and steal top-m slots); the healed form does it ON the
-              // window's own term partitioning instead of two upstream
-              // full-registry distinct exchanges (r20) — the one
-              // remaining O(registry) read, amortized pow2-rarely
-              TermStats.bm25ImpactIndexWithDlHealed(
-                spark.read.parquet(postPath), dlRaw, mQ)
-            } else {
-              val nIn = docsIn.select(col("doc")).distinct().count()
-              val batchRows =
-                if (nFresh == nIn && nFresh > 0)
-                  // entirely-fresh batch — the STEADY STATE: the rows
-                  // the merge needs are exactly the landed snapshot
-                  // checkpointed above (byte-identical to the rows just
-                  // appended), so the postings registry is not scanned
-                  // at all. Pre-r18 this arm always paid a full-registry
-                  // scan per micro-batch — the same
-                  // O(registry)-in-O(batch)-clothing class as the dl
-                  // recount the stats logs removed. (The merge arm
-                  // implies a standing impact/ artifact, which implies
-                  // snapNeeded above — the snapshot always exists here.)
-                  landed.get
-                else
-                  // recovery arm: some batch docs' rows live only in the
-                  // registry — a crash between the appends and this swap
-                  // (fresh anti-joined away on replay) or a source that
-                  // re-delivers ingested docs. Batch-keyed registry join;
-                  // impactIndexMerge's distinct keeps re-merged or
-                  // replay-duplicated rows from double-counting toward m,
-                  // which also heals the duplicate dlRaw rows this join
-                  // can fan out (no full-registry distinct here). Docs
-                  // already in the standing index contribute rows the
-                  // merge's distinct collapses — harmless, and the
-                  // monotone property says they cannot re-enter anyway.
-                  spark.read.parquet(postPath)
-                    .join(docsIn.select(col("doc")).distinct(), Seq("doc"))
-                    .join(dlRaw, "doc")
-                    .select(col("doc"), col("term"), col("tf"), col("dl"))
-              TermStats.impactIndexMerge(
-                spark.read.parquet(impactPath), batchRows, builtM)
-            }
-          val effM = math.max(mQ, builtM)
-          Merge.replaceParquet(spark, impactPath, next)
-          import spark.implicits._
-          Merge.replaceParquet(spark, metaPath,
-            Seq((effM, nTotal)).toDF("m_built", "n_docs"))
-          }
-        }
-        landed.map(Landed(_, nFresh))
-      } finally { newPost.unpersist(); newDl.unpersist(); () }
-    } finally { docsIn.unpersist(); () }
-  }
-
-  /** Streaming maintenance of the impact-truncated BM25 serve index
-    * ([[graft.operators.TermStats.bm25ImpactIndex]]) — the incremental
-    * path the q203/q204 pruned serves imply: a production deployment
-    * ingests documents continuously and must not re-tokenize the corpus
-    * per refresh. Each micro-batch is one [[impactBatchIngest]] fold
-    * (see there for the step list, costs, and the crash contract).
-    *
-    * `compactEvery` gives the fold-cadence compaction an OWNER (the
-    * Merge delta-log convention): every N batches the stream itself
-    * runs [[compactImpactRegistry]], so crash-replay duplicates and
-    * delta-log length stay bounded by the cadence instead of growing
-    * with replay history until an operator remembers to fold. 0 = off
-    * (the caller owns compaction — e.g. one fold per epoch from the
-    * backfill driver). Safe at any cadence: compaction runs strictly
-    * between batch folds on the stream's own thread, and a restart
-    * replays a wedged batch before any later batch can trigger a fold.
-    */
-  def streamingImpactIndex(stream: DataFrame, checkpointDir: String,
-                           registryPath: String, id: String, text: String,
-                           minTermLen: Int = 1, docsPerSlot: Long = 625L,
-                           mMin: Int = 64, compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        impactBatchIngest(batch.sparkSession, registryPath, batch, id, text,
-          minTermLen, docsPerSlot, mMin)
-          .foreach(_.release()) // per-batch snapshot blocks must not outlive the fold
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          compactImpactRegistry(batch.sparkSession, registryPath)
-        ()
-      }
-      .start()
-
-  /** Incremental maintenance of the bucketed SERVING tables — the
-    * standing-deployment form of [[publishImpactServeTables]] (VERDICT
-    * r19 #2): that call is an O(registry) snapshot republication per
-    * cadence, where a live stream should pay O(batch) per batch. Each
-    * micro-batch here (1) folds into the registry via
-    * [[impactBatchIngest]] (unchanged crash contract), (2) APPENDS the
-    * batch's landed postings/dl rows into the doc-bucketed catalog
-    * tables — [[graft.sources.Bucketing.appendBucketed]] with the
-    * matching spec, so the write-side shuffle is O(batch) and the
-    * serve-side co-location is preserved — and (3) republishes the
-    * term-bucketed `impact` table, a snapshot by design (m·|vocab|
-    * rows, the bounded artifact truncation exists to produce).
-    *
-    * Exactly-once on the tables WITHOUT a marker: the rows appended are
-    * the batch's docs ANTI-JOINED against the published dl table (the
-    * published-doc set — the same role the registry's dl plays for
-    * ingest). In the steady state those are exactly the rows the fold
-    * just landed, handed back by [[impactBatchIngest]] as the
-    * lineage-severed [[Landed]] snapshot — appended O(batch) with NO
-    * registry scan (r20; the pre-r20 form re-scanned the full
-    * postings/dl registries per micro-batch for a doc-keyed
-    * extraction); when the published set lags further (a crash between
-    * the registry fold and the table appends), the rows are fetched
-    * doc-keyed from the registry and footprint-distinct'd, as before.
-    * A replayed batch (or a source re-delivering published
-    * docs) anti-joins away; a crash between the postings and dl appends
-    * re-appends byte-identical postings rows on replay, which the
-    * serve's footprint heal collapses (`TermStats.rescoreCandidates`)
-    * and [[graft.sources.Bucketing.compactBucketed]] folds out on the
-    * owner's cadence — the registry family's duplicate contract,
-    * verbatim. A crash after the dl append but before the impact
-    * republication leaves the impact table one batch stale; the serve
-    * stays correct (candidates rescore against the published postings)
-    * and the next landing batch republishes. The membership anti-join
-    * reads the dl table — the SLIM per-doc frame, never postings — and
-    * shuffles only the batch side.
-    */
-  def streamingImpactServePublish(stream: DataFrame, checkpointDir: String,
-                                  registryPath: String, prefix: String,
-                                  id: String, text: String,
-                                  buckets: Int = 32, minTermLen: Int = 1,
-                                  docsPerSlot: Long = 625L, mMin: Int = 64,
-                                  quantizeDepth: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val landed = impactBatchIngest(spark, registryPath, batch, id, text,
-          minTermLen, docsPerSlot, mMin, quantizeDepth, needLanded = true)
-        val postT = s"${prefix}_postings"
-        val dlT = s"${prefix}_dl"
-        val impT = s"${prefix}_impact"
-        for (t <- Seq(postT, dlT, impT) if !spark.catalog.tableExists(t))
-          clearStaleTable(spark, t)
-        // eager checkpoint: cuts the dl TABLE read out of the lineage of
-        // what gets appended back into that same table below
-        val newDocs = {
-          val batchDocs = batch.select(col(id).as("doc")).distinct()
-          if (spark.catalog.tableExists(dlT))
-            batchDocs.join(spark.table(dlT).select(col("doc")),
-              Seq("doc"), "left_anti")
-          else batchDocs
-        }.localCheckpoint(true)
-        val nNew = newDocs.count()
-        if (nNew > 0 || !spark.catalog.tableExists(impT)) {
-          // STEADY STATE: the docs to publish are exactly the docs this
-          // fold landed — the published dl set only ever lags the
-          // registry dl set (rows are published strictly after their
-          // registry fold), so fresh ⊆ newDocs always, and equal COUNTS
-          // mean equal SETS. Then the rows to append are the fold's own
-          // landed snapshot (byte-identical to what a registry
-          // extraction would return, already duplicate-free), O(batch)
-          // with no registry scan — pre-r20 this arm re-scanned the
-          // full postings/dl registries per micro-batch to extract the
-          // batch's rows doc-keyed. RECOVERY (a crash between the
-          // registry fold and the table appends left newDocs ⊋ fresh):
-          // fetch doc-keyed from the registry, footprint-distinct'd.
-          // bucketBy writes one file per (task × bucket): the landed
-          // snapshot keeps its fold-join partitioning, so appending it
-          // raw would fan out P×buckets tiny files per batch and every
-          // later table read (the serve, the membership anti-join) pays
-          // the per-file open cost — repartitioning on the bucket key
-          // (same Murmur3 family as the bucket assignment, the
-          // compactBucketed trick) lands each bucket in ONE task → ≤1
-          // file per bucket per batch, same layout the registry-scan
-          // arm's AQE-coalesced output produced.
-          val (posts, dls) = landed match {
-            case Some(l) if l.nFresh == nNew =>
-              (l.rows.select(col("doc"), col("term"), col("tf"))
-                .repartition(buckets, col("doc")),
-                // repartition FIRST: HashPartitioning(doc) satisfies the
-                // (doc, dl) grouping distribution (doc ⊆ keys), so the
-                // dedup aggregate reuses the one exchange
-                l.rows.select(col("doc"), col("dl"))
-                  .repartition(buckets, col("doc")).distinct())
-            case _ =>
-              (spark.read.parquet(s"$registryPath/postings")
-                .join(broadcast(newDocs), Seq("doc"))
-                .select(col("doc"), col("term"), col("tf")).distinct(),
-                spark.read.parquet(s"$registryPath/dl")
-                  .join(broadcast(newDocs), Seq("doc"))
-                  .select(col("doc"), col("dl")).distinct())
-          }
-          // postings first, dl LAST — dl is the published-doc mark the
-          // anti-join reads, so a torn append replays instead of losing
-          graft.sources.Bucketing.appendBucketed(posts, postT, buckets, "doc")
-          graft.sources.Bucketing.appendBucketed(dls, dlT, buckets, "doc")
-          graft.sources.Bucketing.writeBucketed(
-            impactIndexRegistry(spark, registryPath), impT, buckets, "term")
-        }
-        // per-batch checkpoint blocks (the landed snapshot and the
-        // newDocs membership set) must not outlive the batch — a
-        // standing stream would otherwise accumulate storage blocks
-        landed.foreach(_.release())
-        unpersistCheckpoint(newDocs)
-        ()
-      }
-      .start()
-  }
-
-  // -------------------------------------------------------------------
-  // Epoch-SEGMENTED impact registry — retention without the
-  // whole-registry rebuild (VERDICT r19 #1).
-  //
-  // [[retainImpactRegistry]]'s "retention = rebuild" conclusion is only
-  // forced because the monolithic registry is ONE segment: a delete can
-  // resurrect postings below the truncation cut, and the kept-doc
-  // semi-join has to rewrite everything to find out what survived. Here
-  // postings/ and dl/ are Hive-partitioned by INGEST EPOCH
-  // (`postings/epoch=E/…` — the reference's T4 cadence is per follower
-  // epoch, src/etl.py:94-97, so the retirement predicate IS an epoch
-  // cut), and the stats/corpus delta-log rows carry their epoch. The
-  // whole retention event is then:
-  //
-  //   - drop retired segment DIRECTORIES       — O(retired) fs deletes
-  //   - filter retired rows out of stats/corpus — O(delta-log) rows,
-  //     EXACT because per-epoch folds are additive by construction
-  //   - rebuild impact/ from surviving segments ONLY when the retired
-  //     share crosses a threshold — the compaction-cadence rule
-  //
-  // Between rebuilds the truncated index may still carry retired docs'
-  // entries; the serve stays CORRECT (the rescore joins dl INNER, so a
-  // retired candidate can never be returned — the same inner-join
-  // argument as the crash-window staleness contract) but each retired
-  // entry wastes one top-m slot in its term's window, so effective
-  // depth degrades by at most the retired share — exactly what the
-  // threshold bounds, and a rebuild restores. Recall floor between
-  // rebuilds: ≥ recall(m·(1−share)).
-  // -------------------------------------------------------------------
-
-  /** Epoch ids of the segment directories under `base` (committed or
-    * not — torn-swap siblings like `epoch=5.old-…` count toward their
-    * core epoch so [[healSegments]] can repair a target that is wholly
-    * absent).
-    */
-  private[streaming] def segmentEpochs(spark: SparkSession, base: String): Seq[Long] = {
-    val p = new Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .map { n =>
-        val t = n.indexOf(".tmp-"); val o = n.indexOf(".old-")
-        if (t >= 0) n.substring(0, t)
-        else if (o >= 0) n.substring(0, o) else n
-      }
-      .filter(_.startsWith("epoch="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("epoch=").toLong).toOption)
-      .distinct.sorted
-  }
-
-  /** [[Merge.healSwap]] over every segment target under `base` — the
-    * maintainer-entry heal, per segment directory (the swap targets of
-    * [[compactImpactSegments]] are the segment dirs, so their torn
-    * siblings live INSIDE the base dir).
-    */
-  private def healSegments(spark: SparkSession, base: String): Unit =
-    segmentEpochs(spark, base)
-      .foreach(e => Merge.healSwap(spark, s"$base/epoch=$e"))
-
-  /** True when at least one committed segment exists under `base`. */
-  private def readableSegments(spark: SparkSession, base: String): Boolean =
-    segmentEpochs(spark, base)
-      .exists(e => readableParquet(spark, s"$base/epoch=$e"))
-
-  /** All live segments of a segmented artifact, projected to the
-    * canonical columns (the Hive partition column `epoch` exists for
-    * retention's directory drops and partition pruning; every consumer
-    * of the ROWS is epoch-blind).
-    */
-  private def readSegmented(spark: SparkSession, base: String,
-                            cols: String*): DataFrame =
-    spark.read.parquet(base).select(cols.map(col).toSeq: _*)
-
-  /** One ingest fold of the SEGMENTED impact registry — the same merge
-    * theorem, write order, dkey discrimination, in-flight snapshot, and
-    * crash contract as [[impactBatchIngest]] (see there), with three
-    * layout differences: postings/dl rows append into the batch's
-    * `epoch=E` segment directory, every stats/corpus delta row carries
-    * `epoch`, and `meta/` gains `n_retired` (retired docs whose entries
-    * the standing truncated index may still hold — see
-    * [[retainImpactSegments]]'s threshold rule; an index rebuild resets
-    * it).
-    *
-    * `epoch` must be non-decreasing across folds (a replay re-passes its
-    * own epoch): appending BELOW the newest segment would let a past
-    * retention cut resurrect, and the reference's follower epochs are
-    * monotone anyway (`src/etl.py:94-97`). Multiple batches may share
-    * one epoch (micro-batches within a follower epoch).
-    *
-    * A doc re-delivered AFTER its epoch was retired reads as fresh (its
-    * dl rows are gone) and re-ingests into the CURRENT epoch — the
-    * monolithic retention semantic: the registry resumes append-only
-    * from the new base.
-    */
-  def impactBatchIngestSegmented(spark: SparkSession, registryPath: String,
-                                 batch: DataFrame, id: String, text: String,
-                                 epoch: Long, minTermLen: Int = 1,
-                                 docsPerSlot: Long = 625L, mMin: Int = 64,
-                                 quantizeDepth: Boolean = true,
-                                 needLanded: Boolean = false)
-      : Option[Landed] = {
-    import graft.operators.TermStats
-    require(epoch >= 0, s"epoch must be >= 0, got $epoch")
-    val postBase = s"$registryPath/postings"
-    val dlBase = s"$registryPath/dl"
-    val statsPath = s"$registryPath/stats"
-    val corpusPath = s"$registryPath/corpus"
-    val impactPath = s"$registryPath/impact"
-    val metaPath = s"$registryPath/meta"
-    // a monolithic registry is a different layout family: its postings
-    // live as flat files under postings/ and its meta has no n_retired —
-    // refuse loudly instead of interleaving the two formats
-    if (readableParquet(spark, postBase))
-      throw new IllegalStateException(s"impactBatchIngestSegmented: " +
-        s"$registryPath holds a MONOLITHIC impact registry (flat files " +
-        "under postings/) — use impactBatchIngest, or rebuild it " +
-        "segmented from the source corpus")
-    healSegments(spark, postBase)
-    healSegments(spark, dlBase)
-    for (sub <- Seq("stats", "corpus", "impact", "meta"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
-    if (retentionPending(spark, registryPath))
-      throw new IllegalStateException(s"impactBatchIngestSegmented: " +
-        s"$registryPath has an incomplete retention (intent marker " +
-        "present) — re-run retainImpactSegments to completion before " +
-        "ingesting")
-    val lastEpoch = segmentEpochs(spark, dlBase).lastOption.getOrElse(-1L)
-    require(epoch >= lastEpoch, s"impactBatchIngestSegmented: epoch " +
-      s"$epoch is below the newest segment $lastEpoch — epochs are " +
-      "monotone (a retention cut must never resurrect)")
-    val docsIn = batch.select(col(id).as("doc"), col(text).as("__text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val fresh =
-        if (readableSegments(spark, dlBase))
-          docsIn.join(readSegmented(spark, dlBase, "doc"),
-            Seq("doc"), "left_anti")
-        else docsIn
-      val newPost = TermStats.bm25Postings(
-          fresh.select(col("doc").as(id), col("__text").as(text)),
-          id, text, minTermLen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val newDl = newPost.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // one action for both persists + the batch's size, token mass AND
-        // corpus dkey (impactBatchIngest's treatment, applied identically
-        // here — see there for why the corpus row is driver-assembled)
-        val bstat =
-          newDl.agg(count(lit(1)), sum(col("dl")), min(col("doc"))).head
-        val nFresh = bstat.getLong(0)
-        val batchATok = if (bstat.isNullAt(1)) 0L else bstat.getLong(1)
-        // snapshot only when a reader exists (caller, or the merge arm —
-        // which requires a standing impact/ the appends cannot create)
-        val snapNeeded = needLanded || readableParquet(spark, impactPath)
-        val landed: Option[DataFrame] =
-          if (nFresh == 0) None
-          else graft.functions.Cols.withLoopConf(spark,
-            graft.functions.Cols.loopParts(newDl, batchATok)) {
-            // lineage-severed landed snapshot first (eager
-            // localCheckpoint — see impactBatchIngest), then postings →
-            // stats → corpus → dl LAST (the durability mark) —
-            // impactBatchIngest's order
-            val snap =
-              if (!snapNeeded) None
-              else Some(newPost.join(newDl, "doc")
-                .select(col("doc"), col("term"), col("tf"), col("dl"))
-                .localCheckpoint(true))
+            // postings FIRST, dl LAST: dl is the durability mark; the
+            // additive deltas land in between, all derived from the SAME
+            // deterministic newPost so a replay re-appends
+            // byte-identical rows
             newPost.write.mode("append").parquet(s"$postBase/epoch=$epoch")
-            // corpus delta values from the bstat action above (see
-            // impactBatchIngest) — the epoch column keeps its old
-            // non-nullable lit(epoch) shape
+            // the batch's corpus delta (n_docs, a_tok, dkey) is already
+            // on the driver from the bstat action above; the literal
+            // dkey and the local 1-row corpus frame keep the log schema
+            // exactly (n_docs and epoch required, a_tok/dkey optional —
+            // parquet append mixes footers)
             val dkeyType = newDl.schema("doc").dataType
             newPost.groupBy(col("term")).agg(count(lit(1)).as("df"))
-              .withColumn("dkey", // when() keeps the column NULLABLE like the
-              // min() it replaces — the stats log's folded rows carry
-              // null dkeys, and a required-typed footer must never win
-              // schema inference over them
+              .withColumn("dkey", // when() keeps the column NULLABLE: the
+              // stats log's folded rows carry null dkeys, and a
+              // required-typed footer must never win schema inference
+              // over them
               when(lit(true), lit(bstat.get(2)).cast(dkeyType)))
               .withColumn("epoch", lit(epoch))
               .write.mode("append").parquet(statsPath)
@@ -2784,57 +2246,49 @@ object Incremental {
             snap
           }
         if (readableSegments(spark, dlBase)) {
-          // n AND token mass from the corpus delta log — segmented
-          // registries ALWAYS have it (created with the first fold), no
-          // compat arm; a_tok sizes the registry-shaped scope below
-          val (nTotal, aTokTotal) = {
-            val r = spark.read.parquet(corpusPath).distinct()
-              .agg(sum(col("n_docs")), sum(col("a_tok"))).head
-            (if (r.isNullAt(0)) 0L else r.getLong(0),
-              if (r.isNullAt(1)) 0L else r.getLong(1))
-          }
-          val mCal = TermStats.impactM(nTotal, docsPerSlot, mMin)
-          val mQ = if (!quantizeDepth) mCal
-            else if (mCal >= (1 << 30)) mCal
-            else if (mCal <= 1) 1
-            else Integer.highestOneBit(mCal - 1) << 1
+          val (nTotal, aTokTotal) = corpusTotals(spark, registryPath)
+          val mQ = depthFor(nTotal, docsPerSlot, mMin, quantizeDepth)
           val (builtM, retiredPrev): (Int, Long) =
             if (readableParquet(spark, metaPath)) {
               val r = spark.read.parquet(metaPath).head
               (r.getInt(0), r.getLong(2))
             } else (-1, 0L)
           val rebuilt = mQ > builtM || !readableParquet(spark, impactPath)
+          // registry-shaped maintenance (rebuild window / merge + the
+          // two swaps) under a loop-conf scope sized by the REGISTRY's
+          // token mass — the rebuild's per-term window is registry-
+          // proportional where the batch scope above is not
           graft.functions.Cols.withLoopConf(spark,
             graft.functions.Cols.loopParts(docsIn,
               math.max(aTokTotal, batchATok))) {
-          val next =
-            if (rebuilt)
-              // depth grew (or first build): rebuild from the LIVE
-              // segments — which also evicts any retired docs' stale
-              // index entries, hence the n_retired reset below. Healed
-              // on the window's term partitioning (r20), not upstream
-              TermStats.bm25ImpactIndexWithDlHealed(
-                readSegmented(spark, postBase, "doc", "term", "tf"),
-                readSegmented(spark, dlBase, "doc", "dl"), mQ)
+            if (rebuilt) rebuildIndex(spark, registryPath, mQ)
             else {
               val nIn = docsIn.select(col("doc")).distinct().count()
               val batchRows =
                 if (nFresh == nIn && nFresh > 0)
+                  // entirely-fresh batch — the STEADY STATE: the rows
+                  // the merge needs are exactly the landed snapshot
+                  // (the merge arm implies a standing impact/ artifact,
+                  // which implies snapNeeded — the snapshot exists)
                   landed.get
                 else
-                  readSegmented(spark, postBase, "doc", "term", "tf")
+                  // recovery arm: some batch docs' rows live only in the
+                  // registry — a crash between the appends and this swap
+                  // or a source that re-delivers ingested docs.
+                  // Batch-keyed registry join; impactIndexMerge's
+                  // distinct keeps re-merged or replay-duplicated rows
+                  // from double-counting toward m, which also heals the
+                  // duplicate dl rows this join can fan out
+                  postingsOf(spark, registryPath)
                     .join(docsIn.select(col("doc")).distinct(), Seq("doc"))
-                    .join(readSegmented(spark, dlBase, "doc", "dl"), "doc")
+                    .join(dlOf(spark, registryPath), "doc")
                     .select(col("doc"), col("term"), col("tf"), col("dl"))
-              TermStats.impactIndexMerge(
-                spark.read.parquet(impactPath), batchRows, builtM)
+              Merge.replaceParquet(spark, impactPath,
+                TermStats.impactIndexMerge(
+                  spark.read.parquet(impactPath), batchRows, builtM))
             }
-          val effM = math.max(mQ, builtM)
-          Merge.replaceParquet(spark, impactPath, next)
-          import spark.implicits._
-          Merge.replaceParquet(spark, metaPath,
-            Seq((effM, nTotal, if (rebuilt) 0L else retiredPrev))
-              .toDF("m_built", "n_docs", "n_retired"))
+            writeMeta(spark, registryPath, math.max(mQ, builtM), nTotal,
+              if (rebuilt) 0L else retiredPrev)
           }
         }
         landed.map(Landed(_, nFresh))
@@ -2842,56 +2296,12 @@ object Incremental {
     } finally { docsIn.unpersist(); () }
   }
 
-  /** [[impactIndexStats]] over a SEGMENTED registry — identical serve
-    * contract (raw lazy postings/dl, materialized df/corpus from the
-    * delta logs, retention-pending warning), with postings/dl read
-    * through the Hive-partitioned segment layout and the partition
-    * column projected away (every serve consumer is epoch-blind).
-    * Segmented registries always carry stats/corpus (created with the
-    * first fold), so there is no pre-stats compat arm to fall into.
-    *
-    * df assembly is O(vocab + recent), not O(vocab × live epochs): the
-    * per-(term, epoch) fold the retention cut needs makes the stats log
-    * vocab×epochs rows, so summing it per serve would grow with the
-    * retention window's epoch count. [[compactImpactSegments]]
-    * materializes `stats_serve` — the epoch-blind df rollup of every
-    * SEALED epoch (frozen forever by the monotone-epoch argument, its
-    * `folded_through` column records the seal line) — and the serve
-    * unions it with only the log rows ABOVE that line. With no
-    * `stats_serve` (never compacted, or deleted by a retention cut —
-    * its pre-aggregated rows can't be epoch-filtered), the serve falls
-    * back to the full log: always correct, one compaction from cheap.
-    */
-  def impactIndexStatsSegmented(spark: SparkSession, registryPath: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    if (retentionPending(spark, registryPath))
-      graft.Log.warn(s"impactIndexStatsSegmented: $registryPath has an " +
-        "incomplete retention (intent marker present) — df/corpus may " +
-        "still count retired docs until retainImpactSegments is re-run")
-    val postings =
-      readSegmented(spark, s"$registryPath/postings", "doc", "term", "tf")
-    val dl = readSegmented(spark, s"$registryPath/dl", "doc", "dl")
-    val statsLog = spark.read.parquet(s"$registryPath/stats").distinct()
-    val servePath = s"$registryPath/stats_serve"
-    val dfreq =
-      if (readableParquet(spark, servePath)) {
-        val srv = spark.read.parquet(servePath)
-        // folded_through is constant across rows; one-row read
-        val ft = srv.select(col("folded_through")).head.getLong(0)
-        srv.select(col("term"), col("df"))
-          .unionByName(statsLog.filter(col("epoch") > ft)
-            .select(col("term"), col("df")))
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      } else statsLog.groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val corpus = spark.read.parquet(s"$registryPath/corpus").distinct()
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("a_tok")).as("a_tok"))
-    (postings, dfreq, dl, corpus)
-  }
-
-  /** Retention for the SEGMENTED impact registry — the O(retired +
-    * delta-log) form of [[retainImpactRegistry]] (see the section
-    * comment above for why segmentation breaks the "retention =
-    * rebuild" equation). Retires every epoch `< minEpoch`:
+  /** Retention for the impact registry — the T4-style sliding-window
+    * story the serve contract needs when the corpus is NOT append-only
+    * (the reference retires witness edges older than 5 days,
+    * `src/arango_queries.py:90-99`). Retires every epoch `< minEpoch` in
+    * O(retired + delta-log) (see the section comment for why an epoch
+    * cut never has to rewrite surviving bytes):
     *
     *  1. The DECISION — the accumulated retired-debt TOTAL after this
     *     cut (docs summed from the retired epochs' corpus delta rows —
@@ -2918,51 +2328,41 @@ object Incremental {
     *     standing index serves with ≤ share of its slots wasted on
     *     retired entries (correct, dl-inner-join argument; recall floor
     *     ≥ recall(m·(1−share))) and `meta.n_retired` carries the debt.
+    *     Subsequent [[impactBatchIngest]] folds resume the monotone
+    *     merge from the retained base.
     *
-    * Same enforced crash contract as the monolithic form: the marker is
-    * written before the first mutation and removed after the last swap;
-    * while present, [[impactBatchIngestSegmented]] refuses and
-    * [[impactIndexStatsSegmented]] warns; the op is idempotent under
-    * re-run (recorded decision + already-deleted dirs + filter no-ops).
+    * Enforced crash contract (ADVICE r18): the marker
+    * (`retain_intent`) is written before the first mutation and removed
+    * after the last swap; while present, [[impactBatchIngest]] refuses
+    * (a half-retained registry's stale deltas would read as
+    * forever-pending rows once new batches resume) and
+    * [[impactIndexStats]] warns; the op is idempotent under re-run
+    * (recorded decision + already-deleted dirs + filter no-ops).
     */
-  def retainImpactSegments(spark: SparkSession, registryPath: String,
+  def retainImpactRegistry(spark: SparkSession, registryPath: String,
                            minEpoch: Long, rebuildSharePm: Long = 250000L,
                            docsPerSlot: Long = 625L, mMin: Int = 64,
                            quantizeDepth: Boolean = true): Unit = {
-    import graft.operators.TermStats
     require(rebuildSharePm >= 0 && rebuildSharePm <= 1000000L,
       s"rebuildSharePm must be in [0, 1e6], got $rebuildSharePm")
-    val postBase = s"$registryPath/postings"
     val dlBase = s"$registryPath/dl"
-    val statsPath = s"$registryPath/stats"
     val corpusPath = s"$registryPath/corpus"
-    val impactPath = s"$registryPath/impact"
     val metaPath = s"$registryPath/meta"
-    healSegments(spark, postBase)
-    healSegments(spark, dlBase)
-    for (sub <- Seq("stats", "corpus", "impact", "meta", "stats_serve"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
-    val marker = new org.apache.hadoop.fs.Path(s"$registryPath/retain_intent")
+    healRegistry(spark, registryPath,
+      "stats", "corpus", "impact", "meta", "stats_serve")
+    val marker = new Path(s"$registryPath/retain_intent")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // resume-or-begin: parse a recorded decision if one is pending
-    val recorded: Option[(Long, Long)] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        val txt = try new String(in.readAllBytes(), "UTF-8").trim
-          finally in.close()
-        txt.split("\\s+") match {
-          case Array(e, r) =>
-            scala.util.Try((e.toLong, r.toLong)).toOption
-          case _ => None // empty/foreign marker (monolithic form writes
-                         // none): fall through to a fresh decision — the
-                         // conservative arm below recomputes from the
-                         // CURRENT state, which can only under-count the
-                         // retired debt, never corrupt
-        }
-      }
+    // resume-or-begin: parse a recorded decision if one is pending; an
+    // empty/foreign marker falls through to a fresh decision — the
+    // conservative arm below recomputes from the CURRENT state, which
+    // can only under-count the retired debt, never corrupt
+    val recorded: Option[(Long, Long)] = readMarker(fs, marker)
+      .flatMap(_.split("\\s+") match {
+        case Array(e, r) => scala.util.Try((e.toLong, r.toLong)).toOption
+        case _ => None
+      })
     recorded.filter(_._1 != minEpoch).foreach { case (e, _) =>
-      throw new IllegalStateException(s"retainImpactSegments: " +
+      throw new IllegalStateException(s"retainImpactRegistry: " +
         s"$registryPath has an incomplete retention at cutoff $e — " +
         s"re-run with minEpoch=$e to complete it before retiring to " +
         s"$minEpoch")
@@ -2985,24 +2385,18 @@ object Incremental {
         else 0L
       retiredPrev + retiredNew
     }
-    if (recorded.isEmpty) {
-      val out = fs.create(marker, true)
-      try out.write(s"$minEpoch $retiredTotal".getBytes("UTF-8"))
-      finally out.close()
-    }
+    if (recorded.isEmpty) writeMarker(fs, marker, s"$minEpoch $retiredTotal")
     // mutations — each idempotent under re-run. stats_serve FIRST: its
     // pre-aggregated rows can't be epoch-filtered, so the rollup is
     // dropped (next compaction rebuilds it from the filtered log) —
     // deleted before the log filters so a crash between them leaves the
     // serve on the log alone, never on a stale retired-inclusive rollup
-    locally {
-      val p = new org.apache.hadoop.fs.Path(s"$registryPath/stats_serve")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    for (base <- Seq(postBase, dlBase);
+    fs.delete(new Path(s"$registryPath/stats_serve"), true)
+    for (base <- Seq(s"$registryPath/postings", dlBase);
          e <- segmentEpochs(spark, base) if e < minEpoch)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/epoch=$e"), true)
-    for (p <- Seq(statsPath, corpusPath) if readableParquet(spark, p))
+      fs.delete(new Path(s"$base/epoch=$e"), true)
+    for (p <- Seq(s"$registryPath/stats", corpusPath)
+         if readableParquet(spark, p))
       Merge.replaceParquet(spark, p,
         spark.read.parquet(p).filter(col("epoch") >= minEpoch))
     if (!readableSegments(spark, dlBase)) {
@@ -3010,65 +2404,52 @@ object Incremental {
       // artifacts so the next ingest starts a first build. compact_mark
       // goes too: a from-scratch restart may legally reuse low epoch
       // numbers, which a stale mark would make compaction skip forever
-      for (sub <- Seq("impact", "meta", "inflight", "compact_mark",
-          "stats_serve")) {
-        val p = new org.apache.hadoop.fs.Path(s"$registryPath/$sub")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+      for (sub <- Seq("impact", "meta", "compact_mark"))
+        fs.delete(new Path(s"$registryPath/$sub"), true)
     } else {
-      // live doc count AND token mass in one log read — a_tok bounds the
-      // surviving postings rows, the rebuild arm's shuffle sizing operand
-      val (live, liveATok) = {
-        val r = spark.read.parquet(corpusPath).distinct()
-          .agg(sum(col("n_docs")), sum(col("a_tok"))).head
-        (if (r.isNullAt(0)) 0L else r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
+      val (live, liveATok) = corpusTotals(spark, registryPath)
       val (mBuilt, nAtBuild): (Int, Long) =
         if (readableParquet(spark, metaPath)) {
           val r = spark.read.parquet(metaPath).head
           (r.getInt(0), r.getLong(1))
         } else (-1, 0L)
-      val rebuild = mBuilt < 0 || !readableParquet(spark, impactPath) ||
+      val rebuild = mBuilt < 0 ||
+        !readableParquet(spark, s"$registryPath/impact") ||
         retiredTotal * 1000000L >= rebuildSharePm * (retiredTotal + live)
       if (rebuild) {
-        val mCal = TermStats.impactM(live, docsPerSlot, mMin)
-        val mQ = if (!quantizeDepth) mCal
-          else if (mCal >= (1 << 30)) mCal
-          else if (mCal <= 1) 1
-          else Integer.highestOneBit(mCal - 1) << 1
-        // registry-sized loop-conf scope (impactBatchIngest's rebuild-arm
-        // treatment): the per-term window is proportional to the
-        // SURVIVING segments, and the mass is already in hand
+        val mQ = depthFor(live, docsPerSlot, mMin, quantizeDepth)
+        // registry-sized loop-conf scope: the per-term window is
+        // proportional to the SURVIVING segments, and the mass is
+        // already in hand
         graft.functions.Cols.withLoopConf(spark,
           graft.functions.Cols.loopParts(
             spark.range(1).toDF("i"), liveATok)) {
-        Merge.replaceParquet(spark, impactPath,
-          TermStats.bm25ImpactIndexWithDlHealed(
-            readSegmented(spark, postBase, "doc", "term", "tf"),
-            readSegmented(spark, dlBase, "doc", "dl"), mQ))
-        import spark.implicits._
-        Merge.replaceParquet(spark, metaPath,
-          Seq((mQ, live, 0L)).toDF("m_built", "n_docs", "n_retired"))
+          rebuildIndex(spark, registryPath, mQ)
+          writeMeta(spark, registryPath, mQ, live, 0L)
         }
-      } else {
-        import spark.implicits._
-        Merge.replaceParquet(spark, metaPath,
-          Seq((mBuilt, nAtBuild, retiredTotal))
-            .toDF("m_built", "n_docs", "n_retired"))
-      }
+      } else writeMeta(spark, registryPath, mBuilt, nAtBuild, retiredTotal)
     }
     // last: only a COMPLETED retention clears the marker
     fs.delete(marker, false)
     ()
   }
 
-  /** [[compactImpactRegistry]] for the segmented layout: per-SEGMENT
-    * distinct rewrites of postings/dl (each segment swaps independently
-    * — a compaction never merges epochs, or retention's directory drops
-    * would stop being exact) and the stats/corpus delta-log fold grouped
-    * PER EPOCH (durable/pending rule unchanged), so folded rows stay
-    * droppable by a later epoch cut.
+  /** The impact registry's COMPACTION — the LSM fold the crash contract
+    * defers to: per-SEGMENT distinct rewrites of postings/dl (each
+    * segment swaps independently — a compaction never merges epochs, or
+    * retention's directory drops would stop being exact) and the
+    * stats/corpus delta-log fold grouped PER EPOCH: durable deltas
+    * (their `dkey` is in the dl doc set) and previously folded rows
+    * (`dkey` null) collapse into one row per (term, epoch) / per epoch,
+    * while deltas of a crashed not-yet-durable batch are kept verbatim
+    * so their replay still distinct-heals. Folded rows stay droppable by
+    * a later epoch cut. Run on the fold cadence
+    * ([[streamingImpactIndex]]'s `compactEvery` wires exactly that), not
+    * per batch; never concurrently with a crashed batch's replay (the
+    * stream's own cadence satisfies this: a restart replays the wedged
+    * batch before any later batch can trigger a fold). The impact/ and
+    * meta/ artifacts are untouched (recomputed snapshots, never
+    * accumulating logs).
     *
     * Cost is O(current segment + delta-log), NOT O(registry): epochs
     * strictly below the newest are SEALED (the ingest's monotone-epoch
@@ -3085,25 +2466,16 @@ object Incremental {
     * — idempotent, distinct of distinct); a torn/unparseable marker
     * reads as "nothing compacted" and degrades to the full rewrite.
     */
-  def compactImpactSegments(spark: SparkSession, registryPath: String)
+  def compactImpactRegistry(spark: SparkSession, registryPath: String)
       : Unit = {
-    val postBase = s"$registryPath/postings"
     val dlBase = s"$registryPath/dl"
-    healSegments(spark, postBase)
-    healSegments(spark, dlBase)
-    for (sub <- Seq("stats", "corpus", "stats_serve"))
-      Merge.healSwap(spark, s"$registryPath/$sub")
+    healRegistry(spark, registryPath, "stats", "corpus", "stats_serve")
     val markP = new Path(s"$registryPath/compact_mark")
     val mfs = markP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mark: Long =
-      if (!mfs.exists(markP)) Long.MinValue
-      else {
-        val in = mfs.open(markP)
-        val txt = try new String(in.readAllBytes(), "UTF-8").trim
-          finally in.close()
-        scala.util.Try(txt.toLong).getOrElse(Long.MinValue)
-      }
-    for (base <- Seq(postBase, dlBase);
+    val mark: Long = readMarker(mfs, markP)
+      .flatMap(t => scala.util.Try(t.toLong).toOption)
+      .getOrElse(Long.MinValue)
+    for (base <- Seq(s"$registryPath/postings", dlBase);
          e <- segmentEpochs(spark, base) if e > mark) {
       val p = s"$base/epoch=$e"
       if (readableParquet(spark, p))
@@ -3147,10 +2519,10 @@ object Incremental {
     }
     // materialize the serve-side df rollup of every SEALED epoch
     // (frozen forever — sealed epochs gain no rows and never transition
-    // durable/pending), so impactIndexStatsSegmented reads O(vocab)
-    // rows plus only the log rows above the seal line instead of the
-    // full vocab×epochs fold per serve. Written BEFORE the mark (a
-    // crash between them leaves an older-ft rollup — still exact).
+    // durable/pending), so impactIndexStats reads O(vocab) rows plus
+    // only the log rows above the seal line instead of the full
+    // vocab×epochs fold per serve. Written BEFORE the mark (a crash
+    // between them leaves an older-ft rollup — still exact).
     val sealedTopOpt = segmentEpochs(spark, dlBase).lastOption.map(_ - 1L)
     for (sealedTop <- sealedTopOpt if sealedTop >= 0 &&
            readableParquet(spark, s"$registryPath/stats")) {
@@ -3163,35 +2535,155 @@ object Incremental {
     // LAST: everything above the old mark is now distinct, so every
     // SEALED epoch (strictly below the newest — only the newest may
     // still receive appends) is compacted-forever; advance the mark
-    sealedTopOpt.filter(_ > mark).foreach { sealedTop =>
-      val out = mfs.create(markP, true)
-      try out.write(sealedTop.toString.getBytes("UTF-8"))
-      finally out.close()
-    }
+    sealedTopOpt.filter(_ > mark)
+      .foreach(sealedTop => writeMarker(mfs, markP, sealedTop.toString))
   }
 
-  /** [[streamingImpactIndex]] over the SEGMENTED registry: the stream's
-    * micro-batches fold through [[impactBatchIngestSegmented]] with the
-    * epoch supplied per batch by `epochOf(batchId)` (a follower
+  /** Streaming maintenance of the impact-truncated BM25 serve index —
+    * the incremental path the q203/q204 pruned serves imply: a
+    * production deployment ingests documents continuously and must not
+    * re-tokenize the corpus per refresh. Each micro-batch is one
+    * [[impactBatchIngest]] fold (see there for the step list, costs, and
+    * the crash contract) into the epoch `epochOf(batchId)` (a follower
     * deployment maps its epoch clock here; monotone by the ingest
-    * contract), compaction on the same `compactEvery` cadence.
+    * contract; `_ => 0L` for a registry that is never retired).
+    *
+    * `compactEvery` gives the fold-cadence compaction an OWNER (the
+    * Merge delta-log convention): every N batches the stream itself
+    * runs [[compactImpactRegistry]], so crash-replay duplicates and
+    * delta-log length stay bounded by the cadence instead of growing
+    * with replay history until an operator remembers to fold. 0 = off
+    * (the caller owns compaction — e.g. one fold per epoch from the
+    * backfill driver). Safe at any cadence: compaction runs strictly
+    * between batch folds on the stream's own thread, and a restart
+    * replays a wedged batch before any later batch can trigger a fold.
     */
-  def streamingImpactIndexSegmented(stream: DataFrame, checkpointDir: String,
-                                    registryPath: String, id: String,
-                                    text: String, epochOf: Long => Long,
-                                    minTermLen: Int = 1,
-                                    docsPerSlot: Long = 625L, mMin: Int = 64,
-                                    compactEvery: Int = 0)
+  def streamingImpactIndex(stream: DataFrame, checkpointDir: String,
+                           registryPath: String, id: String, text: String,
+                           epochOf: Long => Long, minTermLen: Int = 1,
+                           docsPerSlot: Long = 625L, mMin: Int = 64,
+                           compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        impactBatchIngestSegmented(batch.sparkSession, registryPath, batch,
-          id, text, epochOf(batchId), minTermLen, docsPerSlot, mMin)
+        impactBatchIngest(batch.sparkSession, registryPath, batch, id, text,
+          epochOf(batchId), minTermLen, docsPerSlot, mMin)
           .foreach(_.release()) // per-batch snapshot blocks must not outlive the fold
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          compactImpactSegments(batch.sparkSession, registryPath)
+          compactImpactRegistry(batch.sparkSession, registryPath)
         ()
       }
       .start()
+
+  /** Incremental maintenance of the bucketed SERVING tables — the
+    * standing-deployment form of [[publishImpactServeTables]] (VERDICT
+    * r19 #2): that call is an O(registry) snapshot republication per
+    * cadence, where a live stream should pay O(batch) per batch. Each
+    * micro-batch here (1) folds into the registry's epoch 0 via
+    * [[impactBatchIngest]] (unchanged crash contract), (2) APPENDS the
+    * batch's landed postings/dl rows into the doc-bucketed catalog
+    * tables — [[graft.sources.Bucketing.appendBucketed]] with the
+    * matching spec, so the write-side shuffle is O(batch) and the
+    * serve-side co-location is preserved — and (3) republishes the
+    * term-bucketed `impact` table, a snapshot by design (m·|vocab|
+    * rows, the bounded artifact truncation exists to produce).
+    *
+    * Exactly-once on the tables WITHOUT a marker: the rows appended are
+    * the batch's docs ANTI-JOINED against the published dl table (the
+    * published-doc set — the same role the registry's dl plays for
+    * ingest). In the steady state those are exactly the rows the fold
+    * just landed, handed back by [[impactBatchIngest]] as the
+    * lineage-severed [[Landed]] snapshot — appended O(batch) with NO
+    * registry scan; when the published set lags further (a crash between
+    * the registry fold and the table appends), the rows are fetched
+    * doc-keyed from the registry's live segments and footprint-distinct'd.
+    * A replayed batch (or a source re-delivering published
+    * docs) anti-joins away; a crash between the postings and dl appends
+    * re-appends byte-identical postings rows on replay, which the
+    * serve's footprint heal collapses (`TermStats.rescoreCandidates`)
+    * and [[graft.sources.Bucketing.compactBucketed]] folds out on the
+    * owner's cadence — the registry family's duplicate contract,
+    * verbatim. A crash after the dl append but before the impact
+    * republication leaves the impact table one batch stale; the serve
+    * stays correct (candidates rescore against the published postings)
+    * and the next landing batch republishes. The membership anti-join
+    * reads the dl table — the SLIM per-doc frame, never postings — and
+    * shuffles only the batch side.
+    */
+  def streamingImpactServePublish(stream: DataFrame, checkpointDir: String,
+                                  registryPath: String, prefix: String,
+                                  id: String, text: String,
+                                  buckets: Int = 32, minTermLen: Int = 1,
+                                  docsPerSlot: Long = 625L, mMin: Int = 64,
+                                  quantizeDepth: Boolean = true)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val spark = batch.sparkSession
+        val landed = impactBatchIngest(spark, registryPath, batch, id, text,
+          0L, minTermLen, docsPerSlot, mMin, quantizeDepth,
+          needLanded = true)
+        val postT = s"${prefix}_postings"
+        val dlT = s"${prefix}_dl"
+        val impT = s"${prefix}_impact"
+        for (t <- Seq(postT, dlT, impT) if !spark.catalog.tableExists(t))
+          clearStaleTable(spark, t)
+        // eager checkpoint: cuts the dl TABLE read out of the lineage of
+        // what gets appended back into that same table below
+        val newDocs = {
+          val batchDocs = batch.select(col(id).as("doc")).distinct()
+          if (spark.catalog.tableExists(dlT))
+            batchDocs.join(spark.table(dlT).select(col("doc")),
+              Seq("doc"), "left_anti")
+          else batchDocs
+        }.localCheckpoint(true)
+        val nNew = newDocs.count()
+        if (nNew > 0 || !spark.catalog.tableExists(impT)) {
+          // STEADY STATE: the docs to publish are exactly the docs this
+          // fold landed — the published dl set only ever lags the
+          // registry dl set (rows are published strictly after their
+          // registry fold), so fresh ⊆ newDocs always, and equal COUNTS
+          // mean equal SETS. Then the rows to append are the fold's own
+          // landed snapshot (byte-identical to what a registry
+          // extraction would return, already duplicate-free), O(batch)
+          // with no registry scan. RECOVERY (a crash between the
+          // registry fold and the table appends left newDocs ⊋ fresh):
+          // fetch doc-keyed from the registry, footprint-distinct'd.
+          // bucketBy writes one file per (task × bucket): the landed
+          // snapshot keeps its fold-join partitioning, so appending it
+          // raw would fan out P×buckets tiny files per batch and every
+          // later table read (the serve, the membership anti-join) pays
+          // the per-file open cost — repartitioning on the bucket key
+          // lands each bucket in ONE task → ≤1 file per bucket per batch.
+          val (posts, dls) = landed match {
+            case Some(l) if l.nFresh == nNew =>
+              (l.rows.select(col("doc"), col("term"), col("tf"))
+                .repartition(buckets, col("doc")),
+                bucketHealed(l.rows.select(col("doc"), col("dl")),
+                  buckets, "doc"))
+            case _ =>
+              (postingsOf(spark, registryPath)
+                .join(broadcast(newDocs), Seq("doc")).distinct(),
+                dlOf(spark, registryPath)
+                  .join(broadcast(newDocs), Seq("doc")).distinct())
+          }
+          // postings first, dl LAST — dl is the published-doc mark the
+          // anti-join reads, so a torn append replays instead of losing
+          graft.sources.Bucketing.appendBucketed(posts, postT, buckets, "doc")
+          graft.sources.Bucketing.appendBucketed(dls, dlT, buckets, "doc")
+          graft.sources.Bucketing.writeBucketed(
+            impactIndexRegistry(spark, registryPath), impT, buckets, "term")
+        }
+        // per-batch checkpoint blocks (the landed snapshot and the
+        // newDocs membership set) must not outlive the batch — a
+        // standing stream would otherwise accumulate storage blocks
+        landed.foreach(_.release())
+        unpersistCheckpoint(newDocs)
+        ()
+      }
+      .start()
+  }
 }

@@ -16,7 +16,9 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan
   }
 
-  private def countShuffles(df: DataFrame): Int = {
+  private def countShuffles(df: DataFrame): Int = shufflesIn(executed(df))
+
+  private def shufflesIn(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
@@ -37,7 +39,7 @@ class PlanSpec extends AnyFunSuite {
       case q: QueryStageExec => walk(q.plan)
       case other => other.children.map(walk).sum
     }
-    walk(executed(df))
+    walk(plan)
   }
 
   private def planString(df: DataFrame): String = executed(df).toString
@@ -453,26 +455,88 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"))
   }
 
-  test("impact-registry serve stats read the MATERIALIZED delta logs, " +
-    "never a rollup of the full postings registry (the zipfreg decay)") {
+  /** A fresh impact registry over the sf0.001 documents, landed in
+    * `epochs` folds (epoch e = the `doc_id % epochs = e` slice).
+    */
+  private def impactRegistry(tag: String, epochs: Int = 1): String = {
     import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables(spark, d, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-impact")
-      .toFile.getAbsolutePath
-    graft.streaming.Incremental.impactBatchIngest(spark, s"$dir/reg",
-      docs, "doc_id", "text", quantizeDepth = false)
-    val (_, dfq, _, corp) =
-      graft.streaming.Incremental.impactIndexStats(spark, s"$dir/reg")
-    for ((frame, label) <- Seq((dfq, "dfreq"), (corp, "corpus"))) {
-      val scans = frame.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case h: org.apache.spark.sql.execution.datasources
-                .HadoopFsRelation =>
-              h.location.rootPaths.map(_.toString).mkString(",")
-            case _ => ""
-          }
+    val reg = java.nio.file.Files.createTempDirectory(s"graft-plan-$tag")
+      .toFile.getAbsolutePath + "/reg"
+    for (e <- 0 until epochs)
+      graft.streaming.Incremental.impactBatchIngest(spark, reg,
+        docs.filter(col("doc_id") % epochs === e), "doc_id", "text",
+        epoch = e.toLong, quantizeDepth = false)
+    reg
+  }
+
+  /** Root paths of every file scan below `p`. */
+  private def fileScans(p: org.apache.spark.sql.catalyst.plans.logical
+      .LogicalPlan): Seq[String] = p.collect {
+    case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+      r.relation match {
+        case h: org.apache.spark.sql.execution.datasources
+            .HadoopFsRelation =>
+          h.location.rootPaths.map(_.toString).mkString(",")
+        case _ => ""
       }
+  }
+
+  /** Every Aggregate (distinct included — the optimizer rewrites
+    * Deduplicate to Aggregate) whose subtree reads ONLY /postings or /dl
+    * registry scans — an O(registry) heal upstream of the keyed join
+    * that would shrink its input to the query footprint. Delta-log
+    * (stats//corpus/) and impact/ aggregates stay exempt: those inputs
+    * are bounded by construction (O(batches·vocab) and m·V).
+    */
+  private def bareRegistryAggregates(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val plan = df.queryExecution.optimizedPlan
+    assert(fileScans(plan).exists(_.contains("/postings")),
+      "fixture: the plan must actually read the postings registry")
+    plan.collect { case a: Aggregate => a }.flatMap { a =>
+      val scans = fileScans(a)
+      val reg = scans.filter(s => s.contains("/postings") || s.contains("/dl"))
+      if (reg.nonEmpty && reg.size == scans.size)
+        Some(s"Aggregate over bare registry scan(s): ${reg.mkString("; ")}")
+      else None
+    }
+  }
+
+  /** The q206-shaped serve (%40 query slice) over a registry's frames. */
+  private def registryServe(reg: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, slice}
+    import graft.streaming.Incremental
+    val docs = graft.sources.Tables(spark, d, "documents")
+    val (postings, dfq, dl, corp) = Incremental.impactIndexStats(spark, reg)
+    val qs = docs.filter(col("doc_id") % 40 === 0)
+      .select(col("doc_id").as("q_id"),
+        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+    graft.operators.TermStats.bm25TopKImpact(
+      Incremental.impactIndexRegistry(spark, reg), postings, dfq, dl, corp,
+      qs, "q_id", "qt", k = 5)
+  }
+
+  /** (shuffle exchanges, hash aggregates) in the AQE-finalized plan. */
+  private def exchangesAndAggregates(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val plan = executed(df)
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    (shufflesIn(plan), nodes(plan).count(_.isInstanceOf[HashAggregateExec]))
+  }
+
+  test("impact-registry serve stats read the MATERIALIZED delta logs, " +
+    "never a rollup of the full postings registry (the zipfreg decay)") {
+    val (_, dfq, _, corp) = graft.streaming.Incremental.impactIndexStats(
+      spark, impactRegistry("impact"))
+    for ((frame, label) <- Seq((dfq, "dfreq"), (corp, "corpus"))) {
+      val scans = fileScans(frame.queryExecution.optimizedPlan)
       assert(scans.nonEmpty, s"$label plan has no file scan to audit")
       assert(scans.forall(p => !p.contains("/postings") && !p.contains("/dl")),
         s"$label must not scan the corpus-proportional registries: $scans")
@@ -486,48 +550,11 @@ class PlanSpec extends AnyFunSuite {
     // postings.distinct()/dl.distinct() — an all-columns HashAggregate +
     // Exchange over the ENTIRE registry, executed per serve call,
     // upstream of the doc-keyed rescore join. The pin: in the whole
-    // served plan, every Aggregate (distinct included — the optimizer
-    // rewrites Deduplicate to Aggregate) whose subtree reads /postings
-    // or /dl must ALSO read some other source below it — i.e. it sits
-    // above the candidate/query join, so its input is query-footprint
-    // rows, never the bare registry. Delta-log (stats//corpus/) and
-    // impact/ aggregates stay exempt: those inputs are bounded by
-    // construction (O(batches·vocab) and m·V).
-    import org.apache.spark.sql.functions.{col, slice}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-    val docs = graft.sources.Tables(spark, d, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-impactserve")
-      .toFile.getAbsolutePath
-    graft.streaming.Incremental.impactBatchIngest(spark, s"$dir/reg",
-      docs, "doc_id", "text", quantizeDepth = false)
-    val trunc =
-      graft.streaming.Incremental.impactIndexRegistry(spark, s"$dir/reg")
-    val (postings, dfq, dl, corp) =
-      graft.streaming.Incremental.impactIndexStats(spark, s"$dir/reg")
-    val qs = docs.filter(col("doc_id") % 40 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = graft.operators.TermStats.bm25TopKImpact(trunc, postings,
-      dfq, dl, corp, qs, "q_id", "qt", k = 5)
-    def scansOf(p: LogicalPlan): Seq[String] = p.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
-          case _ => ""
-        }
-    }
-    val plan = served.queryExecution.optimizedPlan
-    val offenders = plan.collect { case a: Aggregate => a }.flatMap { a =>
-      val scans = scansOf(a)
-      val reg = scans.filter(s => s.contains("/postings") || s.contains("/dl"))
-      if (reg.nonEmpty && reg.size == scans.size)
-        Some(s"Aggregate over bare registry scan(s): ${reg.mkString("; ")}")
-      else None
-    }
-    assert(scansOf(plan).exists(_.contains("/postings")),
-      "fixture: the serve plan must actually read the postings registry")
+    // served plan, every aggregate whose subtree reads /postings or /dl
+    // must ALSO read some other source below it — i.e. it sits above the
+    // candidate/query join, so its input is query-footprint rows.
+    val offenders = bareRegistryAggregates(
+      registryServe(impactRegistry("impactserve")))
     assert(offenders.isEmpty,
       "the O(registry)-per-serve healing distinct is back:\n" +
         offenders.mkString("\n"))
@@ -535,47 +562,12 @@ class PlanSpec extends AnyFunSuite {
 
   test("SEGMENTED impact serve plan: the same no-bare-registry-aggregate " +
     "invariant holds over the epoch-partitioned layout (q209's serve)") {
-    // the segmented reader (impactIndexStatsSegmented) hands back raw
-    // lazy frames read through the Hive-partitioned base paths; the
-    // epoch partition column must not smuggle a full-registry aggregate
-    // back into the serve plan
-    import org.apache.spark.sql.functions.{col, slice}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-    val docs = graft.sources.Tables(spark, d, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-segserve")
-      .toFile.getAbsolutePath
-    for (e <- 0L until 2L)
-      graft.streaming.Incremental.impactBatchIngestSegmented(spark,
-        s"$dir/reg", docs.filter(col("doc_id") % 2 === e), "doc_id", "text",
-        epoch = e, quantizeDepth = false)
-    val trunc =
-      graft.streaming.Incremental.impactIndexRegistry(spark, s"$dir/reg")
-    val (postings, dfq, dl, corp) =
-      graft.streaming.Incremental.impactIndexStatsSegmented(spark, s"$dir/reg")
-    val qs = docs.filter(col("doc_id") % 40 === 0)
-      .select(col("doc_id").as("q_id"),
-        slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val served = graft.operators.TermStats.bm25TopKImpact(trunc, postings,
-      dfq, dl, corp, qs, "q_id", "qt", k = 5)
-    def scansOf(p: LogicalPlan): Seq[String] = p.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
-          case _ => ""
-        }
-    }
-    val plan = served.queryExecution.optimizedPlan
-    val offenders = plan.collect { case a: Aggregate => a }.flatMap { a =>
-      val scans = scansOf(a)
-      val reg = scans.filter(s => s.contains("/postings") || s.contains("/dl"))
-      if (reg.nonEmpty && reg.size == scans.size)
-        Some(s"Aggregate over bare registry scan(s): ${reg.mkString("; ")}")
-      else None
-    }
-    assert(scansOf(plan).exists(_.contains("/postings")),
-      "fixture: the serve plan must actually read the postings registry")
+    // postings/dl come back as raw lazy frames read through the
+    // Hive-partitioned base paths; with more than one live epoch the
+    // partition column must not smuggle a full-registry aggregate back
+    // into the serve plan
+    val offenders = bareRegistryAggregates(
+      registryServe(impactRegistry("segserve", epochs = 2)))
     assert(offenders.isEmpty,
       "the segmented serve grew an O(registry) aggregate:\n" +
         offenders.mkString("\n"))
@@ -591,40 +583,88 @@ class PlanSpec extends AnyFunSuite {
     // heal onto the audit's own candidate footprint; this pin keeps it
     // there.
     import org.apache.spark.sql.functions.{col, slice}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
     val docs = graft.sources.Tables(spark, d, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-audit")
-      .toFile.getAbsolutePath
-    graft.streaming.Incremental.impactBatchIngest(spark, s"$dir/reg",
-      docs, "doc_id", "text", quantizeDepth = false)
-    val (postings, dfq, dl, corp) =
-      graft.streaming.Incremental.impactIndexStats(spark, s"$dir/reg")
+    val (postings, dfq, dl, corp) = graft.streaming.Incremental
+      .impactIndexStats(spark, impactRegistry("audit"))
     val qs = docs.filter(col("doc_id") % 40 === 0)
       .select(col("doc_id").as("q_id"),
         slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-    val audit = graft.operators.TermStats.bm25TopKFromIndexHealed(postings,
-      dfq, dl, corp, qs, "q_id", "qt", k = 5)
-    def scansOf(p: LogicalPlan): Seq[String] = p.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
-          case _ => ""
-        }
-    }
-    val plan = audit.queryExecution.optimizedPlan
-    val offenders = plan.collect { case a: Aggregate => a }.flatMap { a =>
-      val scans = scansOf(a)
-      val reg = scans.filter(s => s.contains("/postings") || s.contains("/dl"))
-      if (reg.nonEmpty && reg.size == scans.size)
-        Some(s"Aggregate over bare registry scan(s): ${reg.mkString("; ")}")
-      else None
-    }
-    assert(scansOf(plan).exists(_.contains("/postings")),
-      "fixture: the audit plan must actually read the postings registry")
+    val offenders = bareRegistryAggregates(
+      graft.operators.TermStats.bm25TopKFromIndexHealed(postings,
+        dfq, dl, corp, qs, "q_id", "qt", k = 5))
     assert(offenders.isEmpty,
       "the O(registry)-per-audit healing distinct is back:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("impact index REBUILD arm (r20): healing on the window's term " +
+    "partitioning saves two exchanges and two aggregates over the " +
+    "upstream-distinct form") {
+    // the rebuild arm used to pass postings.distinct()/dl.distinct() —
+    // an all-columns HashAggregate pair + Exchange on EACH registry
+    // input before the join, then a third exchange into the per-term
+    // window. bm25ImpactIndexWithDlHealed joins the raw frames and one
+    // term-keyed repartition feeds both the healing distinct and the
+    // window.
+    import graft.operators.TermStats
+    val (postings, _, dl, _) = graft.streaming.Incremental.impactIndexStats(
+      spark, impactRegistry("rebuild", epochs = 2))
+    val (exUp, aggUp) = exchangesAndAggregates(
+      TermStats.bm25ImpactIndexWithDl(postings.distinct(), dl.distinct(), 64))
+    val (exH, aggH) = exchangesAndAggregates(
+      TermStats.bm25ImpactIndexWithDlHealed(postings, dl, 64))
+    assert(exH === exUp - 2, s"healed rebuild exchanges $exH vs upstream $exUp")
+    assert(aggH === aggUp - 2,
+      s"healed rebuild aggregates $aggH vs upstream $aggUp")
+  }
+
+  test("impact index MERGE (r20): one term-keyed repartition feeds the " +
+    "healing distinct and the re-truncation window — one exchange fewer " +
+    "than a distinct straight on the union") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Dedup, TermStats}
+    val reg = impactRegistry("merge")
+    val (postings, _, dl, _) =
+      graft.streaming.Incremental.impactIndexStats(spark, reg)
+    val standing = graft.streaming.Incremental.impactIndexRegistry(spark, reg)
+    val batchRows = postings.join(dl, "doc")
+      .select(col("doc"), col("term"), col("tf"), col("dl")).limit(100)
+    val union = standing.unionByName(batchRows)
+    val (exUp, _) = exchangesAndAggregates(
+      Dedup.keepFirstK(union.distinct(), Seq(col("term")),
+          TermStats.impactOrder, 64, "__ir")
+        .select(col("doc"), col("term"), col("tf"), col("dl")))
+    val (exM, _) = exchangesAndAggregates(
+      TermStats.impactIndexMerge(standing, batchRows, 64))
+    assert(exM === exUp - 1, s"merge exchanges $exM vs upstream $exUp")
+  }
+
+  test("serve-table PUBLISH (r20): one bucket-key repartition feeds the " +
+    "healing distinct — a single exchange, hash-partitioned on doc into " +
+    "the bucket count") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val (postings, _, _, _) = graft.streaming.Incremental.impactIndexStats(
+      spark, impactRegistry("publish", epochs = 2))
+    val frame = graft.streaming.Incremental.bucketHealed(postings, 32, "doc")
+    def exchanges(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case q: QueryStageExec => exchanges(q.plan)
+      case s: ShuffleExchangeExec => s +: s.children.flatMap(exchanges)
+      case other => other.children.flatMap(exchanges)
+    }
+    val ex = exchanges(executed(frame))
+    assert(ex.size === 1, s"expected one exchange, got ${ex.size}")
+    ex.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions === 32)
+        assert(h.expressions.map(_.references.map(_.name).mkString)
+          === Seq("doc"))
+      case other => fail(s"publish exchange is not doc-hashed: $other")
+    }
+    assert(!frame.columns.contains("epoch"),
+      "the epoch partition column must not reach a published table")
   }
 }

@@ -67,9 +67,21 @@ class BucketedServeSpec extends AnyFunSuite {
       .toFile.getAbsolutePath
     val reg = s"$dir/reg"
     val docs = (0L until 60L).map(i => (i, text(i))).toDF("doc_id", "text")
-    Incremental.impactBatchIngest(spark, reg, docs, "doc_id", "text",
-      mMin = 8, quantizeDepth = false)
+    // two epochs: the publication folds every live segment, and the
+    // `epoch` partition column must not leak into a published table
+    for (e <- 0L until 2L)
+      Incremental.impactBatchIngest(spark, reg,
+        docs.filter($"doc_id" >= e * 30L && $"doc_id" < (e + 1L) * 30L),
+        "doc_id", "text", epoch = e, mMin = 8, quantizeDepth = false)
+    assert(Incremental.segmentEpochs(spark, s"$reg/postings") === Seq(0L, 1L),
+      "fixture: the registry must span two epochs")
     Incremental.publishImpactServeTables(spark, reg, "bsspec", buckets = 4)
+    assert(spark.table("bsspec_postings").columns.toSeq ===
+      Seq("doc", "term", "tf"))
+    assert(spark.table("bsspec_dl").columns.toSeq === Seq("doc", "dl"))
+    assert(spark.table("bsspec_postings").count() ===
+      TermStats.bm25Postings(docs, "doc_id", "text").count(),
+      "the publication must fold every epoch's postings")
     val qs = docs.filter($"doc_id" % 5 === 0)
       .select($"doc_id".as("q_id"),
         slice(graft.functions.Text.tokens($"text"), 1, 3).as("qt"))
@@ -151,7 +163,7 @@ class BucketedServeSpec extends AnyFunSuite {
     val qs = docs.filter($"doc_id" % 5 === 0)
       .select($"doc_id".as("q_id"),
         slice(graft.functions.Text.tokens($"text"), 1, 3).as("qt"))
-    val (_, rdf, _, rcorp) = Incremental.impactIndexStats(spark, reg)
+    val (rp, rdf, rdl, rcorp) = Incremental.impactIndexStats(spark, reg)
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -165,9 +177,8 @@ class BucketedServeSpec extends AnyFunSuite {
       assert(graft.sources.Bucketing.usedBucketedScan(served))
       // row-level reference: the flat registry serve
       val flat = TermStats.bm25TopKImpact(
-        Incremental.impactIndexRegistry(spark, reg),
-        spark.read.parquet(s"$reg/postings"), rdf,
-        spark.read.parquet(s"$reg/dl"), rcorp, qs, "q_id", "qt", k = 3)
+        Incremental.impactIndexRegistry(spark, reg), rp, rdf, rdl, rcorp,
+        qs, "q_id", "qt", k = 3)
       assert(served.select($"q", $"rank", $"doc", $"score_pm")
           .as[(Long, Long, Long, Long)].collect().toSet ===
         flat.select($"q", $"rank", $"doc", $"score_pm")

@@ -7,11 +7,10 @@ import graft.TestSpark
 import graft.operators.{Merge, TermStats}
 
 /** The impact registry's failure-window machinery (r19, closing the r18
-  * ADVICE slate): the pre-stats legacy backfill, the torn-commitSwap
-  * repair, the retention intent marker, and the compat-arm warnings —
-  * each exercised against a hand-damaged on-disk registry, because every
-  * one of these arms is only load-bearing in states the happy-path specs
-  * can never reach.
+  * ADVICE slate): the torn-commitSwap repair and the retention intent
+  * marker — each exercised against a hand-damaged on-disk registry,
+  * because these arms are only load-bearing in states the happy-path
+  * specs can never reach.
   */
 class ImpactRegistryRobustnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,76 +31,13 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
   private def fs(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  test("pre-stats legacy registry: the first ingest BACKFILLS the " +
-    "stats/corpus delta logs from the durable corpus (ADVICE r18 medium) " +
-    "and warns") {
-    import spark.implicits._
-    val reg = tmpReg("legacy")
-    // hand-build a registry the way a pre-r18 deployment would have left
-    // it: postings/ + dl/ only, no stats//corpus/ artifacts
-    val legacy = docsOf(0L until 30L)
-    val post = TermStats.bm25Postings(legacy, "doc_id", "text")
-    post.write.parquet(s"$reg/postings")
-    post.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
-      .write.parquet(s"$reg/dl")
-    // plus one NON-DURABLE posting row (a crashed batch's partial append:
-    // doc 999 is not in dl) — the backfill must fold durable state only,
-    // or the crashed batch's replay would double-count its deltas
-    Seq((999L, "t0", 1L)).toDF("doc", "term", "tf")
-      .write.mode("append").parquet(s"$reg/postings")
-    Incremental.impactBatchIngest(spark, reg, docsOf(30L until 40L),
-      "doc_id", "text", mMin = 4)
-    assert(graft.Log.recentWarnings.exists(_.contains("backfilling")),
-      "the legacy upgrade must be operator-visible")
-    // the materialized stats must now count the WHOLE corpus (legacy 30
-    // + fresh 10), not just the new batch — the undercount ADVICE named
-    val all = docsOf(0L until 40L)
-    val fullPost = TermStats.bm25Postings(all, "doc_id", "text")
-    val (dfS, _, corpS) = TermStats.bm25Stats(fullPost)
-    val (_, rdf, _, rcorp) = Incremental.impactIndexStats(spark, reg)
-    assert(rdf.as[(String, Long)].collect().toMap ===
-      dfS.as[(String, Long)].collect().toMap,
-      "backfilled stats must cover the pre-existing corpus")
-    assert(rcorp.as[(Long, Long)].collect().head ===
-      corpS.as[(Long, Long)].collect().head,
-      "backfilled corpus row must cover the pre-existing corpus")
-    // the non-durable orphan row stayed out of the fold: doc 999's term
-    // contributes nothing beyond the durable corpus (checked above), and
-    // its raw posting row is still on disk awaiting its replay
-    assert(spark.read.parquet(s"$reg/postings")
-      .filter(col("doc") === 999L).count() === 1L)
-  }
-
-  test("impactIndexStats on a pre-stats registry WARNS on the fallback " +
-    "arm (serve-only legacy deployment) and still computes correct stats") {
-    import spark.implicits._
-    val reg = tmpReg("compat")
-    val legacy = docsOf(0L until 20L)
-    val post = TermStats.bm25Postings(legacy, "doc_id", "text")
-    post.write.parquet(s"$reg/postings")
-    post.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
-      .write.parquet(s"$reg/dl")
-    val before = graft.Log.recentWarnings.size
-    val (_, rdf, _, rcorp) = Incremental.impactIndexStats(spark, reg)
-    val fired = graft.Log.recentWarnings.drop(before)
-    assert(fired.exists(_.contains("stats missing")),
-      "the stats fallback arm must warn")
-    assert(fired.exists(_.contains("corpus missing")),
-      "the corpus fallback arm must warn")
-    val (dfS, _, corpS) = TermStats.bm25Stats(post)
-    assert(rdf.as[(String, Long)].collect().toMap ===
-      dfS.as[(String, Long)].collect().toMap)
-    assert(rcorp.as[(Long, Long)].collect().head ===
-      corpS.as[(Long, Long)].collect().head)
-  }
-
   test("healSwap: a crash between commitSwap's renames is repaired — a " +
     "complete .tmp finishes the intended swap, a lone .old restores the " +
     "pre-swap state (ADVICE r18)") {
     import spark.implicits._
     val reg = tmpReg("tornswap")
     Incremental.impactBatchIngest(spark, reg, docsOf(0L until 20L),
-      "doc_id", "text", mMin = 4)
+      "doc_id", "text", epoch = 0L, mMin = 4)
     val f = fs(reg)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     // window A: target renamed aside, new state fully written as tmp
@@ -110,8 +46,8 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
     assert(f.rename(p(s"$reg/stats"), p(s"$reg/stats.old-crash")))
     val oldStats = spark.read.parquet(s"$reg/stats.old-crash")
     oldStats.unionByName(
-        Seq(("zz_tmp_marker", 1L, Option.empty[Long]))
-          .toDF("term", "df", "dkey"))
+        Seq(("zz_tmp_marker", 1L, Option.empty[Long], 0L))
+          .toDF("term", "df", "dkey", "epoch"))
       .write.parquet(s"$reg/stats.tmp-crash")
     assert(f.exists(p(s"$reg/stats.tmp-crash/_SUCCESS")),
       "fixture: the committed write must carry _SUCCESS")
@@ -137,7 +73,7 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
     // batch-only and every serve would undercount n_docs from then on
     assert(f.rename(p(s"$reg/corpus"), p(s"$reg/corpus.old-crash2")))
     Incremental.impactBatchIngest(spark, reg, docsOf(20L until 30L),
-      "doc_id", "text", mMin = 4)
+      "doc_id", "text", epoch = 0L, mMin = 4)
     val (_, _, _, rcorp) = Incremental.impactIndexStats(spark, reg)
     assert(rcorp.as[(Long, Long)].collect().head._1 === 30L,
       "ingest onto a torn corpus log must heal it, not restart it")
@@ -150,8 +86,10 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
     "retention; a completed re-run clears the marker and ingest resumes") {
     import spark.implicits._
     val reg = tmpReg("retmark")
-    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 30L),
-      "doc_id", "text", mMin = 4)
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 10L),
+      "doc_id", "text", epoch = 0L, mMin = 4)
+    Incremental.impactBatchIngest(spark, reg, docsOf(10L until 30L),
+      "doc_id", "text", epoch = 1L, mMin = 4)
     // simulate the crash window: the marker is on disk (written before
     // the first rewrite, removed only after the last swap)
     val f = fs(reg)
@@ -160,7 +98,7 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
     assert(Incremental.retentionPending(spark, reg))
     val ex = intercept[IllegalStateException] {
       Incremental.impactBatchIngest(spark, reg, docsOf(30L until 40L),
-        "doc_id", "text", mMin = 4)
+        "doc_id", "text", epoch = 1L, mMin = 4)
     }
     assert(ex.getMessage.contains("retention"))
     // a serve in the window is allowed but warned (stale-delta contract)
@@ -171,13 +109,13 @@ class ImpactRegistryRobustnessSpec extends AnyFunSuite {
     // earlier test must not satisfy the assertion (ADVICE r19)
     assert(graft.Log.recentWarnings.drop(before)
       .exists(_.contains("incomplete retention")))
-    // the owner re-runs retention to completion: marker cleared, ingest
+    // the owner re-runs retention to completion (the bare marker records
+    // no decision, so the re-run decides afresh): marker cleared, ingest
     // resumes, and the registry equals the from-scratch retained build
-    Incremental.retainImpactRegistry(spark, reg,
-      (10L until 30L).toDF("doc"), mMin = 4)
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L, mMin = 4)
     assert(!Incremental.retentionPending(spark, reg))
     Incremental.impactBatchIngest(spark, reg, docsOf(30L until 40L),
-      "doc_id", "text", mMin = 4)
+      "doc_id", "text", epoch = 1L, mMin = 4)
     val all = docsOf(10L until 40L)
     val fullPost = TermStats.bm25Postings(all, "doc_id", "text")
     val (dfS, dlS, _) = TermStats.bm25Stats(fullPost)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.operators.TermStats
 
-/** The epoch-SEGMENTED impact registry (VERDICT r19 #1): ingest
+/** The epoch-segmented impact registry (VERDICT r19 #1): ingest
   * equivalence with the from-scratch build, retention as segment drops +
   * delta-log filters (never a surviving-byte rewrite below the rebuild
   * threshold), the recorded-decision crash contract, the monotone-epoch
@@ -40,7 +40,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
   private def registryServe(reg: String, qIds: Seq[Long]): Set[(Long, Long, Long, Long, Long)] = {
     import spark.implicits._
     val trunc = Incremental.impactIndexRegistry(spark, reg)
-    val (p, dfq, dl, c) = Incremental.impactIndexStatsSegmented(spark, reg)
+    val (p, dfq, dl, c) = Incremental.impactIndexStats(spark, reg)
     TermStats.bm25TopKImpact(trunc, p, dfq, dl, c,
         queriesOf(qIds), "q_id", "qt", k = 3)
       .select(col("q"), col("rank"), col("doc"), col("n_terms"),
@@ -74,16 +74,16 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     import spark.implicits._
     val reg = tmpReg("ingest")
     val e0 = 0L until 20L; val e1 = 20L until 40L; val e2 = 40L until 60L
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(e0),
+    Incremental.impactBatchIngest(spark, reg, docsOf(e0),
       "doc_id", "text", epoch = 0L, mMin = 4, quantizeDepth = false)
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(e1),
+    Incremental.impactBatchIngest(spark, reg, docsOf(e1),
       "doc_id", "text", epoch = 1L, mMin = 4, quantizeDepth = false)
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(e2),
+    Incremental.impactBatchIngest(spark, reg, docsOf(e2),
       "doc_id", "text", epoch = 2L, mMin = 4, quantizeDepth = false)
     val all = docsOf(0L until 60L)
     val fullPost = TermStats.bm25Postings(all, "doc_id", "text")
     val (dfS, dlS, corpS) = TermStats.bm25Stats(fullPost)
-    val (_, rdf, rdl, rcorp) = Incremental.impactIndexStatsSegmented(spark, reg)
+    val (_, rdf, rdl, rcorp) = Incremental.impactIndexStats(spark, reg)
     assert(rdf.as[(String, Long)].collect().toMap ===
       dfS.as[(String, Long)].collect().toMap)
     assert(rcorp.as[(Long, Long)].collect().head ===
@@ -96,7 +96,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     // away; the registry's row sets are unchanged
     val postBefore = spark.read.parquet(s"$reg/postings")
       .select("doc", "term", "tf").collect().toSeq
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(e2),
+    Incremental.impactBatchIngest(spark, reg, docsOf(e2),
       "doc_id", "text", epoch = 2L, mMin = 4, quantizeDepth = false)
     assert(spark.read.parquet(s"$reg/postings")
       .select("doc", "term", "tf").collect().toSeq.sortBy(_.toString) ===
@@ -111,13 +111,13 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     import spark.implicits._
     val reg = tmpReg("retain")
     for (e <- 0L until 4L)
-      Incremental.impactBatchIngestSegmented(spark, reg,
+      Incremental.impactBatchIngest(spark, reg,
         docsOf(e * 20L until (e + 1L) * 20L), "doc_id", "text", epoch = e,
         mMin = 4, quantizeDepth = false)
     val impactBefore = spark.read.parquet(s"$reg/impact")
       .collect().map(_.toString).sorted.toSeq
     // retire epoch 0: share 20/80 = 25% < 50% threshold → drop-only
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 1L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L,
       rebuildSharePm = 500000L, mMin = 4, quantizeDepth = false)
     assert(!fs(reg).exists(
       new org.apache.hadoop.fs.Path(s"$reg/postings/epoch=0")))
@@ -128,7 +128,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     val retained = docsOf(20L until 80L)
     val (dfS, dlS, corpS) =
       TermStats.bm25Stats(TermStats.bm25Postings(retained, "doc_id", "text"))
-    val (_, rdf, _, rcorp) = Incremental.impactIndexStatsSegmented(spark, reg)
+    val (_, rdf, _, rcorp) = Incremental.impactIndexStats(spark, reg)
     assert(rdf.as[(String, Long)].collect().toMap ===
       dfS.as[(String, Long)].collect().toMap)
     assert(rcorp.as[(Long, Long)].collect().head ===
@@ -145,14 +145,14 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     assert(served.nonEmpty && served.forall(_._3 >= 20L))
     // retire epoch 1 too: cumulative share (20+20)/(40+40) = 50% ≥ 50%
     // → rebuild from survivors at the recalibrated depth, debt reset
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 2L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 2L,
       rebuildSharePm = 500000L, mMin = 4, quantizeDepth = false)
     val live = docsOf(40L until 80L)
     assert(metaOf(reg)._3 === 0L)
     assert(metaOf(reg)._2 === 40L)
     assert(registryServe(reg, qIds) === scratchServe(live, qIds, mMin = 4))
     // and the monotone merge resumes cleanly after retention
-    Incremental.impactBatchIngestSegmented(spark, reg,
+    Incremental.impactBatchIngest(spark, reg,
       docsOf(80L until 100L), "doc_id", "text", epoch = 4L, mMin = 4,
       quantizeDepth = false)
     val grown = docsOf((40L until 100L).toSeq)
@@ -164,9 +164,9 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     "ingest refuses while pending; a different cutoff refuses") {
     import spark.implicits._
     val reg = tmpReg("crash")
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(0L until 20L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 20L),
       "doc_id", "text", epoch = 0L, mMin = 4, quantizeDepth = false)
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(20L until 40L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(20L until 40L),
       "doc_id", "text", epoch = 1L, mMin = 4, quantizeDepth = false)
     // simulate a retention(minEpoch=1) that crashed AFTER the mutations
     // (segment dirs dropped, delta logs filtered) but BEFORE the index
@@ -183,26 +183,26 @@ class ImpactSegmentsSpec extends AnyFunSuite {
         spark.read.parquet(s"$reg/$p").filter(col("epoch") >= 1L))
     // ingest refuses in the window
     val ex = intercept[IllegalStateException] {
-      Incremental.impactBatchIngestSegmented(spark, reg,
+      Incremental.impactBatchIngest(spark, reg,
         docsOf(40L until 50L), "doc_id", "text", epoch = 2L, mMin = 4)
     }
     assert(ex.getMessage.contains("retention"))
     // the serve warns (stale-delta contract)
     val before = graft.Log.recentWarnings.size
-    Incremental.impactIndexStatsSegmented(spark, reg)
+    Incremental.impactIndexStats(spark, reg)
     assert(graft.Log.recentWarnings.drop(before)
       .exists(_.contains("incomplete retention")))
     // a retention at a DIFFERENT cutoff refuses — complete the recorded
     // cut first
     val ex2 = intercept[IllegalStateException] {
-      Incremental.retainImpactSegments(spark, reg, minEpoch = 2L, mMin = 4)
+      Incremental.retainImpactRegistry(spark, reg, minEpoch = 2L, mMin = 4)
     }
     assert(ex2.getMessage.contains("cutoff 1"))
     // the re-run at the recorded cutoff resumes from the RECORDED
     // retired count (a recompute from the already-filtered corpus would
     // read 0 and skip the rebuild): share 20/(20+20) = 50% ≥ 30% →
     // rebuild, meta recalibrated to the 20 live docs, debt reset
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 1L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L,
       rebuildSharePm = 300000L, mMin = 4, quantizeDepth = false)
     assert(!Incremental.retentionPending(spark, reg))
     assert(metaOf(reg) === ((4, 20L, 0L)))
@@ -210,7 +210,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     assert(registryServe(reg, qIds) ===
       scratchServe(docsOf(20L until 40L), qIds, mMin = 4))
     // ingest resumes after completion
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(40L until 50L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(40L until 50L),
       "doc_id", "text", epoch = 2L, mMin = 4, quantizeDepth = false)
     assert(registryServe(reg, qIds) ===
       scratchServe(docsOf(20L until 50L), qIds, mMin = 4))
@@ -222,12 +222,12 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     "the increment to the already-swapped meta") {
     val reg = tmpReg("crashlate")
     for (e <- 0L until 3L)
-      Incremental.impactBatchIngestSegmented(spark, reg,
+      Incremental.impactBatchIngest(spark, reg,
         docsOf(e * 20L until (e + 1L) * 20L), "doc_id", "text", epoch = e,
         mMin = 4, quantizeDepth = false)
     // retire epoch 0 under a high threshold → the drop-only arm: meta
     // debt becomes 20 and the marker clears
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 1L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L,
       rebuildSharePm = 900000L, mMin = 4, quantizeDepth = false)
     assert(metaOf(reg)._3 === 20L)
     // simulate the crash: every mutation (dirs, logs, META) has landed
@@ -236,14 +236,14 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     val marker = new org.apache.hadoop.fs.Path(s"$reg/retain_intent")
     val out = fs(reg).create(marker, true)
     out.write("1 20".getBytes("UTF-8")); out.close()
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 1L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L,
       rebuildSharePm = 900000L, mMin = 4, quantizeDepth = false)
     assert(!Incremental.retentionPending(spark, reg))
     assert(metaOf(reg)._3 === 20L,
       "the re-run double-counted the retired debt")
     // and the NEXT (fresh) cut accumulates from the converged total:
     // retiring epoch 1 brings the debt to 40 (still below 90%)
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 2L,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 2L,
       rebuildSharePm = 900000L, mMin = 4, quantizeDepth = false)
     assert(metaOf(reg)._3 === 40L)
   }
@@ -251,21 +251,23 @@ class ImpactSegmentsSpec extends AnyFunSuite {
   test("guards: epochs are monotone; a monolithic registry refuses the " +
     "segmented ingest") {
     val reg = tmpReg("guards")
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(0L until 10L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 10L),
       "doc_id", "text", epoch = 3L, mMin = 4)
     val ex = intercept[IllegalArgumentException] {
-      Incremental.impactBatchIngestSegmented(spark, reg,
+      Incremental.impactBatchIngest(spark, reg,
         docsOf(10L until 20L), "doc_id", "text", epoch = 2L, mMin = 4)
     }
     assert(ex.getMessage.contains("monotone"))
+    // a flat registry (postings written straight under postings/, the
+    // older unsegmented layout) is refused, never interleaved
     val mono = tmpReg("mono")
-    Incremental.impactBatchIngest(spark, mono, docsOf(0L until 10L),
-      "doc_id", "text", mMin = 4)
+    TermStats.bm25Postings(docsOf(0L until 10L), "doc_id", "text")
+      .write.parquet(s"$mono/postings")
     val ex2 = intercept[IllegalStateException] {
-      Incremental.impactBatchIngestSegmented(spark, mono,
+      Incremental.impactBatchIngest(spark, mono,
         docsOf(10L until 20L), "doc_id", "text", epoch = 0L, mMin = 4)
     }
-    assert(ex2.getMessage.contains("MONOLITHIC"))
+    assert(ex2.getMessage.contains("flat (unsegmented)"))
   }
 
   test("per-epoch compaction: crash-replay duplicates collapse inside " +
@@ -273,9 +275,9 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     "epoch cut stays exact") {
     import spark.implicits._
     val reg = tmpReg("compact")
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(0L until 20L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 20L),
       "doc_id", "text", epoch = 0L, mMin = 4, quantizeDepth = false)
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(20L until 40L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(20L until 40L),
       "doc_id", "text", epoch = 1L, mMin = 4, quantizeDepth = false)
     // simulate a crash-replayed append: epoch 1's rows land twice,
     // byte-identically (postings + dl + the delta-log rows)
@@ -294,7 +296,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     val all = docsOf(0L until 40L)
     val qIds = (0L until 40L by 5L).toSeq
     assert(registryServe(reg, qIds) === scratchServe(all, qIds, mMin = 4))
-    Incremental.compactImpactSegments(spark, reg)
+    Incremental.compactImpactRegistry(spark, reg)
     val post1 = spark.read.parquet(s"$reg/postings/epoch=1")
     assert(post1.count() === post1.distinct().count())
     // folded stats: one row per (term, epoch), dkey null
@@ -305,7 +307,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     assert(registryServe(reg, qIds) === scratchServe(all, qIds, mMin = 4))
     // the per-epoch fold kept retirement exact: cut epoch 0 (share 50%
     // ≥ default 25% → rebuild) and compare to scratch on survivors
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 1L, mMin = 4,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L, mMin = 4,
       quantizeDepth = false)
     assert(registryServe(reg, qIds) ===
       scratchServe(docsOf(20L until 40L), qIds, mMin = 4))
@@ -330,14 +332,14 @@ class ImpactSegmentsSpec extends AnyFunSuite {
       rows.write.mode("append").parquet(s"$reg/postings/epoch=$e")
     }
     val reg = tmpReg("mark")
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(0L until 20L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 20L),
       "doc_id", "text", epoch = 0L, mMin = 4, quantizeDepth = false)
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(20L until 40L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(20L until 40L),
       "doc_id", "text", epoch = 1L, mMin = 4, quantizeDepth = false)
-    Incremental.compactImpactSegments(spark, reg)
+    Incremental.compactImpactRegistry(spark, reg)
     // newest is 1 → sealed-through-0 is recorded
     assert(markOf(reg) === Some("0"))
-    Incremental.impactBatchIngestSegmented(spark, reg, docsOf(40L until 60L),
+    Incremental.impactBatchIngest(spark, reg, docsOf(40L until 60L),
       "doc_id", "text", epoch = 2L, mMin = 4, quantizeDepth = false)
     // byte-duplicate a SEALED segment (a contract-violating probe: no
     // legitimate writer appends below the newest epoch — this pins that
@@ -350,7 +352,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
     val qIds0 = (0L until 60L by 5L).toSeq
     assert(registryServe(reg, qIds0) ===
       scratchServe(docsOf(0L until 60L), qIds0, mMin = 4))
-    Incremental.compactImpactSegments(spark, reg)
+    Incremental.compactImpactRegistry(spark, reg)
     val post0 = spark.read.parquet(s"$reg/postings/epoch=0")
     val post2 = spark.read.parquet(s"$reg/postings/epoch=2")
     // epoch 0 was SKIPPED (duplicates remain); epoch 2 was folded
@@ -372,23 +374,23 @@ class ImpactSegmentsSpec extends AnyFunSuite {
       scratchServe(docsOf(0L until 60L), qIds, mMin = 4))
     // everything retired → the mark clears; a from-scratch restart that
     // REUSES epoch 0 must fold again, not inherit the stale skip
-    Incremental.retainImpactSegments(spark, reg, minEpoch = 3L, mMin = 4,
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 3L, mMin = 4,
       quantizeDepth = false)
     assert(markOf(reg) === None)
     // the rollup can't be epoch-filtered — retention drops it (the
     // next compaction rebuilds it from the filtered log)
     assert(!fs(reg).exists(
       new org.apache.hadoop.fs.Path(s"$reg/stats_serve")))
-    Incremental.impactBatchIngestSegmented(spark, reg,
+    Incremental.impactBatchIngest(spark, reg,
       docsOf(100L until 120L), "doc_id", "text", epoch = 0L, mMin = 4,
       quantizeDepth = false)
     dupPostings(reg, 0L)
-    Incremental.compactImpactSegments(spark, reg)
+    Incremental.compactImpactRegistry(spark, reg)
     val post0b = spark.read.parquet(s"$reg/postings/epoch=0")
     assert(post0b.count() === post0b.distinct().count())
   }
 
-  test("streamingImpactIndexSegmented ≡ the batch folds; epochs follow " +
+  test("streamingImpactIndex ≡ the batch folds; epochs follow " +
     "the stream's epoch clock") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -397,7 +399,7 @@ class ImpactSegmentsSpec extends AnyFunSuite {
       .toFile.getAbsolutePath
     val reg = s"$dir/reg"
     val input = MemoryStream[(Long, String)]
-    val query = Incremental.streamingImpactIndexSegmented(
+    val query = Incremental.streamingImpactIndex(
       input.toDF().toDF("doc_id", "text"), s"$dir/ckpt", reg,
       "doc_id", "text", epochOf = identity, mMin = 4, compactEvery = 2)
     try {

@@ -1515,11 +1515,11 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val chunks = Seq((0L until 30L), (30L until 60L), (60L until 90L))
       .map(_.map(i => (i, text(i))))
     def drive(ckpt: String, cs: Seq[Seq[(Long, String)]],
-              slot: Long, mMin: Int): Unit = {
+              slot: Long, mMin: Int, at: String = reg): Unit = {
       val input = MemoryStream[(Long, String)]
       val query = Incremental.streamingImpactIndex(
-        input.toDF().toDF("doc_id", "text"), ckpt, reg, "doc_id", "text",
-        docsPerSlot = slot, mMin = mMin)
+        input.toDF().toDF("doc_id", "text"), ckpt, at, "doc_id", "text",
+        epochOf = _ => 0L, docsPerSlot = slot, mMin = mMin)
       try cs.foreach { c =>
         input.addData(c: _*); query.processAllAvailable()
       } finally query.stop()
@@ -1527,9 +1527,10 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     // slot huge => m pinned at mMin=4 throughout: batches 2-3 exercise
     // the MONOTONE MERGE branch (no rebuild)
     drive(s"$dir/ckpt1", chunks, slot = 1000000L, mMin = 4)
-    def impactRows = Incremental.impactIndexRegistry(spark, reg)
+    def impactRowsAt(at: String) = Incremental.impactIndexRegistry(spark, at)
       .select($"doc", $"term", $"tf").as[(Long, String, Long)]
       .collect().toSet
+    def impactRows = impactRowsAt(reg)
     val allDocs = chunks.flatten.toDF("doc_id", "text")
     val fullPost = TermStats.bm25Postings(allDocs, "doc_id", "text")
     val (dfq, dl, corp) = TermStats.bm25Stats(fullPost)
@@ -1573,27 +1574,35 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     assert(impactRows === batchIdx, "a replayed batch moved the index")
     // mixed batch: a source re-delivering 5 ingested docs alongside 5 new
     // ones (nFresh < nIn — the recovery arm with a non-empty fresh set);
-    // the index must land exactly the from-scratch build on the union
+    // the index must land exactly the from-scratch build on the union.
+    // Run on a COPY of the registry: the 90-doc registry stays the
+    // reference for the assertions below (an epoch cut can only retire
+    // the OLDEST epochs, so the new docs could not be cut back out)
+    val mixedReg = s"$dir/reg_mixed"
+    locally {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val src = new org.apache.hadoop.fs.Path(reg)
+      val fs = src.getFileSystem(conf)
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+        new org.apache.hadoop.fs.Path(mixedReg), false, conf)
+    }
     val mixed = ((85L until 95L)).map(i => (i, text(i)))
-    drive(s"$dir/ckpt3", Seq(mixed), slot = 1000000L, mMin = 4)
+    drive(s"$dir/ckpt3", Seq(mixed), slot = 1000000L, mMin = 4, at = mixedReg)
     val unionDocs = (chunks.flatten ++ mixed).distinct.toDF("doc_id", "text")
     val unionPost = TermStats.bm25Postings(unionDocs, "doc_id", "text")
     val (_, unionDl, _) = TermStats.bm25Stats(unionPost)
-    assert(impactRows === TermStats.bm25ImpactIndex(unionPost, unionDl, m = 4)
-      .as[(Long, String, Long)].collect().toSet,
+    assert(impactRowsAt(mixedReg) ===
+      TermStats.bm25ImpactIndex(unionPost, unionDl, m = 4)
+        .as[(Long, String, Long)].collect().toSet,
       "a mixed replayed+new batch diverged from the from-scratch union")
-    // roll the registry back to the 90-doc corpus for the assertions
-    // below (rebuild the artifacts on the original doc set)
-    Incremental.retainImpactRegistry(spark, reg,
-      (0L until 90L).toDF("doc"), mMin = 4)
     assert(impactRows === batchIdx,
-      "retention back to the original 90 docs must restore the index")
+      "the original 90-doc registry must be untouched by the copy's fold")
     assert(Incremental.impactIndexStats(spark, reg)._1.count() ===
       fullPost.count(), "a replayed batch duplicated postings")
     // crash-window heal: duplicate one doc's postings rows (the partial-
     // append replay shape) — distinct-reading consumers must not move
-    spark.read.parquet(s"$reg/postings").filter($"doc" === 0L)
-      .write.mode("append").parquet(s"$reg/postings")
+    spark.read.parquet(s"$reg/postings/epoch=0").filter($"doc" === 0L)
+      .write.mode("append").parquet(s"$reg/postings/epoch=0")
     val (hp, hdf, hdl, hcorp) = Incremental.impactIndexStats(spark, reg)
     assert(servedSet(Incremental.impactIndexRegistry(spark, reg),
       hp, hdf, hdl, hcorp) === fromScratch,
@@ -1605,7 +1614,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     // an orphaned delta (a crash after the stats append, before the dl
     // durability mark) must survive compaction VERBATIM so its replay
     // still distinct-heals — only durable deltas fold
-    Seq(("zzz_pending", 1L, 999999L)).toDF("term", "df", "dkey")
+    Seq(("zzz_pending", 1L, 999999L, 0L)).toDF("term", "df", "dkey", "epoch")
       .write.mode("append").parquet(s"$reg/stats")
     Incremental.compactImpactRegistry(spark, reg)
     assert(spark.read.parquet(s"$reg/postings").count() === fullPost.count(),
@@ -1615,8 +1624,9 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val stRaw = spark.read.parquet(s"$reg/stats")
     assert(stRaw.filter($"dkey".isNull).count() === dfq.count(),
       "folded stats must carry exactly one row per term")
-    assert(stRaw.filter($"dkey".isNotNull).as[(String, Long, Long)]
-        .collect().toSeq === Seq(("zzz_pending", 1L, 999999L)),
+    assert(stRaw.filter($"dkey".isNotNull).select($"term", $"df", $"dkey")
+        .as[(String, Long, Long)].collect().toSeq ===
+        Seq(("zzz_pending", 1L, 999999L)),
       "a non-durable delta must survive the fold verbatim")
     assert(spark.read.parquet(s"$reg/corpus").count() === 1L,
       "folded corpus must be a single global row")
@@ -1634,12 +1644,12 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val query = Incremental.streamingImpactIndex(
       input.toDF().toDF("doc_id", "text"), s"$dir2/ckpt", reg2,
-      "doc_id", "text", docsPerSlot = 8L, mMin = 4)
+      "doc_id", "text", epochOf = _ => 0L, docsPerSlot = 8L, mMin = 4)
     try chunks.foreach { c =>
       input.addData(c: _*); query.processAllAvailable()
     } finally query.stop()
     val meta = spark.read.parquet(s"$reg2/meta")
-      .as[(Int, Long)].collect().head
+      .select($"m_built", $"n_docs").as[(Int, Long)].collect().head
     assert(meta === ((16, 90L)),
       s"expected depth 16 at 90 docs (slot 8, pow2), got $meta")
     val grown = Incremental.impactIndexRegistry(spark, reg2)
@@ -1662,15 +1672,15 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       (0 until (4 + (i % 3)).toInt).map(j => s"t${(i + j * j) % 7}")
         .mkString(" ")
     def docsOf(ids: Seq[Long]) = ids.map(i => (i, text(i))).toDF("doc_id", "text")
-    // ingest 0..59 in two folds, then retire the first 20 (the sliding
-    // window dropping the oldest segment)
-    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 30L),
-      "doc_id", "text", mMin = 4)
-    Incremental.impactBatchIngest(spark, reg, docsOf(30L until 60L),
-      "doc_id", "text", mMin = 4)
+    // ingest 0..59 in two epoch folds, then retire the first 20 (the
+    // sliding window dropping the oldest epoch; 1/3 of the corpus, over
+    // the 25% threshold — the rebuild arm)
+    Incremental.impactBatchIngest(spark, reg, docsOf(0L until 20L),
+      "doc_id", "text", epoch = 0L, mMin = 4)
+    Incremental.impactBatchIngest(spark, reg, docsOf(20L until 60L),
+      "doc_id", "text", epoch = 1L, mMin = 4)
     val kept = (20L until 60L)
-    Incremental.retainImpactRegistry(spark, reg,
-      kept.toDF("doc"), mMin = 4)
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L, mMin = 4)
     def scratch(ids: Seq[Long]) = {
       val p = TermStats.bm25Postings(docsOf(ids), "doc_id", "text")
       val (df_, dl_, corp_) = TermStats.bm25Stats(p)
@@ -1689,17 +1699,18 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       kdf.as[(String, Long)].collect().toMap,
       "retention must re-materialize df for exactly the retained docs")
     assert(rcorp.as[(Long, Long)].collect().head._1 === 40L)
-    assert(spark.read.parquet(s"$reg/meta").as[(Int, Long)].collect()
-      .head === ((4, 40L)), "meta must recalibrate to the retained count")
+    assert(spark.read.parquet(s"$reg/meta").select($"m_built", $"n_docs")
+      .as[(Int, Long)].collect().head === ((4, 40L)),
+      "meta must recalibrate to the retained count")
     // idempotent: a crash mid-retention is healed by re-running
-    Incremental.retainImpactRegistry(spark, reg, kept.toDF("doc"), mMin = 4)
+    Incremental.retainImpactRegistry(spark, reg, minEpoch = 1L, mMin = 4)
     assert(idxSet === TermStats.bm25ImpactIndexWithDl(kp, kdl, m = 4)
       .as[(Long, String, Long, Long)].collect().toSet,
       "re-running retention moved the registry")
     // append-only resumes from the new base: the next fold's monotone
     // merge must equal the from-scratch build on (retained ∪ new)
     Incremental.impactBatchIngest(spark, reg, docsOf(60L until 80L),
-      "doc_id", "text", mMin = 4)
+      "doc_id", "text", epoch = 2L, mMin = 4)
     val (gp, _, gdl, _) = scratch(kept ++ (60L until 80L))
     assert(idxSet === TermStats.bm25ImpactIndexWithDl(gp, gdl, m = 4)
       .as[(Long, String, Long, Long)].collect().toSet,
@@ -1717,8 +1728,12 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       nBatches <- Gen.chooseNum(1, 4)
       cut <- Gen.listOfN(n, Gen.chooseNum(0, nBatches - 1))
       replayIdx <- Gen.chooseNum(0, nBatches - 1)
-    } yield (n, nBatches, cut, replayIdx)
-    val prop = Prop.forAll(caseGen) { case (n, nBatches, cut, replayIdx) =>
+      // a random NON-DECREASING epoch per batch: batches may share an
+      // epoch (micro-batches of one follower epoch) or open a new one
+      epochs <- Gen.listOfN(nBatches, Gen.chooseNum(0L, 2L)).map(_.sorted)
+    } yield (n, nBatches, cut, replayIdx, epochs)
+    val prop = Prop.forAll(caseGen) {
+        case (n, nBatches, cut, replayIdx, epochs) =>
       def text(i: Long): String =
         (0 until (2 + (i % 4)).toInt).map(j => s"t${(i + 3 * j) % 5}")
           .mkString(" ")
@@ -1732,12 +1747,12 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
         // quantizeDepth=false (the q206 batch-build arm): the compare
         // below is at the exact calibrated depth, not its pow2 ceiling
         Incremental.impactBatchIngest(spark, reg,
-          b.toDF("doc_id", "text"), "doc_id", "text", mMin = 3,
-          quantizeDepth = false)
-        if (i == replayIdx % batches.size) // replay an ingested batch
+          b.toDF("doc_id", "text"), "doc_id", "text", epoch = epochs(i),
+          mMin = 3, quantizeDepth = false)
+        if (i == replayIdx % batches.size) // replay under its own epoch
           Incremental.impactBatchIngest(spark, reg,
-            b.toDF("doc_id", "text"), "doc_id", "text", mMin = 3,
-            quantizeDepth = false)
+            b.toDF("doc_id", "text"), "doc_id", "text", epoch = epochs(i),
+            mMin = 3, quantizeDepth = false)
       }
       val p = TermStats.bm25Postings(docs.toDF("doc_id", "text"),
         "doc_id", "text")
@@ -1775,7 +1790,8 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     // by the cadence instead of growing with batch count
     val query = Incremental.streamingImpactIndex(
       input.toDF().toDF("doc_id", "text"), s"$dir/ckpt", s"$dir/reg",
-      "doc_id", "text", docsPerSlot = 1000000L, mMin = 4, compactEvery = 8)
+      "doc_id", "text", epochOf = _ => 0L, docsPerSlot = 1000000L, mMin = 4,
+      compactEvery = 8)
     try (0L until 40L).foreach { i =>
       input.addData((i, text(i))); query.processAllAvailable()
     } finally query.stop()
