@@ -24,4 +24,18 @@ object Caches {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
+
+  /** Run `body`, then unpersist exactly the RDDs it added to
+    * `sc.getPersistentRDDs` — for one step of a long-running loop whose
+    * eager checkpoints must not accumulate across iterations. Assumes no
+    * CONCURRENT persist activity in the session while `body` runs (true
+    * inside a foreachBatch, which Spark serializes per query).
+    */
+  private[graft] def releasingAdded[T](spark: SparkSession)(body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => before(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
 }

@@ -125,31 +125,19 @@ object Components {
     * per micro-batch). [[updateRegistry]] eagerly checkpoints its
     * endpoint-lookup frame (small, but one per call): a long-running
     * stream folding thousands of batches must not accumulate them, so
-    * this records the persistent-RDD ids present before the fold and
-    * releases exactly the ids the fold added once the snapshot commit
-    * has materialized. Assumes no CONCURRENT persist activity in the
-    * same SparkSession during the fold (true inside a foreachBatch,
-    * which Spark serializes per query; run multiple writer streams in
-    * separate sessions).
+    * the blocks the fold added are released once the snapshot commit has
+    * materialized ([[graft.Caches.releasingAdded]]). The registry read
+    * heals a torn swap first ([[Merge.readRegistry]]).
     */
   def foldIntoParquet(spark: SparkSession, registryPath: String,
-                      batch: DataFrame, a: String, b: String): Unit = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
-      val hPath = new org.apache.hadoop.fs.Path(registryPath)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val reg =
-        if (fs.exists(hPath) && fs.listStatus(hPath).nonEmpty)
-          spark.read.parquet(registryPath)
-        else emptyRegistry(spark, batch, a)
+                      batch: DataFrame, a: String, b: String): Unit =
+    graft.Caches.releasingAdded(spark) {
+      val t = batch.schema(a).dataType
+      val reg = Merge.readRegistry(spark, registryPath,
+        StructField("node", t), StructField("label", t))
       Merge.replaceParquet(spark, registryPath,
         updateRegistry(reg, batch, a, b))
-    } finally {
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
-  }
 
   /** Serve the q118 output shape from a registry: (node, cluster,
     * cluster_size). ONE label-keyed exchange: the size is a whole-

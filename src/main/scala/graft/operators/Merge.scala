@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Keyed upsert — the engine's sink semantic (SURVEY.md §2.1 K1).
   *
@@ -294,6 +295,41 @@ object Merge {
         true
       case None => false
     }
+  }
+
+  /** True when `path` holds at least one parquet part file — the one
+    * "has this registry committed anything" test. A bare directory, or
+    * one holding only a `_SUCCESS` marker, reads as absent.
+    */
+  private[graft] def hasParquet(spark: org.apache.spark.sql.SparkSession,
+                                path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** A zero-row frame of exactly `fields`. */
+  private[graft] def emptyFrame(spark: org.apache.spark.sql.SparkSession,
+                                fields: StructField*): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
+
+  /** The streaming maintainers' one registry reader: `path` projected to
+    * `fields`, or an empty frame of that schema before the first commit.
+    * It heals a torn swap FIRST — the [[upsertParquet]] entry-heal rule
+    * (ADVICE r19) for every swap-backed or compacted registry. After a
+    * crash between commitSwap's renames the target is absent; without
+    * the heal the fold would run against an empty registry, and its own
+    * swap would then restore the accumulated state only to delete it.
+    * Maintainer-only, per [[healSwap]]'s single-writer contract: serve
+    * readers read the path directly.
+    */
+  private[graft] def readRegistry(spark: org.apache.spark.sql.SparkSession,
+                                  path: String, fields: StructField*): DataFrame = {
+    healSwap(spark, path)
+    if (hasParquet(spark, path))
+      spark.read.parquet(path).select(fields.map(f => col(f.name)): _*)
+    else emptyFrame(spark, fields: _*)
   }
 
   // -------------------------------------------------------------------

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
 import graft.operators.Merge
 
@@ -115,6 +117,32 @@ object Incremental {
 
   case class EpochReport(ran: Boolean, from: Long, to: Long, chunks: Int)
 
+  /** The one maintainer loop: every streaming maintainer in this file is
+    * a per-micro-batch `fold(spark, batch, batchId)` started through
+    * here. `foreachBatch` delivers each micro-batch at least once (a
+    * crash before the offset commit replays it under the same
+    * `batchId`), so exactly-once SINK STATE is the fold's job: content
+    * keys + `Merge.Ignore` upserts, anti-joined registry appends, or
+    * snapshot swaps recomputed from the registry — each maintainer
+    * states which (T6). A fold that reads a registry it also writes heals
+    * a torn swap of it at batch entry: through [[Merge.readRegistry]], or
+    * by calling [[Merge.healSwap]] first where it reads the whole
+    * registry. `outputMode`/`trigger` default to the `writeStream`
+    * defaults.
+    */
+  private[streaming] def foldBatches(stream: DataFrame, checkpointDir: String,
+                                     outputMode: OutputMode = OutputMode.Append(),
+                                     trigger: Trigger = Trigger.ProcessingTime(0L))(
+      fold: (SparkSession, DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        fold(batch.sparkSession, batch, batchId)
+      }
+      .start()
+
   /** The STREAMING follower: a Structured Streaming source drives the
     * same keyed first-write-wins sink the batch [[Driver]] walks in
     * height chunks — `foreachBatch` IS the chunk loop, with the trigger
@@ -134,16 +162,10 @@ object Incremental {
     * unchanged.
     */
   def streamingUpsert(stream: DataFrame, checkpointDir: String, sinkPath: String,
-                      key: String, tiebreak: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Merge.upsertParquet(batch.sparkSession, sinkPath, batch,
-          key, Merge.Ignore, tiebreak)
-        ()
-      }
-      .start()
+                      key: String, tiebreak: String): StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      Merge.upsertParquet(spark, sinkPath, batch, key, Merge.Ignore, tiebreak)
+    }
 
   /** The streaming follower on the DELTA LOG: each micro-batch appends an
     * O(batch) delta (never reading the growing sink) and the whole-sink
@@ -165,18 +187,13 @@ object Incremental {
   def streamingUpsertDelta(stream: DataFrame, checkpointDir: String,
                            sinkPath: String, key: String, tiebreak: String,
                            compactEvery: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(compactEvery > 0, s"compactEvery must be positive, got $compactEvery")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        Merge.appendDelta(spark, sinkPath, batch)
-        if (Merge.pendingDeltas(spark, sinkPath).size >= compactEvery)
-          Merge.finalizeDeltas(spark, sinkPath, key, Merge.Ignore, tiebreak)
-        ()
-      }
-      .start()
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      Merge.appendDelta(spark, sinkPath, batch)
+      if (Merge.pendingDeltas(spark, sinkPath).size >= compactEvery)
+        Merge.finalizeDeltas(spark, sinkPath, key, Merge.Ignore, tiebreak)
+    }
   }
 
   /** The streaming follower on the HEIGHT-BUCKETED sink — the third sink
@@ -196,91 +213,83 @@ object Incremental {
   def streamingUpsertPartitioned(stream: DataFrame, checkpointDir: String,
                                  sinkPath: String, key: String,
                                  tiebreak: String, heightCol: String,
-                                 bucketWidth: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Merge.upsertPartitionedByHeight(batch.sparkSession, sinkPath, batch,
-          key, Merge.Ignore, tiebreak, heightCol, bucketWidth)
-        ()
-      }
-      .start()
+                                 bucketWidth: Long): StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      Merge.upsertPartitionedByHeight(spark, sinkPath, batch,
+        key, Merge.Ignore, tiebreak, heightCol, bucketWidth)
+    }
 
-  /** Streaming incremental exact span dedup — the q102 chaining contract
-    * (`registry' = registry ∪ new distinct blocks`) driven by
-    * `foreachBatch`: each micro-batch is deduped against the persistent
-    * block registry ([[graft.operators.TextDedup.spanDedupAgainst]]),
-    * the rebuilt documents land in `outPath` via a KEYED first-write-wins
-    * upsert, and only the batch's genuinely-new distinct blocks append to
-    * `registryPath`.
+  /** The flat "dedup against a registry" fold shared by
+    * [[streamingSpanDedup]], [[streamingSubstringExcise]],
+    * [[streamingImageDedup]] and [[streamingCdcDedup]]. Per micro-batch:
+    * read the persistent one-column `key` registry, let
+    * `dedup(spark, batch, registry)` return the deduped documents and
+    * the batch's key rows, land the documents in `outPath` via a KEYED
+    * first-write-wins upsert on `docKey`, then append the batch's
+    * distinct keys anti-joined on the registry to `registryPath`.
     *
     * Replay safety (T6) hangs on the WRITE ORDER: documents first,
     * registry second. A batch replayed after a crash between the two
     * writes recomputes the same dedup (registry unchanged), the keyed
     * upsert ignores the already-present doc rows, and the registry
-    * append retries. The reverse order would be wrong: with its blocks
-    * already registered, a replayed batch would dedup to empty rebuilds
+    * append retries. The reverse order would be wrong: with its keys
+    * already registered, a replayed batch would dedup to empty documents
     * and first-write-wins would keep THOSE. The registry delta is the
-    * batch's distinct blocks anti-joined on the registry — by
-    * construction exactly the surviving block set, and empty on replay,
-    * so the registry never accumulates duplicates.
+    * batch's distinct keys anti-joined on the registry — by construction
+    * exactly the surviving key set, and empty on replay, so the registry
+    * never accumulates duplicates.
+    */
+  private def dedupAgainstRegistry(stream: DataFrame, checkpointDir: String,
+                                   outPath: String, registryPath: String,
+                                   key: StructField, docKey: String,
+                                   tiebreak: String)(
+      dedup: (SparkSession, DataFrame, DataFrame) => (DataFrame, DataFrame))
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val reg = Merge.readRegistry(spark, registryPath, key)
+      val (docs, keys) = dedup(spark, batch, reg)
+      Merge.upsertParquet(spark, outPath, docs, docKey, Merge.Ignore, tiebreak)
+      keys.distinct()
+        .join(reg, Seq(key.name), "left_anti")
+        .write.mode("append").parquet(registryPath)
+    }
+
+  /** Streaming incremental exact span dedup — the q102 chaining contract
+    * (`registry' = registry ∪ new distinct blocks`) driven by
+    * `foreachBatch`: each micro-batch is deduped against the persistent
+    * block registry ([[graft.operators.TextDedup.spanDedupAgainst]]),
+    * the rebuilt documents land in `outPath`, and only the batch's
+    * genuinely-new distinct blocks append to `registryPath`
+    * ([[dedupAgainstRegistry]]).
     */
   def streamingSpanDedup(stream: DataFrame, checkpointDir: String,
                          outPath: String, registryPath: String,
-                         id: String, text: String, k: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val reg = readRegistry(spark, registryPath)
-        val deduped = graft.operators.TextDedup.spanDedupAgainst(
-          batch, reg, id, text, k)
-        Merge.upsertParquet(spark, outPath, deduped,
-          "doc_id", Merge.Ignore, "n_blocks")
+                         id: String, text: String, k: Int): StreamingQuery =
+    dedupAgainstRegistry(stream, checkpointDir, outPath, registryPath,
+        StructField("blk", StringType), "doc_id", "n_blocks") { (_, batch, reg) =>
+      (graft.operators.TextDedup.spanDedupAgainst(batch, reg, id, text, k),
         batch.select(explode(graft.functions.Text.blocks(
-            graft.functions.Text.tokens(col(text)), k)).as("blk"))
-          .distinct()
-          .join(reg, Seq("blk"), "left_anti")
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+          graft.functions.Text.tokens(col(text)), k)).as("blk")))
+    }
 
   /** Streaming substring excision — [[streamingSpanDedup]]'s twin at the
     * q113/q114 granularity: each micro-batch is excised against the
     * persistent GRAM registry
     * ([[graft.operators.TextDedup.substringExciseAgainst]]), excised
     * docs land via keyed first-write-wins upsert, and the batch's novel
-    * distinct grams append to the registry. Same replay-safe write
-    * order as the span form (documents FIRST, registry second): a
-    * replayed batch re-excises identically — its grams are not yet
-    * registered on the replayed path that matters, and the Ignore
-    * upsert keeps the first write — and the registry delta re-computes
-    * to empty-or-identical rows.
+    * distinct grams append to the registry ([[dedupAgainstRegistry]]).
     */
   def streamingSubstringExcise(stream: DataFrame, checkpointDir: String,
                                outPath: String, registryPath: String,
                                id: String, text: String, minLen: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val reg = readGramRegistry(spark, registryPath)
-        val excised = graft.operators.TextDedup.substringExciseAgainst(
-          batch, reg, id, text, minLen)
-        Merge.upsertParquet(spark, outPath, excised,
-          "doc_id", Merge.Ignore, "n_tokens")
+      : StreamingQuery =
+    dedupAgainstRegistry(stream, checkpointDir, outPath, registryPath,
+        StructField("gram", StringType), "doc_id", "n_tokens") { (_, batch, reg) =>
+      (graft.operators.TextDedup.substringExciseAgainst(batch, reg, id, text,
+          minLen),
         batch.select(explode(graft.functions.Text.shingles(
-            graft.functions.Text.tokens(col(text)), minLen)).as("gram"))
-          .distinct()
-          .join(reg, Seq("gram"), "left_anti")
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+          graft.functions.Text.tokens(col(text)), minLen)).as("gram")))
+    }
 
   /** [[streamingSubstringExcise]] with a BUCKETED gram registry — the
     * scale form for the registry that actually gets huge at 100 TB. The
@@ -302,46 +311,37 @@ object Incremental {
     * bucketed joins whose other side it plans to shuffle anyway —
     * measured, same as the image twin; foreachBatch serializes batches,
     * so the session-level flip cannot race this stream's own queries.
-    * Same replay-safe write order (documents FIRST, registry second);
-    * results ≡ the flat twin ≡ the batch q114 rule over ordered arrival
+    * Same write order as [[dedupAgainstRegistry]]; results ≡ the flat
+    * twin ≡ the batch q114 rule over ordered arrival
     * (StreamBatchEquivalenceSpec).
     */
   def streamingSubstringExciseBucketed(stream: DataFrame, checkpointDir: String,
                                        outPath: String, registryTable: String,
                                        id: String, text: String, minLen: Int,
                                        buckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        graft.sources.Bucketing.withForcedBucketedScan(spark) {
-          val reg =
-            if (spark.catalog.tableExists(registryTable))
-              spark.table(registryTable).select(col("gram"))
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("gram",
-                  org.apache.spark.sql.types.StringType))))
-          val excised = graft.operators.TextDedup.substringExciseAgainst(
-            batch, reg, id, text, minLen)
-          Merge.upsertParquet(spark, outPath, excised,
-            "doc_id", Merge.Ignore, "n_tokens")
-          val novel = batch.select(explode(graft.functions.Text.shingles(
-              graft.functions.Text.tokens(col(text)), minLen)).as("gram"))
-            .distinct()
-            .join(reg, Seq("gram"), "left_anti")
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      graft.sources.Bucketing.withForcedBucketedScan(spark) {
+        val reg =
           if (spark.catalog.tableExists(registryTable))
-            graft.sources.Bucketing.appendBucketed(novel, registryTable,
-              buckets, "gram")
-          else
-            graft.sources.Bucketing.writeBucketed(novel, registryTable,
-              buckets, "gram")
-          ()
-        }
+            spark.table(registryTable).select(col("gram"))
+          else Merge.emptyFrame(spark, StructField("gram", StringType))
+        val excised = graft.operators.TextDedup.substringExciseAgainst(
+          batch, reg, id, text, minLen)
+        Merge.upsertParquet(spark, outPath, excised,
+          "doc_id", Merge.Ignore, "n_tokens")
+        val novel = batch.select(explode(graft.functions.Text.shingles(
+            graft.functions.Text.tokens(col(text)), minLen)).as("gram"))
+          .distinct()
+          .join(reg, Seq("gram"), "left_anti")
+        if (spark.catalog.tableExists(registryTable))
+          graft.sources.Bucketing.appendBucketed(novel, registryTable,
+            buckets, "gram")
+        else
+          graft.sources.Bucketing.writeBucketed(novel, registryTable,
+            buckets, "gram")
       }
-      .start()
+    }
 
   /** Streaming perceptual image dedup — [[streamingSpanDedup]]'s twin in
     * the multimodal domain: each micro-batch of (id, ppm-binary) rows is
@@ -351,34 +351,25 @@ object Incremental {
     * ([[graft.operators.Multimodal.dHashDedupAgainst]] — batch-keyed
     * anti-join, corpus never re-scanned), surviving representatives land
     * via keyed first-write-wins upsert, and the batch's novel distinct
-    * fingerprints append to the registry. Same replay-safe write order
-    * (documents FIRST, registry second).
+    * fingerprints append to the registry ([[dedupAgainstRegistry]]). The
+    * codec is a SEAM, not a fork: dHashPpm / dHashPng / dHashJpeg all
+    * emit the same 56-bit fingerprint schema, so a compressed-image
+    * stream runs this twin unchanged (pinned in
+    * StreamBatchEquivalenceSpec — PNG batches reproduce the PPM path's
+    * kept set on the same pixel definitions).
     */
   def streamingImageDedup(stream: DataFrame, checkpointDir: String,
                           outPath: String, registryPath: String,
                           id: String, bin: String,
                           hasher: (SparkSession, DataFrame, String, String) => DataFrame =
                             graft.operators.Multimodal.dHashPpm)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val reg = readDhashRegistry(spark, registryPath)
-        // the codec is a SEAM, not a fork: dHashPpm / dHashPng /
-        // dHashJpeg all emit the same 56-bit fingerprint schema, so a
-        // compressed-image stream runs this twin unchanged (pinned in
-        // StreamBatchEquivalenceSpec — PNG batches reproduce the PPM
-        // path's kept set on the same pixel definitions)
-        val hashes = hasher(spark, batch, id, bin)
-        val kept = graft.operators.Multimodal.dHashDedupAgainst(hashes, reg)
-        Merge.upsertParquet(spark, outPath, kept, "id", Merge.Ignore, "dhash")
-        hashes.select(col("dhash")).distinct()
-          .join(reg, Seq("dhash"), "left_anti")
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    dedupAgainstRegistry(stream, checkpointDir, outPath, registryPath,
+        StructField("dhash", LongType), "id", "dhash") { (spark, batch, reg) =>
+      val hashes = hasher(spark, batch, id, bin)
+      (graft.operators.Multimodal.dHashDedupAgainst(hashes, reg),
+        hashes.select(col("dhash")))
+    }
 
   /** [[streamingImageDedup]] with a BUCKETED registry — the scale form
     * of the per-batch registry read. The flat twin re-scans the WHOLE
@@ -407,39 +398,34 @@ object Incremental {
     * `dhash` is in the batch — rows outside the batch's value set
     * cannot influence either join (StreamBatchEquivalenceSpec pins
     * stream ≡ batch ≡ the flat twin, bucketed scan asserted).
-    * Same replay-safe write order (documents FIRST, registry second).
+    * Same write order as [[dedupAgainstRegistry]].
     */
   def streamingImageDedupBucketed(stream: DataFrame, checkpointDir: String,
                                   outPath: String, registryTable: String,
                                   id: String, bin: String, buckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hashes = graft.operators.Multimodal.dHashPpm(spark, batch, id, bin)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // the forced-bucketed-scan scope must span the ACTIONS (planning
-        // reads the conf then); foreachBatch serializes batches, so the
-        // session-level flip cannot race this stream's own queries
-        try graft.sources.Bucketing.withForcedBucketedScan(spark) {
-          val batchValues = hashes.select(col("dhash")).distinct()
-            .collect().map(_.getLong(0)) // bounded by the micro-batch
-          val reg = bucketedDhashLookup(spark, registryTable, batchValues)
-          val kept = graft.operators.Multimodal.dHashDedupAgainst(hashes, reg)
-          Merge.upsertParquet(spark, outPath, kept, "id", Merge.Ignore, "dhash")
-          val novel = hashes.select(col("dhash")).distinct()
-            .join(reg.select(col("dhash")), Seq("dhash"), "left_anti")
-          if (spark.catalog.tableExists(registryTable))
-            graft.sources.Bucketing.appendBucketed(novel, registryTable,
-              buckets, "dhash")
-          else
-            graft.sources.Bucketing.writeBucketed(novel, registryTable,
-              buckets, "dhash")
-          ()
-        } finally { hashes.unpersist(); () }
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val hashes = graft.operators.Multimodal.dHashPpm(spark, batch, id, bin)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the forced-bucketed-scan scope must span the ACTIONS (planning
+      // reads the conf then); foreachBatch serializes batches, so the
+      // session-level flip cannot race this stream's own queries
+      try graft.sources.Bucketing.withForcedBucketedScan(spark) {
+        val batchValues = hashes.select(col("dhash")).distinct()
+          .collect().map(_.getLong(0)) // bounded by the micro-batch
+        val reg = bucketedDhashLookup(spark, registryTable, batchValues)
+        val kept = graft.operators.Multimodal.dHashDedupAgainst(hashes, reg)
+        Merge.upsertParquet(spark, outPath, kept, "id", Merge.Ignore, "dhash")
+        val novel = hashes.select(col("dhash")).distinct()
+          .join(reg.select(col("dhash")), Seq("dhash"), "left_anti")
+        if (spark.catalog.tableExists(registryTable))
+          graft.sources.Bucketing.appendBucketed(novel, registryTable,
+            buckets, "dhash")
+        else
+          graft.sources.Bucketing.writeBucketed(novel, registryTable,
+            buckets, "dhash")
+      } finally { hashes.unpersist(); () }
+    }
 
   /** The batch-valued registry lookup behind
     * [[streamingImageDedupBucketed]]: registry rows whose `dhash` is in
@@ -456,11 +442,7 @@ object Incremental {
       spark.table(registryTable)
         .filter(col("dhash").isin(values.map(Long.box).toIndexedSeq: _*))
         .select(col("dhash"))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("dhash",
-          org.apache.spark.sql.types.LongType))))
+    else Merge.emptyFrame(spark, StructField("dhash", LongType))
 
   /** Streaming video novelty — q142's deployment shape: each micro-batch
     * of (id, P6-stream) videos is walked → per-frame dHashed → scene-
@@ -490,75 +472,42 @@ object Incremental {
                             outPath: String, registryPath: String,
                             id: String, bin: String, minHamming: Int,
                             compactEvery: Int = 32)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val kf = graft.operators.Multimodal.keyframes(spark, batch, id, bin,
-            minHamming)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val reg = readDhashRegistry(spark, registryPath)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("keyframe_dhash"))
-            .orderBy(col("id").asc, col("scene").asc)
-          val flagged = kf
-            .withColumn("__rn", row_number().over(w))
-            .join(reg.select(col("dhash").as("keyframe_dhash"),
-              lit(true).as("__seen")), Seq("keyframe_dhash"), "left_outer")
-          val novelty = flagged.groupBy(col("id"))
-            .agg(count(lit(1)).as("n_scenes"),
-              sum(when(col("__rn") === 1 && col("__seen").isNull, 1L)
-                .otherwise(0L)).as("novel_scenes"),
-              expr("(1000000 * sum(CASE WHEN __rn = 1 AND __seen IS NULL" +
-                " THEN 1 ELSE 0 END)) div count(1)").as("novelty_pm"))
-          Merge.upsertParquet(spark, outPath, novelty, "id", Merge.Ignore,
-            "n_scenes")
-          kf.select(col("keyframe_dhash").as("dhash")).distinct()
-            .join(reg, Seq("dhash"), "left_anti")
-            .write.mode("append").parquet(registryPath)
-          // registry maintenance on the owning stream's own cadence
-          // (batches are serial, so compaction can never race an
-          // append; batchId is deterministic on replay and compaction
-          // is a distinct+rewrite — idempotent). Without this a
-          // long-running stream accumulates one KB-sized file per
-          // batch and registry scan cost starts tracking FILE COUNT.
-          if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-            compactRegistry(spark, registryPath)
-          ()
-        } finally { kf.unpersist(); () }
-      }
-      .start()
-
-  /** The fingerprint registry, empty-safe before the first batch commits. */
-  private def readDhashRegistry(spark: SparkSession,
-                                registryPath: String): DataFrame =
-    // one emptiness check to maintain — readLongColOrEmpty is the shared
-    // shape (this used to be a verbatim copy, the drift the
-    // readStringColOrEmpty comment warns about)
-    readLongColOrEmpty(spark, registryPath, "dhash")
-
-  /** One empty-safe single-string-column parquet reader behind every
-    * streaming registry (blocks, grams, seen words) — one emptiness
-    * check to maintain, not three silently-diverging copies.
-    */
-  private def readStringColOrEmpty(spark: SparkSession, path: String,
-                                   column: String): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      spark.read.parquet(path).select(column)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(column,
-          org.apache.spark.sql.types.StringType))))
-  }
-
-  /** The gram registry, empty-safe before the first batch commits. */
-  private def readGramRegistry(spark: SparkSession, registryPath: String): DataFrame =
-    readStringColOrEmpty(spark, registryPath, "gram")
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
+      val kf = graft.operators.Multimodal.keyframes(spark, batch, id, bin,
+          minHamming)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val reg = Merge.readRegistry(spark, registryPath,
+          StructField("dhash", LongType))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("keyframe_dhash"))
+          .orderBy(col("id").asc, col("scene").asc)
+        val flagged = kf
+          .withColumn("__rn", row_number().over(w))
+          .join(reg.select(col("dhash").as("keyframe_dhash"),
+            lit(true).as("__seen")), Seq("keyframe_dhash"), "left_outer")
+        val novelty = flagged.groupBy(col("id"))
+          .agg(count(lit(1)).as("n_scenes"),
+            sum(when(col("__rn") === 1 && col("__seen").isNull, 1L)
+              .otherwise(0L)).as("novel_scenes"),
+            expr("(1000000 * sum(CASE WHEN __rn = 1 AND __seen IS NULL" +
+              " THEN 1 ELSE 0 END)) div count(1)").as("novelty_pm"))
+        Merge.upsertParquet(spark, outPath, novelty, "id", Merge.Ignore,
+          "n_scenes")
+        kf.select(col("keyframe_dhash").as("dhash")).distinct()
+          .join(reg, Seq("dhash"), "left_anti")
+          .write.mode("append").parquet(registryPath)
+        // registry maintenance on the owning stream's own cadence
+        // (batches are serial, so compaction can never race an
+        // append; batchId is deterministic on replay and compaction
+        // is a distinct+rewrite — idempotent). Without this a
+        // long-running stream accumulates one KB-sized file per
+        // batch and registry scan cost starts tracking FILE COUNT.
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          compactRegistry(spark, registryPath)
+      } finally { kf.unpersist(); () }
+    }
 
   /** Streaming SFT rendering — q127's deployment shape. A conversation
     * MUTATES as turns arrive (every new turn changes its `rendered`
@@ -585,50 +534,39 @@ object Incremental {
     */
   def streamingSftRender(stream: DataFrame, checkpointDir: String,
                          outPath: String, registryPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // 0. one-time upgrade: a registry written by the pre-tuple-key
-        //    code carries the concat `__tk` column; Merge.upsert requires
-        //    identical column sets, so the first micro-batch against it
-        //    would throw and kill the stream (ADVICE r19). Project the
-        //    legacy registry to the batch schema once; subsequent batches
-        //    see a clean registry and skip this branch on a footer read.
-        locally {
-          val regPath = new org.apache.hadoop.fs.Path(registryPath)
-          val regFs =
-            regPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (regFs.exists(regPath)) {
-            val existing = spark.read.parquet(registryPath)
-            if (existing.columns.contains("__tk")) {
-              graft.Log.warn(s"streamingSftRender: migrating legacy __tk " +
-                s"registry at $registryPath to the tuple-key schema")
-              Merge.replaceParquet(spark, registryPath,
-                existing.drop("__tk"))
-            }
-          }
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      // 0. one-time upgrade: a registry written by the pre-tuple-key
+      //    code carries the concat `__tk` column; Merge.upsert requires
+      //    identical column sets, so the first micro-batch against it
+      //    would throw and kill the stream (ADVICE r19). Project the
+      //    legacy registry to the batch schema once; subsequent batches
+      //    see a clean registry and skip this branch on a footer read.
+      if (Merge.hasParquet(spark, registryPath)) {
+        val existing = spark.read.parquet(registryPath)
+        if (existing.columns.contains("__tk")) {
+          graft.Log.warn(s"streamingSftRender: migrating legacy __tk " +
+            s"registry at $registryPath to the tuple-key schema")
+          Merge.replaceParquet(spark, registryPath, existing.drop("__tk"))
         }
-        // 1. land the batch's turns (first-wins on the TUPLE key —
-        //    a replayed or duplicated turn cannot double-render). Never
-        //    a concat key: conv="c:1"/turn="2" and conv="c"/turn="1:2"
-        //    would alias and silently drop a turn — the trap this file's
-        //    own partial-key comments ban elsewhere.
-        Merge.upsertParquet(spark, registryPath, batch,
-          Seq("conv", "turn_id"), Merge.Ignore, "ts")
-        // 2. re-render the touched conversations from the registry
-        val touched = batch.select(col("conv")).distinct()
-        val history = spark.read.parquet(registryPath)
-          .join(touched, Seq("conv"))
-        val rendered = graft.operators.Sft.renderChat(history,
-          Seq(col("conv")), col("ts"), col("turn_id"),
-          col("role"), col("content"))
-        Merge.upsertParquet(spark, outPath, rendered,
-          "conv", Merge.Update, "n_turns")
-        ()
       }
-      .start()
+      // 1. land the batch's turns (first-wins on the TUPLE key —
+      //    a replayed or duplicated turn cannot double-render). Never
+      //    a concat key: conv="c:1"/turn="2" and conv="c"/turn="1:2"
+      //    would alias and silently drop a turn — the trap this file's
+      //    own partial-key comments ban elsewhere.
+      Merge.upsertParquet(spark, registryPath, batch,
+        Seq("conv", "turn_id"), Merge.Ignore, "ts")
+      // 2. re-render the touched conversations from the registry
+      val touched = batch.select(col("conv")).distinct()
+      val history = spark.read.parquet(registryPath)
+        .join(touched, Seq("conv"))
+      val rendered = graft.operators.Sft.renderChat(history,
+        Seq(col("conv")), col("ts"), col("turn_id"),
+        col("role"), col("content"))
+      Merge.upsertParquet(spark, outPath, rendered,
+        "conv", Merge.Update, "n_turns")
+    }
 
   /** Streaming dataset card — q132 maintained LIVE over an arriving
     * corpus, and the repo's third state idiom. The first two:
@@ -662,31 +600,27 @@ object Incremental {
     */
   def streamingDatasetCard(stream: DataFrame, checkpointDir: String,
                            partialsPath: String, registryPath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        val reg = readStringColOrEmpty(spark, registryPath, "fp")
-        val w = Window.partitionBy(col("fp")).orderBy(col("doc_id").asc)
-        val flagged = graft.queries.Curation.cardSignals(batch)
-          .join(reg.withColumn("__seen", lit(true)), Seq("fp"), "left")
-          .withColumn("__rn", row_number().over(w))
-          .withColumn("__dup", col("__seen").isNotNull || col("__rn") > 1)
-        val partial = flagged.groupBy(col("source"))
-          .agg(graft.queries.Curation.cardCounters.head, graft.queries.Curation.cardCounters.tail: _*)
-          .withColumn("batch_id", lit(batchId))
-        // tuple key, never concat: a source name containing the delimiter
-        // would alias two distinct partials and silently drop one
-        Merge.upsertParquet(spark, partialsPath, partial,
-          Seq("source", "batch_id"), Merge.Ignore, "n_docs")
-        flagged.filter(col("__rn") === 1 && col("__seen").isNull)
-          .select(col("fp"))
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
+      import org.apache.spark.sql.expressions.Window
+      val reg = Merge.readRegistry(spark, registryPath,
+        StructField("fp", StringType))
+      val w = Window.partitionBy(col("fp")).orderBy(col("doc_id").asc)
+      val flagged = graft.queries.Curation.cardSignals(batch)
+        .join(reg.withColumn("__seen", lit(true)), Seq("fp"), "left")
+        .withColumn("__rn", row_number().over(w))
+        .withColumn("__dup", col("__seen").isNotNull || col("__rn") > 1)
+      val partial = flagged.groupBy(col("source"))
+        .agg(graft.queries.Curation.cardCounters.head, graft.queries.Curation.cardCounters.tail: _*)
+        .withColumn("batch_id", lit(batchId))
+      // tuple key, never concat: a source name containing the delimiter
+      // would alias two distinct partials and silently drop one
+      Merge.upsertParquet(spark, partialsPath, partial,
+        Seq("source", "batch_id"), Merge.Ignore, "n_docs")
+      flagged.filter(col("__rn") === 1 && col("__seen").isNull)
+        .select(col("fp"))
+        .write.mode("append").parquet(registryPath)
+    }
 
   /** Serve the live card: sum the partials per source, derive the same
     * ratios the batch card derives — identical output schema to q132.
@@ -721,29 +655,24 @@ object Incremental {
   def streamingTermAssociations(stream: DataFrame, checkpointDir: String,
                                 pairPartialsPath: String,
                                 termPartialsPath: String, window: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.operators.Cooccurrence
-        // tuple keys, never concat: tokens come from whitespace-only
-        // splitting, so they can legitimately contain any delimiter —
-        // concat'd keys would alias distinct pairs like ("x","y|z") and
-        // ("x|y","z") and first-wins would silently undercount (r15
-        // advice). The multi-column upsert partitions by the columns
-        // themselves.
-        val pairs = Cooccurrence.termPairCounts(batch, "text", window)
-          .withColumn("batch_id", lit(batchId))
-        Merge.upsertParquet(spark, pairPartialsPath, pairs,
-          Seq("a", "b", "batch_id"), Merge.Ignore, "c_ab")
-        val terms = Cooccurrence.termOccurrences(batch, "text")
-          .withColumn("batch_id", lit(batchId))
-        Merge.upsertParquet(spark, termPartialsPath, terms,
-          Seq("w", "batch_id"), Merge.Ignore, "c_w")
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
+      import graft.operators.Cooccurrence
+      // tuple keys, never concat: tokens come from whitespace-only
+      // splitting, so they can legitimately contain any delimiter —
+      // concat'd keys would alias distinct pairs like ("x","y|z") and
+      // ("x|y","z") and first-wins would silently undercount (r15
+      // advice). The multi-column upsert partitions by the columns
+      // themselves.
+      val pairs = Cooccurrence.termPairCounts(batch, "text", window)
+        .withColumn("batch_id", lit(batchId))
+      Merge.upsertParquet(spark, pairPartialsPath, pairs,
+        Seq("a", "b", "batch_id"), Merge.Ignore, "c_ab")
+      val terms = Cooccurrence.termOccurrences(batch, "text")
+        .withColumn("batch_id", lit(batchId))
+      Merge.upsertParquet(spark, termPartialsPath, terms,
+        Seq("w", "batch_id"), Merge.Ignore, "c_w")
+    }
 
   /** Serve the q175 association view from [[streamingTermAssociations]]
     * partials: sum partials per key (exact, counts are associative),
@@ -773,22 +702,17 @@ object Incremental {
   def streamingDriftPartials(stream: DataFrame, checkpointDir: String,
                              partialsPath: String, groupCols: Seq[String],
                              binCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // tuple key, never concat_ws: group values from data can contain
-        // the delimiter (the same silent-undercount class as the
-        // association partials)
-        val partial = graft.operators.Drift
-          .binnedCounts(batch, groupCols, binCol)
-          .withColumn("batch_id", lit(batchId))
-        Merge.upsertParquet(spark, partialsPath, partial,
-          groupCols :+ binCol :+ "batch_id", Merge.Ignore, "c")
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
+      // tuple key, never concat_ws: group values from data can contain
+      // the delimiter (the same silent-undercount class as the
+      // association partials)
+      val partial = graft.operators.Drift
+        .binnedCounts(batch, groupCols, binCol)
+        .withColumn("batch_id", lit(batchId))
+      Merge.upsertParquet(spark, partialsPath, partial,
+        groupCols :+ binCol :+ "batch_id", Merge.Ignore, "c")
+    }
 
   /** Serve the live drift: sum partials into the global per-(group, bin)
     * histogram and TVD it against the frozen reference registry —
@@ -818,18 +742,14 @@ object Incremental {
     * old files move — safe even though the lineage reads the current
     * dir). Call it from the owning stream's own foreachBatch cadence
     * (every N batches): batches are serial, so the compaction can never
-    * race an append from the same query. No-op if the registry doesn't
-    * exist yet.
+    * race an append from the same query. A torn earlier compaction is
+    * healed first; no-op if the registry doesn't exist yet.
     */
-  def compactRegistry(spark: SparkSession, registryPath: String,
-                      partitions: Int = 1): Unit = {
-    require(partitions >= 1, s"partitions must be >= 1, got $partitions")
-    val p = new Path(registryPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
+  def compactRegistry(spark: SparkSession, registryPath: String): Unit = {
+    Merge.healSwap(spark, registryPath)
+    if (Merge.hasParquet(spark, registryPath))
       Merge.replaceParquet(spark, registryPath,
-        spark.read.parquet(registryPath).distinct().coalesce(partitions))
+        spark.read.parquet(registryPath).distinct().coalesce(1))
   }
 
   /** Streaming LM quality scoring — the CCNet deployment shape of q107:
@@ -848,18 +768,14 @@ object Incremental {
   def streamingLmScore(stream: DataFrame, train: DataFrame,
                        checkpointDir: String, outPath: String,
                        id: String, text: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val counts = graft.operators.TermStats.lmCounts(train, id, text)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val scored = graft.operators.TermStats.lmScoreAgainst(
-          batch, counts, id, text)
-        Merge.upsertParquet(batch.sparkSession, outPath, scored,
-          "doc_id", Merge.Ignore, "n_trigrams")
-        ()
-      }
-      .start()
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val scored = graft.operators.TermStats.lmScoreAgainst(
+        batch, counts, id, text)
+      Merge.upsertParquet(spark, outPath, scored,
+        "doc_id", Merge.Ignore, "n_trigrams")
+    }
   }
 
   /** Streaming DSIR scoring — the data-selection deployment shape of
@@ -887,7 +803,7 @@ object Incremental {
                          target: DataFrame, checkpointDir: String,
                          outPath: String, id: String, text: String,
                          buckets: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val stats = graft.operators.Dsir.bucketStats(raw, target, id, text, buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -913,16 +829,11 @@ object Incremental {
     }
     streams.addListener(listener)
     val query =
-      try stream.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val scored = graft.operators.Dsir.scoreAgainst(
-            batch, stats, id, text, buckets)
-          Merge.upsertParquet(batch.sparkSession, outPath, scored,
-            id, Merge.Ignore, "n_feats")
-          ()
-        }
-        .start()
+      try foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+        val scored = graft.operators.Dsir.scoreAgainst(
+          batch, stats, id, text, buckets)
+        Merge.upsertParquet(spark, outPath, scored, id, Merge.Ignore, "n_feats")
+      }
       catch { case t: Throwable =>
         streams.removeListener(listener)
         stats.unpersist(blocking = false)
@@ -951,19 +862,14 @@ object Incremental {
   def streamingCohortActivity(stream: DataFrame, checkpointDir: String,
                               registryPath: String, user: String,
                               tsUs: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pairs = batch.select(col(user).as("user_key"),
-            expr(graft.operators.Cohorts.weekFloorSql(tsUs)).as("wk"))
-          .distinct()
-          .withColumn("_key", concat(col("user_key"), lit(":"), col("wk")))
-        Merge.upsertParquet(batch.sparkSession, registryPath, pairs,
-          "_key", Merge.Ignore, "wk")
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val pairs = batch.select(col(user).as("user_key"),
+          expr(graft.operators.Cohorts.weekFloorSql(tsUs)).as("wk"))
+        .distinct()
+        .withColumn("_key", concat(col("user_key"), lit(":"), col("wk")))
+      Merge.upsertParquet(spark, registryPath, pairs, "_key", Merge.Ignore, "wk")
+    }
 
   /** Streaming incremental connected components — the deployment shape
     * of q120: each micro-batch of edges folds into a persistent
@@ -984,15 +890,10 @@ object Incremental {
     */
   def streamingComponents(stream: DataFrame, checkpointDir: String,
                           registryPath: String, a: String, b: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Components.foldIntoParquet(
-          batch.sparkSession, registryPath, batch, a, b)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      graft.operators.Components.foldIntoParquet(spark, registryPath, batch, a, b)
+    }
 
   /** The q118/q120 component view served from a [[streamingComponents]]
     * registry. */
@@ -1030,78 +931,61 @@ object Incremental {
                       statePath: String, outPath: String, user: String,
                       time: String, id: String, typeCol: String,
                       stepValues: Seq[String], windows: Seq[Long])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(stepValues.size >= 2, "a funnel needs >= 2 steps")
     require(windows.size == stepValues.size - 1,
       s"need one window per hop: ${stepValues.size - 1} hops, ${windows.size} windows")
     val n = stepValues.size
     def stepCol(i: Int) = s"step${i + 1}_id"
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hopPrefix = "__hop_"
-        // owned block lifecycle (the Components.foldIntoParquet rule):
-        // the per-level unions checkpoint eagerly; release exactly what
-        // this batch added once everything has materialized
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        try {
-          var rightRows: DataFrame = null
-          for (i <- 0 until n) {
-            val stepEvents = batch.filter(col(typeCol) === stepValues(i))
-              .select(col(user), col(time).cast("long").as(time),
-                col(id).cast("long").as(stepCol(i)))
-            val enriched =
-              if (i == 0) stepEvents
-              else {
-                val carryCols = (0 until i).map(stepCol)
-                carryCols.foldLeft(
-                  graft.operators.AsOf.backward(stepEvents, rightRows,
-                      Seq(user), time, tiebreak = stepCol(i - 1),
-                      carry = carryCols, prefix = hopPrefix,
-                      maxAge = Some(windows(i - 1)))
-                    .drop(s"${hopPrefix}age"))(
-                  (df, c) => df.withColumnRenamed(hopPrefix + c, c))
-              }
-            if (i < n - 1) {
-              // Next hop's right side = prior registry (latest per user,
-              // enough for cross-batch matches under ordered arrival)
-              // ∪ ALL of this batch's step-i rows (an intra-batch left
-              // may need an OLDER same-batch right — the collapsed
-              // registry alone would lose it). Checkpointed EAGERLY so
-              // its lineage detaches from the parquet files the swap
-              // below replaces; the registry fold then collapses the
-              // same union newest-wins per user (ties to the greatest
-              // id — the as-of's duplicate-right rule).
-              val lvlPath = s"$statePath/level$i"
-              val hPath = new Path(lvlPath)
-              val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              val prior =
-                if (fs.exists(hPath) && fs.listStatus(hPath).nonEmpty)
-                  spark.read.parquet(lvlPath)
-                else spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  enriched.schema)
-              val union = prior.select(enriched.columns.map(col).toIndexedSeq: _*)
-                .unionByName(enriched)
-                .localCheckpoint(true)
-              Merge.replaceParquet(spark, lvlPath,
-                graft.operators.Dedup.newestWins(union, Seq(col(user)),
-                  col(time), col(stepCol(i))))
-              rightRows = union
-            } else {
-              Merge.upsertParquet(spark, outPath, enriched, stepCol(n - 1),
-                Merge.Ignore, stepCol(n - 1))
+    val hopPrefix = "__hop_"
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      // owned block lifecycle (the Components.foldIntoParquet rule):
+      // the per-level unions checkpoint eagerly; release exactly what
+      // this batch added once everything has materialized
+      graft.Caches.releasingAdded(spark) {
+        var rightRows: DataFrame = null
+        for (i <- 0 until n) {
+          val stepEvents = batch.filter(col(typeCol) === stepValues(i))
+            .select(col(user), col(time).cast("long").as(time),
+              col(id).cast("long").as(stepCol(i)))
+          val enriched =
+            if (i == 0) stepEvents
+            else {
+              val carryCols = (0 until i).map(stepCol)
+              carryCols.foldLeft(
+                graft.operators.AsOf.backward(stepEvents, rightRows,
+                    Seq(user), time, tiebreak = stepCol(i - 1),
+                    carry = carryCols, prefix = hopPrefix,
+                    maxAge = Some(windows(i - 1)))
+                  .drop(s"${hopPrefix}age"))(
+                (df, c) => df.withColumnRenamed(hopPrefix + c, c))
             }
+          if (i < n - 1) {
+            // Next hop's right side = prior registry (latest per user,
+            // enough for cross-batch matches under ordered arrival)
+            // ∪ ALL of this batch's step-i rows (an intra-batch left
+            // may need an OLDER same-batch right — the collapsed
+            // registry alone would lose it). Checkpointed EAGERLY so
+            // its lineage detaches from the parquet files the swap
+            // below replaces; the registry fold then collapses the
+            // same union newest-wins per user (ties to the greatest
+            // id — the as-of's duplicate-right rule).
+            val lvlPath = s"$statePath/level$i"
+            val union = Merge.readRegistry(spark, lvlPath,
+                enriched.schema.fields.toIndexedSeq: _*)
+              .unionByName(enriched)
+              .localCheckpoint(true)
+            Merge.replaceParquet(spark, lvlPath,
+              graft.operators.Dedup.newestWins(union, Seq(col(user)),
+                col(time), col(stepCol(i))))
+            rightRows = union
+          } else {
+            Merge.upsertParquet(spark, outPath, enriched, stepCol(n - 1),
+              Merge.Ignore, stepCol(n - 1))
           }
-        } finally {
-          spark.sparkContext.getPersistentRDDs
-            .filterNot { case (rid, _) => before(rid) }
-            .values.foreach(_.unpersist(blocking = false))
         }
-        ()
       }
-      .start()
+    }
   }
 
   /** The q116 retention matrix served from a
@@ -1125,17 +1009,11 @@ object Incremental {
     */
   def streamingSpanCorrupt(stream: DataFrame, checkpointDir: String,
                            outPath: String, id: String, text: String,
-                           ratePm: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ex = graft.operators.SpanCorrupt.examples(batch, id, text, ratePm)
-        Merge.upsertParquet(batch.sparkSession, outPath, ex,
-          id, Merge.Ignore, "n_tokens")
-        ()
-      }
-      .start()
+                           ratePm: Int): StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val ex = graft.operators.SpanCorrupt.examples(batch, id, text, ratePm)
+      Merge.upsertParquet(spark, outPath, ex, id, Merge.Ignore, "n_tokens")
+    }
 
   /** Streaming BPE segmentation — the tokenizer-ENCODE deployment shape
     * of q106 (verdict r10 item 7): the merge table is trained ONCE (the
@@ -1157,57 +1035,41 @@ object Incremental {
     */
   def streamingBpeSegment(stream: DataFrame, checkpointDir: String,
                           outPath: String, word: String,
-                          merges: Seq[(String, String)])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val seen = readSeenWords(spark, outPath)
-        val fresh = batch.select(col(word).as("w")).distinct()
-          .join(seen, Seq("w"), "left_anti")
-        // skip the empty append (the saturated-vocabulary steady state —
-        // nearly every batch once the Zipf head is seen): it would still
-        // commit one schema-only part file per batch, the small-file
-        // decay the curriculum stream learned the hard way
-        if (!fresh.isEmpty)
-          graft.operators.Bpe.applyMerges(fresh, "w", merges)
-            .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+                          merges: Seq[(String, String)]): StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val fresh = batch.select(col(word).as("w")).distinct()
+        .join(Merge.readRegistry(spark, outPath, StructField("w", StringType)),
+          Seq("w"), "left_anti")
+      // skip the empty append (the saturated-vocabulary steady state —
+      // nearly every batch once the Zipf head is seen): it would still
+      // commit one schema-only part file per batch, the small-file
+      // decay the curriculum stream learned the hard way
+      if (!fresh.isEmpty)
+        graft.operators.Bpe.applyMerges(fresh, "w", merges)
+          .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming CDC dedup — [[streamingSpanDedup]]'s twin at
     * content-defined granularity (q131): each micro-batch of documents
     * is CDC-chunked and checked against the persistent chunk-hash
     * registry ([[graft.operators.Chunk.cdcDedupAgainst]]), per-doc
     * contributions land via keyed first-write-wins upsert, and the
-    * batch's novel distinct chunk hashes append to the registry. Same
-    * replay-safe write order (documents FIRST, registry second). The
-    * shift-invariant boundaries are what make this the RE-CRAWL dedup:
-    * an edited document re-contributes only its edited chunks, where
-    * the fixed-block registry would see every block as new.
+    * batch's novel distinct chunk hashes append to the registry
+    * ([[dedupAgainstRegistry]]). The shift-invariant boundaries are what
+    * make this the RE-CRAWL dedup: an edited document re-contributes
+    * only its edited chunks, where the fixed-block registry would see
+    * every block as new.
     */
   def streamingCdcDedup(stream: DataFrame, checkpointDir: String,
                         outPath: String, registryPath: String,
                         id: String, text: String, divisor: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val reg = readStringColOrEmpty(spark, registryPath, "chunk_hash")
-        val fresh = graft.operators.Chunk.cdcDedupAgainst(
-          batch, reg, id, text, divisor)
-        Merge.upsertParquet(spark, outPath, fresh,
-          id, Merge.Ignore, "n_chunks")
+      : StreamingQuery =
+    dedupAgainstRegistry(stream, checkpointDir, outPath, registryPath,
+        StructField("chunk_hash", StringType), id, "n_chunks") { (_, batch, reg) =>
+      (graft.operators.Chunk.cdcDedupAgainst(batch, reg, id, text, divisor),
         graft.operators.Chunk.contentDefined(batch, id, text, divisor)
-          .select(col("chunk_hash")).distinct()
-          .join(reg, Seq("chunk_hash"), "left_anti")
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+          .select(col("chunk_hash")))
+    }
 
   /** Streaming IVF-PQ index ingest — the missing ONLINE half of the
     * q92/q97 production ANN stack: coarse centroids and codebooks are
@@ -1227,20 +1089,15 @@ object Incremental {
                            id: String, vec: String,
                            codebook: IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
                              graft.operators.Similarity.pqCodebook)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val seen = readIndexedIds(spark, indexPath)
-        val fresh = batch
-          .join(seen.withColumnRenamed("cid", id), Seq(id), "left_anti")
-        graft.operators.Similarity
-          .buildIvfPqIndex(fresh, centroids, id, vec, codebook)
-          .write.mode("append").parquet(indexPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val seen = Merge.readRegistry(spark, indexPath, StructField("cid", LongType))
+      val fresh = batch
+        .join(seen.withColumnRenamed("cid", id), Seq(id), "left_anti")
+      graft.operators.Similarity
+        .buildIvfPqIndex(fresh, centroids, id, vec, codebook)
+        .write.mode("append").parquet(indexPath)
+    }
 
   /** Streaming lexical-index ingest — [[streamingIndexIngest]]'s twin
     * for the BM25 postings registry (the q157/q162 serve family): each
@@ -1257,20 +1114,15 @@ object Incremental {
   def streamingPostingsIngest(stream: DataFrame, checkpointDir: String,
                               registryPath: String, id: String, text: String,
                               minTermLen: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val seen = readLongColOrEmpty(spark, registryPath, "doc")
-          .withColumnRenamed("doc", id).distinct()
-        graft.operators.TermStats
-          .bm25Postings(batch.join(seen, Seq(id), "left_anti"),
-            id, text, minTermLen)
-          .write.mode("append").parquet(registryPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val seen = Merge.readRegistry(spark, registryPath, StructField("doc", LongType))
+        .withColumnRenamed("doc", id).distinct()
+      graft.operators.TermStats
+        .bm25Postings(batch.join(seen, Seq(id), "left_anti"),
+          id, text, minTermLen)
+        .write.mode("append").parquet(registryPath)
+    }
 
   /** Streaming split assignment — q164's deployment shape with a GROWING
     * registry: the registry directories hold minhash signatures
@@ -1295,39 +1147,35 @@ object Incremental {
                            shingleK: Int, numHashes: Int, bands: Int,
                            minSigEqual: Int,
                            splits: Seq[(String, Int)], salt: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val assigned = readLongColOrEmpty(spark, outPath, id).distinct()
-        val fresh = batch.join(assigned, Seq(id), "left_anti")
-          .localCheckpoint(true) // two registry writes + the assignment read it
-        val bSigs = graft.operators.TextDedup.minhashSignatures(
-            fresh, id, text, shingleK, numHashes)
-          .localCheckpoint(true)
-        val out = splitAssignAgainst(fresh, bSigs,
-            spark.read.parquet(sigsPath), spark.read.parquet(labelsPath),
-            id, numHashes, bands, minSigEqual, splits, salt)
-          .localCheckpoint(true) // two sink writes read it; don't re-run the LSH join
-        // REGISTRIES FIRST, assignment sink LAST — the dl-last pattern:
-        // outPath is the replay guard (the anti-join above), so a crash
-        // after it but before the registry appends would permanently omit
-        // the batch from the inheritance registry and later near-dups of
-        // those docs would hash-assign independently — the exact leakage
-        // this operator exists to prevent. With the guard last, a crash
-        // replays the whole batch: the deterministic recompute re-appends
-        // byte-identical sigs/labels rows, and the inherit path collapses
-        // duplicates harmlessly (candidate pairs dedupe through the
-        // groupBy-min; label fanout can't move a min).
-        bSigs.write.mode("append").parquet(sigsPath)
-        out.select(col(id).as("edoc"), col("skey").as("cluster"))
-          .write.mode("append").parquet(labelsPath)
-        out.select(col(id), col("inherited"), col("skey"), col("split"))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val assigned = Merge.readRegistry(spark, outPath, StructField(id, LongType))
+        .distinct()
+      val fresh = batch.join(assigned, Seq(id), "left_anti")
+        .localCheckpoint(true) // two registry writes + the assignment read it
+      val bSigs = graft.operators.TextDedup.minhashSignatures(
+          fresh, id, text, shingleK, numHashes)
+        .localCheckpoint(true)
+      val out = splitAssignAgainst(fresh, bSigs,
+          spark.read.parquet(sigsPath), spark.read.parquet(labelsPath),
+          id, numHashes, bands, minSigEqual, splits, salt)
+        .localCheckpoint(true) // two sink writes read it; don't re-run the LSH join
+      // REGISTRIES FIRST, assignment sink LAST — the dl-last pattern:
+      // outPath is the replay guard (the anti-join above), so a crash
+      // after it but before the registry appends would permanently omit
+      // the batch from the inheritance registry and later near-dups of
+      // those docs would hash-assign independently — the exact leakage
+      // this operator exists to prevent. With the guard last, a crash
+      // replays the whole batch: the deterministic recompute re-appends
+      // byte-identical sigs/labels rows, and the inherit path collapses
+      // duplicates harmlessly (candidate pairs dedupe through the
+      // groupBy-min; label fanout can't move a min).
+      bSigs.write.mode("append").parquet(sigsPath)
+      out.select(col(id).as("edoc"), col("skey").as("cluster"))
+        .write.mode("append").parquet(labelsPath)
+      out.select(col(id), col("inherited"), col("skey"), col("split"))
+        .write.mode("append").parquet(outPath)
+    }
 
   /** [[streamingSplitAssign]]'s per-batch core, shared with the splitreg
     * scale probe: match a batch (rows + precomputed signatures) against
@@ -1363,30 +1211,6 @@ object Incremental {
       "skey", salt, splits)
   }
 
-  /** The index's id column, empty-safe before the first batch commits.
-    * Long-typed (vector ids), so it gets its own reader rather than
-    * widening [[readStringColOrEmpty]].
-    */
-  private def readIndexedIds(spark: SparkSession, indexPath: String): DataFrame =
-    readLongColOrEmpty(spark, indexPath, "cid")
-
-  /** One long-typed column of a registry/index table, empty-safe before
-    * the first batch commits (shared by the dense `cid` and lexical
-    * `doc` ingest twins).
-    */
-  private def readLongColOrEmpty(spark: SparkSession, path: String,
-                                 colName: String): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      spark.read.parquet(path).select(colName)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(colName,
-          org.apache.spark.sql.types.LongType))))
-  }
-
   /** Streaming chunker — q125's deployment shape: each micro-batch of
     * documents fans out to its token windows
     * ([[graft.operators.Chunk.tokenWindows]], stateless — the one
@@ -1399,19 +1223,12 @@ object Incremental {
     */
   def streamingChunk(stream: DataFrame, checkpointDir: String,
                      outPath: String, id: String, text: String,
-                     size: Int, overlap: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ch = graft.operators.Chunk.tokenWindows(batch, id, text, size, overlap)
-          .withColumn("chunk_id",
-            concat(col(id), lit(":"), col("chunk_idx")))
-        Merge.upsertParquet(batch.sparkSession, outPath, ch,
-          "chunk_id", Merge.Ignore, "n_tok")
-        ()
-      }
-      .start()
+                     size: Int, overlap: Int): StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val ch = graft.operators.Chunk.tokenWindows(batch, id, text, size, overlap)
+        .withColumn("chunk_id", concat(col(id), lit(":"), col("chunk_idx")))
+      Merge.upsertParquet(spark, outPath, ch, "chunk_id", Merge.Ignore, "n_tok")
+    }
 
   /** Streaming unigram segmentation — [[streamingBpeSegment]]'s twin for
     * the OTHER tokenizer family (q128): the scored vocabulary is trained
@@ -1428,32 +1245,17 @@ object Incremental {
   def streamingUnigramSegment(stream: DataFrame, checkpointDir: String,
                               outPath: String, word: String,
                               vocab: Seq[(String, Long)], maxLen: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val seen = readSeenWords(spark, outPath)
-        val fresh = batch.select(col(word).as("w")).distinct()
-          .join(seen, Seq("w"), "left_anti")
-        // saturated-vocabulary steady state: skip the schema-only append
-        // (same rationale as streamingBpeSegment)
-        if (!fresh.isEmpty)
-          graft.operators.Unigram.segment(fresh, "w", vocab, maxLen)
-            .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
-
-  /** The segmented-word sink's key column, empty-safe before the first
-    * batch commits.
-    */
-  private def readSeenWords(spark: SparkSession, outPath: String): DataFrame =
-    readStringColOrEmpty(spark, outPath, "w")
-
-  /** The block registry, empty-safe before the first batch commits. */
-  private def readRegistry(spark: SparkSession, registryPath: String): DataFrame =
-    readStringColOrEmpty(spark, registryPath, "blk")
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val fresh = batch.select(col(word).as("w")).distinct()
+        .join(Merge.readRegistry(spark, outPath, StructField("w", StringType)),
+          Seq("w"), "left_anti")
+      // saturated-vocabulary steady state: skip the schema-only append
+      // (same rationale as streamingBpeSegment)
+      if (!fresh.isEmpty)
+        graft.operators.Unigram.segment(fresh, "w", vocab, maxLen)
+          .write.mode("append").parquet(outPath)
+    }
 
   /** The follower/backfill driver. `source` must yield rows with a
     * monotonically increasing `heightCol`; `currentHeight` is re-read per
@@ -1544,42 +1346,31 @@ object Incremental {
     * the write is [[Merge.replaceParquet]]'s snapshot swap, never an
     * append. Replay-safe (T6): already-registered ids anti-join away, and
     * an empty fresh set re-derives the identical order — a replayed
-    * micro-batch swaps in the same bytes.
+    * micro-batch swaps in the same bytes. A torn swap is healed at batch
+    * entry, before the fresh-vs-extend decision.
     */
   def streamingCurriculum(stream: DataFrame, checkpointDir: String,
                           registryPath: String, group: String, id: String,
                           salt: String, weights: Map[String, Int],
                           servedOf: Long => Long, nBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hPath = new Path(registryPath)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val next =
-          if (!fs.exists(hPath))
-            graft.operators.Ranks.orderRegistry(batch, group, id, salt,
-                weights, nBuckets)
-              .withColumn("frozen", lit(false))
-          else {
-            val reg = spark.read.parquet(registryPath)
-            val fresh = batch.join(reg.select(col(id)), Seq(id), "left_anti")
-            graft.operators.Ranks.extendRegistry(reg, fresh, group, id, salt,
-              weights, servedOf(reg.count()), nBuckets)
-          }
-        // replaceParquet materializes into a temp dir before any rename,
-        // so next's lineage reading registryPath is safe by contract
-        Merge.replaceParquet(spark, registryPath, next)
-        ()
-      }
-      .start()
-
-  private def readableParquet(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-  }
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      Merge.healSwap(spark, registryPath)
+      val next =
+        if (!Merge.hasParquet(spark, registryPath))
+          graft.operators.Ranks.orderRegistry(batch, group, id, salt,
+              weights, nBuckets)
+            .withColumn("frozen", lit(false))
+        else {
+          val reg = spark.read.parquet(registryPath)
+          val fresh = batch.join(reg.select(col(id)), Seq(id), "left_anti")
+          graft.operators.Ranks.extendRegistry(reg, fresh, group, id, salt,
+            weights, servedOf(reg.count()), nBuckets)
+        }
+      // replaceParquet materializes into a temp dir before any rename,
+      // so next's lineage reading registryPath is safe by contract
+      Merge.replaceParquet(spark, registryPath, next)
+    }
 
   /** Reader for [[streamingCurriculumSegmented]]'s layout: the logical
     * registry is `frozen/` (append-only graduated segments) ∪ `tail/`
@@ -1596,9 +1387,9 @@ object Incremental {
                          pos: String = "pos"): DataFrame = {
     val frozenPath = s"$registryPath/frozen"
     val tailPath = s"$registryPath/tail"
-    val frozen = if (readableParquet(spark, frozenPath))
+    val frozen = if (Merge.hasParquet(spark, frozenPath))
       Some(spark.read.parquet(frozenPath)) else None
-    val tail = if (readableParquet(spark, tailPath))
+    val tail = if (Merge.hasParquet(spark, tailPath))
       Some(spark.read.parquet(tailPath)) else None
     (frozen, tail) match {
       case (Some(f), Some(t)) =>
@@ -1634,58 +1425,55 @@ object Incremental {
     * which [[curriculumRegistry]] shadows out (see there); the reverse
     * order would LOSE rows. Replay-safe like the monolithic form:
     * already-registered ids anti-join away and re-derive identical
-    * positions.
+    * positions. A torn `tail/` swap is healed at batch entry (the
+    * public [[curriculumRegistry]] reader must not heal).
     */
   def streamingCurriculumSegmented(stream: DataFrame, checkpointDir: String,
                                    registryPath: String, group: String,
                                    id: String, salt: String,
                                    weights: Map[String, Int],
                                    servedOf: Long => Long, nBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val frozenPath = s"$registryPath/frozen"
-        val tailPath = s"$registryPath/tail"
-        if (!readableParquet(spark, frozenPath) &&
-            !readableParquet(spark, tailPath)) {
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val frozenPath = s"$registryPath/frozen"
+      val tailPath = s"$registryPath/tail"
+      Merge.healSwap(spark, tailPath)
+      if (!Merge.hasParquet(spark, frozenPath) &&
+          !Merge.hasParquet(spark, tailPath)) {
+        Merge.replaceParquet(spark, tailPath,
+          graft.operators.Ranks.orderRegistry(batch, group, id, salt,
+            weights, nBuckets))
+      } else {
+        val reg = curriculumRegistry(spark, registryPath)
+        val fresh = batch.join(reg.select(col(id)), Seq(id), "left_anti")
+        // two consumers (graduation append, tail swap) — persist so the
+        // re-rank runs once; lineage is already cut from tail/ by
+        // extendRegistry's eager checkpoint
+        val next = graft.operators.Ranks.extendRegistry(reg, fresh, group,
+            id, salt, weights, servedOf(reg.count()), nBuckets)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // NULL max = schema-only frozen/ (see curriculumRegistry):
+          // treat as "nothing graduated yet", not an NPE
+          val gradFloor = if (Merge.hasParquet(spark, frozenPath)) {
+            val r = spark.read.parquet(frozenPath).agg(max(col("pos"))).head
+            if (r.isNullAt(0)) 0L else r.getLong(0)
+          } else 0L
+          val grads = next.filter(col("frozen") && col("pos") > gradFloor)
+            .drop("frozen")
+          // skip the append when NOTHING graduated this batch (e.g. the
+          // watermark hasn't passed pos 1 on a tiny first batch): an
+          // empty append still writes a schema-only .parquet part, which
+          // flips hasParquet(frozen) to true with 0 rows — the exact
+          // shape the NULL-max guards above exist for. Don't create it
+          // in the first place.
+          if (!grads.isEmpty)
+            grads.write.mode("append").parquet(frozenPath)
           Merge.replaceParquet(spark, tailPath,
-            graft.operators.Ranks.orderRegistry(batch, group, id, salt,
-              weights, nBuckets))
-        } else {
-          val reg = curriculumRegistry(spark, registryPath)
-          val fresh = batch.join(reg.select(col(id)), Seq(id), "left_anti")
-          // two consumers (graduation append, tail swap) — persist so the
-          // re-rank runs once; lineage is already cut from tail/ by
-          // extendRegistry's eager checkpoint
-          val next = graft.operators.Ranks.extendRegistry(reg, fresh, group,
-              id, salt, weights, servedOf(reg.count()), nBuckets)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // NULL max = schema-only frozen/ (see curriculumRegistry):
-            // treat as "nothing graduated yet", not an NPE
-            val gradFloor = if (readableParquet(spark, frozenPath)) {
-              val r = spark.read.parquet(frozenPath).agg(max(col("pos"))).head
-              if (r.isNullAt(0)) 0L else r.getLong(0)
-            } else 0L
-            val grads = next.filter(col("frozen") && col("pos") > gradFloor)
-              .drop("frozen")
-            // skip the append when NOTHING graduated this batch (e.g. the
-            // watermark hasn't passed pos 1 on a tiny first batch): an
-            // empty append still writes a schema-only .parquet part, which
-            // flips readableParquet(frozen) to true with 0 rows — the
-            // exact shape the NULL-max guards above exist for. Don't
-            // create it in the first place.
-            if (!grads.isEmpty)
-              grads.write.mode("append").parquet(frozenPath)
-            Merge.replaceParquet(spark, tailPath,
-              next.filter(!col("frozen")).drop("frozen"))
-          } finally { next.unpersist(); () }
-        }
-        ()
+            next.filter(!col("frozen")).drop("frozen"))
+        } finally { next.unpersist(); () }
       }
-      .start()
+    }
 
   // -------------------------------------------------------------------
   // The impact-index REGISTRY — the on-disk, incrementally maintained
@@ -1797,9 +1585,9 @@ object Incremental {
   }
 
   /** True when at least one committed segment exists under `base`. */
-  private def readableSegments(spark: SparkSession, base: String): Boolean =
+  private def hasSegments(spark: SparkSession, base: String): Boolean =
     segmentEpochs(spark, base)
-      .exists(e => readableParquet(spark, s"$base/epoch=$e"))
+      .exists(e => Merge.hasParquet(spark, s"$base/epoch=$e"))
 
   /** All live segments of a segmented artifact, projected to the
     * canonical columns (the Hive partition column `epoch` exists for
@@ -1920,7 +1708,7 @@ object Incremental {
     val statsLog = spark.read.parquet(s"$registryPath/stats").distinct()
     val servePath = s"$registryPath/stats_serve"
     val dfreq =
-      if (readableParquet(spark, servePath)) {
+      if (Merge.hasParquet(spark, servePath)) {
         val srv = spark.read.parquet(servePath)
         // folded_through is constant across rows; one-row read
         val ft = srv.select(col("folded_through")).head.getLong(0)
@@ -2138,7 +1926,7 @@ object Incremental {
     // flat files directly under postings/ are an older, unsegmented
     // layout this engine no longer reads — refuse loudly instead of
     // interleaving the two formats
-    if (readableParquet(spark, postBase))
+    if (Merge.hasParquet(spark, postBase))
       throw new IllegalStateException(s"impactBatchIngest: $registryPath " +
         "holds a flat (unsegmented) impact registry — flat files under " +
         "postings/ are no longer a supported layout; rebuild the registry " +
@@ -2160,7 +1948,7 @@ object Incremental {
     try {
       // replay safety: the dl registry is the seen-doc-id set
       val fresh =
-        if (readableSegments(spark, dlBase))
+        if (hasSegments(spark, dlBase))
           docsIn.join(readSegments(spark, dlBase, "doc"),
             Seq("doc"), "left_anti")
         else docsIn
@@ -2184,7 +1972,7 @@ object Incremental {
         // which requires a standing impact/ artifact, whose readability
         // the appends below cannot change (impact/ is swap-replaced only
         // at the end of this fold).
-        val snapNeeded = needLanded || readableParquet(spark, impactPath)
+        val snapNeeded = needLanded || Merge.hasParquet(spark, impactPath)
         // Batch-shaped work below runs under the loop-conf scope (the
         // q120/q174 convention): planned partitions ∝ the batch's token
         // mass instead of the session constant. The tokenize/rollup
@@ -2245,15 +2033,15 @@ object Incremental {
             newDl.write.mode("append").parquet(s"$dlBase/epoch=$epoch")
             snap
           }
-        if (readableSegments(spark, dlBase)) {
+        if (hasSegments(spark, dlBase)) {
           val (nTotal, aTokTotal) = corpusTotals(spark, registryPath)
           val mQ = depthFor(nTotal, docsPerSlot, mMin, quantizeDepth)
           val (builtM, retiredPrev): (Int, Long) =
-            if (readableParquet(spark, metaPath)) {
+            if (Merge.hasParquet(spark, metaPath)) {
               val r = spark.read.parquet(metaPath).head
               (r.getInt(0), r.getLong(2))
             } else (-1, 0L)
-          val rebuilt = mQ > builtM || !readableParquet(spark, impactPath)
+          val rebuilt = mQ > builtM || !Merge.hasParquet(spark, impactPath)
           // registry-shaped maintenance (rebuild window / merge + the
           // two swaps) under a loop-conf scope sized by the REGISTRY's
           // token mass — the rebuild's per-term window is registry-
@@ -2373,14 +2161,14 @@ object Incremental {
     // re-adding an increment after the meta swap would double-count
     val retiredTotal = recorded.map(_._2).getOrElse {
       val retiredNew =
-        if (!readableParquet(spark, corpusPath)) 0L
+        if (!Merge.hasParquet(spark, corpusPath)) 0L
         else {
           val r = spark.read.parquet(corpusPath).distinct()
             .filter(col("epoch") < minEpoch).agg(sum(col("n_docs"))).head
           if (r.isNullAt(0)) 0L else r.getLong(0)
         }
       val retiredPrev =
-        if (readableParquet(spark, metaPath))
+        if (Merge.hasParquet(spark, metaPath))
           spark.read.parquet(metaPath).head.getLong(2)
         else 0L
       retiredPrev + retiredNew
@@ -2396,10 +2184,10 @@ object Incremental {
          e <- segmentEpochs(spark, base) if e < minEpoch)
       fs.delete(new Path(s"$base/epoch=$e"), true)
     for (p <- Seq(s"$registryPath/stats", corpusPath)
-         if readableParquet(spark, p))
+         if Merge.hasParquet(spark, p))
       Merge.replaceParquet(spark, p,
         spark.read.parquet(p).filter(col("epoch") >= minEpoch))
-    if (!readableSegments(spark, dlBase)) {
+    if (!hasSegments(spark, dlBase)) {
       // everything retired: the registry is empty — drop the snapshot
       // artifacts so the next ingest starts a first build. compact_mark
       // goes too: a from-scratch restart may legally reuse low epoch
@@ -2409,12 +2197,12 @@ object Incremental {
     } else {
       val (live, liveATok) = corpusTotals(spark, registryPath)
       val (mBuilt, nAtBuild): (Int, Long) =
-        if (readableParquet(spark, metaPath)) {
+        if (Merge.hasParquet(spark, metaPath)) {
           val r = spark.read.parquet(metaPath).head
           (r.getInt(0), r.getLong(1))
         } else (-1, 0L)
       val rebuild = mBuilt < 0 ||
-        !readableParquet(spark, s"$registryPath/impact") ||
+        !Merge.hasParquet(spark, s"$registryPath/impact") ||
         retiredTotal * 1000000L >= rebuildSharePm * (retiredTotal + live)
       if (rebuild) {
         val mQ = depthFor(live, docsPerSlot, mMin, quantizeDepth)
@@ -2478,17 +2266,17 @@ object Incremental {
     for (base <- Seq(s"$registryPath/postings", dlBase);
          e <- segmentEpochs(spark, base) if e > mark) {
       val p = s"$base/epoch=$e"
-      if (readableParquet(spark, p))
+      if (Merge.hasParquet(spark, p))
         Merge.replaceParquet(spark, p, spark.read.parquet(p).distinct())
     }
-    if (readableSegments(spark, dlBase)) {
+    if (hasSegments(spark, dlBase)) {
       // dl read pruned to the epochs that still carry dkey-keyed rows:
       // a pending row's doc can only ever land in dl under the row's OWN
       // epoch (the replay contract — same batchId, same epoch), so the
       // membership check never needs the older segments. The collect is
       // bounded by the number of epochs touched since the last fold.
       def keyedEpochs(path: String): Seq[Long] =
-        if (!readableParquet(spark, path)) Seq.empty
+        if (!Merge.hasParquet(spark, path)) Seq.empty
         else spark.read.parquet(path).filter(col("dkey").isNotNull)
           .select(col("epoch").cast("long")).distinct()
           .collect().toSeq.map(_.getLong(0))
@@ -2498,7 +2286,7 @@ object Incremental {
         .filter(col("epoch").cast("long").isin(recent: _*))
         .select(col("doc").as("dkey")).distinct()
       def fold(path: String, combine: DataFrame => DataFrame): Unit =
-        if (readableParquet(spark, path)) {
+        if (Merge.hasParquet(spark, path)) {
           val deltas = spark.read.parquet(path).distinct()
           val dkeyType = deltas.schema("dkey").dataType
           val durable = deltas.filter(col("dkey").isNull).unionByName(
@@ -2525,7 +2313,7 @@ object Incremental {
     // between them leaves an older-ft rollup — still exact).
     val sealedTopOpt = segmentEpochs(spark, dlBase).lastOption.map(_ - 1L)
     for (sealedTop <- sealedTopOpt if sealedTop >= 0 &&
-           readableParquet(spark, s"$registryPath/stats")) {
+           Merge.hasParquet(spark, s"$registryPath/stats")) {
       Merge.replaceParquet(spark, s"$registryPath/stats_serve",
         spark.read.parquet(s"$registryPath/stats").distinct()
           .filter(col("epoch") <= sealedTop)
@@ -2563,18 +2351,14 @@ object Incremental {
                            epochOf: Long => Long, minTermLen: Int = 1,
                            docsPerSlot: Long = 625L, mMin: Int = 64,
                            compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        impactBatchIngest(batch.sparkSession, registryPath, batch, id, text,
-          epochOf(batchId), minTermLen, docsPerSlot, mMin)
-          .foreach(_.release()) // per-batch snapshot blocks must not outlive the fold
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          compactImpactRegistry(batch.sparkSession, registryPath)
-        ()
-      }
-      .start()
+      : StreamingQuery =
+    foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
+      impactBatchIngest(spark, registryPath, batch, id, text,
+        epochOf(batchId), minTermLen, docsPerSlot, mMin)
+        .foreach(_.release()) // per-batch snapshot blocks must not outlive the fold
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+        compactImpactRegistry(spark, registryPath)
+    }
 
   /** Incremental maintenance of the bucketed SERVING tables — the
     * standing-deployment form of [[publishImpactServeTables]] (VERDICT
@@ -2617,73 +2401,68 @@ object Incremental {
                                   buckets: Int = 32, minTermLen: Int = 1,
                                   docsPerSlot: Long = 625L, mMin: Int = 64,
                                   quantizeDepth: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val landed = impactBatchIngest(spark, registryPath, batch, id, text,
-          0L, minTermLen, docsPerSlot, mMin, quantizeDepth,
-          needLanded = true)
-        val postT = s"${prefix}_postings"
-        val dlT = s"${prefix}_dl"
-        val impT = s"${prefix}_impact"
-        for (t <- Seq(postT, dlT, impT) if !spark.catalog.tableExists(t))
-          clearStaleTable(spark, t)
-        // eager checkpoint: cuts the dl TABLE read out of the lineage of
-        // what gets appended back into that same table below
-        val newDocs = {
-          val batchDocs = batch.select(col(id).as("doc")).distinct()
-          if (spark.catalog.tableExists(dlT))
-            batchDocs.join(spark.table(dlT).select(col("doc")),
-              Seq("doc"), "left_anti")
-          else batchDocs
-        }.localCheckpoint(true)
-        val nNew = newDocs.count()
-        if (nNew > 0 || !spark.catalog.tableExists(impT)) {
-          // STEADY STATE: the docs to publish are exactly the docs this
-          // fold landed — the published dl set only ever lags the
-          // registry dl set (rows are published strictly after their
-          // registry fold), so fresh ⊆ newDocs always, and equal COUNTS
-          // mean equal SETS. Then the rows to append are the fold's own
-          // landed snapshot (byte-identical to what a registry
-          // extraction would return, already duplicate-free), O(batch)
-          // with no registry scan. RECOVERY (a crash between the
-          // registry fold and the table appends left newDocs ⊋ fresh):
-          // fetch doc-keyed from the registry, footprint-distinct'd.
-          // bucketBy writes one file per (task × bucket): the landed
-          // snapshot keeps its fold-join partitioning, so appending it
-          // raw would fan out P×buckets tiny files per batch and every
-          // later table read (the serve, the membership anti-join) pays
-          // the per-file open cost — repartitioning on the bucket key
-          // lands each bucket in ONE task → ≤1 file per bucket per batch.
-          val (posts, dls) = landed match {
-            case Some(l) if l.nFresh == nNew =>
-              (l.rows.select(col("doc"), col("term"), col("tf"))
-                .repartition(buckets, col("doc")),
-                bucketHealed(l.rows.select(col("doc"), col("dl")),
-                  buckets, "doc"))
-            case _ =>
-              (postingsOf(spark, registryPath)
-                .join(broadcast(newDocs), Seq("doc")).distinct(),
-                dlOf(spark, registryPath)
-                  .join(broadcast(newDocs), Seq("doc")).distinct())
-          }
-          // postings first, dl LAST — dl is the published-doc mark the
-          // anti-join reads, so a torn append replays instead of losing
-          graft.sources.Bucketing.appendBucketed(posts, postT, buckets, "doc")
-          graft.sources.Bucketing.appendBucketed(dls, dlT, buckets, "doc")
-          graft.sources.Bucketing.writeBucketed(
-            impactIndexRegistry(spark, registryPath), impT, buckets, "term")
+    foldBatches(stream, checkpointDir) { (spark, batch, _) =>
+      val landed = impactBatchIngest(spark, registryPath, batch, id, text,
+        0L, minTermLen, docsPerSlot, mMin, quantizeDepth,
+        needLanded = true)
+      val postT = s"${prefix}_postings"
+      val dlT = s"${prefix}_dl"
+      val impT = s"${prefix}_impact"
+      for (t <- Seq(postT, dlT, impT) if !spark.catalog.tableExists(t))
+        clearStaleTable(spark, t)
+      // eager checkpoint: cuts the dl TABLE read out of the lineage of
+      // what gets appended back into that same table below
+      val newDocs = {
+        val batchDocs = batch.select(col(id).as("doc")).distinct()
+        if (spark.catalog.tableExists(dlT))
+          batchDocs.join(spark.table(dlT).select(col("doc")),
+            Seq("doc"), "left_anti")
+        else batchDocs
+      }.localCheckpoint(true)
+      val nNew = newDocs.count()
+      if (nNew > 0 || !spark.catalog.tableExists(impT)) {
+        // STEADY STATE: the docs to publish are exactly the docs this
+        // fold landed — the published dl set only ever lags the
+        // registry dl set (rows are published strictly after their
+        // registry fold), so fresh ⊆ newDocs always, and equal COUNTS
+        // mean equal SETS. Then the rows to append are the fold's own
+        // landed snapshot (byte-identical to what a registry
+        // extraction would return, already duplicate-free), O(batch)
+        // with no registry scan. RECOVERY (a crash between the
+        // registry fold and the table appends left newDocs ⊋ fresh):
+        // fetch doc-keyed from the registry, footprint-distinct'd.
+        // bucketBy writes one file per (task × bucket): the landed
+        // snapshot keeps its fold-join partitioning, so appending it
+        // raw would fan out P×buckets tiny files per batch and every
+        // later table read (the serve, the membership anti-join) pays
+        // the per-file open cost — repartitioning on the bucket key
+        // lands each bucket in ONE task → ≤1 file per bucket per batch.
+        val (posts, dls) = landed match {
+          case Some(l) if l.nFresh == nNew =>
+            (l.rows.select(col("doc"), col("term"), col("tf"))
+              .repartition(buckets, col("doc")),
+              bucketHealed(l.rows.select(col("doc"), col("dl")),
+                buckets, "doc"))
+          case _ =>
+            (postingsOf(spark, registryPath)
+              .join(broadcast(newDocs), Seq("doc")).distinct(),
+              dlOf(spark, registryPath)
+                .join(broadcast(newDocs), Seq("doc")).distinct())
         }
-        // per-batch checkpoint blocks (the landed snapshot and the
-        // newDocs membership set) must not outlive the batch — a
-        // standing stream would otherwise accumulate storage blocks
-        landed.foreach(_.release())
-        unpersistCheckpoint(newDocs)
-        ()
+        // postings first, dl LAST — dl is the published-doc mark the
+        // anti-join reads, so a torn append replays instead of losing
+        graft.sources.Bucketing.appendBucketed(posts, postT, buckets, "doc")
+        graft.sources.Bucketing.appendBucketed(dls, dlT, buckets, "doc")
+        graft.sources.Bucketing.writeBucketed(
+          impactIndexRegistry(spark, registryPath), impT, buckets, "term")
       }
-      .start()
+      // per-batch checkpoint blocks (the landed snapshot and the
+      // newDocs membership set) must not outlive the batch — a
+      // standing stream would otherwise accumulate storage blocks
+      landed.foreach(_.release())
+      unpersistCheckpoint(newDocs)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.GraftSession
 
@@ -26,12 +27,14 @@ object StreamMain {
         spark.readStream.schema(schema).parquet(inDir.toString))
       .withColumn("ts_us", expr("ts div 1000"))
     val windows = Streams.windowedRewards(stream, "1 day", "1 hour")
-    val query = windows.writeStream.format("memory").queryName("rewards")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    // complete mode: every micro-batch carries the whole result table
+    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out")
+    val query = Incremental.foldBatches(windows, s"$outDir/checkpoint",
+        OutputMode.Complete(), Trigger.AvailableNow()) { (_, batch, _) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/rewards")
+    }
     query.awaitTermination()
-    val out = spark.table("rewards")
+    val out = spark.read.parquet(s"$outDir/rewards")
     println(s"[stream] windows=${out.count()}")
     out.orderBy(col("rewards_c").desc).show(5)
     spark.stop()

@@ -244,4 +244,24 @@ class IncrementalSpec extends AnyFunSuite {
     val second = spark.read.parquet(s"$dir/sink/payments").collect().toSet
     assert(first == second)
   }
+
+  test("src/main/scala starts streams at exactly one .writeStream site " +
+    "(Incremental.foldBatches)") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val sites = files(root).flatMap { f =>
+      val lines = scala.util.Using.resource(
+        scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toVector)
+      lines.zipWithIndex.collect {
+        case (line, i) if line.contains(".writeStream") &&
+            !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
+          s"${f.getPath}:${i + 1}"
+      }
+    }
+    assert(sites.size == 1 && sites.head.contains("streaming/Incremental.scala:"),
+      s"writeStream call sites outside the combinator: $sites")
+  }
 }
