@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints exactly one JSON line. Failures are reported per-query in an
@@ -29,7 +28,9 @@ import org.apache.spark.sql.SparkSession
   *     polluted) and `load1_max`; the full per-run wall/cpu/load matrix
   *     is written to BENCH_DETAIL.json (env SPARK_GRAFT_BENCH_DETAIL)
   *     because the driver records only the final ~2000 chars of stdout
-  *     and 144 queries × 3 runs × 3 metrics cannot fit that window.
+  *     and 144 queries × 3 runs × 3 metrics cannot fit that window. Each
+  *     run also records the cold-JVM terms: JIT compilation ms and the
+  *     generated classes Janino compiled (`jit_ms`, `codegen_compiles`).
   *  4. Two signals for the case the above are BLIND to — every pass of a
   *     query inflated together, wall AND cpu (memory-bandwidth/SMT
   *     contention; r18: the graph family ran 2× slow in all three driver
@@ -127,10 +128,16 @@ object Bench {
       "q97_ann_production", "q98_semantic_dedup", "q99_split_leakage")
 
   /** One timed execution: wall seconds, process-CPU seconds consumed by
-    * this JVM during the run, 1-min loadavg sampled at run START, error.
+    * this JVM during the run, 1-min loadavg sampled at run START, error;
+    * then the JVM's JIT compilation ms during the run (C2 compiling the
+    * generated loops — until compiled they run interpreted at 10–30× the
+    * CPU) and the generated classes Janino compiled during the run
+    * (separates "same code, still JIT-warming" from "AQE planned
+    * different code than the warmup").
     */
   final case class Run(wall: Double, cpu: Double, load: Double,
-                       err: Option[String])
+                       err: Option[String], jitMs: Long = 0L,
+                       codegenCompiles: Long = 0L)
 
   /** The replacement-pass decision (VERDICT r19 #3), pure so the spec
     * can pin it without racing wall clocks: pass `passIdx` (bracketed by
@@ -162,7 +169,24 @@ object Bench {
     }
   }
 
-  private val osBean = java.lang.management.ManagementFactory
+  /** Where the per-run detail matrix is written. A full-registry run
+    * writes the committed file (or the SPARK_GRAFT_BENCH_DETAIL override);
+    * a subset run writes only to an explicit override — a dev A/B must
+    * not replace the full record the next full run reads for
+    * `cpu_vs_prev`.
+    */
+  private[graft] def detailTarget(subset: Boolean,
+                                  explicit: Option[String]): Option[String] =
+    if (subset) explicit else Some(explicit.getOrElse("BENCH_DETAIL.json"))
+
+  private[graft] def jstr(s: String) = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  } + "\""
+
+  private[graft] def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+
+  private[graft] val osBean = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
@@ -235,19 +259,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Optional subset (dev A/Bs: `runMain graft.Bench q105_… q109_…`);
     // the driver invokes with no args → full registry, contract unchanged.
-    // Unknown names fail loudly (the Verify convention).
+    // Unknown names fail loudly, before a session starts (the Verify
+    // convention).
+    val only = args.toSet
+    val unknownQ = only -- SparkEntry.queries.keySet
+    require(unknownQ.isEmpty, s"unknown queries: ${unknownQ.mkString(", ")}")
+    val spark = GraftSession.local(cpus)
     // calibrate before Spark spins up (and once again at the end): the
     // before/after pair also bounds whether host conditions MOVED during
     // the bench itself
     val calibBefore = calibMs()
-    val only = args.toSet
-    val unknownQ = only -- SparkEntry.queries.keySet
-    require(unknownQ.isEmpty, s"unknown queries: ${unknownQ.mkString(", ")}")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
     // JIT/codegen warmup at the smallest scale factor so timings reflect
@@ -315,9 +338,14 @@ object Bench {
       calibPassSt += calibOnceMs()
       calibPassMt += calibMtOnceMs(mtThreads)
     }
+    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
+    def codegenCompiles(): Long = org.apache.spark.metrics.source
+      .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def runOnce(name: String): Run = {
       val fn = SparkEntry.queries(name)
       val ld = load1()
+      val jit0 = jitBean.getTotalCompilationTime
+      val gen0 = codegenCompiles()
       val cpu0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val outcome =
@@ -325,9 +353,11 @@ object Bench {
         catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (osBean.getProcessCpuTime - cpu0) / 1e9
+      val run = Run(wall, cpu, ld, outcome,
+        jitBean.getTotalCompilationTime - jit0, codegenCompiles() - gen0)
       driftCheck(name) // record + heal any conf leak before the next query
       Caches.clearAll(spark) // persists + localCheckpoints; don't let them creep
-      Run(wall, cpu, ld, outcome)
+      run
     }
     // brackets sit exactly at pass BOUNDARIES (pass i is bracketed by
     // readings i and i+1), so a pass's validity is decidable the moment
@@ -408,10 +438,10 @@ object Bench {
         medianWall(rs) > 1.5 * best.wall
     }.map(_._1).toSet
     // prior-round per-query best_cpu, read from the committed detail file
-    // BEFORE this run overwrites it (env override for A/Bs)
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "BENCH_DETAIL.json")
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", detailPath)
+    // BEFORE a full run overwrites it (env override for A/Bs)
+    val detailEnv = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
+    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
+      detailEnv.getOrElse("BENCH_DETAIL.json"))
     val (prevSf, prevCpu): (String, Map[String, Double]) =
       try {
         val f = new java.io.File(prevPath)
@@ -440,25 +470,23 @@ object Bench {
       best.err.isEmpty && best.wall > 0.5 &&
         cpuVsPrev(name, best).exists(_ > 1.5)
     }.map(_._1).toSet
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
     val ok = results.filter(_._2.err.isEmpty)
-    val errs = results.collect { case (k, Run(_, _, _, Some(e)), _, _) =>
+    val errs = results.collect { case (k, Run(_, _, _, Some(e), _, _), _, _) =>
       s"${jstr(k)}:${jstr(e.take(200))}" }.mkString("{", ",", "}")
     val total = ok.map(_._2.wall).sum
     // Full per-run attribution matrix → a FILE (the driver's stdout tail
     // is ~2000 chars; this doesn't fit). One object per query: all runs'
-    // wall/cpu/load plus which run won, the dispersion flag, and the
-    // cross-round cpu ratio (absent when no same-sf prior detail exists).
+    // wall/cpu/load/jit_ms/codegen_compiles plus which run won, the
+    // dispersion flag, and the cross-round cpu ratio (absent when no
+    // same-sf prior detail exists).
     val detail = results.map { case (k, best, rs, bestIdx) =>
       def arr(f: Run => Double) = rs.map(r => r3(f(r))).mkString("[", ",", "]")
+      def counts(f: Run => Long) = rs.map(f).mkString("[", ",", "]")
       val cvp = cpuVsPrev(k, best)
         .map(r => s""","cpu_vs_prev":${r3(r)}""").getOrElse("")
       s"${jstr(k)}:{" +
         s""""wall":${arr(_.wall)},"cpu":${arr(_.cpu)},"load":${arr(_.load)},""" +
+        s""""jit_ms":${counts(_.jitMs)},"codegen_compiles":${counts(_.codegenCompiles)},""" +
         s""""best_wall":${r3(best.wall)},"best_cpu":${r3(best.cpu)},""" +
         s""""best_pass":$bestIdx,""" +
         s""""best_pass_valid":${passValid.lift(bestIdx).getOrElse(true)},""" +
@@ -472,7 +500,7 @@ object Bench {
     def jmap(m: scala.collection.Map[String, String]): String =
       m.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     def jarr(xs: Seq[Double]): String = xs.map(r3).mkString("[", ",", "]")
-    try {
+    for (detailPath <- detailTarget(only.nonEmpty, detailEnv)) try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
       try w.println(s"""{"sf":${jstr(sfDir)},"passes":$passes,""" +
         s""""base_passes":$basePasses,""" +

@@ -23,7 +23,7 @@ import graft.sources.Tables
   *    buckets, same intra-replica neighbor structure).
   *
   * Results are recorded in SCALE.md. Dev tool — not part of the driver
-  * contract.
+  * contract; run with `graft.Probe scale [section…]`.
   */
 object ScaleProbe {
 
@@ -64,34 +64,33 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local()
-    spark.sparkContext.setLogLevel("WARN")
-    val d = "/root/testdata/sf0.1"
-    // Optional section filter: `runMain graft.ScaleProbe session termstats`
-    // runs only those blocks (default: all). Unknown names fail loudly — a
-    // typo must not silently measure nothing.
-    val sections = Set("session", "termstats", "minhash", "ann", "temporal",
-      "packing", "relational", "topk", "kmeans", "sinks", "pq", "sketch",
-      "prune", "sinkbig", "pqtrain", "spandedup", "jsonlines", "tiered", "bpe",
-      "dsir", "spancorrupt", "substr", "lshskew", "ccdiam", "imagededup",
-      "videodedup", "bucketreg", "audioprep", "gramreg", "kfnovel", "prdist",
-      "codecprep", "bwdist",
-      "ccinc", "funnel", "prep", "monitor", "bm25reg", "splitreg",
-      "retrieval", "kcore", "cooccur", "walks", "wl", "ranks", "curreg",
-      "nostraddle", "curseg", "zipf", "zipfm", "zipfreg", "zipfserve",
-      "zipfbucket", "zipfretain", "impinc", "prckpt", "prunedcost",
-      "segcompact")
-    val unknown = args.toSet -- sections
-    require(unknown.isEmpty,
-      s"unknown ScaleProbe section(s) ${unknown.mkString(", ")}; " +
-        s"valid: ${sections.toSeq.sorted.mkString(", ")}")
-    val want: String => Boolean =
-      if (args.isEmpty) _ => true else args.toSet.contains _
+  /** Every section `run` knows (`graft.Probe scale [section…]`). */
+  val sections: Seq[String] = Seq("session", "termstats", "minhash", "ann",
+    "temporal", "packing", "relational", "topk", "kmeans", "sinks", "pq",
+    "sketch", "prune", "sinkbig", "pqtrain", "spandedup", "jsonlines",
+    "tiered", "bpe", "dsir", "spancorrupt", "substr", "lshskew", "ccdiam",
+    "imagededup", "videodedup", "bucketreg", "audioprep", "gramreg",
+    "kfnovel", "prdist", "codecprep", "bwdist", "ccinc", "funnel", "prep",
+    "monitor", "bm25reg", "splitreg", "retrieval", "kcore", "cooccur",
+    "walks", "wl", "ranks", "curreg", "nostraddle", "curseg", "zipf",
+    "zipfm", "zipfreg", "zipfserve", "zipfbucket", "zipfretain", "impinc",
+    "prunedcost", "segcompact")
+
+  /** Runs the sections named in `only` (in source order) over the corpora
+    * at `d`; every timed measurement prints one JSON row.
+    */
+  def run(spark: SparkSession, d: String, only: Set[String]): Unit = {
+    // the section a measurement belongs to: set as its block starts
+    var section = ""
+    val want: String => Boolean = s => { if (only(s)) section = s; only(s) }
     def time(name: String)(f: => Long): Unit = {
+      val cpu0 = Bench.osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val n = f
-      println(f"[scale] $name -> $n rows, ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(s"""{"probe":"scale","section":${Bench.jstr(section)},""" +
+        s""""name":${Bench.jstr(name)},"rows":$n,""" +
+        s""""wall_s":${Bench.r3((System.nanoTime() - t0) / 1e9)},""" +
+        s""""cpu_s":${Bench.r3((Bench.osBean.getProcessCpuTime - cpu0) / 1e9)}}""")
     }
     def materialize(df: DataFrame, path: String): DataFrame = {
       df.write.mode("overwrite").parquet(path)
@@ -2393,32 +2392,6 @@ object ScaleProbe {
       } finally query.stop()
       spark.catalog.clearCache()
     }
-    // q147 checkpoint-cadence sweep (r17): pagerankDistributed exposes
-    // checkpointEvery (lineage depth k — un-checkpointed rounds' triple
-    // read is deduped by ReuseExchange within the one checkpoint action)
-    // but the registered query has always run the default 1. q147 burns
-    // 73 CPU-s for 30 rounds over ~100k-row frames — if a chunk of that
-    // is per-round checkpoint serialization, a deeper cadence buys it
-    // back with zero numeric change (localCheckpoint affects lineage
-    // only; the oracle hash is the guard).
-    if (want("prckpt")) {
-      val ed = graft.queries.Graphs.edges(spark, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ed.count()
-      // k capped at 3: each un-checkpointed round's frame is read three
-      // times (dang, contrib, next-join) and under AQE-off the reuse that
-      // bridges them only fires within ONE action — lineage recompute
-      // grows ~3^k, and the first k=5/10 sweep ran >20 min before being
-      // killed (that blowup IS the finding; see SCALE.md prckpt).
-      for (k <- Seq(1, 2, 3); pass <- 1 to 2) {
-        time(s"prckpt pagerankDistributed checkpointEvery=$k pass$pass") {
-          graft.operators.GraphMetrics.pagerankDistributed(
-            ed, checkpointEvery = k).count()
-        }
-        graft.Caches.clearAll(spark)
-      }
-      ed.unpersist(); ()
-    }
     // Segmented vs monolithic curriculum WRITE cost (the r16 layout):
     // one streaming step at watermark 0.9 over a factor×100k standing
     // registry. The monolithic form snapshot-swaps the whole registry
@@ -2536,6 +2509,5 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    spark.stop()
   }
 }

@@ -277,10 +277,7 @@ object GraphMetrics {
     * spec-pinned, and the q33 oracle passes unchanged (q147).
     */
   def pagerankDistributed(edges: DataFrame, minEdges: Int = 0,
-                          iterations: Int = Iterations,
-                          checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+                          iterations: Int = Iterations): DataFrame = {
     val e0 = edges.select(col("city").cast("string"), col("src"),
       col("dst"), col("w").cast("long"))
     // the reference's MIN_CITY_SIZE gate: compare EDGE-ROW count (the
@@ -333,8 +330,7 @@ object GraphMetrics {
         var x = base.select(col("city"), col("node"), col("outw"), col("n"),
             (lit(1.0) / col("n")).as("x"))
           .localCheckpoint(true)
-        var lastCkpt = x
-        for (i <- 0 until iterations) {
+        for (_ <- 0 until iterations) {
           // NOTE (r15 A/B): folding the dangling mass into the contrib
           // exchange as marker-keyed rows read by both a broadcast-dang
           // branch and the contrib branch DEADLOCKS with AQE off — the
@@ -356,18 +352,12 @@ object GraphMetrics {
               (lit(0.15) / col("n") + lit(0.85) *
                 (coalesce(col("contrib"), lit(0.0)) +
                   coalesce(col("dang"), lit(0.0)) / col("n"))).as("x"))
-          // checkpoint cadence: every round (depth 1, the q120 default)
-          // or every k-th (lineage depth k; the un-checkpointed rounds'
-          // triple read — dang, contrib, next-join — is deduped by
-          // ReuseExchange within the one checkpoint action)
-          if (i % checkpointEvery == checkpointEvery - 1 ||
-              i == iterations - 1) {
-            x = next.localCheckpoint(true)
-            lastCkpt.unpersist()
-            lastCkpt = x
-          } else {
-            x = next
-          }
+          // eager checkpoint every round: each round's frame is read
+          // three times (dang, contrib, next-join), so a deeper lineage
+          // recomputes ~3^depth (SCALE.md's r17 prckpt negative result)
+          val prev = x
+          x = next.localCheckpoint(true)
+          prev.unpersist()
         }
         val mean = x.groupBy(col("city"))
           .agg((sum(col("x")) / count(lit(1))).as("mean"))

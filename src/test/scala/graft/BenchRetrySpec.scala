@@ -73,4 +73,14 @@ class BenchRetrySpec extends AnyFunSuite {
     // all erred: nothing to confirm
     assert(!Bench.needsRetry(Seq(r(2.0, Some("boom")))))
   }
+
+  test("detailTarget: a subset run writes the detail matrix only to an " +
+    "explicit SPARK_GRAFT_BENCH_DETAIL; a full run writes the committed file") {
+    // a dev A/B over a few queries must leave the full-registry record
+    // (the next full run's cpu_vs_prev baseline) in place
+    assert(Bench.detailTarget(subset = true, None).isEmpty)
+    assert(Bench.detailTarget(subset = true, Some("ab.json")).contains("ab.json"))
+    assert(Bench.detailTarget(subset = false, None).contains("BENCH_DETAIL.json"))
+    assert(Bench.detailTarget(subset = false, Some("ab.json")).contains("ab.json"))
+  }
 }
