@@ -179,6 +179,14 @@ object Bench {
                                   explicit: Option[String]): Option[String] =
     if (subset) explicit else Some(explicit.getOrElse("BENCH_DETAIL.json"))
 
+  /** Where `cpu_vs_prev` reads its baseline: SPARK_GRAFT_BENCH_PREV, else
+    * the committed BENCH_DETAIL.json — never the SPARK_GRAFT_BENCH_DETAIL
+    * override, which names this run's output (usually a new file, so an
+    * A/B written aside would have no baseline at all).
+    */
+  private[graft] def prevTarget(explicit: Option[String]): String =
+    explicit.getOrElse("BENCH_DETAIL.json")
+
   private[graft] def jstr(s: String) = "\"" + s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
@@ -440,8 +448,7 @@ object Bench {
     // prior-round per-query best_cpu, read from the committed detail file
     // BEFORE a full run overwrites it (env override for A/Bs)
     val detailEnv = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-      detailEnv.getOrElse("BENCH_DETAIL.json"))
+    val prevPath = prevTarget(sys.env.get("SPARK_GRAFT_BENCH_PREV"))
     val (prevSf, prevCpu): (String, Map[String, Double]) =
       try {
         val f = new java.io.File(prevPath)

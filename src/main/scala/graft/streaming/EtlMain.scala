@@ -12,7 +12,8 @@ import graft.streaming.Incremental._
   * Usage: runMain graft.streaming.EtlMain [sfDir] [workDir] [epochs]
   * Each epoch re-reads the current height, syncs `[mark, height)` in
   * chunks into content-keyed parquet sinks, refreshes snapshots, advances
-  * the mark, and prints a report line.
+  * the mark, and prints a report line with each collection's wall ms
+  * (`collection_ms=payments:…,balances:…`).
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {
@@ -46,8 +47,9 @@ object EtlMain {
       val r = driver.runEpoch()
       val rows =
         if (r.ran) spark.read.parquet(s"$work/sink/payments").count() else -1L
+      val ms = r.collectionMs.map { case (n, t) => s"$n:$t" }.mkString(",")
       println(s"[etl] epoch=$i ran=${r.ran} from=${r.from} to=${r.to} " +
-        s"chunks=${r.chunks} payments_rows=$rows")
+        s"chunks=${r.chunks} payments_rows=$rows collection_ms=$ms")
     }
     println(s"[etl] work dir: $work")
     spark.stop()

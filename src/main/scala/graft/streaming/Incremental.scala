@@ -115,7 +115,14 @@ object Incremental {
   case class SnapshotCollection(name: String, build: SparkSession => DataFrame,
                                 key: String, tiebreak: String)
 
-  case class EpochReport(ran: Boolean, from: Long, to: Long, chunks: Int)
+  /** What one [[Driver.runEpoch]] did. `collectionMs` is each
+    * collection's own wall in ms, dynamics then snapshots in declaration
+    * order: a dynamic's covers its whole chunk chain and fold. The slowest
+    * dynamic plus the slowest snapshot is the epoch's critical path. Empty
+    * when the epoch gated out.
+    */
+  case class EpochReport(ran: Boolean, from: Long, to: Long, chunks: Int,
+                         collectionMs: Map[String, Long] = Map.empty)
 
   /** The one maintainer loop: every streaming maintainer in this file is
     * a per-micro-batch `fold(spark, batch, batchId)` started through
@@ -1261,6 +1268,25 @@ object Incremental {
     * monotonically increasing `heightCol`; `currentHeight` is re-read per
     * epoch.
     *
+    * An epoch runs in two phases around one barrier:
+    *  1. dynamics: one chain per [[DynamicCollection]] walks the epoch's
+    *     chunks in height order into its sink, then folds it if it is a
+    *     delta log. The chains run concurrently.
+    *  2. snapshots: once every chain has finished, the
+    *     [[SnapshotCollection]] refreshes run concurrently. The barrier
+    *     stays because a snapshot may read a dynamic sink.
+    * The mark advances only after both phases committed. Each sink path
+    * has exactly one writer, its own chain, which keeps the single-writer
+    * contract of [[Merge.healSwap]], the swaps and the delta numbering —
+    * so collection names must be unique. A failed phase rethrows only
+    * once all of its tasks have stopped, so no writer outlives the failed
+    * epoch; the re-run replays it idempotently (T6).
+    *
+    * Threads: `source`, every `extract` and every snapshot `build` run on
+    * worker threads, never on the caller's, and concurrently with one
+    * another within a phase. They must not share unsynchronised state.
+    * Each worker inherits the caller's Spark local properties.
+    *
     * Scale note: each chunk is one bounded filter over the source (at
     * production scale a partition-pruned scan: height/time IS the partition
     * key, X1) feeding keyed-upsert sinks — the driver holds no data, only
@@ -1271,6 +1297,12 @@ object Incremental {
                      chunkSize: Long, minDiff: Long,
                      dynamics: Seq[DynamicCollection],
                      snapshots: Seq[SnapshotCollection]) {
+
+    private val names = dynamics.map(_.name) ++ snapshots.map(_.name)
+    require(names.distinct.size == names.size,
+      "Driver: duplicate collection name(s) " +
+        names.diff(names.distinct).distinct.mkString(", ") +
+        " — each sink path takes exactly one writer")
 
     val checkpoint = new Checkpoint(spark, stateDir)
 
@@ -1308,9 +1340,9 @@ object Incremental {
       // A crashed epoch leaves orphan deltas + an unadvanced checkpoint;
       // the re-run re-appends the same chunks and the fold resolves the
       // duplicates identically (T6 idempotence, unchanged).
-      ranges.foreach { case (lo, hi) =>
-        val chunk = source().filter(col(heightCol) >= lo && col(heightCol) < hi)
-        dynamics.foreach { d =>
+      val dynMs = concurrently(dynamics.map { d => () =>
+        ranges.foreach { case (lo, hi) =>
+          val chunk = source().filter(col(heightCol) >= lo && col(heightCol) < hi)
           d.heightBucket match {
             case Some(width) =>
               // steady-state path: the chunk rewrites ONLY its own height
@@ -1322,18 +1354,52 @@ object Incremental {
               Merge.appendDelta(spark, sinkPath(d.name), d.extract(chunk))
           }
         }
-      }
-      dynamics.filter(_.heightBucket.isEmpty).foreach { d =>
-        Merge.finalizeDeltas(spark, sinkPath(d.name), d.key, Merge.Ignore,
-          d.tiebreak)
-      }
-      snapshots.foreach { s =>
+        if (d.heightBucket.isEmpty)
+          Merge.finalizeDeltas(spark, sinkPath(d.name), d.key, Merge.Ignore,
+            d.tiebreak)
+      })
+      val snapMs = concurrently(snapshots.map { s => () =>
         Merge.upsertParquet(spark, sinkPath(s.name), s.build(spark),
           s.key, Merge.Update, s.tiebreak) // full refresh: incoming wins
-      }
+      })
       checkpoint.write(cur)
-      EpochReport(ran = true, from, cur, ranges.size)
+      EpochReport(ran = true, from, cur, ranges.size,
+        scala.collection.immutable.ListMap(names.zip(dynMs ++ snapMs): _*))
     }
+
+    /** Runs `tasks` at once and returns each one's wall ms, in order. The
+      * pool is made per call with `min(tasks, defaultParallelism)`
+      * threads, so its threads inherit the caller's Spark local
+      * properties (job group, scheduler pool, trace tags). Every task
+      * finishes before the first failure (in task order) is rethrown,
+      * carrying the others as suppressed.
+      */
+    private def concurrently(tasks: Seq[() => Unit]): Seq[Long] =
+      if (tasks.isEmpty) Nil // a pool of zero threads is refused
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(tasks.size, spark.sparkContext.defaultParallelism))
+        try {
+          val outcomes = tasks.toVector
+            .map(t => pool.submit(new java.util.concurrent.Callable[Long] {
+              def call(): Long = {
+                val t0 = System.nanoTime()
+                t()
+                (System.nanoTime() - t0) / 1000000L
+              }
+            }))
+            .map(f => scala.util.Try(f.get()).recoverWith {
+              case e: java.util.concurrent.ExecutionException =>
+                scala.util.Failure(e.getCause)
+            })
+          outcomes.collect { case scala.util.Failure(e) => e } match {
+            case first +: rest =>
+              rest.foreach(first.addSuppressed)
+              throw first
+            case _ => outcomes.map(_.get)
+          }
+        } finally pool.shutdown()
+      }
   }
 
   /** Streaming curriculum (the q188 registry fold driven by a stream):

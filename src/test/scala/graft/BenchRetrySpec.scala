@@ -83,4 +83,12 @@ class BenchRetrySpec extends AnyFunSuite {
     assert(Bench.detailTarget(subset = false, None).contains("BENCH_DETAIL.json"))
     assert(Bench.detailTarget(subset = false, Some("ab.json")).contains("ab.json"))
   }
+
+  test("prevTarget: cpu_vs_prev reads the committed BENCH_DETAIL.json unless " +
+    "SPARK_GRAFT_BENCH_PREV names another file") {
+    // the baseline does not follow SPARK_GRAFT_BENCH_DETAIL: that names
+    // this run's output, so an A/B written aside still has a baseline
+    assert(Bench.prevTarget(None) == "BENCH_DETAIL.json")
+    assert(Bench.prevTarget(Some("prev.json")) == "prev.json")
+  }
 }
