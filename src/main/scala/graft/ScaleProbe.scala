@@ -778,9 +778,8 @@ object ScaleProbe {
     // real-corpus hot key: a shared footer). Both forms compute the full
     // rebuild and are equality-checked at 1x. This measurement is WHY the
     // operator ships the window form.
-    // Columnar vs row read path of the jsonlines DSv2 connector, full
-    // scan and pruned+filtered. Alternating reps (the spandedup/q32
-    // lesson): rep 1 pays page-cache warmup for both forms, read rep 2.
+    // The jsonlines DSv2 connector's (columnar) read path, full scan and
+    // pruned+filtered. Two reps: rep 1 pays page-cache warmup, read rep 2.
     if (want("jsonlines")) for (factor <- Seq(1, 4, 16)) {
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val dir = s"/tmp/scale/jsonl$factor"
@@ -790,37 +789,19 @@ object ScaleProbe {
         .write.format("jsonlines").mode("overwrite").save(dir)
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType), StructField("n_chars", LongType)))
-      def rd(columnar: Boolean) =
-        spark.read.format("jsonlines").option("columnar", columnar.toString)
-          .schema(schema).load(dir)
-      def full(columnar: Boolean): Long =
-        rd(columnar).agg(sum(length(col("text"))) + sum(col("n_chars")))
-          .head().getLong(0)
-      def pruned(columnar: Boolean): Long =
-        rd(columnar).filter(col("doc_id") % 7 === 0)
-          .agg(sum(col("n_chars"))).head().getLong(0)
-      var cFull = -1L; var rFull = -2L; var cPr = -1L; var rPr = -2L
+      val rd = spark.read.format("jsonlines").schema(schema).load(dir)
       for (rep <- 1 to 2) {
-        time(s"jsonlines full scan COLUMNAR ${factor}x rep$rep") {
-          cFull = full(columnar = true); cFull
+        time(s"jsonlines full scan ${factor}x rep$rep") {
+          rd.agg(sum(length(col("text"))) + sum(col("n_chars")))
+            .head().getLong(0)
         }
-        time(s"jsonlines full scan row ${factor}x rep$rep") {
-          rFull = full(columnar = false); rFull
-        }
-        time(s"jsonlines pruned+filtered COLUMNAR ${factor}x rep$rep") {
-          cPr = pruned(columnar = true); cPr
-        }
-        time(s"jsonlines pruned+filtered row ${factor}x rep$rep") {
-          rPr = pruned(columnar = false); rPr
+        time(s"jsonlines pruned+filtered ${factor}x rep$rep") {
+          rd.filter(col("doc_id") % 7 === 0)
+            .agg(sum(col("n_chars"))).head().getLong(0)
         }
       }
-      require(cFull == rFull,
-        s"jsonlines columnar/row scans disagree at ${factor}x: $cFull vs $rFull")
-      require(cPr == rPr,
-        s"jsonlines columnar/row pruned scans disagree at ${factor}x: $cPr vs $rPr")
     }
-    // NARROW rows: per-row costs (parse + dispatch) dominate over bytes —
-    // the shape where a vectorized reader separates from a row reader.
+    // NARROW rows: per-row costs (parse + dispatch) dominate over bytes.
     if (want("jsonlines")) {
       import org.apache.spark.sql.types.{LongType, BooleanType, DoubleType, StructField, StructType}
       val dir = "/tmp/scale/jsonl_narrow"
@@ -830,17 +811,12 @@ object ScaleProbe {
         .write.format("jsonlines").mode("overwrite").save(dir)
       val schema = StructType(Seq(StructField("id", LongType),
         StructField("ok", BooleanType), StructField("score", DoubleType)))
-      def narrow(columnar: Boolean): Long =
-        spark.read.format("jsonlines").option("columnar", columnar.toString)
-          .schema(schema).load(dir)
-          .agg(sum(when(col("ok"), col("id")).otherwise(0L))
-            + sum(col("score")).cast("long")).head().getLong(0)
-      var c = -1L; var r = -2L
-      for (rep <- 1 to 2) {
-        time(s"jsonlines narrow 4M COLUMNAR rep$rep") { c = narrow(true); c }
-        time(s"jsonlines narrow 4M row rep$rep") { r = narrow(false); r }
-      }
-      require(c == r, s"jsonlines narrow scans disagree: $c vs $r")
+      for (rep <- 1 to 2)
+        time(s"jsonlines narrow 4M rep$rep") {
+          spark.read.format("jsonlines").schema(schema).load(dir)
+            .agg(sum(when(col("ok"), col("id")).otherwise(0L))
+              + sum(col("score")).cast("long")).head().getLong(0)
+        }
     }
 
     // Tiered sink (q108): the payoff claim is that READS of settled data

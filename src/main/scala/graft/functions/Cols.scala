@@ -23,14 +23,13 @@ object Cols {
     * local[32], wrong on a 1000-executor graph). ~64k rows per partition,
     * clamped to [1, defaultParallelism].
     */
-  def loopParts(df: DataFrame, rows: Long,
-                rowsPerPartition: Long = 64000L): Int =
+  def loopParts(df: DataFrame, rows: Long): Int =
     // clamp in Long BEFORE narrowing: (rows/rpp).toInt wraps negative past
     // ~1.4e14 rows and the clamp would then read "1 partition" on exactly
     // the web-scale frames this rule exists for (r16 advice)
     math.max(1L, math.min(
       df.sparkSession.sparkContext.defaultParallelism.toLong,
-      rows / rowsPerPartition + 1L)).toInt
+      rows / 64000L + 1L)).toInt
 
   /** One scope entry: insertion id + the partition request (None = AQE-off
     * only, partitions untouched).

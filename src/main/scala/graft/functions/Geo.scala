@@ -67,13 +67,13 @@ object Geo {
 
   /** Foreign cell id → native [[IcosaGrid]] cell id: anchor the opaque id
     * through the [[cellToPseudoLatLng]] seam, then encode onto the real
-    * res-`res` icosahedral grid (codegen'd `icosa_encode`; null in → null
-    * out). The default res 6 gives ~50 km cells — the same scale the
-    * reference's res-8-truncated h3 cells cover per city.
+    * res-6 icosahedral grid (codegen'd `icosa_encode`; null in → null
+    * out). Res 6 gives ~50 km cells — the same scale the reference's
+    * res-8-truncated h3 cells cover per city.
     */
-  def cellToIcosa(cell: Column, res: Int = 6): Column = {
+  def cellToIcosa(cell: Column): Column = {
     val (lat, lng) = cellToPseudoLatLng(cell)
-    call_function("icosa_encode", lat, lng, lit(res))
+    call_function("icosa_encode", lat, lng, lit(6))
   }
 
   /** F3, the product decode: foreign cell id → REAL spherical coordinates
@@ -87,8 +87,8 @@ object Geo {
     * — at worst the row pays two 20-dot argmax encodes, still trivially
     * codegen'd scalar work).
     */
-  def cellToLatLng(cell: Column, res: Int = 6): (Column, Column) = {
-    val ic = cellToIcosa(cell, res)
+  def cellToLatLng(cell: Column): (Column, Column) = {
+    val ic = cellToIcosa(cell)
     (call_function("icosa_lat", ic), call_function("icosa_lng", ic))
   }
 }

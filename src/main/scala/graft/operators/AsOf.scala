@@ -150,13 +150,12 @@ object AsOf {
     * same single-shuffle plan, and the carried age already comes out as
     * `right.time − left.time ≥ 0` (the negation cancels in the
     * difference). Duplicate right (key, time) rows still resolve to the
-    * greatest `tiebreak`; `maxAge` bounds how far in the FUTURE a match
-    * may be. `carry` columns pass through unmodified (only the shared
-    * `time` column participates in the negation).
+    * greatest `tiebreak`; a match may lie any distance in the future.
+    * `carry` columns pass through unmodified (only the shared `time`
+    * column participates in the negation), prefixed `asof_`.
     */
   def forward(left: DataFrame, right: DataFrame, keys: Seq[String],
-              time: String, tiebreak: String, carry: Seq[String],
-              prefix: String = "asof_", maxAge: Option[Long] = None): DataFrame = {
+              time: String, tiebreak: String, carry: Seq[String]): DataFrame = {
     require(!carry.contains(time),
       s"carry must not include the shared time column '$time' (the negated twin is what the join runs on); alias it first")
     // Negate into a TEMP column so the caller's time column passes through
@@ -168,7 +167,7 @@ object AsOf {
     val negT = Iterator.from(0).map(i => s"__negt$i").find(!taken.contains(_)).get
     val ln = left.withColumn(negT, -col(time).cast("long"))
     val rn = right.withColumn(negT, -col(time).cast("long"))
-    backward(ln, rn, keys, negT, tiebreak, carry, prefix, maxAge)
+    backward(ln, rn, keys, negT, tiebreak, carry)
       .drop(negT)
   }
 }

@@ -96,7 +96,7 @@ object Chunk {
     * Returns (id, chunk_seq, n_tok, chunk_text, chunk_hash).
     */
   def contentDefined(df: DataFrame, id: String, text: String,
-                     divisor: Int, seed: Int = 7): DataFrame = {
+                     divisor: Int): DataFrame = {
     require(divisor >= 2, s"divisor must be >= 2, got $divisor")
     import org.apache.spark.sql.expressions.Window
     val toks: Column = Text.tokens(col(text))
@@ -108,7 +108,7 @@ object Chunk {
       .otherwise(concat(lag(col("__tok"), 1).over(w), lit(" "), col("__tok")))
     val marked = exploded
       .withColumn("__marker",
-        when(Text.hash32(gram, seed) % divisor === 0, 1L).otherwise(0L))
+        when(Text.hash32(gram, 7) % divisor === 0, 1L).otherwise(0L))
       .withColumn("__chunk_seq", lit(1L) + coalesce(
         sum(col("__marker")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
         lit(0L)))
@@ -142,8 +142,8 @@ object Chunk {
     * chunking subtree).
     */
   def cdcDedupAgainst(incoming: DataFrame, registry: DataFrame, id: String,
-                      text: String, divisor: Int, seed: Int = 7): DataFrame = {
-    val chunks = contentDefined(incoming, id, text, divisor, seed)
+                      text: String, divisor: Int): DataFrame = {
+    val chunks = contentDefined(incoming, id, text, divisor)
     val seen = registry.select(col("chunk_hash")).distinct()
       .withColumn("__seen", lit(true))
     chunks.join(seen, Seq("chunk_hash"), "left")

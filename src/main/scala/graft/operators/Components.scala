@@ -57,28 +57,19 @@ object Components {
     * @param localThreshold forwarded to [[TextDedup.dupClusters]] for the
     *                       contracted-graph CC (tests use 0 to force the
     *                       iterative path)
-    * @param batchDistinct  caller guarantees `batch` carries no duplicate
-    *                       (a,b) rows — skips the per-fold dedup shuffle.
-    *                       The endpoint lookup distincts regardless and
-    *                       both CC paths tolerate duplicate edges; the
-    *                       dedup keeps the contracted-pair count honest
-    *                       for the local-CC threshold AND doubles as AQE
-    *                       compaction of a many-partition tiny batch
-    *                       (q120 measured the skip 0.6 s SLOWER at sf0.1
-    *                       for exactly that reason — see its comment).
-    *                       Reach for this only when the batch is BIG and
-    *                       already deduplicated, where the extra shuffle
-    *                       is real data motion rather than partition
-    *                       grooming.
     * @return the updated registry — same schema, caller owns persistence
     */
   def updateRegistry(registry: DataFrame, batch: DataFrame, a: String,
-                     b: String, localThreshold: Long = 1000000L,
-                     batchDistinct: Boolean = false): DataFrame = {
+                     b: String, localThreshold: Long = 1000000L): DataFrame = {
     val reg = registry.select(col("node"), col("label"))
-    val e0 = batch.select(col(a).as("__ea"), col(b).as("__eb"))
+    // The batch is deduplicated even when the caller's is already
+    // distinct: the dedup keeps the contracted-pair count honest for the
+    // local-CC threshold AND doubles as AQE compaction of a
+    // many-partition tiny batch (q120 measured skipping it 0.6 s SLOWER
+    // at sf0.1).
+    val e = batch.select(col(a).as("__ea"), col(b).as("__eb"))
       .filter(col("__ea") =!= col("__eb"))
-    val e = if (batchDistinct) e0 else e0.distinct()
+      .distinct()
     // Current label of every batch endpoint (itself when unseen). The
     // lookup is batch-keyed: at scale the registry side is a bucketed
     // table and this is the q114 gram-registry join shape. Checkpointed

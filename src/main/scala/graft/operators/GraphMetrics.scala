@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * Spark shape is `groupByKey(city).flatMapGroups` running plain Scala per
   * group — ONE shuffle by city replaces the reference's process pool +
   * per-city AQL round trips (and fixes its chunking bug that silently
-  * skipped most cities, `src/arango_queries.py:196-199`). Distributed
-  * Pregel/GraphFrames only becomes necessary if a single group outgrows an
-  * executor — a documented seam, not a current need.
+  * skipped most cities, `src/arango_queries.py:196-199`). For a city that
+  * outgrows one executor, [[pagerankDistributed]], [[hitsDistributed]]
+  * and [[betweennessDistributed]] (plus its sampled form) run the same
+  * numerics over the edge DataFrame, hash-equal to the per-group forms.
   *
   * Numerics are engine-portable: PageRank runs a FIXED 30 iterations with
   * literal 0.85/0.15 damping (matching the oracle's generated SQL
@@ -40,8 +41,7 @@ object GraphMetrics {
     * uniformly), fixed iteration count for cross-engine determinism.
     * Returns node → score (sums to 1).
     */
-  def pagerank(edges: Seq[(String, String, Long)],
-               iterations: Int = Iterations): Map[String, Double] = {
+  def pagerank(edges: Seq[(String, String, Long)]): Map[String, Double] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted.toArray
     val idx = nodes.zipWithIndex.toMap
     val n = nodes.length
@@ -51,7 +51,7 @@ object GraphMetrics {
     val inEdges = edges.map { case (s, d, w) => (idx(d), idx(s), w) }
       .sortBy(e => (e._1, e._2)).toArray
     var x = Array.fill(n)(1.0 / n)
-    for (_ <- 0 until iterations) {
+    for (_ <- 0 until Iterations) {
       val dangling = (0 until n).collect { case i if outW(i) == 0 => x(i) }.sum
       val contrib = new Array[Double](n)
       inEdges.foreach { case (d, s, w) => contrib(d) += x(s) * w / outW(s) }
@@ -200,8 +200,8 @@ object GraphMetrics {
     * weighted products overflow double range within ~15 iterations).
     * Returns (hub, authority), each summing to 1.
     */
-  def hits(edges: Seq[(String, String, Long)],
-           iterations: Int = Iterations): (Map[String, Double], Map[String, Double]) = {
+  def hits(edges: Seq[(String, String, Long)])
+      : (Map[String, Double], Map[String, Double]) = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted.toArray
     val idx = nodes.zipWithIndex.toMap
     val n = nodes.length
@@ -210,7 +210,7 @@ object GraphMetrics {
       .sortBy(e => (e._1, e._2)).toArray
     var h = Array.fill(n)(1.0 / n)
     var a = new Array[Double](n)
-    for (_ <- 0 until iterations) {
+    for (_ <- 0 until Iterations) {
       a = new Array[Double](n)
       es.foreach { case (s, d, w) => a(d) += h(s) * w }
       val hn = new Array[Double](n)
@@ -276,8 +276,7 @@ object GraphMetrics {
     * absorbs — hash-equality with the per-group form on every city is
     * spec-pinned, and the q33 oracle passes unchanged (q147).
     */
-  def pagerankDistributed(edges: DataFrame, minEdges: Int = 0,
-                          iterations: Int = Iterations): DataFrame = {
+  def pagerankDistributed(edges: DataFrame, minEdges: Int = 0): DataFrame = {
     val e0 = edges.select(col("city").cast("string"), col("src"),
       col("dst"), col("w").cast("long"))
     // the reference's MIN_CITY_SIZE gate: compare EDGE-ROW count (the
@@ -330,7 +329,7 @@ object GraphMetrics {
         var x = base.select(col("city"), col("node"), col("outw"), col("n"),
             (lit(1.0) / col("n")).as("x"))
           .localCheckpoint(true)
-        for (_ <- 0 until iterations) {
+        for (_ <- 0 until Iterations) {
           // NOTE (r15 A/B): folding the dangling mass into the contrib
           // exchange as marker-keyed rows read by both a broadcast-dang
           // branch and the contrib branch DEADLOCKS with AQE off — the
@@ -427,7 +426,7 @@ object GraphMetrics {
     * `groupByKey(city)` aggregation — per-task heap is ONE city's
     * graph, the same bound the per-group twin already accepts; (2)
     * each CSR row fans itself out into source-range slices
-    * (≤ `sourcesPerSlice` sources each, slice count per city capped at
+    * (≤ 256 sources each, slice count per city capped at
     * `defaultParallelism` so blob replication stays bounded), which a
     * round-robin repartition spreads across the cluster — a
     * plain city-keyed join would hash every slice of a mega-city onto
@@ -448,9 +447,8 @@ object GraphMetrics {
     * the same machinery on a deterministic source subset — is the
     * standard escape.
     */
-  def betweennessDistributed(edges: DataFrame, minEdges: Int = 0,
-                             sourcesPerSlice: Int = 256): DataFrame =
-    brandesDistributed(edges, minEdges, sourcesPerSlice, sampleNibbleMax = 16)
+  def betweennessDistributed(edges: DataFrame, minEdges: Int = 0): DataFrame =
+    brandesDistributed(edges, minEdges, sampleNibbleMax = 16)
 
   /** First hex nibble of md5(node-name): the deterministic source-sample
     * selector shared bit-for-bit with the DuckDB oracle's
@@ -476,16 +474,15 @@ object GraphMetrics {
     * hash-checkable, not a tolerance test. Cost: |S|/n of the exact
     * form's source passes; at 100× run this, not the exact form.
     */
-  def betweennessSampled(edges: DataFrame, minEdges: Int = 0,
-                         sourcesPerSlice: Int = 256,
-                         nibbleMax: Int = 4): DataFrame = {
+  def betweennessSampled(edges: DataFrame, nibbleMax: Int = 4): DataFrame = {
     require(nibbleMax >= 1 && nibbleMax <= 16,
       s"nibbleMax must be in [1,16], got $nibbleMax")
-    brandesDistributed(edges, minEdges, sourcesPerSlice, nibbleMax)
+    brandesDistributed(edges, minEdges = 0, nibbleMax)
   }
 
+  private val SourcesPerSlice = 256
+
   private def brandesDistributed(edges: DataFrame, minEdges: Int,
-                                 sourcesPerSlice: Int,
                                  sampleNibbleMax: Int): DataFrame = {
     val session = edges.sparkSession
     // no session.implicits._ here: it would ambiguate the object-level
@@ -528,7 +525,7 @@ object GraphMetrics {
       val src = sampledSources(g)
       val sn = src.length
       val nSlices = math.max(1, math.min(sliceCap,
-        (sn + sourcesPerSlice - 1) / math.max(1, sourcesPerSlice)))
+        (sn + SourcesPerSlice - 1) / SourcesPerSlice))
       (0 until nSlices).iterator.map { i =>
         src.slice((sn.toLong * i / nSlices).toInt,
           (sn.toLong * (i + 1) / nSlices).toInt)
@@ -638,11 +635,7 @@ object GraphMetrics {
     * documented in COVERAGE.md). Use it when one city's edge list
     * outgrows an executor — per-task heap is O(edges/partition).
     */
-  def hitsDistributed(edges: DataFrame, minEdges: Int = 0,
-                      iterations: Int = Iterations): DataFrame = {
-    // a itself is only assigned inside the loop; 0 iterations would NPE
-    // at the final normalization instead of failing loudly
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+  def hitsDistributed(edges: DataFrame, minEdges: Int = 0): DataFrame = {
     val e0 = edges.select(col("city").cast("string"), col("src"),
       col("dst"), col("w").cast("long"))
     val gated = e0.groupBy(col("city"))
@@ -675,7 +668,7 @@ object GraphMetrics {
             (lit(1.0) / col("n")).as("h"))
           .localCheckpoint(true)
         var a: DataFrame = null
-        for (_ <- 0 until iterations) {
+        for (_ <- 0 until Iterations) {
           // a = Aᵀh (RAW, the local trajectory): per dst, Σ h(src)·w
           val aNext = eBySrc
             .join(h.select(col("city"), col("node").as("src"), col("h")),

@@ -294,23 +294,21 @@ object Multimodal {
   }
 
   /** Per-frame 56-bit dHash over a P6-stream binary column — the video
-    * member of the perceptual-fingerprint family: every `stride`-th
-    * frame hashed by the SAME [[dHash56]] the image path uses, emitted
+    * member of the perceptual-fingerprint family: every frame hashed by
+    * the SAME [[dHash56]] the image path uses, emitted
     * as (id, frame, dhash). Downstream near-dup is the one hamming
     * pairing machine ([[graft.operators.TextDedup.hammingPairs]]),
     * frame-aligned by the caller (q138 packs (id, frame) into the
     * pairing key and rolls matched frames up per video pair).
     */
   def videoDHash(spark: SparkSession, df: DataFrame, idCol: String,
-                 binCol: String, stride: Int = 1): DataFrame = {
-    require(stride >= 1, s"stride must be >= 1, got $stride")
+                 binCol: String): DataFrame = {
     implicit val enc: Encoder[(Long, Int, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong)
     df.select(col(idCol).cast("long"), col(binCol))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) =>
         P6Stream.frames(bytes)
-          .filter(_.index % stride == 0)
           .map(f => (id, f.index, dHash56(bytes, f.payload, f.w, f.h)))
       }
       .toDF("id", "frame", "dhash")

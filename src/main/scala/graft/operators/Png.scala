@@ -256,10 +256,10 @@ object Png {
     * BTYPE=00, LEN/NLEN little-endian, raw bytes; RFC 1950 zlib header
     * + Adler-32 trailer). Exists so the DECODER's independence from the
     * encoder's compressor is provable: a stream no JDK Deflater ever
-    * produced must decode to the same pixels (PngSpec pins it).
+    * produced must decode to the same pixels (PngSpec pins it). Row y
+    * uses filter type y % 5, so every filter type is exercised.
     */
-  def encodeStored(w: Int, h: Int, pixels: Array[Byte],
-                   filterOfRow: Int => Int = _ % 5): Array[Byte] = {
+  def encodeStored(w: Int, h: Int, pixels: Array[Byte]): Array[Byte] = {
     // reuse encode's filtering by re-deriving the raw scanlines: encode
     // then re-filter would couple the paths; build raw directly instead
     val stride = 3 * w
@@ -268,7 +268,7 @@ object Png {
     val raw = new Array[Byte](h * (stride + 1))
     var y = 0
     while (y < h) {
-      val ft = filterOfRow(y)
+      val ft = y % 5
       raw(y * (stride + 1)) = ft.toByte
       val rowIn = y * stride
       val rowOut = y * (stride + 1) + 1

@@ -148,7 +148,8 @@ object Ranks {
     * `lcm(weights)/weight` (heavier source = denser ladder), and the
     * global order is (key asc, source asc): every prefix of the order
     * holds the weight mix to within one row per source, with zero
-    * randomness beyond the salt.
+    * randomness beyond the salt. The 1-based global position is added as
+    * column `pos`.
     *
     * The global POSITION is where naive implementations re-introduce the
     * single task (`row_number()` over everything). Here it is computed in
@@ -167,8 +168,7 @@ object Ranks {
     * vanish from the mix bookkeeping while still occupying positions.
     */
   def interleave(df: DataFrame, group: String, id: String, salt: String,
-                 weights: Map[String, Int], nBuckets: Int = 64,
-                 pos: String = "pos"): DataFrame = {
+                 weights: Map[String, Int], nBuckets: Int = 64): DataFrame = {
     val strideOf = strideExpr(weights, group)
     val rn = Cols.freeName(df, "__rn")
     val s = Cols.freeName(df, "__stride")
@@ -183,7 +183,7 @@ object Ranks {
       .agg(lit(0L).as("c"), count(lit(1)).as("e"), first(col(s)).as("s"))
       .agg(collect_list(struct(col("g"), col("c"), col("e"), col("s")))
         .as(stats))
-    ladderPositions(ranked, group, k, statsRow, stats, pos)
+    ladderPositions(ranked, group, k, statsRow, stats)
       .drop(rn, s, k)
   }
 
@@ -211,14 +211,13 @@ object Ranks {
     */
   def extendOrder(standing: DataFrame, arriving: DataFrame, group: String,
                   id: String, salt: String, weights: Map[String, Int],
-                  servedRows: Long, nBuckets: Int = 64, pos: String = "pos",
-                  frozen: String = "frozen"): DataFrame = {
+                  servedRows: Long, nBuckets: Int = 64): DataFrame = {
     require(servedRows >= 0, s"servedRows must be >= 0, got $servedRows")
     val strideOf = strideExpr(weights, group)
     val rn = Cols.freeName(standing, "__rn")
     val s = Cols.freeName(standing, "__stride")
     val k = Cols.freeName(standing, "__lkey")
-    val outCols = standing.columns.toIndexedSeq.map(col) :+ col(pos)
+    val outCols = standing.columns.toIndexedSeq.map(col) :+ col("pos")
     // standing order = interleave, with the rank/key plumbing kept
     val st = shuffleRank(standing, Seq(group), id, salt, nBuckets, rn)
       .withColumn(s, strideOf)
@@ -229,9 +228,9 @@ object Ranks {
     val statsRow0 = nByG.select(col("g"), lit(0L).as("c"), col("e"), col("s"))
       .agg(collect_list(struct(col("g"), col("c"), col("e"), col("s")))
         .as(stats0))
-    val stPos = ladderPositions(st, group, k, statsRow0, stats0, pos)
+    val stPos = ladderPositions(st, group, k, statsRow0, stats0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val served = stPos.filter(col(pos) <= servedRows)
+    val served = stPos.filter(col("pos") <= servedRows)
     // arrivals continue each source's ladder after its standing rows
     val m = Cols.freeName(arriving, "__nstanding")
     val ar = shuffleRank(arriving, Seq(group), id, salt, nBuckets, rn)
@@ -256,12 +255,12 @@ object Ranks {
         coalesce(col("s"), col("sa")).as("s"))
       .agg(collect_list(struct(col("g"), col("c"), col("e"), col("s")))
         .as(stats1))
-    val remainder = stPos.filter(col(pos) > servedRows).drop(pos)
+    val remainder = stPos.filter(col("pos") > servedRows).drop("pos")
       .unionByName(ar)
     val remPos =
-      ladderPositions(remainder, group, k, statsRow1, stats1, pos)
-    served.select(outCols: _*).withColumn(frozen, lit(true))
-      .unionByName(remPos.select(outCols: _*).withColumn(frozen, lit(false)))
+      ladderPositions(remainder, group, k, statsRow1, stats1)
+    served.select(outCols: _*).withColumn("frozen", lit(true))
+      .unionByName(remPos.select(outCols: _*).withColumn("frozen", lit(false)))
   }
 
   /** [[interleave]] with the per-source ladder index kept as column `j` —
@@ -270,8 +269,7 @@ object Ranks {
     * standing ranks.
     */
   def orderRegistry(df: DataFrame, group: String, id: String, salt: String,
-                    weights: Map[String, Int], nBuckets: Int = 64,
-                    j: String = "j", pos: String = "pos"): DataFrame = {
+                    weights: Map[String, Int], nBuckets: Int = 64): DataFrame = {
     val strideOf = strideExpr(weights, group)
     val rn = Cols.freeName(df, "__rn")
     val s = Cols.freeName(df, "__stride")
@@ -284,8 +282,8 @@ object Ranks {
       .agg(lit(0L).as("c"), count(lit(1)).as("e"), first(col(s)).as("s"))
       .agg(collect_list(struct(col("g"), col("c"), col("e"), col("s")))
         .as(stats))
-    ladderPositions(ranked, group, k, statsRow, stats, pos)
-      .withColumn(j, col(rn) - 1)
+    ladderPositions(ranked, group, k, statsRow, stats)
+      .withColumn("j", col(rn) - 1)
       .drop(rn, s, k)
   }
 
@@ -310,19 +308,18 @@ object Ranks {
     */
   def extendRegistry(registry: DataFrame, arriving: DataFrame, group: String,
                      id: String, salt: String, weights: Map[String, Int],
-                     servedRows: Long, nBuckets: Int = 64, j: String = "j",
-                     pos: String = "pos", frozen: String = "frozen"): DataFrame = {
+                     servedRows: Long, nBuckets: Int = 64): DataFrame = {
     require(servedRows >= 0, s"servedRows must be >= 0, got $servedRows")
     val strideOf = strideExpr(weights, group)
     // eager localCheckpoint, not persist: three subtrees consume the
     // registry (stats, frozen split, remainder) and the streaming twin
     // re-enters this per micro-batch — checkpoint blocks are GC-cleaned,
     // persists would need a caller unpersist hook
-    val reg = (if (registry.columns.contains(frozen)) registry.drop(frozen)
+    val reg = (if (registry.columns.contains("frozen")) registry.drop("frozen")
                else registry)
       .localCheckpoint(true)
-    val payload = reg.columns.filterNot(c => c == pos).toIndexedSeq
-    val outCols = payload.map(col) :+ col(pos)
+    val payload = reg.columns.filterNot(_ == "pos").toIndexedSeq
+    val outCols = payload.map(col) :+ col("pos")
     val s = Cols.freeName(reg, "__stride")
     val k = Cols.freeName(reg, "__lkey")
     val rn = Cols.freeName(arriving, "__rn")
@@ -335,8 +332,8 @@ object Ranks {
     // equal the source's row count
     val regStats = reg.groupBy(col(group).as("g"))
       .agg(count(lit(1)).as("e0raw"),
-        max(col(j)).as("mj"),
-        sum(when(col(pos) <= servedRows, 1L).otherwise(0L)).as("c"))
+        max(col("j")).as("mj"),
+        sum(when(col("pos") <= servedRows, 1L).otherwise(0L)).as("c"))
       .withColumn("e0",
         when(col("mj") + 1 === col("e0raw"), col("e0raw"))
           .otherwise(raise_error(concat(
@@ -349,7 +346,7 @@ object Ranks {
     val ar = shuffleRank(arriving, Seq(group), id, salt, nBuckets, rn)
       .join(broadcast(regStats.select(col("g").as(group), col("e0").as(m))),
         Seq(group), "left")
-      .withColumn(j, coalesce(col(m), lit(0L)) + col(rn) - 1)
+      .withColumn("j", coalesce(col(m), lit(0L)) + col(rn) - 1)
       .drop(m, rn)
     val arStats = ar.groupBy(col(group).as("g")).agg(count(lit(1)).as("ma"))
     val stats1 = Cols.freeName(reg, "__stats1")
@@ -360,14 +357,14 @@ object Ranks {
       .withColumn("s", strideExpr(weights, "g"))
       .agg(collect_list(struct(col("g"), col("c"), col("e"), col("s")))
         .as(stats1))
-    val remainder = reg.filter(col(pos) > servedRows).drop(pos)
+    val remainder = reg.filter(col("pos") > servedRows).drop("pos")
       .unionByName(ar)
       .withColumn(s, strideOf)
-      .withColumn(k, col(j) * col(s))
-    val remPos = ladderPositions(remainder, group, k, statsRow1, stats1, pos)
-    reg.filter(col(pos) <= servedRows).select(outCols: _*)
-      .withColumn(frozen, lit(true))
-      .unionByName(remPos.select(outCols: _*).withColumn(frozen, lit(false)))
+      .withColumn(k, col("j") * col(s))
+    val remPos = ladderPositions(remainder, group, k, statsRow1, stats1)
+    reg.filter(col("pos") <= servedRows).select(outCols: _*)
+      .withColumn("frozen", lit(true))
+      .unionByName(remPos.select(outCols: _*).withColumn("frozen", lit(false)))
   }
 
   /** lcm(weights)/weight as a CASE over the group column; a source with
@@ -396,13 +393,12 @@ object Ranks {
     * and the whole point is exact ranks.
     */
   private def ladderPositions(ranked: DataFrame, group: String, k: String,
-                              statsRow: DataFrame, statsCol: String,
-                              pos: String): DataFrame =
+                              statsRow: DataFrame, statsCol: String): DataFrame =
     // the `x.c +` term makes the base the ACTUAL consumed-prefix size
     // Σ_g c_g (zero for a from-scratch order) — a watermark larger than
     // the standing corpus must not leave position gaps
     ranked.crossJoin(broadcast(statsRow))
-      .withColumn(pos, expr(
+      .withColumn("pos", expr(
         s"""1L + aggregate(`$statsCol`, 0L, (acc, x) -> acc + x.c +
            |  CASE WHEN x.g < `$group`
            |         THEN least(x.e - x.c, greatest(0L, (`$k` div x.s) + 1L - x.c))

@@ -283,10 +283,10 @@ object Sampling {
     * the timestamp so re-runs and late-arriving data can never migrate a
     * row across the boundary.
     */
-  def timeSplit(df: DataFrame, ts: Column, boundary: Long, embargo: Long,
-                splitCol: String = "split"): DataFrame = {
+  def timeSplit(df: DataFrame, ts: Column, boundary: Long,
+                embargo: Long): DataFrame = {
     require(embargo >= 0, s"embargo must be non-negative, got $embargo")
-    df.withColumn(splitCol,
+    df.withColumn("split",
       when(ts < boundary - embargo, "train")
         .when(ts >= boundary, "test")
         .otherwise("embargo"))

@@ -32,18 +32,17 @@ object Sft {
     * `rendered.substring(mask_starts(i), mask_ends(i))` = the i-th
     * assistant turn's content (role tag and trailing newline excluded);
     * spans are in turn order and empty when a conversation has no
-    * assistant turn.
+    * assistant turn. The `assistant` role's content is the loss mask.
     *
     * @param keys     conversation identity (e.g. user, session)
     * @param time     turn order within a conversation
     * @param tiebreak total order for equal times (determinism)
     * @param role     turn role string (e.g. "user" / "assistant")
     * @param content  turn content string (rendered verbatim)
-    * @param maskRole role whose content spans become the loss mask
     */
   def renderChat(df: DataFrame, keys: Seq[Column], time: Column,
-                 tiebreak: Column, role: Column, content: Column,
-                 maskRole: String = "assistant"): DataFrame = {
+                 tiebreak: Column, role: Column,
+                 content: Column): DataFrame = {
     val segment = concat(lit("<|"), role, lit("|>"), content, lit("\n"))
     val w = Window.partitionBy(keys: _*).orderBy(time.asc, tiebreak.asc)
     val before = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -54,7 +53,7 @@ object Sft {
       .withColumn("__start", col("__cum") + length(role).cast("long") + 4L)
       .withColumn("__end",
         col("__cum") + length(col("__seg")).cast("long") - 1L)
-      .withColumn("__mask", role === maskRole)
+      .withColumn("__mask", role === "assistant")
     val ordKey = struct(time.as("t"), tiebreak.as("b"))
     withOffsets
       .groupBy(keys: _*)

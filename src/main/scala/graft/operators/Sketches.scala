@@ -41,10 +41,14 @@ object Sketches {
   // keys in EVERY one of the depth rows.
   // -------------------------------------------------------------------
 
-  /** `h_j(key) = affine_j(baseHash32(salt:key)) mod width` — the same
-    * universal family as the minhash signatures, so the SQL twin reuses
-    * that oracle's hash CTE shape verbatim.
+  /** `h_j(key) = affine_j(baseHash32("cms:" + key)) mod width` — the
+    * same universal family as the minhash signatures, so the SQL twin
+    * reuses that oracle's hash CTE shape verbatim. The salt is one
+    * constant, so a sketch and its estimate always hash alike.
     */
+  private def cmsBase(key: Column): Column =
+    Text.baseHash32(concat(lit("cms:"), key))
+
   private def cmsCells(base: Column, depth: Int, width: Int): Column =
     array((0 until depth).map { j =>
       struct(lit(j).as("row"), (Text.affine(base, j) % width).as("bucket"))
@@ -57,14 +61,13 @@ object Sketches {
     * count column (`lit(1L)` for plain frequency).
     */
   def cmsSketch(df: DataFrame, key: Column, weight: Column, depth: Int,
-                width: Int, groups: Seq[String] = Nil,
-                salt: String = "cms"): DataFrame = {
+                width: Int, groups: Seq[String] = Nil): DataFrame = {
     require(depth > 0 && width > 0, s"need positive depth/width, got $depth/$width")
     df.select(groups.map(col) ++ Seq(key.as("__k"), weight.as("__w")): _*)
       // the base hash lands in its own projection: the cell array below
       // references it `depth` times, and CollapseProject keeps a non-cheap
       // expression referenced more than once un-inlined (one md5 per row).
-      .withColumn("__b", Text.baseHash32(concat(lit(s"$salt:"), col("__k"))))
+      .withColumn("__b", cmsBase(col("__k")))
       .select(groups.map(col) ++ Seq(
         explode(cmsCells(col("__b"), depth, width)).as("__cell"),
         col("__w")): _*)
@@ -88,9 +91,9 @@ object Sketches {
     * keys is one broadcast-join pass. Output: `key, est`.
     */
   def cmsEstimate(sketch: DataFrame, probes: DataFrame, key: Column,
-                  depth: Int, width: Int, salt: String = "cms"): DataFrame =
+                  depth: Int, width: Int): DataFrame =
     probes.select(key.as("key")).distinct()
-      .withColumn("__b", Text.baseHash32(concat(lit(s"$salt:"), col("key"))))
+      .withColumn("__b", cmsBase(col("key")))
       .select(col("key"), explode(cmsCells(col("__b"), depth, width)).as("__cell"))
       .select(col("key"), col("__cell.row").as("row"),
         col("__cell.bucket").as("bucket"))
@@ -151,10 +154,10 @@ object Sketches {
     * so the SQL twin (same printed scale constant, same BIGINT→DOUBLE
     * cast) reproduces it bit-for-bit.
     */
-  def kmvDistinct(df: DataFrame, groups: Seq[String], key: Column, k: Int,
-                  salt: String = "kmv"): DataFrame = {
+  def kmvDistinct(df: DataFrame, groups: Seq[String], key: Column,
+                  k: Int): DataFrame = {
     val agg = udaf(new KmvMins(k))
-    df.select(groups.map(col) :+ hash60(key, salt).as("__h"): _*)
+    df.select(groups.map(col) :+ hash60(key, "kmv").as("__h"): _*)
       .groupBy(groups.map(col): _*)
       .agg(agg(col("__h")).as("__mins"))
       .select(groups.map(col) ++ Seq(

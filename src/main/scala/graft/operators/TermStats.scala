@@ -33,16 +33,14 @@ object TermStats {
     * `idf_micro = (1e6 · n_docs) div df` (integer division — deterministic
     * in every engine, unlike `ln`, which engines round differently in the
     * last ulp), `score = tf · idf_micro`. Returns
-    * (doc, term, tf, df, score).
-    *
-    * @param minTermLen drop terms shorter than this (cheap stopword-ish
-    *                   noise gate applied BEFORE any aggregation).
+    * (doc, term, tf, df, score). The empty token is dropped before any
+    * aggregation (every term site below keeps the same `length >= 1`
+    * gate, and the q60 oracle mirrors it).
     */
-  def tfidf(docs: DataFrame, id: String, text: String,
-            minTermLen: Int = 1): DataFrame = {
+  def tfidf(docs: DataFrame, id: String, text: String): DataFrame = {
     val toks = docs.select(col(id).as("doc"),
         explode(Text.tokens(col(text))).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
     // Corpus size as a broadcast 1-row aggregate (the q16 scalar-subquery
     // pattern) — no driver-side action, the plan stays lazy end-to-end.
     val nDocs = broadcast(docs.select(countDistinct(col(id)).as("n_docs")))
@@ -66,12 +64,11 @@ object TermStats {
   /** The single highest-TF-IDF term per document (score desc, term asc on
     * ties — deterministic). One extra shuffle on doc over [[tfidf]].
     */
-  def topTermPerDoc(docs: DataFrame, id: String, text: String,
-                    minTermLen: Int = 1): DataFrame = {
+  def topTermPerDoc(docs: DataFrame, id: String, text: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc"))
       .orderBy(col("score").desc, col("term").asc)
-    tfidf(docs, id, text, minTermLen)
+    tfidf(docs, id, text)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
@@ -415,9 +412,9 @@ object TermStats {
     */
   def bm25TopK(docs: DataFrame, queries: DataFrame, id: String, text: String,
                qId: String, qTerms: String, k: Int,
-               minTermLen: Int = 1, excludeSelf: Boolean = false): DataFrame =
-    bm25TopKFromPostings(bm25Postings(docs, id, text, minTermLen), queries,
-      qId, qTerms, k, minTermLen, excludeSelf)
+               excludeSelf: Boolean = false): DataFrame =
+    bm25TopKFromPostings(bm25Postings(docs, id, text), queries,
+      qId, qTerms, k, excludeSelf)
 
   /** The BM25 INDEX build: tokenize once into the postings aggregate
     * `(doc, term, tf)` — the materialization seam. Everything BM25 needs
@@ -428,11 +425,10 @@ object TermStats {
     * stat is additive — [[bm25TopKFromPostings]] on the union is
     * bit-identical to a full rebuild, the q162 pin).
     */
-  def bm25Postings(docs: DataFrame, id: String, text: String,
-                   minTermLen: Int = 1): DataFrame =
+  def bm25Postings(docs: DataFrame, id: String, text: String): DataFrame =
     docs.select(col(id).as("doc"),
         explode(Text.tokens(col(text))).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
       .groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf"))
 
   /** The BM25 SERVE path when only the postings are materialized: roll
@@ -447,13 +443,12 @@ object TermStats {
     */
   def bm25TopKFromPostings(postings: DataFrame, queries: DataFrame,
                            qId: String, qTerms: String, k: Int,
-                           minTermLen: Int = 1,
                            excludeSelf: Boolean = false): DataFrame = {
     val tf = postings
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (dfreq, dl, corpus) = bm25Stats(tf)
     bm25TopKFromIndex(tf, dfreq, dl, corpus, queries, qId, qTerms, k,
-      minTermLen, excludeSelf)
+      excludeSelf)
   }
 
   /** Corpus statistics rollup over a postings frame: `(dfreq(term, df),
@@ -484,12 +479,11 @@ object TermStats {
   def bm25TopKFromIndex(postings: DataFrame, dfreq: DataFrame,
                         dl: DataFrame, corpus: DataFrame,
                         queries: DataFrame, qId: String, qTerms: String,
-                        k: Int, minTermLen: Int = 1,
-                        excludeSelf: Boolean = false): DataFrame = {
+                        k: Int, excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val qt = queries
       .select(col(qId).as("q"), explode(col(qTerms)).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
       .distinct()
     val scored = qt.join(postings, "term").join(dfreq, "term").join(dl, "doc")
       .crossJoin(broadcast(corpus))
@@ -534,12 +528,11 @@ object TermStats {
   def bm25TopKFromIndexHealed(postings: DataFrame, dfreq: DataFrame,
                               dl: DataFrame, corpus: DataFrame,
                               queries: DataFrame, qId: String,
-                              qTerms: String, k: Int,
-                              minTermLen: Int = 1): DataFrame = {
+                              qTerms: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val qt = queries
       .select(col(qId).as("q"), explode(col(qTerms)).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
       .distinct()
     val scored = qt.join(postings, "term").join(dl, "doc")
       .distinct() // heal replay duplicates on the audit footprint only
@@ -638,14 +631,13 @@ object TermStats {
     */
   def bm25TopKPruned(postings: DataFrame, dfreq: DataFrame, dl: DataFrame,
                      corpus: DataFrame, queries: DataFrame, qId: String,
-                     qTerms: String, k: Int, capSharePm: Long,
-                     minTermLen: Int = 1): DataFrame = {
+                     qTerms: String, k: Int, capSharePm: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(capSharePm >= 1 && capSharePm <= 1000000,
       s"capSharePm must be in [1, 1e6], got $capSharePm")
     val qt = queries
       .select(col(qId).as("q"), explode(col(qTerms)).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
       .distinct()
     val qtd = qt.join(dfreq, "term").crossJoin(broadcast(corpus))
       .withColumn("__rare",
@@ -752,6 +744,9 @@ object TermStats {
       .select(col("doc"), col("term"), col("tf"), col("dl"))
   }
 
+  /** The calibrated docs-per-slot ratio [[impactM]] defaults to. */
+  val DocsPerSlot = 625L
+
   /** The calibrated impact-list depth m(n): a FIXED m is a shrinking
     * fraction of each term's (corpus-proportional) posting list, so its
     * recall decays as the corpus grows — the r16 zipfm ladder measured
@@ -772,7 +767,7 @@ object TermStats {
     * regardless of df; the head term's raw list is ∝ n with a constant
     * ~1000× larger on the Zipf ladder).
     */
-  def impactM(nDocs: Long, docsPerSlot: Long = 625L, mMin: Int = 64): Int = {
+  def impactM(nDocs: Long, docsPerSlot: Long = DocsPerSlot, mMin: Int = 64): Int = {
     require(nDocs >= 0, s"nDocs must be >= 0, got $nDocs")
     require(docsPerSlot >= 1, s"docsPerSlot must be >= 1, got $docsPerSlot")
     require(mMin >= 1, s"mMin must be >= 1, got $mMin")
@@ -795,11 +790,11 @@ object TermStats {
   def bm25TopKImpact(truncated: DataFrame, postings: DataFrame,
                      dfreq: DataFrame, dl: DataFrame, corpus: DataFrame,
                      queries: DataFrame, qId: String, qTerms: String,
-                     k: Int, minTermLen: Int = 1): DataFrame = {
+                     k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val qt = queries
       .select(col(qId).as("q"), explode(col(qTerms)).as("term"))
-      .filter(length(col("term")) >= minTermLen)
+      .filter(length(col("term")) >= 1)
       .distinct()
     val cands = qt.join(truncated, "term").select(col("q"), col("doc"))
       .distinct()

@@ -70,6 +70,9 @@ object Unigram {
     chars.unionByName(multi)
   }
 
+  /** Longest word [[segment]] accepts: DP row memory is O(len²). */
+  val MaxWordLen = 64
+
   /** Segment every distinct word by Viterbi DP over the literal `vocab`
     * (collected from [[trainVocab]] — bounded at topK + |alphabet| rows,
     * the [[Bpe]] merge-table / kmeans-centroid collect scale). Multi-char
@@ -79,7 +82,7 @@ object Unigram {
     * single spaces.
     *
     * The fold carries the full DP row (one struct per prefix length —
-    * words are bounded by `maxWordLen`, enforced) and every step reduces
+    * words are bounded by [[MaxWordLen]], enforced) and every step reduces
     * `maxLen` candidate extensions with the lexicographic
     * (np asc, score desc, seg asc) comparator. All codegen'd built-ins
     * and higher-order functions — no UDF, no shuffle.
@@ -93,7 +96,7 @@ object Unigram {
     */
   def segment(words: DataFrame, word: String,
               vocab: Seq[(String, Long)], maxLen: Int,
-              maxWordLen: Int = 64, carry: Seq[String] = Nil): DataFrame = {
+              carry: Seq[String] = Nil): DataFrame = {
     require(maxLen >= 2, s"maxLen must be >= 2, got $maxLen")
     require(vocab.nonEmpty, "empty vocabulary")
     val vmap: Column = map_from_arrays(
@@ -134,9 +137,9 @@ object Unigram {
       // In-plan guard, not a driver-side pre-scan (that would run the
       // distinct twice): DP row memory is O(len²) per word, so an
       // unbounded "word" (unsplit CJK, a data bug) must fail loudly.
-      .withColumn("w", when(length(col("w")) <= maxWordLen, col("w"))
+      .withColumn("w", when(length(col("w")) <= MaxWordLen, col("w"))
         .otherwise(raise_error(concat(
-          lit(s"Unigram.segment: word longer than maxWordLen=$maxWordLen: "),
+          lit(s"Unigram.segment: word longer than maxWordLen=$MaxWordLen: "),
           substring(col("w"), 1, 40)))))
     in.select(w +: carry.map(col) :+ dp.as("__dp"): _*)
       .select(w +: carry.map(col) :+

@@ -5160,7 +5160,7 @@ object Oracles {
          |FROM fl JOIN cuts USING (lang)""".stripMargin,
 
     "q60_tfidf_top_term" ->
-      // length(term) >= 1 mirrors TermStats.tfidf's minTermLen gate: the
+      // length(term) >= 1 mirrors TermStats.tfidf's empty-term gate: the
       // Spark side drops the '' token that tokenizing an empty/whitespace
       // document produces, so the oracle must too (a data-dependent
       // divergence the synthetic corpus happens not to exercise — guard it

@@ -9,7 +9,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -17,7 +16,6 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** A REAL DataSource V2 connector for the JSON-lines sink format that
   * [[graft.operators.BulkSink.JsonLinesWriter]] emits — the engine-side
@@ -109,7 +107,7 @@ object JsonLinesSource {
     * maintenance job every append sink needs (each append job leaves its
     * own part files; a follower appending small batches degrades readers
     * toward one-file-per-batch). One Spark job: scan through the
-    * connector, coalesce to `targetFiles`, write back through the same
+    * connector, coalesce to ONE file, write back through the same
     * two-phase commit — which is what makes this CRASH-SAFE: the scan's
     * input files are pinned at planning, new data stages as hidden
     * files, and the originals are deleted only in the driver commit
@@ -120,10 +118,9 @@ object JsonLinesSource {
     * compaction must not pay a shuffle, only a read+write.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              schema: StructType, targetFiles: Int = 1): Long = {
-    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
+              schema: StructType): Long = {
     val df = spark.read.format("jsonlines").schema(schema).load(dir)
-      .coalesce(targetFiles)
+      .coalesce(1)
     df.write.format("jsonlines").mode("overwrite").save(dir)
     spark.read.format("jsonlines").schema(schema).load(dir).count()
   }
@@ -162,7 +159,6 @@ final class JsonLinesTable(path: String, tableSchema: StructType)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new JsonLinesScanBuilder(path, tableSchema,
-      columnar = options.getBoolean("columnar", true),
       include = JsonLinesSource.nameList(options.get("include")),
       exclude = JsonLinesSource.nameList(options.get("exclude")))
 
@@ -173,9 +169,8 @@ final class JsonLinesTable(path: String, tableSchema: StructType)
 // ---------------------------------------------------------------- read
 
 final class JsonLinesScanBuilder(path: String, tableSchema: StructType,
-                                 columnar: Boolean = true,
-                                 include: Option[Set[String]] = None,
-                                 exclude: Option[Set[String]] = None)
+                                 include: Option[Set[String]],
+                                 exclude: Option[Set[String]])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
 
@@ -225,15 +220,14 @@ final class JsonLinesScanBuilder(path: String, tableSchema: StructType,
   // default isPartiallyPushed() = true: Spark keeps the global limit.
 
   override def build(): Scan =
-    new JsonLinesScan(path, tableSchema, required, pushed, limit, columnar,
-      include, exclude)
+    new JsonLinesScan(path, tableSchema, required, pushed, limit, include,
+      exclude)
 }
 
 final class JsonLinesScan(path: String, tableSchema: StructType,
                           required: StructType, filters: Array[Filter],
-                          limit: Int, columnar: Boolean,
-                          include: Option[Set[String]] = None,
-                          exclude: Option[Set[String]] = None)
+                          limit: Int, include: Option[Set[String]],
+                          exclude: Option[Set[String]])
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -277,7 +271,7 @@ final class JsonLinesScan(path: String, tableSchema: StructType,
     val evalSchema = StructType(required.fields ++
       filterCols.filterNot(required.fieldNames.contains)
         .map(c => tableSchema(tableSchema.fieldIndex(c))))
-    JsonLinesReaderFactory(evalSchema, required, filters, limit, columnar)
+    JsonLinesReaderFactory(evalSchema, required, filters, limit)
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -299,7 +293,8 @@ final class JsonLinesScan(path: String, tableSchema: StructType,
   * live, also the FileStreamSource rule).
   *
   * Pushdown carries over: the reader factory is the SAME one the batch
-  * scan built, so pruning/filter/columnar apply per micro-batch.
+  * scan built, so pruning, filters and the vectorized read apply per
+  * micro-batch.
   */
 final class JsonLinesMicroBatchStream(path: String,
                                       factory: PartitionReaderFactory)
@@ -364,23 +359,18 @@ final case class JsonLinesInputPartition(file: String, length: Long)
 
 final case class JsonLinesReaderFactory(evalSchema: StructType,
                                         required: StructType,
-                                        filters: Array[Filter], limit: Int,
-                                        columnar: Boolean)
+                                        filters: Array[Filter], limit: Int)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new JsonLinesPartitionReader(
-      new JsonLineDecoder(
-        partition.asInstanceOf[JsonLinesInputPartition].file,
-        evalSchema, required, filters),
-      limit)
+  // Reads are VECTORIZED only: the decoder's rows are batched into
+  // ColumnarBatches, so the downstream plan enters via codegen'd
+  // ColumnarToRow — the structure of Spark's own parquet reader. A row
+  // reader measured at parity on wide and narrow scans (SCALE.md) and
+  // was retired; Spark never asks for one while columnar reads are on.
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  // The VECTORIZED path: same decoder, batched into ColumnarBatches so
-  // the downstream plan enters via codegen'd ColumnarToRow instead of a
-  // per-row virtual get() — the same structure Spark's own parquet reader
-  // uses, and the reason a scan-heavy query on this source keeps up with
-  // row counts that drown a row-at-a-time PartitionReader in dispatch
-  // overhead.
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "jsonlines reads are columnar only")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new JsonLinesColumnarReader(
@@ -390,7 +380,7 @@ final case class JsonLinesReaderFactory(evalSchema: StructType,
       limit)
 }
 
-/** Shared per-file decode kernel for the row and columnar readers:
+/** Per-file decode kernel for [[JsonLinesColumnarReader]]:
   * stream lines, parse, evaluate pushed filters, surface only surviving
   * rows as a boxed `evalSchema`-ordered value array. Unrequested fields
   * are never converted (pruning reaches the parser, the DSv2 analog of
@@ -556,37 +546,6 @@ private[sources] final class JsonLineDecoder(file: String,
   }
 
   def close(): Unit = in.close()
-}
-
-/** Row-at-a-time reader over the shared decoder (the `columnar=false`
-  * escape hatch, and the semantics twin the columnar path is pinned
-  * against in JsonLinesSourceSpec).
-  */
-final class JsonLinesPartitionReader(dec: JsonLineDecoder, limit: Int)
-    extends PartitionReader[InternalRow] {
-  private var row: GenericInternalRow = _
-  private var emitted = 0
-
-  override def next(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    val vals = dec.nextVals()
-    if (vals == null) return false
-    val out = new Array[Any](dec.requiredIdx.length)
-    var i = 0
-    while (i < dec.requiredIdx.length) {
-      out(i) = vals(dec.requiredIdx(i)) match {
-        case s: String => UTF8String.fromString(s)
-        case v => v
-      }
-      i += 1
-    }
-    row = new GenericInternalRow(out)
-    emitted += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = dec.close()
 }
 
 /** Vectorized reader: fills reusable on-heap column vectors in

@@ -162,11 +162,13 @@ object Incremental {
     * StreamBatchEquivalence/IncrementalSpec pin for the batch driver
     * holds for the stream too (asserted in IncrementalSpec).
     *
-    * Scale note: per micro-batch this pays the same O(sink) parquet
-    * rewrite as the batch driver — the documented stand-in; production
-    * swaps `Merge.upsertParquet` for a table-format MERGE inside the same
-    * foreachBatch (see SCALE.md's sink section), the driver shape is
-    * unchanged.
+    * Scale note: per micro-batch this pays an O(sink) parquet rewrite
+    * (`Merge.upsertParquet` reads and swap-rewrites the whole sink). The
+    * batch driver no longer does: each chunk appends an O(chunk) delta
+    * or rewrites only its own height buckets. [[streamingUpsertDelta]]
+    * is this stream's delta-log form; production swaps the upsert for a
+    * table-format MERGE inside the same foreachBatch (see SCALE.md's
+    * sink section), the driver shape is unchanged.
     */
   def streamingUpsert(stream: DataFrame, checkpointDir: String, sinkPath: String,
                       key: String, tiebreak: String): StreamingQuery =
@@ -653,11 +655,11 @@ object Incremental {
     * documents, so ANY doc-batching yields partials that sum to the
     * global tables exactly (the q177 additivity, no arrival contract).
     * Per-batch cost: the batch's own row-local pair generation plus two
-    * keyed upserts sized to the batch's distinct pairs/terms —
-    * earlier batches are never re-read. At production sizes the
-    * partials stores are pair-/term-bucketed catalog tables and
-    * [[compactRegistry]]-style folding behind the committed offset
-    * bounds their row count.
+    * keyed upserts, and each upsert is O(store): `Merge.upsertParquet`
+    * reads and swap-rewrites the whole partials store, every earlier
+    * batch's rows included. At production sizes the partials stores are
+    * pair-/term-bucketed catalog tables and [[compactRegistry]]-style
+    * folding behind the committed offset bounds their row count.
     */
   def streamingTermAssociations(stream: DataFrame, checkpointDir: String,
                                 pairPartialsPath: String,
@@ -703,8 +705,10 @@ object Incremental {
     * counts). Counts are associative, so summing partials reproduces
     * the global histogram exactly; [[driftFromPartials]] serves the
     * live TVD against a frozen reference registry from those sums.
-    * Per-batch cost is the batch's own rows plus a |bins|-sized upsert;
-    * neither the reference corpus nor earlier batches are ever re-read.
+    * Per-batch cost is the batch's own rows plus an O(store) upsert:
+    * `Merge.upsertParquet` reads and swap-rewrites the whole partials
+    * store, every earlier batch's rows included. The reference corpus is
+    * never re-read.
     */
   def streamingDriftPartials(stream: DataFrame, checkpointDir: String,
                              partialsPath: String, groupCols: Seq[String],
@@ -1119,15 +1123,14 @@ object Incremental {
     * blocks serve (the same split the dense twin makes).
     */
   def streamingPostingsIngest(stream: DataFrame, checkpointDir: String,
-                              registryPath: String, id: String, text: String,
-                              minTermLen: Int = 1)
+                              registryPath: String, id: String, text: String)
       : StreamingQuery =
     foldBatches(stream, checkpointDir) { (spark, batch, _) =>
       val seen = Merge.readRegistry(spark, registryPath, StructField("doc", LongType))
         .withColumnRenamed("doc", id).distinct()
       graft.operators.TermStats
         .bm25Postings(batch.join(seen, Seq(id), "left_anti"),
-          id, text, minTermLen)
+          id, text)
         .write.mode("append").parquet(registryPath)
     }
 
@@ -1449,8 +1452,8 @@ object Incremental {
     * `pos > hwm` filter drops exactly them — the layout self-heals on
     * the next read instead of tripping the ladder-contiguity validation.
     */
-  def curriculumRegistry(spark: SparkSession, registryPath: String,
-                         pos: String = "pos"): DataFrame = {
+  def curriculumRegistry(spark: SparkSession, registryPath: String)
+      : DataFrame = {
     val frozenPath = s"$registryPath/frozen"
     val tailPath = s"$registryPath/tail"
     val frozen = if (Merge.hasParquet(spark, frozenPath))
@@ -1465,9 +1468,9 @@ object Incremental {
         // directories written before that guard — or by a crash mid-
         // append — must still read): NULL max ⇒ degrade to tail-only
         // instead of NPE-wedging every subsequent batch AND its replay.
-        val hwmRow = f.agg(max(col(pos))).head
+        val hwmRow = f.agg(max(col("pos"))).head
         if (hwmRow.isNullAt(0)) t
-        else f.unionByName(t.filter(col(pos) > hwmRow.getLong(0)))
+        else f.unionByName(t.filter(col("pos") > hwmRow.getLong(0)))
       case (Some(f), None) => f
       case (None, Some(t)) => t
       case (None, None) => throw new IllegalStateException(
@@ -1976,8 +1979,9 @@ object Incremental {
     */
   def impactBatchIngest(spark: SparkSession, registryPath: String,
                         batch: DataFrame, id: String, text: String,
-                        epoch: Long, minTermLen: Int = 1,
-                        docsPerSlot: Long = 625L, mMin: Int = 64,
+                        epoch: Long,
+                        docsPerSlot: Long = graft.operators.TermStats.DocsPerSlot,
+                        mMin: Int = 64,
                         quantizeDepth: Boolean = true,
                         needLanded: Boolean = false)
       : Option[Landed] = {
@@ -2020,7 +2024,7 @@ object Incremental {
         else docsIn
       val newPost = TermStats.bm25Postings(
           fresh.select(col("doc").as(id), col("__text").as(text)),
-          id, text, minTermLen)
+          id, text)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val newDl = newPost.groupBy(col("doc")).agg(sum(col("tf")).as("dl"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2195,7 +2199,7 @@ object Incremental {
     */
   def retainImpactRegistry(spark: SparkSession, registryPath: String,
                            minEpoch: Long, rebuildSharePm: Long = 250000L,
-                           docsPerSlot: Long = 625L, mMin: Int = 64,
+                           mMin: Int = 64,
                            quantizeDepth: Boolean = true): Unit = {
     require(rebuildSharePm >= 0 && rebuildSharePm <= 1000000L,
       s"rebuildSharePm must be in [0, 1e6], got $rebuildSharePm")
@@ -2271,7 +2275,8 @@ object Incremental {
         !Merge.hasParquet(spark, s"$registryPath/impact") ||
         retiredTotal * 1000000L >= rebuildSharePm * (retiredTotal + live)
       if (rebuild) {
-        val mQ = depthFor(live, docsPerSlot, mMin, quantizeDepth)
+        val mQ = depthFor(live, graft.operators.TermStats.DocsPerSlot, mMin,
+          quantizeDepth)
         // registry-sized loop-conf scope: the per-term window is
         // proportional to the SURVIVING segments, and the mass is
         // already in hand
@@ -2414,13 +2419,13 @@ object Incremental {
     */
   def streamingImpactIndex(stream: DataFrame, checkpointDir: String,
                            registryPath: String, id: String, text: String,
-                           epochOf: Long => Long, minTermLen: Int = 1,
-                           docsPerSlot: Long = 625L, mMin: Int = 64,
-                           compactEvery: Int = 0)
+                           epochOf: Long => Long,
+                           docsPerSlot: Long = graft.operators.TermStats.DocsPerSlot,
+                           mMin: Int = 64, compactEvery: Int = 0)
       : StreamingQuery =
     foldBatches(stream, checkpointDir) { (spark, batch, batchId) =>
       impactBatchIngest(spark, registryPath, batch, id, text,
-        epochOf(batchId), minTermLen, docsPerSlot, mMin)
+        epochOf(batchId), docsPerSlot, mMin)
         .foreach(_.release()) // per-batch snapshot blocks must not outlive the fold
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
         compactImpactRegistry(spark, registryPath)
@@ -2464,15 +2469,13 @@ object Incremental {
   def streamingImpactServePublish(stream: DataFrame, checkpointDir: String,
                                   registryPath: String, prefix: String,
                                   id: String, text: String,
-                                  buckets: Int = 32, minTermLen: Int = 1,
-                                  docsPerSlot: Long = 625L, mMin: Int = 64,
+                                  buckets: Int = 32, mMin: Int = 64,
                                   quantizeDepth: Boolean = true)
       : StreamingQuery = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     foldBatches(stream, checkpointDir) { (spark, batch, _) =>
       val landed = impactBatchIngest(spark, registryPath, batch, id, text,
-        0L, minTermLen, docsPerSlot, mMin, quantizeDepth,
-        needLanded = true)
+        0L, mMin = mMin, quantizeDepth = quantizeDepth, needLanded = true)
       val postT = s"${prefix}_postings"
       val dlT = s"${prefix}_dl"
       val impT = s"${prefix}_impact"

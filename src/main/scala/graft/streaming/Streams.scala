@@ -115,14 +115,14 @@ object Streams {
     * (window_start, row, bucket, c).
     */
   def cmsSketched(events: DataFrame, key: String, windowLength: String,
-                  watermarkDelay: String, depth: Int, width: Int,
-                  salt: String = "cms"): DataFrame = {
+                  watermarkDelay: String, depth: Int,
+                  width: Int): DataFrame = {
     val windowed = events
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", watermarkDelay)
       .withColumn("w", window(col("ts"), windowLength))
     graft.operators.Sketches.cmsSketch(windowed, col(key), lit(1L), depth,
-        width, groups = Seq("w"), salt = salt)
+        width, groups = Seq("w"))
       .select(col("w.start").as("window_start"), col("row"), col("bucket"),
         col("c"))
   }
@@ -138,14 +138,12 @@ object Streams {
     * (window_start, n_mins, est_distinct).
     */
   def kmvSketched(events: DataFrame, key: String, windowLength: String,
-                  watermarkDelay: String, k: Int,
-                  salt: String = "kmv"): DataFrame = {
+                  watermarkDelay: String, k: Int): DataFrame = {
     val windowed = events
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", watermarkDelay)
       .withColumn("w", window(col("ts"), windowLength))
-    graft.operators.Sketches.kmvDistinct(windowed, Seq("w"), col(key), k,
-        salt = salt)
+    graft.operators.Sketches.kmvDistinct(windowed, Seq("w"), col(key), k)
       .select(col("w.start").as("window_start"), col("n_mins"),
         col("est_distinct"))
   }

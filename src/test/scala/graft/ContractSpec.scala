@@ -7,6 +7,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * registry must stay non-trivially populated.
   */
 class ContractSpec extends AnyFunSuite {
+  import org.apache.spark.sql.types._
+
+  /** One run of a registered query at sf0.001: its public schema (None
+    * when the query function itself threw) and the error, if building or
+    * counting it failed. Both registry-wide tests below read this one
+    * sweep, so every query runs once per suite, not once per test.
+    */
+  private final case class Run(schema: Option[StructType], error: Option[String])
+
+  private lazy val runs: Seq[(String, Run)] = {
+    val spark = TestSpark.spark
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val run =
+        try {
+          val df = fn(spark, "/root/testdata/sf0.001")
+          try { df.count(); Run(Some(df.schema), None) }
+          catch { case e: Throwable => Run(Some(df.schema), Some(e.getMessage)) }
+        } catch { case e: Throwable => Run(None, Some(e.getMessage)) }
+      name -> run
+    }
+  }
 
   test("every query has an oracle twin and every oracle has a query") {
     val q = SparkEntry.queries.keySet
@@ -20,11 +41,7 @@ class ContractSpec extends AnyFunSuite {
     // The bench warmup swallows per-query errors at this scale; a query
     // that only works above some row count would otherwise surface as a
     // confusing driver-side failure.
-    val spark = TestSpark.spark
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, "/root/testdata/sf0.001").count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-    }
+    val failures = runs.collect { case (name, Run(_, Some(err))) => s"$name: $err" }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
@@ -35,12 +52,11 @@ class ContractSpec extends AnyFunSuite {
     // harness and red in the driver for exactly this. Operators may
     // return typed arrays (Sft.renderChat does, SftSpec pins it); the
     // REGISTERED projection must canonicalize them (to_json) first.
-    import org.apache.spark.sql.types._
-    val spark = TestSpark.spark
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val schema = fn(spark, "/root/testdata/sf0.001").schema
-        schema.fields.collect {
+    // A query whose function throws has no schema and is an offender.
+    val offenders = runs.flatMap {
+      case (name, Run(None, err)) => Seq(s"$name: query function threw: ${err.orNull}")
+      case (name, Run(Some(schema), _)) =>
+        schema.fields.toSeq.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
                     f.dataType.isInstanceOf[StructType] ||
                     f.dataType.isInstanceOf[MapType] ||
