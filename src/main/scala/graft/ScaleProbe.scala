@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOf, Dedup, Packing, RangeJoin, Sampling, Similarity, TermStats, TextDedup, TopK}
@@ -22,27 +28,35 @@ import graft.sources.Tables
   *    replica to a different region of the sphere (different LSH
   *    buckets, same intra-replica neighbor structure).
   *
-  * Results are recorded in SCALE.md. Dev tool — not part of the driver
-  * contract; run with `graft.Probe scale [section…]`.
+  * Every measurement is one JSON row from [[Meter.time]]; every section's
+  * replica-factor loop reads its ladder through `ladder`, which
+  * `SPARK_GRAFT_PROBE_FACTORS` (comma-separated factors) overrides for
+  * all sections at once. Results are recorded in SCALE.md. Dev tool —
+  * not part of the driver contract; run with
+  * `graft.Probe scale [section…]`.
   */
 object ScaleProbe {
 
+  /** `factor` disjoint replicas of one frame, unioned by name. */
+  def replicas(factor: Int)(replica: Int => DataFrame): DataFrame =
+    (0 until factor).map(replica).reduce(_ unionByName _)
+
   def docsAt(spark: SparkSession, d: String, factor: Int): DataFrame = {
     val base = Tables.balanced(spark, d, "documents").select("doc_id", "text")
-    (0 until factor).map { i =>
+    replicas(factor) { i =>
       base.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1").as("text"))
-    }.reduce(_ unionByName _)
+    }
   }
 
   def embAt(spark: SparkSession, d: String, factor: Int): DataFrame = {
     val base = Tables.balanced(spark, d, "embeddings").select("vec_id", "embedding")
-    (0 until factor).map { i =>
+    replicas(factor) { i =>
       base.select(
         (col("vec_id") + lit(i * 1000000L)).as("vec_id"),
         transform(col("embedding"), x => x + lit(i / 100.0f)).as("embedding"))
-    }.reduce(_ unionByName _)
+    }
   }
 
   /** Scaled event stream: replica i shifts user ids (disjoint keys) AND
@@ -55,14 +69,46 @@ object ScaleProbe {
       .select(col("event_id"), expr("ts div 1000").as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
     val ninetyDaysUs = 90L * 86400 * 1000000
-    (0 until factor).map { i =>
+    replicas(factor) { i =>
       base.select(
         (col("event_id") + lit(i * 100000000L)).as("event_id"),
         (col("ts_us") + lit(i * ninetyDaysUs)).as("ts_us"),
         (col("user_id") + lit(i * 1000000L)).as("user_id"),
         col("event_type"), col("value"))
-    }.reduce(_ unionByName _)
+    }
   }
+
+  /** The fixed 1×-sized incoming batch of the registry sections: fresh
+    * ids, and every odd doc re-tokenized (`nv_` prefix), so half the
+    * batch repeats corpus blocks and grams and half brings new ones.
+    */
+  def batchAt(spark: SparkSession, d: String): DataFrame =
+    docsAt(spark, d, 1).select((col("doc_id") + 900000000L).as("doc_id"),
+      when(col("doc_id") % 2 === 1,
+        regexp_replace(col("text"), "(\\S+)", "nv_$1"))
+        .otherwise(col("text")).as("text"))
+
+  /** Deterministic Zipf(1) documents `[from, until)`, 60 tokens over a
+    * 50k vocabulary: token j of doc i is rank floor(exp(u·ln V)) + 1 for
+    * u = hash(i, j) in [0, 1), so P(rank ≤ k) = ln(k)/ln(V) — row-local,
+    * no lookup table; the head term is in nearly every doc and the
+    * median type's df is ≈ 1.
+    */
+  def zipfDocs(spark: SparkSession, from: Long, until: Long): DataFrame = {
+    val vocab = 50000L
+    spark.range(from, until).select(col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(1), lit(60)), { j =>
+        val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
+          .cast("double") / 1000000.0
+        concat(lit("t"), least(lit(vocab),
+          exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
+      })).as("text"))
+  }
+
+  /** A query set: the first four tokens of each picked doc. */
+  def queriesOf(docs: DataFrame, pick: Column): DataFrame =
+    docs.filter(pick).select(col("doc_id").as("q_id"),
+      slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
 
   /** Every section `run` knows (`graft.Probe scale [section…]`). */
   val sections: Seq[String] = Seq("session", "termstats", "minhash", "ann",
@@ -70,33 +116,144 @@ object ScaleProbe {
     "sketch", "prune", "sinkbig", "pqtrain", "spandedup", "jsonlines",
     "tiered", "bpe", "dsir", "spancorrupt", "substr", "lshskew", "ccdiam",
     "imagededup", "videodedup", "bucketreg", "audioprep", "gramreg",
-    "kfnovel", "prdist", "codecprep", "bwdist", "ccinc", "funnel", "prep",
-    "monitor", "bm25reg", "splitreg", "retrieval", "kcore", "cooccur",
-    "walks", "wl", "ranks", "curreg", "nostraddle", "curseg", "zipf",
+    "prdist", "codecprep", "bwdist", "ccinc", "funnel", "prep",
+    "monitor", "splitreg", "retrieval", "kcore", "cooccur",
+    "walks", "wl", "ranks", "nostraddle", "curseg", "zipf",
     "zipfm", "zipfreg", "zipfserve", "zipfbucket", "zipfretain", "impinc",
     "prunedcost", "segcompact")
+
+  /** The local property that tags a [[Meter]] flush's sentinel job. */
+  private[graft] val FlushTag = "graft.probe.flush"
+
+  /** The probe's one measurement path. As a listener it sums every
+    * task's input and shuffle-write metrics; [[time]] runs one
+    * measurement and prints its JSON row. Register it once per session
+    * (`run` does, and removes it when done).
+    */
+  private[graft] final class Meter(spark: SparkSession) extends SparkListener {
+    private val sc = spark.sparkContext
+    private val inRecords, inBytes, shufRecords, shufBytes = new AtomicLong
+    private val sentinels = new LinkedBlockingQueue[String]
+    private var flushes = 0
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      Option(t.taskMetrics).foreach { m =>
+        inRecords.addAndGet(m.inputMetrics.recordsRead)
+        inBytes.addAndGet(m.inputMetrics.bytesRead)
+        shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      Option(j.properties).flatMap(p => Option(p.getProperty(FlushTag)))
+        .foreach(sentinels.put)
+
+    /** Returns once every event posted before the call has reached this
+      * listener. The bus delivers in order and a finished job's task ends
+      * are posted before its action returns, so they all precede the
+      * start of the sentinel job submitted here (which reads and shuffles
+      * nothing).
+      */
+    private def flush(): Unit = {
+      flushes += 1
+      val token = flushes.toString
+      sc.setLocalProperty(FlushTag, token)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(FlushTag, null)
+      require(sentinels.poll(60, TimeUnit.SECONDS) == token,
+        s"flush $token: the sentinel job never reached the listener")
+    }
+
+    /** Bytes this process read through syscalls (`/proc/self/io` rchar):
+      * local mode is one process, so every executor thread's reads land
+      * here, page-cached or not — the counter that sees the sink reads
+      * Spark's input metrics miss.
+      */
+    private def rchar(): Long = {
+      val src = scala.io.Source.fromFile("/proc/self/io")
+      try src.getLines().collectFirst {
+        case l if l.startsWith("rchar:") => l.drop(6).trim.toLong
+      }.getOrElse(0L)
+      finally src.close()
+    }
+
+    /** Times `f` (which returns the rows it produced) and prints one JSON
+      * row: the fixed fields, then `fields` (evaluated after `f`, outside
+      * the timed region). The counters cover exactly the jobs `f` ran:
+      * both flushes sit outside the timed region.
+      */
+    def time(section: String, name: String, factor: Int,
+        fields: => Seq[(String, Any)] = Nil)(f: => Long): ListMap[String, Any] = {
+      flush()
+      Seq(inRecords, inBytes, shufRecords, shufBytes).foreach(_.set(0L))
+      val rchar0 = rchar()
+      val cpu0 = Bench.osBean.getProcessCpuTime
+      val t0 = System.nanoTime()
+      val n = f
+      val wall = (System.nanoTime() - t0) / 1e9
+      val cpu = (Bench.osBean.getProcessCpuTime - cpu0) / 1e9
+      val read = rchar() - rchar0
+      flush()
+      val row = ListMap[String, Any]("probe" -> "scale", "section" -> section,
+        "name" -> name, "factor" -> factor, "rows" -> n, "wall_s" -> wall,
+        "cpu_s" -> cpu, "input_records" -> inRecords.get,
+        "input_bytes" -> inBytes.get, "shuffle_write_records" -> shufRecords.get,
+        "shuffle_write_bytes" -> shufBytes.get, "rchar_bytes" -> read) ++ fields
+      println(row.map { case (k, v) => s"${Bench.jstr(k)}:${json(v)}" }
+        .mkString("{", ",", "}"))
+      row
+    }
+
+    private def json(v: Any): String = v match {
+      case s: String => Bench.jstr(s)
+      case d: Double => Bench.r3(d)
+      case other => other.toString
+    }
+  }
 
   /** Runs the sections named in `only` (in source order) over the corpora
     * at `d`; every timed measurement prints one JSON row.
     */
   def run(spark: SparkSession, d: String, only: Set[String]): Unit = {
-    // the section a measurement belongs to: set as its block starts
+    val meter = new Meter(spark)
+    spark.sparkContext.addSparkListener(meter)
+    try sectionsOf(spark, d, only, meter)
+    finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  private def sectionsOf(spark: SparkSession, d: String, only: Set[String],
+      meter: Meter): Unit = {
+    // the section and replica factor a measurement belongs to: set as its
+    // block starts and as its ladder steps
     var section = ""
-    val want: String => Boolean = s => { if (only(s)) section = s; only(s) }
-    def time(name: String)(f: => Long): Unit = {
-      val cpu0 = Bench.osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      val n = f
-      println(s"""{"probe":"scale","section":${Bench.jstr(section)},""" +
-        s""""name":${Bench.jstr(name)},"rows":$n,""" +
-        s""""wall_s":${Bench.r3((System.nanoTime() - t0) / 1e9)},""" +
-        s""""cpu_s":${Bench.r3((Bench.osBean.getProcessCpuTime - cpu0) / 1e9)}}""")
+    var rung = 1
+    val want: String => Boolean = s => {
+      if (only(s)) { section = s; rung = 1 }
+      only(s)
     }
+    val factorOverride = sys.env.get("SPARK_GRAFT_PROBE_FACTORS")
+      .map(_.split(",").map(_.trim.toInt).toSeq)
+    def ladder(default: Int*)(body: Int => Unit): Unit =
+      for (f <- factorOverride.getOrElse(default)) { rung = f; body(f) }
+    def time(name: String, fields: => Seq[(String, Any)] = Nil)(f: => Long): Unit =
+      meter.time(section, name, rung, fields)(f)
     def materialize(df: DataFrame, path: String): DataFrame = {
       df.write.mode("overwrite").parquet(path)
       spark.read.parquet(path)
     }
-    if (want("session")) for (factor <- Seq(1, 4, 16, 64)) {
+    def delete(path: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    }
+    // a fresh catalog over a surviving warehouse dir refuses to write the
+    // orphaned location: drop the table AND its directory
+    def dropTable(t: String): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      delete(new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase).toString)
+    }
+    if (want("session")) ladder(1, 4, 16, 64) { factor =>
       val ev = materialize(eventsAt(spark, d, factor), s"/tmp/scale/sev$factor")
       time(s"sessionize ${factor}x (${100000 * factor} events)") {
         graft.operators.Sessionize.rollup(ev, Seq(col("user_id")),
@@ -116,7 +273,7 @@ object ScaleProbe {
     // Term statistics: disjoint-replica docs mean the vocabulary (and the
     // df/first-occurrence tables) grow with the corpus — the honest
     // stress: shuffle volume must track docs × distinct-terms-per-doc.
-    if (want("termstats")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("termstats")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
       time(s"tfidf-top-term ${factor}x (${5000 * factor} docs)") {
         graft.operators.TermStats.topTermPerDoc(docs, "doc_id", "text").count()
@@ -157,7 +314,7 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    if (want("minhash")) for (factor <- Seq(1, 4, 16)) {
+    if (want("minhash")) ladder(1, 4, 16) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
       time(s"minhash+lsh ${factor}x (${5000 * factor} docs)") {
         val sigs = TextDedup.minhashSignatures(docs, "doc_id", "text", 3, 16)
@@ -176,7 +333,7 @@ object ScaleProbe {
     // The maxBucket df-cap drops over-occupied buckets before the join
     // and holds the curve ~linear; the dropped mega-cluster is exactly
     // the population exact dedup (q11/q26/q100) collapses upstream.
-    if (want("lshskew")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("lshskew")) ladder(1, 4, 16, 64) { factor =>
       val boiler = "licensed under the creative commons attribution share " +
         "alike license additional terms may apply by using this site you " +
         "agree to the terms of use and privacy policy"
@@ -208,7 +365,7 @@ object ScaleProbe {
     // localThreshold choice with data: below the threshold union-find
     // wins outright; above it the iterative path now survives ANY
     // diameter instead of only near-cliques.
-    if (want("ccdiam")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("ccdiam")) ladder(1, 4, 16, 64) { factor =>
       val n = 5000L * factor
       val chain = materialize(
         spark.range(n - 1).select(col("id").as("a"), (col("id") + 1L).as("b")),
@@ -226,7 +383,7 @@ object ScaleProbe {
     // exchanges, so wall time must track events, never events² — the
     // disjoint-replica fixture keeps per-user event counts constant
     // while the user space grows, the 100 TB shape.
-    if (want("funnel")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("funnel")) ladder(1, 4, 16, 64) { factor =>
       val ev = materialize(eventsAt(spark, d, factor), s"/tmp/scale/fev$factor")
       time(s"funnel4 ${factor}x (${100000 * factor} events)") {
         graft.operators.Funnel.funnelN(ev, "user_id", "ts_us", "event_id",
@@ -244,7 +401,7 @@ object ScaleProbe {
     // by the DISTINCT-word table — the disjoint-replica prefixing grows
     // the vocabulary linearly with the corpus, the honest stress (a
     // Zipf corpus would grow it sublinearly).
-    if (want("prep")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("prep")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/prepdocs$factor")
       time(s"chunk-windows ${factor}x (${5000 * factor} docs)") {
         graft.operators.Chunk.tokenWindows(docs, "doc_id", "text", 24, 8).count()
@@ -295,7 +452,7 @@ object ScaleProbe {
     // other incremental family member (q102/q114/q58/q117) records.
     // Edges are deterministic sparse random (xxhash64 endpoints over a
     // 2×|edges| id space).
-    if (want("ccinc")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("ccinc")) ladder(1, 4, 16, 64) { factor =>
       val accN = 20000L * factor
       def edgesOf(n: Long, seed: Long) = spark.range(n).select(
         pmod(xxhash64(col("id") + lit(seed)), lit(2 * accN)).as("a"),
@@ -328,7 +485,7 @@ object ScaleProbe {
     // hold ~linear through 64×. Byte-identical images are what the
     // upstream exact hash dedup removes; the cap is the near-dup
     // stage's guard against the same population.
-    if (want("imagededup")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("imagededup")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/imdocs$factor")
       def hashes = graft.operators.Multimodal.dHashPpm(spark,
         graft.queries.LlmPipelines.renderedPpmOf(docs), "doc_id", "ppm")
@@ -354,7 +511,7 @@ object ScaleProbe {
     // collapse small frames into giant identical-fingerprint clusters),
     // multiplied by up to 4 frames per video — uncapped at 1× only, the
     // capped curve must track the corpus ~linearly.
-    if (want("videodedup")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("videodedup")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/viddocs$factor")
       def fps = graft.operators.Multimodal.videoDHash(spark,
         graft.queries.LlmPipelines.renderedP6StreamOf(docs), "doc_id", "video")
@@ -380,51 +537,6 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    // q142/q144 first-wins A/B (r13 verdict #4): the registered form is
-    // a rank window over partitionBy(keyframe_dhash) feeding
-    // sum(rn = 1) — InferWindowGroupLimit cannot prune it, so an
-    // identical-fingerprint mega-cluster sorts in ONE window partition.
-    // The candidate is the q100 agg-twin shape: map-side-combinable
-    // groupBy(kd).agg(min(struct(id, scene))) for the owners + a count
-    // rollup + join-back. Keyframes are MATERIALIZED first so the A/B
-    // measures the rollup, not the decode. Measure before switching —
-    // two r13 "obvious" fixes benched slower.
-    if (want("kfnovel")) for (factor <- Seq(1, 4, 16, 64)) {
-      val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/kfn$factor")
-      val kf = materialize(graft.operators.Multimodal.keyframes(spark,
-          graft.queries.LlmPipelines.renderedP6StreamOf(docs),
-          "doc_id", "video", minHamming = 8),
-        s"/tmp/scale/kfnkf$factor")
-      import org.apache.spark.sql.expressions.Window
-      def formW = kf
-        .withColumn("__rn", row_number().over(Window
-          .partitionBy(col("keyframe_dhash"))
-          .orderBy(col("id").asc, col("scene").asc)))
-        .groupBy(col("id"))
-        .agg(count(lit(1)).as("n_scenes"),
-          sum(when(col("__rn") === 1, 1L).otherwise(0L)).as("novel_scenes"))
-      def formA = {
-        val owners = kf
-          .groupBy(col("keyframe_dhash"))
-          .agg(min(struct(col("id"), col("scene"))).as("f"))
-          .groupBy(col("f.id").as("id"))
-          .agg(count(lit(1)).as("novel_scenes"))
-        kf.groupBy(col("id")).agg(count(lit(1)).as("n_scenes"))
-          .join(owners, Seq("id"), "left_outer")
-          .select(col("id"), col("n_scenes"),
-            coalesce(col("novel_scenes"), lit(0L)).as("novel_scenes"))
-      }
-      def force(df: DataFrame): Long =
-        df.agg(sum(col("n_scenes") * 7 + col("novel_scenes")))
-          .head().getLong(0)
-      val (a, b) = (force(formW), force(formA))
-      require(a == b, s"window/agg novelty forms disagree: $a vs $b")
-      time(s"kfnovel-window ${factor}x (${kf.count()} keyframes)") {
-        force(formW)
-      }
-      time(s"kfnovel-aggjoin ${factor}x") { force(formA) }
-      spark.catalog.clearCache()
-    }
     // Distributed PageRank (r13 verdict #5): the per-group form holds a
     // whole city's edge list in ONE executor thread — heap and wall
     // both track the biggest city. The aggregate-messages form's
@@ -435,16 +547,16 @@ object ScaleProbe {
     // thread); distributed rounds spread — and the fixed ~0.4 s/round
     // planning+scheduling floor (the q120 cost class) amortizes as the
     // graph grows.
-    if (want("prdist")) for (factor <- Seq(1, 4, 16)) {
+    def megaCity(factor: Int, path: String): DataFrame = {
       val base = graft.queries.Graphs.edges(spark, d)
-        .withColumn("city", col("city").cast("string"))
-      val mega = materialize(
-        (0 until factor).map { i =>
+      materialize(replicas(factor) { i =>
           base.select(lit("mega").as("city"),
             concat(col("src"), lit("#" + i)).as("src"),
             concat(col("dst"), lit("#" + i)).as("dst"), col("w"))
-        }.reduce(_ unionByName _),
-        s"/tmp/scale/prdist$factor")
+        }, path)
+    }
+    if (want("prdist")) ladder(1, 4, 16) { factor =>
+      val mega = megaCity(factor, s"/tmp/scale/prdist$factor")
       val m = mega.count()
       time(s"prdist-pergroup ${factor}x ($m edges, one city)") {
         graft.operators.GraphMetrics.perCityPagerank(mega).count()
@@ -460,35 +572,23 @@ object ScaleProbe {
     // CSR. Brandes is quadratic-ish, so the per-group side is probed
     // only at 1× (already minutes-scale beyond it) while the
     // distributed side also runs 4× to show its own scaling.
-    if (want("bwdist")) {
-      val base = graft.queries.Graphs.edges(spark, d)
-        .withColumn("city", col("city").cast("string"))
-      def mega(factor: Int) = materialize(
-        (0 until factor).map { i =>
-          base.select(lit("mega").as("city"),
-            concat(col("src"), lit("#" + i)).as("src"),
-            concat(col("dst"), lit("#" + i)).as("dst"), col("w"))
-        }.reduce(_ unionByName _),
-        s"/tmp/scale/bwdist$factor")
-      val g1 = mega(1)
-      val m1 = g1.count()
-      time(s"bwdist-pergroup 1x ($m1 edges, one city)") {
-        graft.operators.GraphMetrics.perCityBetweenness(g1).count()
-      }
-      time(s"bwdist-distributed 1x ($m1 edges, one city)") {
-        graft.operators.GraphMetrics.betweennessDistributed(g1).count()
-      }
-      val g4 = mega(4)
-      val m4 = g4.count()
-      time(s"bwdist-distributed 4x ($m4 edges, one city)") {
-        graft.operators.GraphMetrics.betweennessDistributed(g4).count()
+    if (want("bwdist")) ladder(1, 4) { factor =>
+      val g = megaCity(factor, s"/tmp/scale/bwdist$factor")
+      val m = g.count()
+      if (factor <= 1)
+        time(s"bwdist-pergroup ${factor}x ($m edges, one city)") {
+          graft.operators.GraphMetrics.perCityBetweenness(g).count()
+        }
+      time(s"bwdist-distributed ${factor}x ($m edges, one city)") {
+        graft.operators.GraphMetrics.betweennessDistributed(g).count()
       }
       // the documented escape past exact betweenness: ~1/4 of the
       // source passes through the identical machinery — wall should
       // track the sample fraction at the same graph size
-      time(s"bwdist-sampled(1/4) 4x ($m4 edges, one city)") {
-        graft.operators.GraphMetrics.betweennessSampled(g4).count()
-      }
+      if (factor > 1)
+        time(s"bwdist-sampled(1/4) ${factor}x ($m edges, one city)") {
+          graft.operators.GraphMetrics.betweennessSampled(g).count()
+        }
       spark.catalog.clearCache()
     }
     // r14 codec family (PNG inflate+unfilter, JPEG Huffman+IDCT, MP4
@@ -496,7 +596,7 @@ object ScaleProbe {
     // must track corpus size ~linearly — the same claim audioprep pins
     // for WAV. Render is measured WITH decode (the fixture pipeline),
     // as in every media probe.
-    if (want("codecprep")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("codecprep")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/cp$factor")
       time(s"png-decode ${factor}x (${5000 * factor} images)") {
         graft.operators.Multimodal.pngPixelStats(spark,
@@ -525,7 +625,7 @@ object ScaleProbe {
     // arithmetic is one clip-keyed exchange, so wall time must track
     // corpus size ~linearly; replica prefixing grows clip LENGTH too
     // (longer texts → more windows per clip).
-    if (want("audioprep")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("audioprep")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/audocs$factor")
       def wavs = graft.queries.LlmPipelines.renderedWavOf(docs)
       time(s"audio-stats ${factor}x (${5000 * factor} clips)") {
@@ -546,95 +646,61 @@ object ScaleProbe {
     // literals and bucket pruning reads only the touched buckets. The
     // metric that matters is scanned FILES/BYTES: flat grows with the
     // corpus, pruned is bounded by min(buckets, batch distinct values).
-    if (want("bucketreg")) {
-      // Ground-truth I/O per lookup: task-level input metrics (the scan
-      // exec's numFiles/filesSize accumulators only post to the UI
-      // store, not to the plan's local accumulator objects — measured).
-      val ioBytes = new java.util.concurrent.atomic.AtomicLong
-      val ioRecords = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (t.taskMetrics != null) {
-            ioBytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-            ioRecords.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-            ()
+    // Records read come from task-level input metrics (the scan exec's
+    // numFiles/filesSize accumulators only post to the UI store, not to
+    // the plan's local accumulator objects — measured).
+    //
+    // Synthetic registry of DISTINCT fingerprints (Knuth-hash spread):
+    // this probe measures the REGISTRY READ, so the registry must grow
+    // with the factor — the replica-image fixture's fingerprints
+    // collapse into a few thousand distinct values and would make
+    // every factor the same lookup.
+    // Bucket count 1024, batches of 32 and 500 distinct values: the
+    // pruning factor is selectedBuckets/totalBuckets ≈ min(1,
+    // |batch|/buckets), so the BUCKETS ≫ BATCH sizing rule is the
+    // finding this probe demonstrates (the first cut used 64 buckets
+    // against a 500-value batch — every bucket was touched and the
+    // "pruned" path read MORE than flat).
+    if (want("bucketreg")) ladder(1, 4, 16, 64) { factor =>
+      val buckets = 1024
+      val regRows = 200000L * factor
+      val flatPath = s"/tmp/scale/bktflat$factor"
+      spark.range(regRows)
+        .select((col("id") * 2654435761L + 12345L).as("dhash"))
+        .repartition(64).write.mode("overwrite").parquet(flatPath)
+      val tbl = s"scale_bkt_reg_$factor"
+      dropTable(tbl)
+      graft.sources.Bucketing.writeBucketed(
+        spark.read.parquet(flatPath), tbl, buckets, "dhash")
+      for (batchN <- Seq(32, 500)) {
+        val batchValues = (0 until batchN)
+          .map(i => i.toLong * 397 * 2654435761L + 12345L).toArray
+        val batchDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            batchValues.toIndexedSeq.map(org.apache.spark.sql.Row(_)), 4),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("dhash",
+              org.apache.spark.sql.types.LongType))))
+        val shape = s"${factor}x ($regRows-row registry, $batchN-value batch, $buckets buckets)"
+        time(s"bucketreg flat $shape") {
+          spark.read.parquet(flatPath)
+            .join(batchDf, Seq("dhash"), "left_semi").count()
+        }
+        time(s"bucketreg pruned $shape") {
+          graft.sources.Bucketing.withForcedBucketedScan(spark) {
+            graft.streaming.Incremental.bucketedDhashLookup(
+              spark, tbl, batchValues).count()
           }
         }
       }
-      spark.sparkContext.addSparkListener(listener)
-      def measured(f: => Long): (Long, Long, Long) = {
-        Thread.sleep(300) // drain stragglers from the previous block
-        ioBytes.set(0L); ioRecords.set(0L)
-        val n = f
-        Thread.sleep(500) // listener bus is async; let task-ends land
-        (n, ioBytes.get(), ioRecords.get())
-      }
-      // Synthetic registry of DISTINCT fingerprints (Knuth-hash spread):
-      // this probe measures the REGISTRY READ, so the registry must grow
-      // with the factor — the replica-image fixture's fingerprints
-      // collapse into a few thousand distinct values and would make
-      // every factor the same lookup.
-      // Bucket count 1024, batches of 32 and 500 distinct values: the
-      // pruning factor is selectedBuckets/totalBuckets ≈ min(1,
-      // |batch|/buckets), so the BUCKETS ≫ BATCH sizing rule is the
-      // finding this probe demonstrates (the first cut used 64 buckets
-      // against a 500-value batch — every bucket was touched and the
-      // "pruned" path read MORE than flat).
-      val BKTS = 1024
-      for (factor <- Seq(1, 4, 16, 64)) {
-        val regRows = 200000L * factor
-        val flatPath = s"/tmp/scale/bktflat$factor"
-        spark.range(regRows)
-          .select((col("id") * 2654435761L + 12345L).as("dhash"))
-          .repartition(64).write.mode("overwrite").parquet(flatPath)
-        val tbl = s"scale_bkt_reg_$factor"
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new java.io.File(new java.net.URI(
-          spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-        }
-        if (loc.exists()) rm(loc)
-        graft.sources.Bucketing.writeBucketed(
-          spark.read.parquet(flatPath), tbl, BKTS, "dhash")
-        for (batchN <- Seq(32, 500)) {
-          val batchValues = (0 until batchN)
-            .map(i => i.toLong * 397 * 2654435761L + 12345L).toArray
-          val batchDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              batchValues.toIndexedSeq.map(org.apache.spark.sql.Row(_)), 4),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("dhash",
-                org.apache.spark.sql.types.LongType))))
-          val t0 = System.nanoTime()
-          val (n1, b1, r1) = measured {
-            spark.read.parquet(flatPath)
-              .join(batchDf, Seq("dhash"), "left_semi").count()
-          }
-          val tFlat = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val (n2, b2, r2) = measured {
-            graft.sources.Bucketing.withForcedBucketedScan(spark) {
-              graft.streaming.Incremental.bucketedDhashLookup(
-                spark, tbl, batchValues).count()
-            }
-          }
-          val tBkt = (System.nanoTime() - t1) / 1e9
-          println(f"[scale] bucketreg ${factor}x ($regRows-row registry, $batchN-value batch, $BKTS buckets): " +
-            f"flat $n1 hits, $b1 bytes / $r1 records, $tFlat%.2f s; " +
-            f"pruned $n2 hits, $b2 bytes / $r2 records, $tBkt%.2f s")
-        }
-        spark.sql(s"DROP TABLE $tbl")
-        spark.catalog.clearCache()
-      }
-      spark.sparkContext.removeSparkListener(listener)
+      spark.sql(s"DROP TABLE $tbl")
+      spark.catalog.clearCache()
     }
     // Fixed plane count: bucket occupancy (and thus the candidate count)
     // grows linearly with the corpus while queries also grow — quadratic
     // candidate work. Scaling planes with log2(N) keeps occupancy
     // constant, which is the production tuning rule this run demonstrates.
-    if (want("ann")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("ann")) ladder(1, 4, 16, 64) { factor =>
       val emb = materialize(embAt(spark, d, factor), s"/tmp/scale/emb$factor")
       val logPlanes = 8 + (math.log(factor) / math.log(2)).round.toInt / 2 * 2
       for (planes <- Seq(8, logPlanes).distinct) {
@@ -649,7 +715,7 @@ object ScaleProbe {
     // bin range join are keyed shuffles, so wall time should track rows,
     // not rows².
     val sixHoursUs = 6L * 3600 * 1000000
-    if (want("temporal")) for (factor <- Seq(1, 4, 16)) {
+    if (want("temporal")) ladder(1, 4, 16) { factor =>
       val ev = materialize(eventsAt(spark, d, factor), s"/tmp/scale/ev$factor")
       time(s"asof ${factor}x (${100000 * factor} events)") {
         val clicks = ev.filter(col("event_type") === "click")
@@ -672,7 +738,7 @@ object ScaleProbe {
     // Packing: fixed shard count serializes per-shard streams as the
     // corpus grows; scaling shards with the corpus (constant docs/shard)
     // is the production rule, mirroring the ANN plane-count rule.
-    if (want("packing")) for (factor <- Seq(1, 4, 16)) {
+    if (want("packing")) ladder(1, 4, 16) { factor =>
       val docs = materialize(
         docsAt(spark, d, factor).withColumn("n_chars", length(col("text"))),
         s"/tmp/scale/packdocs$factor")
@@ -689,12 +755,12 @@ object ScaleProbe {
     // queries unchanged. Dimension-side cardinality stays fixed (suppliers/
     // days grow slower than facts in reality), so group depth rises with
     // the factor — the honest stress for the agg/join/window families.
-    if (want("relational")) for (factor <- Seq(1, 4, 16)) {
+    if (want("relational")) ladder(1, 4, 16) { factor =>
       val dir = s"/tmp/scale/rel$factor"
       val shift = 10000000L
       def rep(name: String, fix: (DataFrame, Int) => DataFrame): Unit = {
         val base = Tables(spark, d, name)
-        val all = (0 until factor).map(i => fix(base, i)).reduce(_ unionByName _)
+        val all = replicas(factor)(fix(base, _))
         all.write.mode("overwrite").parquet(s"$dir/$name.parquet")
       }
       rep("lineitem", (t, i) => t.withColumn("l_orderkey", col("l_orderkey") + i * shift))
@@ -713,7 +779,7 @@ object ScaleProbe {
     // populations after) — its wall should stay within ~10-20% of the
     // fold-path run, NOT ~2x, proving the census no longer re-executes
     // the corpus assignment.
-    if (want("kmeans")) for (factor <- Seq(1, 4, 16)) {
+    if (want("kmeans")) ladder(1, 4, 16) { factor =>
       val emb = materialize(embAt(spark, d, factor), s"/tmp/scale/emb$factor")
       val seeds = emb.filter(col("vec_id") % 1000000L < 8)
       time(s"kmeans fold path ${factor}x (${2000 * factor} vecs, 5 iters)") {
@@ -732,7 +798,7 @@ object ScaleProbe {
     // candidate count, so their wall ratio is the per-candidate
     // arithmetic ratio once candidates dominate. IVF-PQ adds cell pruning
     // on top: candidates shrink to the query cells' population.
-    if (want("pq")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("pq")) ladder(1, 4, 16, 64) { factor =>
       val emb = materialize(embAt(spark, d, factor), s"/tmp/scale/emb$factor")
       val queries = col("vec_id") % 1000000L < 20
       time(s"pq-encode ${factor}x (${2000 * factor} vecs)") {
@@ -780,7 +846,7 @@ object ScaleProbe {
     // operator ships the window form.
     // The jsonlines DSv2 connector's (columnar) read path, full scan and
     // pruned+filtered. Two reps: rep 1 pays page-cache warmup, read rep 2.
-    if (want("jsonlines")) for (factor <- Seq(1, 4, 16)) {
+    if (want("jsonlines")) ladder(1, 4, 16) { factor =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val dir = s"/tmp/scale/jsonl$factor"
       docsAt(spark, d, factor)
@@ -827,7 +893,7 @@ object ScaleProbe {
     // epoch fold in `sinkbig` — the cadence lever, not a free lunch.
     // Alternating reps (the q32 lesson): rep 1 warms the page cache for
     // both layouts, read rep 2.
-    if (want("tiered")) for (factor <- Seq(1, 4, 16)) {
+    if (want("tiered")) ladder(1, 4, 16) { factor =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType), StructField("n_chars", LongType)))
@@ -840,11 +906,7 @@ object ScaleProbe {
       val tierDir = s"/tmp/scale/tier_base$factor"
       // clean slate: overwrite mode truncates jsonl data files but knows
       // nothing about a previous run's _base-<n> dirs
-      for (dir <- Seq(flatDir, tierDir)) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (hfs.exists(p)) hfs.delete(p, true)
-      }
+      Seq(flatDir, tierDir).foreach(delete)
       // layout A: the whole corpus + fresh batch live as jsonl tail
       corpus.write.format("jsonlines").mode("overwrite").save(flatDir)
       fresh.write.format("jsonlines").mode("append").save(flatDir)
@@ -877,7 +939,7 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    if (want("spandedup")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("spandedup")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(
         docsAt(spark, d, factor).select(col("doc_id"),
           when(col("doc_id") % 2 === 0,
@@ -927,12 +989,7 @@ object ScaleProbe {
             graft.functions.Text.tokens(col("text")), 3)).as("blk"))
           .distinct(),
         s"/tmp/scale/spanreg$factor")
-      val batch = materialize(
-        docsAt(spark, d, 1).select((col("doc_id") + 900000000L).as("doc_id"),
-          when(col("doc_id") % 2 === 1,
-            regexp_replace(col("text"), "(\\S+)", "nv_$1"))
-            .otherwise(col("text")).as("text")),
-        s"/tmp/scale/spanbatch$factor")
+      val batch = materialize(batchAt(spark, d), s"/tmp/scale/spanbatch$factor")
       time(s"span-dedup incremental batch-vs-registry ${factor}x corpus") {
         force(TextDedup.spanDedupAgainst(batch, registry, "doc_id", "text", 3))
       }
@@ -951,7 +1008,7 @@ object ScaleProbe {
     // count. The top-N vocab AGGREGATION that feeds training is the one
     // corpus-proportional stage (a groupBy over the token stream) and is
     // timed separately so the flat-training claim isn't polluted by it.
-    if (want("bpe")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("bpe")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/bpedocs$factor")
       val toks = docs.select(explode(
         graft.functions.Text.tokens(col("text"))).as("w"))
@@ -986,7 +1043,7 @@ object ScaleProbe {
     // score cost is the broadcast join + doc rollup — both linear, no
     // knee. Target stays FIXED (the 1× src0-like slice): the deployment
     // shape is a small quality corpus steering an ever-growing pool.
-    if (want("dsir")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("dsir")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/dsird$factor")
       // target = 250 docs of replica 0 ONLY (ids < 250): genuinely fixed
       // across factors — `% 1000000 < 250` would take 250 docs from EVERY
@@ -1009,7 +1066,7 @@ object ScaleProbe {
     }
     // Span corruption + packing: one doc-keyed shuffle for the examples,
     // one shard-keyed shuffle for the packer — both linear in the corpus.
-    if (want("spancorrupt")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("spancorrupt")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/scd$factor")
       time(s"span-corrupt examples ${factor}x corpus") {
         graft.operators.SpanCorrupt.examples(docs, "doc_id", "text", 150)
@@ -1033,13 +1090,8 @@ object ScaleProbe {
     if (want("substr")) {
      // the incoming batch is factor-INDEPENDENT by contract (the fixed
      // 1×-sized epoch); materialize it once, not per tier
-     val batch = materialize(
-       docsAt(spark, d, 1).select((col("doc_id") + 900000000L).as("doc_id"),
-         when(col("doc_id") % 2 === 1,
-           regexp_replace(col("text"), "(\\S+)", "nv_$1"))
-           .otherwise(col("text")).as("text")),
-       s"/tmp/scale/subbatch")
-     for (factor <- Seq(1, 4, 16, 64)) {
+     val batch = materialize(batchAt(spark, d), s"/tmp/scale/subbatch")
+     ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/sub$factor")
       def force(out: DataFrame): Long =
         out.agg(sum(col("n_removed")), sum(length(col("new_text"))))
@@ -1074,30 +1126,7 @@ object ScaleProbe {
     // full every batch (grows ∝ corpus), the bucketed one contributes
     // zero shuffle rows (per-batch shuffle tracks the BATCH).
     if (want("gramreg")) {
-      val shufRecords = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (t.taskMetrics != null) {
-            shufRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-            ()
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      def measured(f: => Long): (Long, Long) = {
-        Thread.sleep(300) // drain stragglers from the previous block
-        shufRecords.set(0L)
-        val n = f
-        Thread.sleep(500) // listener bus is async; let task-ends land
-        (n, shufRecords.get())
-      }
-      val batch = materialize(
-        docsAt(spark, d, 1).select((col("doc_id") + 900000000L).as("doc_id"),
-          when(col("doc_id") % 2 === 1,
-            regexp_replace(col("text"), "(\\S+)", "nv_$1"))
-            .otherwise(col("text")).as("text")),
-        s"/tmp/scale/gramregbatch")
+      val batch = materialize(batchAt(spark, d), s"/tmp/scale/gramregbatch")
       def force(out: DataFrame): Long =
         out.agg(sum(col("n_removed")), sum(length(col("new_text"))))
           .head().getLong(0)
@@ -1107,71 +1136,57 @@ object ScaleProbe {
       val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        for (factor <- Seq(1, 4, 16, 64)) {
+        ladder(1, 4, 16, 64) { factor =>
           val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/gr$factor")
-          val regDf = docs.select(explode(graft.functions.Text.shingles(
-              graft.functions.Text.tokens(col("text")), 6)).as("gram"))
-            .distinct()
           val flatPath = s"/tmp/scale/grflat$factor"
-          regDf.write.mode("overwrite").parquet(flatPath)
+          docs.select(explode(graft.functions.Text.shingles(
+              graft.functions.Text.tokens(col("text")), 6)).as("gram"))
+            .distinct().write.mode("overwrite").parquet(flatPath)
           val tbl = s"scale_gram_reg_$factor"
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val loc = new java.io.File(new java.net.URI(
-            spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-          }
-          if (loc.exists()) rm(loc)
+          dropTable(tbl)
           graft.sources.Bucketing.writeBucketed(
             spark.read.parquet(flatPath), tbl, 64, "gram")
           val regRows = spark.read.parquet(flatPath).count()
-          val t0 = System.nanoTime()
-          val (n1, s1) = measured {
-            force(TextDedup.substringExciseAgainst(batch,
-              spark.read.parquet(flatPath), "doc_id", "text", 6))
+          // the registry-side exchange is the one a bucketed layout
+          // removes: each row carries its plan's exchange count
+          def excise(bucketed: Boolean) = TextDedup.substringExciseAgainst(batch,
+            if (bucketed) spark.table(tbl).select(col("gram"))
+            else spark.read.parquet(flatPath), "doc_id", "text", 6)
+          def exchanges(bucketed: Boolean) = Seq("exchanges" ->
+            graft.sources.Bucketing.withForcedBucketedScan(spark) {
+              graft.sources.Bucketing.countShuffles(excise(bucketed))
+            })
+          var flat, bucketed = 0L
+          time(s"gramreg flat ${factor}x ($regRows-gram registry)", exchanges(false)) {
+            flat = force(excise(false)); flat
           }
-          val tFlat = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val (n2, s2) = graft.sources.Bucketing.withForcedBucketedScan(spark) {
-            measured {
-              force(TextDedup.substringExciseAgainst(batch,
-                spark.table(tbl).select(col("gram")), "doc_id", "text", 6))
+          time(s"gramreg bucketed ${factor}x ($regRows-gram registry)", exchanges(true)) {
+            bucketed = graft.sources.Bucketing.withForcedBucketedScan(spark) {
+              force(excise(true))
             }
+            bucketed
           }
-          val tBkt = (System.nanoTime() - t1) / 1e9
-          require(n1 == n2, s"flat/bucketed excision disagree: $n1 vs $n2")
-          // plan-asserted once per factor: exactly the registry-side
-          // exchange is gone
-          val (sF, sB) = graft.sources.Bucketing.withForcedBucketedScan(spark) {
-            (graft.sources.Bucketing.countShuffles(
-              TextDedup.substringExciseAgainst(batch,
-                spark.read.parquet(flatPath), "doc_id", "text", 6)),
-             graft.sources.Bucketing.countShuffles(
-              TextDedup.substringExciseAgainst(batch,
-                spark.table(tbl).select(col("gram")), "doc_id", "text", 6)))
-          }
-          println(f"[scale] gramreg ${factor}x ($regRows-gram registry): " +
-            f"flat $s1 shuffle records, $tFlat%.2f s ($sF exchanges); " +
-            f"bucketed $s2 shuffle records, $tBkt%.2f s ($sB exchanges)")
+          require(flat == bucketed, s"flat/bucketed excision disagree: $flat vs $bucketed")
           spark.sql(s"DROP TABLE $tbl")
           graft.Caches.clearAll(spark)
         }
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
-    if (want("pqtrain")) for (factor <- Seq(1, 4)) {
+    if (want("pqtrain")) ladder(1, 4) { factor =>
       val emb = materialize(embAt(spark, d, factor), s"/tmp/scale/emb$factor")
       val queries = col("vec_id") % 1000000L < 20
       val exact = materialize(
         Similarity.bruteForceTopK(emb, emb.filter(queries),
           "vec_id", "embedding", k = 10).select(col("qid"), col("cid")),
         s"/tmp/scale/pqexact$factor")
+      val truth = exact.count()
       def recall(adc: DataFrame, name: String): Unit = {
-        val hit = adc.select(col("qid"), col("cid"))
-          .join(exact, Seq("qid", "cid")).count()
-        println(f"[scale] $name recall@10 = ${hit.toDouble / exact.count()}%.3f")
+        var hit = 0L
+        time(s"$name recall@10", Seq("recall_at_10" -> hit.toDouble / truth)) {
+          hit = adc.select(col("qid"), col("cid"))
+            .join(exact, Seq("qid", "cid")).count()
+          hit
+        }
       }
       recall(Similarity.pqAdcTopK(emb, "vec_id", "embedding", queries, k = 10),
         s"adc-md5-codebooks ${factor}x")
@@ -1186,54 +1201,35 @@ object ScaleProbe {
       spark.catalog.clearCache()
     }
     // Bloom semi-join reduction (q85): the claim is SHUFFLE BYTES, not
-    // wall — measure both. A listener sums shuffle write volume across
-    // the stages of each run; the contamination pipeline joins the huge
-    // corpus shingle stream against a small probe, so the gate should cut
-    // the corpus side's exchange to ~the contaminated fraction while the
-    // results stay bit-identical (q85's oracle IS q61's).
-    if (want("prune")) {
-      val bytes = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    // wall — each row carries both. The contamination pipeline joins the
+    // huge corpus shingle stream against a small probe, so the gate
+    // should cut the corpus side's exchange to ~the contaminated fraction
+    // while the results stay bit-identical (q85's oracle IS q61's).
+    //
+    // Fixture shape matters: probe = replica 0, corpus = the OTHER
+    // replicas (disjoint shingle spaces by construction) + a 2% slice
+    // of replica 0 as the planted leak. The gate can then kill
+    // ~(factor−1)/factor of the corpus shingle stream before the
+    // exchange — the production shape, where a few thousand eval docs
+    // probe a training corpus that mostly does not contain them. (A
+    // first cut probed dense same-corpus splits: near-total shingle
+    // overlap left nothing to prune — the gate only earns its bloom
+    // when the non-matching fraction dominates, which is the point.)
+    if (want("prune")) ladder(4, 16) { factor =>
+      val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
+      val probe = docs.filter(col("doc_id") < 1000000L)
+      val corpus = docs.filter(col("doc_id") >= 1000000L)
+        .unionByName(docs.filter(col("doc_id") < 1000000L &&
+          col("doc_id") % 50 === 0))
+      time(s"contamination-plain ${factor}x (${5000 * factor} docs)") {
+        TextDedup.contaminationAgainst(probe, corpus, "doc_id", "text",
+          k = 5).count()
       }
-      spark.sparkContext.addSparkListener(listener)
-      def measured(name: String)(f: => Long): Unit = {
-        Thread.sleep(800) // let prior stage-completed events drain (the bus
-        bytes.set(0L)     // has no public flush; diagnostics-grade accuracy)
-        val t0 = System.nanoTime()
-        val n = f
-        Thread.sleep(800)
-        println(f"[scale] $name -> $n rows, ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
-          f"${bytes.get / 1048576.0}%.1f MiB shuffled")
+      time(s"contamination-bloom ${factor}x") {
+        TextDedup.contaminationAgainst(probe, corpus, "doc_id", "text",
+          k = 5, bloomPrune = Some((1000000L, 1L << 23))).count()
       }
-      // Fixture shape matters: probe = replica 0, corpus = the OTHER
-      // replicas (disjoint shingle spaces by construction) + a 2% slice
-      // of replica 0 as the planted leak. The gate can then kill
-      // ~(factor−1)/factor of the corpus shingle stream before the
-      // exchange — the production shape, where a few thousand eval docs
-      // probe a training corpus that mostly does not contain them. (A
-      // first cut probed dense same-corpus splits: near-total shingle
-      // overlap left nothing to prune — the gate only earns its bloom
-      // when the non-matching fraction dominates, which is the point.)
-      for (factor <- Seq(4, 16)) {
-        val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
-        val probe = docs.filter(col("doc_id") < 1000000L)
-        val corpus = docs.filter(col("doc_id") >= 1000000L)
-          .unionByName(docs.filter(col("doc_id") < 1000000L &&
-            col("doc_id") % 50 === 0))
-        measured(s"contamination-plain ${factor}x (${5000 * factor} docs)") {
-          TextDedup.contaminationAgainst(probe, corpus, "doc_id", "text",
-            k = 5).count()
-        }
-        measured(s"contamination-bloom ${factor}x") {
-          TextDedup.contaminationAgainst(probe, corpus, "doc_id", "text",
-            k = 5, bloomPrune = Some((1000000L, 1L << 23))).count()
-        }
-        spark.catalog.clearCache()
-      }
-      spark.sparkContext.removeSparkListener(listener)
+      spark.catalog.clearCache()
     }
     // Sketch family (q82/q83) vs the exact forms they stand in for. The
     // exact heavy-hitter count shuffles every distinct key; the CMS path
@@ -1242,7 +1238,7 @@ object ScaleProbe {
     // (locally both are scan-bound; on a cluster the exact form's shuffle
     // grows with the key space while the sketch's does not). Same for
     // per-day distinct: count(distinct) vs the k-bounded KMV buffer.
-    if (want("sketch")) for (factor <- Seq(1, 4, 16)) {
+    if (want("sketch")) ladder(1, 4, 16) { factor =>
       val ev = materialize(eventsAt(spark, d, factor), s"/tmp/scale/sev$factor")
         .withColumn("day", expr("ts_us div 86400000000"))
       time(s"cms-build+estimate ${factor}x (${100000 * factor} events)") {
@@ -1264,23 +1260,22 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    // Sink/driver family (q76/q78) on replica-scaled RAW event tables, run
-    // through the registered queries unchanged. appendSeries is one
-    // explicit repartition on the doc key → wall ∝ rows. The chunked
-    // parquet driver rewrites the WHOLE sink per chunk (read + union +
-    // dedup + full rewrite — the documented parquet stand-in for
-    // table-format MERGE), so its wall is O(chunks × final sink size);
-    // this curve is what locates the crossover where Delta/Iceberg MERGE
-    // becomes mandatory (see SCALE.md's sink section for the rule).
-    if (want("sinks")) for (factor <- Seq(1, 4, 16)) {
+    // Sink/driver family (q76/q78/q91) on replica-scaled RAW event
+    // tables, run through the registered queries unchanged. appendSeries
+    // is one explicit repartition on the doc key → wall ∝ rows. The
+    // chunked driver appends one O(chunk) delta per chunk and folds the
+    // whole sink once per epoch (q78's delta-log sink); q91's
+    // height-bucketed sink merges only the buckets each chunk touches. At
+    // this bootstrap scale the sink never outgrows one epoch's input;
+    // `sinkbig` measures the regime where it does.
+    if (want("sinks")) ladder(1, 4, 16) { factor =>
       val dir = s"/tmp/scale/sink$factor"
       val base = Tables(spark, d, "events")
       val ninetyDaysNs = 90L * 86400 * 1000000000L
-      (0 until factor).map(i => base
+      replicas(factor)(i => base
           .withColumn("event_id", col("event_id") + i * 100000000L)
           .withColumn("user_id", col("user_id") + i * 1000000L)
           .withColumn("ts", col("ts") + i * ninetyDaysNs))
-        .reduce(_ unionByName _)
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       for (name <- Seq("q76_append_series", "q78_incremental_driver",
           "q91_partitioned_driver")) {
@@ -1294,35 +1289,18 @@ object ScaleProbe {
     // steady-state follower the height-bucketed sink exists for. The
     // bootstrap-scale "sinks" section honestly measures q91 SLOWER than
     // the delta-log because there the sink never exceeds one epoch; here
-    // a 64-epoch sink (6.4M docs) is PRE-MATERIALIZED in both layouts and
-    // ONE 100k-row epoch (5 chunks, first chunk overlapping the tail
-    // bucket as a redelivery) runs through each form. Wall is noisy on
-    // this host (±40%, see SCALE.md); INPUT BYTES READ is the structural
-    // signal: the bucketed form must read O(touched buckets) per chunk
-    // while the delta fold reads the whole sink once per epoch.
+    // a sink of `factor` epochs (64 and 256 by default: 6.4M and 25.6M
+    // docs) is PRE-MATERIALIZED in both layouts and ONE 100k-row epoch
+    // (5 chunks, first chunk overlapping the tail bucket as a redelivery)
+    // runs through each form. Wall is noisy on this host (±40%, see
+    // SCALE.md); BYTES READ (`rchar_bytes`) is the structural signal: the
+    // bucketed form must read O(touched buckets) per chunk while the
+    // delta fold reads the whole sink once per epoch. Spark's input
+    // metrics showed < 1 MiB for a 243 MiB full scan of this sink, and
+    // rchar includes non-parquet reads (jars, shuffle spill), so the
+    // calibration row anchors what a true full-sink scan costs in the
+    // same units.
     if (want("sinkbig")) {
-      // Bytes read are counted at the PROCESS layer (/proc/self/io rchar:
-      // every read syscall of this JVM — local[32] is one process, so all
-      // executor threads' parquet reads land here, page-cached or not).
-      // Spark's own counters both underreport this workload: stage-level
-      // taskMetrics.inputMetrics and Hadoop's global FileSystem statistics
-      // each showed < 1 MiB for a 243 MiB full scan. rchar includes
-      // non-parquet reads (jars, shuffle spill), so the calibration line
-      // below anchors what a true full-sink scan costs in the same units.
-      def rchar(): Long = {
-        val src = scala.io.Source.fromFile("/proc/self/io")
-        try src.getLines().collectFirst {
-          case l if l.startsWith("rchar:") => l.drop(6).trim.toLong
-        }.getOrElse(0L)
-        finally src.close()
-      }
-      def measured(name: String)(f: => Unit): Unit = {
-        val b0 = rchar()
-        val t0 = System.nanoTime()
-        f
-        println(f"[scale] $name -> ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
-          f"${(rchar() - b0) / 1048576.0}%.1f MiB read")
-      }
       import graft.operators.Merge
       val width = 20000L
       def shape(ids: DataFrame) = ids.select(
@@ -1330,9 +1308,9 @@ object ScaleProbe {
         (col("id") % 1000).as("user_id"),
         (col("id") % 9973).as("value_c"),
         col("id").as("h"))
-      // two sink tiers: 64 and 256 epochs of accumulated docs — the fold's
-      // epoch cost must track the tier while the bucketed chunks stay flat
-      for (epochsHeld <- Seq(64, 256)) {
+      // the fold's epoch cost must track the sink's epochs while the
+      // bucketed chunks stay flat
+      ladder(64, 256) { epochsHeld =>
         val sinkRows = 100000L * epochsHeld
         val tag = s"${epochsHeld}ep"
         val bDir = s"/tmp/scale/bigsink_hb_$tag"
@@ -1349,47 +1327,49 @@ object ScaleProbe {
         val chunks = graft.streaming.Incremental.chunkRanges(
           sinkRows - 10000L, sinkRows + 90000L, 20000L)
         chunks.zipWithIndex.foreach { case ((lo, hi), i) =>
-          measured(s"hb-chunk$i $tag [${lo},${hi})") {
+          time(s"hb-chunk$i $tag [${lo},${hi})") {
             Merge.upsertPartitionedByHeight(spark, bDir,
               shape(spark.range(lo, hi).toDF("id")), "_key", Merge.Ignore,
               "h", "h", width)
+            hi - lo
           }
         }
         chunks.zipWithIndex.foreach { case ((lo, hi), i) =>
-          measured(s"delta-append$i $tag [${lo},${hi})") {
+          time(s"delta-append$i $tag [${lo},${hi})") {
             Merge.appendDelta(spark, dDir, shape(spark.range(lo, hi).toDF("id")))
+            hi - lo
           }
         }
         // counter calibration: a forced full scan of the base (crc over
         // the wide _key column defeats column pruning) — the fold's
         // bytes-read number is only meaningful relative to this
-        measured(s"calibration $tag: full scan of the ${sinkRows / 1000000}M-doc base") {
+        time(s"calibration $tag: full scan of the ${sinkRows / 1000000}M-doc base") {
           spark.read.parquet(dDir)
             .agg(sum(crc32(col("_key"))), sum(col("h"))).head()
-          ()
+          sinkRows
         }
-        measured(s"delta-epoch-fold $tag (the O(sink) step)") {
+        time(s"delta-epoch-fold $tag (the O(sink) step)") {
           Merge.finalizeDeltas(spark, dDir, "_key", Merge.Ignore, "h")
+          sinkRows + 90000L
         }
         // both forms must land on the same logical state: identical doc
         // count and content checksums
-        val probe1 = spark.read.parquet(bDir)
-          .agg(count(lit(1)), sum(crc32(col("_key"))), sum(col("h")))
-          .head()
-        val probe2 = spark.read.parquet(dDir)
-          .agg(count(lit(1)), sum(crc32(col("_key"))), sum(col("h")))
-          .head()
-        require(probe1 == probe2,
-          s"sink end states diverged: bucketed=$probe1 delta=$probe2")
-        println(s"[scale] sinkbig $tag end-state check OK: " +
-          s"${probe1.getLong(0)} docs, checksums equal")
+        time(s"end-state check $tag (bucketed == delta)") {
+          def state(dir: String) = spark.read.parquet(dir)
+            .agg(count(lit(1)), sum(crc32(col("_key"))), sum(col("h")))
+            .head()
+          val (bucketed, delta) = (state(bDir), state(dDir))
+          require(bucketed == delta,
+            s"sink end states diverged: bucketed=$bucketed delta=$delta")
+          bucketed.getLong(0)
+        }
         spark.catalog.clearCache()
       }
     }
     // Top-k physical forms at large candidate fan-in: the window form
     // shuffles every scored row; the partial-agg form crosses the
     // exchange with ≤ k rows per (group, map task).
-    if (want("topk")) for (factor <- Seq(16, 64)) {
+    if (want("topk")) ladder(16, 64) { factor =>
       // self-contained: don't depend on the "ann" section having run first
       val emb = materialize(embAt(spark, d, factor), s"/tmp/scale/emb$factor")
       val q = emb.filter(col("vec_id") % 1000000L < 20)
@@ -1428,7 +1408,7 @@ object ScaleProbe {
     // band buckets. Batch = the 1× corpus re-ingested under fresh ids
     // (every doc an exact near-dup of its standing origin — maximal
     // honest match volume).
-    if (want("splitreg")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("splitreg")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
       time(s"split registry build (sigs+labels) ${factor}x (${5000L * factor} docs)") {
         TextDedup.minhashSignatures(docs, "doc_id", "text", 3, 16)
@@ -1456,66 +1436,15 @@ object ScaleProbe {
       }
       graft.Caches.clearAll(spark)
     }
-    // q162's economics, measured: with the postings registry
-    // MATERIALIZED once, serving a fixed query set must cost far less
-    // than the rebuild that re-tokenizes the corpus per query batch —
-    // and the gap must WIDEN with corpus growth (tokenization is the
-    // corpus-proportional term the registry amortizes away; the serve
-    // path still pays the df/dl rollup scan, its honest floor).
-    if (want("bm25reg")) for (factor <- Seq(1, 4, 16, 64)) {
-      val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
-      val qFixed = docs.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
-      time(s"bm25 postings build+materialize ${factor}x (${5000L * factor} docs)") {
-        TermStats.bm25Postings(docs, "doc_id", "text")
-          .write.mode("overwrite").parquet(s"/tmp/scale/bmpost$factor")
-        spark.read.parquet(s"/tmp/scale/bmpost$factor").count()
-      }
-      time(s"bm25 serve-from-registry fixed-200-queries ${factor}x") {
-        TermStats.bm25TopKFromPostings(
-          spark.read.parquet(s"/tmp/scale/bmpost$factor"), qFixed,
-          "q_id", "qt", 5).count()
-      }
-      graft.Caches.clearAll(spark)
-      time(s"bm25 full-rebuild fixed-200-queries ${factor}x") {
-        TermStats.bm25TopK(docs, qFixed, "doc_id", "text", "q_id", "qt", 5)
-          .count()
-      }
-      graft.Caches.clearAll(spark)
-      // the fully-materialized form: stats prebuilt at ingest, serve
-      // pays query-footprint joins only
-      time(s"bm25 stats build+materialize ${factor}x") {
-        val (dfq, dls, corp) = TermStats.bm25Stats(
-          spark.read.parquet(s"/tmp/scale/bmpost$factor"))
-        dfq.write.mode("overwrite").parquet(s"/tmp/scale/bmdf$factor")
-        dls.write.mode("overwrite").parquet(s"/tmp/scale/bmdl$factor")
-        corp.write.mode("overwrite").parquet(s"/tmp/scale/bmcorp$factor")
-        spark.read.parquet(s"/tmp/scale/bmdf$factor").count()
-      }
-      time(s"bm25 serve-from-index fixed-200-queries ${factor}x") {
-        TermStats.bm25TopKFromIndex(
-          spark.read.parquet(s"/tmp/scale/bmpost$factor"),
-          spark.read.parquet(s"/tmp/scale/bmdf$factor"),
-          spark.read.parquet(s"/tmp/scale/bmdl$factor"),
-          spark.read.parquet(s"/tmp/scale/bmcorp$factor"),
-          qFixed, "q_id", "qt", 5).count()
-      }
-      graft.Caches.clearAll(spark)
-    }
-    if (want("monitor")) for (factor <- Seq(1, 4, 16, 64)) {
+    if (want("monitor")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor), s"/tmp/scale/docs$factor")
       val nd = 5000L * factor
-      val qFixed = docs.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qFixed = queriesOf(docs, col("doc_id") < 200)
       time(s"bm25 fixed-200-queries ${factor}x (${nd} docs)") {
         TermStats.bm25TopK(docs, qFixed, "doc_id", "text", "q_id", "qt", 5)
           .count()
       }
-      val qGrow = docs.filter(col("doc_id") % 1000L === 0)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qGrow = queriesOf(docs, col("doc_id") % 1000L === 0)
       time(s"bm25 growing-queries ${factor}x (${5 * factor} q/replica)") {
         TermStats.bm25TopK(docs, qGrow, "doc_id", "text", "q_id", "qt", 5)
           .count()
@@ -1546,26 +1475,17 @@ object ScaleProbe {
       }
       spark.catalog.clearCache()
     }
-    // Factor list override for order/position A/Bs (e.g.
-    // SPARK_GRAFT_PROBE_FACTORS=64,16 distinguishes a data-shape effect
-    // from accumulated-session state); applies to the sections below
-    // that read it, never to the established probe curves above.
-    val probeFactors = sys.env.get("SPARK_GRAFT_PROBE_FACTORS")
-      .map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(1, 4, 16, 64))
     // Retrieval-quality family (q167/q168/q169): what grows with the
     // corpus and what stays query-footprint. RM3 at probe scale pays two
     // corpus-stat rollups per call (the bm25reg finding — a standing
     // deployment materializes postings+stats and pays only the term
     // joins); the MMR split shows the greedy re-rank is
     // corpus-independent once the candidate leg is paid.
-    if (want("retrieval")) for (factor <- probeFactors) {
+    if (want("retrieval")) ladder(1, 4, 16, 64) { factor =>
       val docs = materialize(docsAt(spark, d, factor),
         s"/tmp/scale/docs$factor")
       val nd = 5000L * factor
-      val qFixed = docs.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qFixed = queriesOf(docs, col("doc_id") < 200)
       time(s"rm3 two-pass fixed-200-queries ${factor}x ($nd docs)") {
         val postings = TermStats.bm25Postings(docs, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1585,9 +1505,7 @@ object ScaleProbe {
         } finally { postings.unpersist(); () }
       }
       time(s"ndcg grading growing-queries ${factor}x (${5 * factor} q)") {
-        val qGrow = docs.filter(col("doc_id") % 1000L === 0)
-          .select(col("doc_id").as("q_id"),
-            slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+        val qGrow = queriesOf(docs, col("doc_id") % 1000L === 0)
         val lists = TermStats.bm25TopK(docs, qGrow, "doc_id", "text",
             "q_id", "qt", 5)
           .withColumn("rel", when(col("doc") === col("q"), lit(5))
@@ -1634,14 +1552,14 @@ object ScaleProbe {
     // peels) while the per-round degree aggregate + two restrictions
     // scale with |E| — the probe isolates per-round shuffle cost from
     // convergence depth, the axis that actually grows at 100 TB.
-    if (want("kcore")) for (factor <- probeFactors) {
+    if (want("kcore")) ladder(1, 4, 16, 64) { factor =>
       val base = graft.queries.Graphs.edges(spark, d)
         .filter(col("w") <= 5000L).select(col("src"), col("dst")).distinct()
       val mega = materialize(
-        (0 until factor).map { i =>
+        replicas(factor) { i =>
           base.select(concat(col("src"), lit("#" + i)).as("src"),
             concat(col("dst"), lit("#" + i)).as("dst"))
-        }.reduce(_ unionByName _), s"/tmp/scale/kcore$factor")
+        }, s"/tmp/scale/kcore$factor")
       val m = mega.count()
       time(s"kcore k=3 ${factor}x ($m edges)") {
         graft.operators.KCore.kCore(mega, "src", "dst", k = 3).count()
@@ -1651,7 +1569,7 @@ object ScaleProbe {
     // Projection/triangle family (q171–q174): disjoint replica prefixes
     // keep per-left expansion and per-node degrees CONSTANT, so the
     // curves read the |E|-proportional join/aggregate cost in isolation.
-    if (want("cooccur")) for (factor <- probeFactors) {
+    if (want("cooccur")) ladder(1, 4, 16, 64) { factor =>
       import graft.operators.Cooccurrence
       val base = graft.queries.Graphs.edges(spark, d)
         .filter(col("w") <= 5000L).select(col("src"), col("dst")).distinct()
@@ -1661,10 +1579,10 @@ object ScaleProbe {
           when(col("src").startsWith("c"), col("dst")).otherwise(col("src"))
             .as("supp"))
       val mega = materialize(
-        (0 until factor).map { i =>
+        replicas(factor) { i =>
           base.select(concat(col("cust"), lit("#" + i)).as("cust"),
             concat(col("supp"), lit("#" + i)).as("supp"))
-        }.reduce(_ unionByName _), s"/tmp/scale/cooccur$factor")
+        }, s"/tmp/scale/cooccur$factor")
       val m = mega.count()
       val pj = Cooccurrence.project(mega, "cust", "supp", maxLeftDeg = 32)
         .persist()
@@ -1699,15 +1617,15 @@ object ScaleProbe {
     // Walk family (q178–q180): disjoint graph replicas — walk count and
     // edge count grow linearly, per-node degrees constant, so the curves
     // read the per-step join cost and the distance-2 candidate volume.
-    if (want("walks")) for (factor <- probeFactors) {
+    if (want("walks")) ladder(1, 4, 16, 64) { factor =>
       import graft.operators.{Cooccurrence, Walks}
       val base = graft.queries.Graphs.edges(spark, d)
         .filter(col("w") <= 2000L).select(col("src"), col("dst")).distinct()
       val mega = materialize(
-        (0 until factor).map { i =>
+        replicas(factor) { i =>
           base.select(concat(col("src"), lit("#" + i)).as("src"),
             concat(col("dst"), lit("#" + i)).as("dst"))
-        }.reduce(_ unionByName _), s"/tmp/scale/walks$factor")
+        }, s"/tmp/scale/walks$factor")
       val m = mega.count()
       time(s"random walks ${factor}x ($m edges)") {
         Walks.randomWalks(mega, "src", "dst", walksPerNode = 2,
@@ -1741,16 +1659,16 @@ object ScaleProbe {
     // re-scopes labels per replica (suffix from the node's own #i),
     // emulating the 100× shape: label cardinality grows with the
     // corpus, per-label membership stays at the ≤25-city group count.
-    if (want("wl")) for (factor <- probeFactors) {
+    if (want("wl")) ladder(1, 4, 16, 64) { factor =>
       import graft.operators.Walks
       val baseE = graft.queries.Graphs.edges(spark, d)
         .filter(col("w") <= 2000L)
       val mega = materialize(
-        (0 until factor).map { i =>
+        replicas(factor) { i =>
           baseE.select(concat(col("src"), lit("#" + i)).as("src"),
             concat(col("dst"), lit("#" + i)).as("dst"),
             concat(col("city"), lit("#" + i)).as("city"))
-        }.reduce(_ unionByName _), s"/tmp/scale/wl$factor")
+        }, s"/tmp/scale/wl$factor")
       val edges = materialize(mega.select(col("src"), col("dst")).distinct(),
         s"/tmp/scale/wle$factor")
       val m = edges.count()
@@ -1776,34 +1694,6 @@ object ScaleProbe {
       wl.unpersist()
       spark.catalog.clearCache()
     }
-    // Curriculum registry fold (q188): per-STEP cost as the standing
-    // registry grows, arriving batch held FIXED (100k events) and the
-    // watermark at 90% — the steady state of a long-running run. The
-    // claim under test: the frozen prefix is split off by a filter (one
-    // scan, never re-sorted), stats are one tiny agg, and the re-rank
-    // pays only for the unserved tail + batch — so step cost should
-    // track registry size LINEARLY (the scan) with a small constant,
-    // not resort-of-everything.
-    if (want("curreg")) for (factor <- probeFactors) {
-      import graft.operators.Ranks
-      val w = Map("click" -> 4, "view" -> 2, "purchase" -> 1, "signup" -> 1,
-        "error" -> 1)
-      val standing = eventsAt(spark, d, factor)
-        .select(col("event_id"), col("event_type"))
-      val reg = materialize(
-        Ranks.orderRegistry(standing, "event_type", "event_id", "cr", w,
-          nBuckets = 64),
-        s"/tmp/scale/curreg$factor")
-      val n = reg.count()
-      val batch = eventsAt(spark, d, 1)
-        .select((col("event_id") + lit(900000000L)).as("event_id"),
-          col("event_type"))
-      time(s"extendRegistry step ${factor}x ($n standing, 100k batch, w=0.9)") {
-        Ranks.extendRegistry(reg, batch, "event_type", "event_id", "cr", w,
-          servedRows = n * 9 / 10, nBuckets = 64).count()
-      }
-      spark.catalog.clearCache()
-    }
     // Zipf-tail text probe (r16 verdict item): the driver's synthetic
     // documents have a DENSE vocabulary (median term df ≈ 77% of docs —
     // no tail), which stresses BM25/RM3 candidate volume but NOT the
@@ -1813,35 +1703,23 @@ object ScaleProbe {
     // Zipf(s≈1) — head term in nearly every doc, median type df ≈ 1)
     // and runs the bm25 / rm3 / minhash machinery over it, recording
     // vocab shape + candidate volumes alongside wall.
-    if (want("zipf")) for (factor <- probeFactors) {
-      import graft.operators.{TermStats, TextDedup}
+    if (want("zipf")) ladder(1, 4, 16, 64) { factor =>
       val nDocs = 10000L * factor
-      val vocab = 50000
-      val len = 60
-      // token j of doc i: u = hash(i,j)/2^32 in [0,1); rank =
-      // floor(exp(u·ln(V))) in [1, V] — deterministic, row-local, no
-      // lookup table. P(rank ≤ k) = ln(k)/ln(V): the Zipf(1) CDF.
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(1), lit(len)), { j =>
-            val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
-              .cast("double") / 1000000.0
-            concat(lit("t"), least(lit(vocab.toLong),
-              exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
-          })).as("text"))
+      val docs = zipfDocs(spark, 0L, nDocs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       docs.count()
       val postings = TermStats.bm25Postings(docs, "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (dfq, dl, _) = TermStats.bm25Stats(postings)
-      val shape = dfq.agg(count(lit(1)).as("v"),
-        expr("percentile_approx(df, 0.5)").as("med"),
-        max(col("df")).as("mx")).head
-      println(s"[scale] zipf ${factor}x corpus: $nDocs docs, " +
-        s"vocab=${shape.get(0)}, median_df=${shape.get(1)}, " +
-        s"max_df=${shape.get(2)}")
-      val qs = docs.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      var shape: org.apache.spark.sql.Row = null
+      time(s"zipf corpus shape ${factor}x ($nDocs docs; rows = vocab)",
+          Seq("median_df" -> shape.get(1), "max_df" -> shape.get(2))) {
+        shape = dfq.agg(count(lit(1)).as("v"),
+          expr("percentile_approx(df, 0.5)").as("med"),
+          max(col("df")).as("mx")).head()
+        shape.getLong(0)
+      }
+      val qs = queriesOf(docs, col("doc_id") % 100 === 0)
       val corp = dl.agg(count(lit(1)).as("n_docs"),
         sum(col("dl")).as("a_tok"))
       time(s"zipf bm25 top-5 ${factor}x (${nDocs / 100} queries)") {
@@ -1893,12 +1771,15 @@ object ScaleProbe {
       def recall(served: org.apache.spark.sql.DataFrame): Long =
         served.select(col("q"), col("doc")).join(exact5, Seq("q", "doc"))
           .count() * 100 / math.max(1L, nExact)
-      val rP = recall(TermStats.bm25TopKPruned(postings, dfq, dl, corp,
-        qsSmall, "q_id", "qt", k = 5, capSharePm = 10000L))
-      val rI = recall(TermStats.bm25TopKImpact(trunc, postings, dfq, dl,
-        corp, qsSmall, "q_id", "qt", k = 5))
-      println(s"[scale] zipf recall@5 vs exact (subsample): " +
-        s"pruned=$rP% impact=$rI%")
+      var pruned, impact = 0L
+      time(s"zipf recall@5 vs exact (subsample) ${factor}x",
+          Seq("pruned_recall_pct" -> pruned, "impact_recall_pct" -> impact)) {
+        pruned = recall(TermStats.bm25TopKPruned(postings, dfq, dl, corp,
+          qsSmall, "q_id", "qt", k = 5, capSharePm = 10000L))
+        impact = recall(TermStats.bm25TopKImpact(trunc, postings, dfq, dl,
+          corp, qsSmall, "q_id", "qt", k = 5))
+        nExact
+      }
       docs.unpersist(); postings.unpersist(); trunc.unpersist()
       qsSmall.unpersist(); exact5.unpersist()
       spark.catalog.clearCache()
@@ -1908,18 +1789,9 @@ object ScaleProbe {
     // section measures the knob directly — recall and serve wall vs m
     // on one corpus (factor×10k docs), pinning the claim that m buys
     // recall back at serve cost that stays far below full scoring.
-    if (want("zipfm")) for (factor <- probeFactors) {
-      import graft.operators.TermStats
+    if (want("zipfm")) ladder(1, 4, 16, 64) { factor =>
       val nDocs = 10000L * factor
-      val vocab = 50000
-      val len = 60
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(1), lit(len)), { j =>
-            val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
-              .cast("double") / 1000000.0
-            concat(lit("t"), least(lit(vocab.toLong),
-              exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
-          })).as("text"))
+      val docs = zipfDocs(spark, 0L, nDocs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       docs.count()
       val postings = TermStats.bm25Postings(docs, "doc_id", "text")
@@ -1927,9 +1799,7 @@ object ScaleProbe {
       val (dfq, dl0, _) = TermStats.bm25Stats(postings)
       val dl = dl0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val corp = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("a_tok"))
-      val qs = docs.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qs = queriesOf(docs, col("doc_id") % 100 === 0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val qsSmall = qs.filter(col("q_id") % 1000 === 0)
       val exact5 = TermStats.bm25TopKFromIndex(postings, dfq, dl, corp,
@@ -1949,11 +1819,15 @@ object ScaleProbe {
           TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp, qs,
             "q_id", "qt", k = 5).count()
         }
-        val r = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
-            qsSmall, "q_id", "qt", k = 5)
-          .select(col("q"), col("doc")).join(exact5, Seq("q", "doc"))
-          .count() * 100 / math.max(1L, nExact)
-        println(s"[scale] zipfm $tag recall@5 = $r%")
+        var hits = 0L
+        time(s"zipfm impact $tag recall@5 ${factor}x (subsample)",
+            Seq("recall_pct" -> hits * 100 / math.max(1L, nExact))) {
+          hits = TermStats.bm25TopKImpact(trunc, postings, dfq, dl, corp,
+              qsSmall, "q_id", "qt", k = 5)
+            .select(col("q"), col("doc")).join(exact5, Seq("q", "doc"))
+            .count()
+          hits
+        }
         trunc.unpersist()
       }
       docs.unpersist(); postings.unpersist(); dl.unpersist()
@@ -1967,22 +1841,11 @@ object ScaleProbe {
     // rollups and the registry read now carry a huge sparse vocab table.
     // Fixed query set (the serve-side constant), corpus grown by factor;
     // the crossover = where (rebuild − registry) > 0 and by how much.
-    if (want("zipfreg")) for (factor <- probeFactors) {
-      import graft.operators.TermStats
+    if (want("zipfreg")) ladder(1, 4, 16, 64) { factor =>
       val nDocs = 10000L * factor
-      val vocab = 50000
-      val len = 60
-      val docs = spark.range(nDocs).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(1), lit(len)), { j =>
-            val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
-              .cast("double") / 1000000.0
-            concat(lit("t"), least(lit(vocab.toLong),
-              exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
-          })).as("text"))
+      val docs = zipfDocs(spark, 0L, nDocs)
       val docsM = materialize(docs, s"/tmp/scale/zrdocs$factor")
-      val qFixed = docsM.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qFixed = queriesOf(docsM, col("doc_id") < 200)
       time(s"zipfreg postings build+materialize ${factor}x ($nDocs docs)") {
         TermStats.bm25Postings(docsM, "doc_id", "text")
           .write.mode("overwrite").parquet(s"/tmp/scale/zrpost$factor")
@@ -2024,9 +1887,7 @@ object ScaleProbe {
       // stats/ + corpus/ delta logs materialized at ingest, the registry
       // serve must track the serve-from-index (postings+stats) flat row.
       val ireg = s"/tmp/scale/zrireg$factor"
-      val iregPath = new org.apache.hadoop.fs.Path(ireg)
-      iregPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(iregPath, true)
+      delete(ireg)
       time(s"zipfreg registry ingest ${factor}x ($nDocs docs)") {
         graft.streaming.Incremental.impactBatchIngest(spark, ireg, docsM,
           "doc_id", "text", epoch = 0L)
@@ -2056,15 +1917,12 @@ object ScaleProbe {
     // the growth is the calibration) and a join-type audit of the
     // executed calibrated-depth plan (any SMJ against the postings scan
     // = explanation (b)). Requires a prior `zipfreg` run's artifacts.
-    if (want("zipfserve")) for (factor <- probeFactors) {
-      import graft.operators.{Dedup, TermStats}
+    if (want("zipfserve")) ladder(1, 4, 16, 64) { factor =>
       val ireg = s"/tmp/scale/zrireg$factor"
       require(new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory,
         s"zipfserve needs a prior zipfreg run (missing zrdocs$factor)")
       val docsM = spark.read.parquet(s"/tmp/scale/zrdocs$factor")
-      val qFixed = docsM.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qFixed = queriesOf(docsM, col("doc_id") < 200)
       val trunc = graft.streaming.Incremental.impactIndexRegistry(spark, ireg)
       val (rp, rdf, rdl, rcorp) =
         graft.streaming.Incremental.impactIndexStats(spark, ireg)
@@ -2084,14 +1942,16 @@ object ScaleProbe {
       graft.Caches.clearAll(spark)
       val servedCal = TermStats.bm25TopKImpact(trunc, rp, rdf, rdl, rcorp,
         qFixed, "q_id", "qt", 5)
-      time(s"zipfserve calibrated-m registry serve ${factor}x (200 q)") {
+      // the executed plan's join types ride on the row: any SMJ against
+      // the postings scan is explanation (b)
+      def joins = {
+        val plan = servedCal.queryExecution.executedPlan.toString
+        Seq("smj" -> "SortMergeJoin", "bhj" -> "BroadcastHashJoin",
+          "shj" -> "ShuffledHashJoin").map { case (k, j) => k -> j.r.findAllIn(plan).size }
+      }
+      time(s"zipfserve calibrated-m registry serve ${factor}x (200 q)", joins) {
         servedCal.count()
       }
-      val plan = servedCal.queryExecution.executedPlan.toString
-      def n(pat: String) = pat.r.findAllIn(plan).size
-      println(s"[scale] zipfserve ${factor}x calibrated plan: " +
-        s"SMJ=${n("SortMergeJoin")} BHJ=${n("BroadcastHashJoin")} " +
-        s"SHJ=${n("ShuffledHashJoin")}")
       graft.Caches.clearAll(spark)
     }
     // The 100 TB layout for the impact serve (r19): the zipfserve audit
@@ -2106,29 +1966,19 @@ object ScaleProbe {
     // postings/dl doc-bucketed, the truncated index term-bucketed,
     // same serve, shuffle counts + wall compared. Requires a prior
     // `zipfreg` run's artifacts.
-    if (want("zipfbucket")) for (factor <- probeFactors) {
-      import graft.operators.TermStats
+    if (want("zipfbucket")) ladder(1, 4, 16, 64) { factor =>
       import graft.sources.Bucketing
       val ireg = s"/tmp/scale/zrireg$factor"
       require(new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory,
         s"zipfbucket needs a prior zipfreg run (missing zrdocs$factor)")
       val docsM = spark.read.parquet(s"/tmp/scale/zrdocs$factor")
-      val qFixed = docsM.filter(col("doc_id") < 200)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qFixed = queriesOf(docsM, col("doc_id") < 200)
       val (rp, rdf, rdl, rcorp) =
         graft.streaming.Incremental.impactIndexStats(spark, ireg)
       val trunc = graft.streaming.Incremental.impactIndexRegistry(spark, ireg)
-      // a fresh catalog over a surviving warehouse dir refuses CTAS on
-      // the orphaned location — same torn state publishImpactServeTables
-      // clears; do it here or the probe dies on its second-ever run
-      for (t <- Seq(s"zb_post_$factor", s"zb_dl_$factor", s"zb_imp_$factor")) {
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-        val lfs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (lfs.exists(loc)) lfs.delete(loc, true)
-      }
+      // the torn state publishImpactServeTables also clears, or the
+      // probe dies on its second-ever run
+      Seq(s"zb_post_$factor", s"zb_dl_$factor", s"zb_imp_$factor").foreach(dropTable)
       time(s"zipfbucket bucketed-table writes ${factor}x (one-time layout cost)") {
         Bucketing.writeBucketed(rp, s"zb_post_$factor", 32, "doc")
         Bucketing.writeBucketed(rdl, s"zb_dl_$factor", 32, "doc")
@@ -2138,17 +1988,20 @@ object ScaleProbe {
       graft.Caches.clearAll(spark)
       val flatServe = TermStats.bm25TopKImpact(trunc, rp, rdf, rdl, rcorp,
         qFixed, "q_id", "qt", 5)
-      time(s"zipfbucket FLAT serve ${factor}x (200 q)") { flatServe.count() }
-      val flatShuffles = Bucketing.countShuffles(flatServe)
+      // the exchange-count difference between the two rows is the
+      // registry-side exchanges the layout removed
+      time(s"zipfbucket FLAT serve ${factor}x (200 q)",
+          Seq("exchanges" -> Bucketing.countShuffles(flatServe))) {
+        flatServe.count()
+      }
       graft.Caches.clearAll(spark)
       val bServe = TermStats.bm25TopKImpact(
         spark.table(s"zb_imp_$factor"), spark.table(s"zb_post_$factor"),
         rdf, spark.table(s"zb_dl_$factor"), rcorp, qFixed, "q_id", "qt", 5)
-      time(s"zipfbucket BUCKETED serve ${factor}x (200 q)") { bServe.count() }
-      val bShuffles = Bucketing.countShuffles(bServe)
-      println(s"[scale] zipfbucket ${factor}x shuffles: flat=$flatShuffles " +
-        s"bucketed=$bShuffles (difference = registry-side exchanges the " +
-        "layout removed)")
+      time(s"zipfbucket BUCKETED serve ${factor}x (200 q)",
+          Seq("exchanges" -> Bucketing.countShuffles(bServe))) {
+        bServe.count()
+      }
       graft.Caches.clearAll(spark)
     }
     // Retention economics (r20, VERDICT r19 #1/#6): price the epoch
@@ -2159,7 +2012,7 @@ object ScaleProbe {
     // threshold → the truncated index rebuilds from survivors — the
     // cut's one corpus-proportional READ, amortized by the threshold
     // rule). Requires a prior `zipfreg` run's artifacts.
-    if (want("zipfretain")) for (factor <- probeFactors) {
+    if (want("zipfretain")) ladder(1, 4, 16, 64) { factor =>
       import graft.streaming.Incremental
       require(new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory,
         s"zipfretain needs a prior zipfreg run (missing zrdocs$factor)")
@@ -2167,11 +2020,7 @@ object ScaleProbe {
       val nDocs = 10000L * factor
       val quarter = nDocs / 4
       val reg = s"/tmp/scale/ztseg$factor"
-      locally {
-        val p = new org.apache.hadoop.fs.Path(reg)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
+      delete(reg)
       time(s"zipfretain ingest 4 epochs ${factor}x ($nDocs docs)") {
         for (e <- 0L until 4L)
           Incremental.impactBatchIngest(spark, reg,
@@ -2205,32 +2054,19 @@ object ScaleProbe {
     // across the factor ladder while cold grows, compaction is
     // O(current segment + delta-log), not O(registry).
     // Requires a prior `zipfreg` run's artifacts.
-    if (want("segcompact")) for (factor <- probeFactors) {
+    if (want("segcompact")) ladder(1, 4, 16, 64) { factor =>
       import graft.streaming.Incremental
       val nDocs = 10000L * factor
       // reuse a prior zipfreg run's corpus, else materialize the same
       // Zipf shape (identical formula) — this probe must be runnable
       // standalone at a fresh boot
-      if (!new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory) {
-        val vocab = 50000
-        val len = 60
-        spark.range(nDocs).select(col("id").as("doc_id"),
-            concat_ws(" ", transform(sequence(lit(1), lit(len)), { j =>
-              val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
-                .cast("double") / 1000000.0
-              concat(lit("t"), least(lit(vocab.toLong),
-                exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
-            })).as("text"))
+      if (!new java.io.File(s"/tmp/scale/zrdocs$factor").isDirectory)
+        zipfDocs(spark, 0L, nDocs)
           .write.mode("overwrite").parquet(s"/tmp/scale/zrdocs$factor")
-      }
       val docsM = spark.read.parquet(s"/tmp/scale/zrdocs$factor")
       val quarter = nDocs / 4
       val reg = s"/tmp/scale/zcseg$factor"
-      locally {
-        val p = new org.apache.hadoop.fs.Path(reg)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
+      delete(reg)
       for (e <- 0L until 4L)
         Incremental.impactBatchIngest(spark, reg,
           docsM.filter(col("doc_id") >= e * quarter &&
@@ -2268,7 +2104,6 @@ object ScaleProbe {
     // at the registered query's exact shape so the production number is
     // on record next to the pinned one.
     if (want("prunedcost")) {
-      import graft.operators.TermStats
       val docs = spark.read.parquet(s"$d/documents.parquet")
       val postings = materialize(
         TermStats.bm25Postings(docs, "doc_id", "text"),
@@ -2278,9 +2113,7 @@ object ScaleProbe {
       val dl = materialize(dl0, "/tmp/scale/pcdl")
       val corp = dl.agg(count(lit(1)).as("n_docs"),
         sum(col("dl")).as("a_tok"))
-      val qs = docs.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"),
-          slice(graft.functions.Text.tokens(col("text")), 1, 4).as("qt"))
+      val qs = queriesOf(docs, col("doc_id") % 100 === 0)
       for (pass <- 1 to 2) {
         graft.Caches.clearAll(spark)
         time(s"prunedcost pruned-serve-only pass$pass (50 q)") {
@@ -2314,26 +2147,13 @@ object ScaleProbe {
     // only the quantized-depth rebuild steps paying a postings-registry
     // scan. Uses the real streaming entry point via foreachBatch
     // equivalents: Merge/registry machinery identical.
-    if (want("impinc")) for (factor <- probeFactors) {
-      import graft.operators.TermStats
+    if (want("impinc")) ladder(1, 4, 16, 64) { factor =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val nStand = 10000L * factor
       val nBatch = 2000L
-      val vocab = 50000
-      val len = 60
-      def zdocs(from: Long, until: Long) =
-        spark.range(from, until).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(1), lit(len)), { j =>
-            val u = pmod(hash(col("id"), lit("z"), j), lit(1000000))
-              .cast("double") / 1000000.0
-            concat(lit("t"), least(lit(vocab.toLong),
-              exp(u * math.log(vocab.toDouble)).cast("long") + 1L))
-          })).as("text"))
       val reg = s"/tmp/scale/impinc$factor/reg"
       // fresh registry per run — a stale one anti-joins the seed away
-      val regRoot = new org.apache.hadoop.fs.Path(s"/tmp/scale/impinc$factor")
-      regRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(regRoot, true)
+      delete(s"/tmp/scale/impinc$factor")
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val input = MemoryStream[(Long, String)]
@@ -2344,7 +2164,7 @@ object ScaleProbe {
       try {
         // seed the standing corpus as one batch (this fold pays the
         // first build — excluded from the steady-state reading)
-        val seed = zdocs(0L, nStand)
+        val seed = zipfDocs(spark, 0L, nStand)
           .as[(Long, String)].collect()
         time(s"impinc seed ${factor}x ($nStand docs incl. first build)") {
           input.addData(seed.toIndexedSeq: _*)
@@ -2354,17 +2174,19 @@ object ScaleProbe {
         // registry — THE reading (flat across factors = the claim)
         for (b <- 0 until 3) {
           val from = nStand + b * nBatch
-          val batch = zdocs(from, from + nBatch).as[(Long, String)].collect()
+          val batch = zipfDocs(spark, from, from + nBatch)
+            .as[(Long, String)].collect()
           time(s"impinc fold#${b + 1} ${factor}x ($nBatch docs into $nStand+)") {
             input.addData(batch.toIndexedSeq: _*)
             query.processAllAvailable(); 1L
           }
         }
-        val meta = spark.read.parquet(s"$reg/meta")
-          .collect().head
-        println(s"[scale] impinc ${factor}x meta: m_built=${meta.get(0)} " +
-          s"n_docs=${meta.get(1)}; impact rows=" +
-          spark.read.parquet(s"$reg/impact").count())
+        var meta: org.apache.spark.sql.Row = null
+        time(s"impinc registry state ${factor}x (rows = impact rows)",
+            Seq("m_built" -> meta.get(0), "n_docs" -> meta.get(1))) {
+          meta = spark.read.parquet(s"$reg/meta").collect().head
+          spark.read.parquet(s"$reg/impact").count()
+        }
       } finally query.stop()
       spark.catalog.clearCache()
     }
@@ -2375,7 +2197,7 @@ object ScaleProbe {
     // prefix once and swaps only the 10% tail (write O(tail + batch)).
     // Both curves carry the same extendRegistry compute; the gap is pure
     // write amplification and should WIDEN linearly with factor.
-    if (want("curseg")) for (factor <- probeFactors) {
+    if (want("curseg")) ladder(1, 4, 16, 64) { factor =>
       import graft.operators.Ranks
       import graft.streaming.Incremental
       val w = Map("click" -> 4, "view" -> 2, "purchase" -> 1, "signup" -> 1,
@@ -2406,14 +2228,16 @@ object ScaleProbe {
         else 0L
       }
       val segFrozenBefore = duMb(s"$base/seg/frozen")
-      time(s"curriculum step MONOLITHIC ${factor}x ($n standing, w=0.9)") {
+      time(s"curriculum step MONOLITHIC ${factor}x ($n standing, w=0.9)",
+          Seq("wrote_mb" -> duMb(s"$base/mono"))) {
         val next = Ranks.extendRegistry(spark.read.parquet(s"$base/mono"),
           batch, "event_type", "event_id", "cs", w, served, nBuckets = 64)
         graft.operators.Merge.replaceParquet(spark, s"$base/mono", next)
         spark.read.parquet(s"$base/mono").count()
       }
-      println(s"[scale]   mono wrote ${duMb(s"$base/mono")} MB (full rewrite)")
-      time(s"curriculum step SEGMENTED  ${factor}x ($n standing, w=0.9)") {
+      time(s"curriculum step SEGMENTED  ${factor}x ($n standing, w=0.9)",
+          Seq("frozen_delta_mb" -> (duMb(s"$base/seg/frozen") - segFrozenBefore),
+            "tail_mb" -> duMb(s"$base/seg/tail"))) {
         val reg = Incremental.curriculumRegistry(spark, s"$base/seg")
         val next = Ranks.extendRegistry(reg, batch, "event_type",
             "event_id", "cs", w, served, nBuckets = 64)
@@ -2428,8 +2252,6 @@ object ScaleProbe {
         } finally { next.unpersist(); () }
         Incremental.curriculumRegistry(spark, s"$base/seg").count()
       }
-      println(s"[scale]   seg wrote ${duMb(s"$base/seg/frozen") -
-        segFrozenBefore} MB frozen delta + ${duMb(s"$base/seg/tail")} MB tail")
       spark.catalog.clearCache()
     }
     // No-straddle packing (q198): the mapPartitions fold's linearity.
@@ -2437,7 +2259,7 @@ object ScaleProbe {
     // secondary sort before it is the only super-constant stage, so the
     // curve should track the sort (n log n, shallow) — if it ever goes
     // superlinear beyond that, state is leaking across rows.
-    if (want("nostraddle")) for (factor <- probeFactors) {
+    if (want("nostraddle")) ladder(1, 4, 16, 64) { factor =>
       val ev = materialize(
         eventsAt(spark, d, factor).select(col("event_id"),
           (pmod(col("event_id"), lit(97L)) + 1L).as("cost")),
@@ -2455,7 +2277,7 @@ object ScaleProbe {
     // idle, one full per-group sort each); the bucketed form keeps
     // 5×nBuckets. The gap should WIDEN with factor; the closed-form
     // interleave position adds only broadcast arithmetic on top.
-    if (want("ranks")) for (factor <- probeFactors) {
+    if (want("ranks")) ladder(1, 4, 16, 64) { factor =>
       import org.apache.spark.sql.expressions.Window
       val ev = materialize(
         eventsAt(spark, d, factor).select(col("event_id"), col("event_type")),

@@ -82,7 +82,8 @@ class PlanSpec extends AnyFunSuite {
     // logical Window must be named here with a boundedness justification.
     // A new global window anywhere else fails this test and forces the
     // review q73 never got.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+    // Each query's plan comes from ContractSpec's shared sweep: one
+    // build per suite run.
     val allowed: Map[String, String] = Map(
       // Sampling's apportionment windows run over the per-group count
       // table (languages/domains/vocab — bounded, and since r16 ENFORCED
@@ -96,18 +97,19 @@ class PlanSpec extends AnyFunSuite {
       // window is over the nBuckets-row bucket aggregate (64 rows)
       "q192_global_shuffle" -> "bucket-offset window over nBuckets rows",
       "q193_mixing_quality" -> "composes q192/q185 (same bucket windows)")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, d).queryExecution.optimizedPlan
-        val globals = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-        if (globals.isEmpty) None
-        else if (!allowed.contains(name)) Some(s"$name (un-allowlisted)")
-        // allowlisted ≠ unguarded: the window input must still be an
-        // aggregate subtree (a raw-table global window is never OK)
-        else if (globals.exists(_.child.collectFirst {
-                   case a: Aggregate => a }.isEmpty))
-          Some(s"$name (global window over non-aggregated input)")
-        else None
+    val offenders = ContractSpec.runs.flatMap { case (name, run) =>
+      run.globalWindows match {
+        // a query whose function or plan throws is an offender too
+        case Left(err) => Some(s"$name ($err)")
+        case Right(globals) =>
+          if (globals.isEmpty) None
+          else if (!allowed.contains(name)) Some(s"$name (un-allowlisted)")
+          // allowlisted ≠ unguarded: the window input must still be an
+          // aggregate subtree (a raw-table global window is never OK)
+          else if (globals.contains(false))
+            Some(s"$name (global window over non-aggregated input)")
+          else None
+      }
     }
     assert(offenders.isEmpty,
       s"partition-less Window outside the justified allowlist (fix or " +
