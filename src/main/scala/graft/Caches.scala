@@ -16,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   *
   * `clearAll` drains both — after it, `sc.getPersistentRDDs` is empty
   * (pinned by CacheLifecycleSpec), so a loop over the query registry runs
-  * at steady storage memory.
+  * at steady storage memory. It leaves [[graft.sources.Tables]]' schema
+  * memo alone: that holds catalog metadata keyed by file listing, no data.
   */
 object Caches {
   def clearAll(spark: SparkSession): Unit = {

@@ -2,9 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 import java.time.{Instant, LocalDateTime, ZoneOffset}
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +18,9 @@ import graft.TestSpark
   * native-typed range pushdown of [[Tables.eventsExclusiveRangeUs]].
   * (Advice r10: the NTZ branch previously cast through the session zone —
   * correct only under UTC — and the computed `ts` column defeated parquet
-  * pushdown on time-range scans.)
+  * pushdown on time-range scans.) Also pins the schema memo: a reopen of
+  * unchanged files under unchanged confs runs no Spark job, and a
+  * rewrite or a conf flip is re-inferred.
   */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -114,5 +118,141 @@ class TablesSpec extends AnyFunSuite {
         s"encoding $enc: no pushed ts filter — PushedFilters=$pushed")
       assert(pushed != "[]", s"encoding $enc: empty PushedFilters")
     }
+  }
+
+  private val sc = spark.sparkContext
+
+  /** `body`'s result and the Spark jobs it started on this thread. Jobs
+    * are told apart by a local property; a sentinel job submitted after
+    * `body` marks the end, since the bus delivers job starts in order.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val tag = "graft.tables.spec"
+    val token = java.util.UUID.randomUUID.toString
+    val flush = s"$token-flush"
+    val seen = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.put)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, token)
+    try {
+      val out = body
+      sc.setLocalProperty(tag, flush)
+      sc.parallelize(Seq(0), 1).count()
+      val jobs = Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .map { t => assert(t != null, "sentinel job never reached the listener"); t }
+        .takeWhile(_ != flush).size
+      (out, jobs)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("a second open of an unchanged table runs no Spark job and reads the same table") {
+    val dir = tmpDir("memo")
+    spark.range(50).selectExpr("id", "cast(id % 7 as int) as k", "cast(id as string) as s")
+      .write.parquet(s"$dir/t.parquet")
+    val (first, inferJobs) = jobsOf(Tables(spark, dir, "t"))
+    assert(inferJobs >= 1, "the first open did not infer the schema")
+    val (second, jobs) = jobsOf(Tables(spark, dir, "t"))
+    assert(jobs == 0, s"a reopen of unchanged files ran $jobs jobs")
+    assert(second.schema == first.schema)
+    assert(rows(second) == rows(first) && rows(second).size == 50)
+  }
+
+  test("a table overwritten at the same path with another schema is re-inferred") {
+    val dir = tmpDir("rewrite")
+    val path = s"$dir/t.parquet"
+    spark.range(10).selectExpr("id", "cast(id as int) as v").write.parquet(path)
+    assert(Tables(spark, dir, "t").schema.map(_.dataType) == Seq(LongType, IntegerType))
+    // `v` changes type and `w` is added
+    spark.range(10).selectExpr("id", "cast(id as string) as v", "id * 2 as w")
+      .write.mode("overwrite").parquet(path)
+    val (df, jobs) = jobsOf(Tables(spark, dir, "t"))
+    assert(jobs >= 1, "the rewritten table was served from the memo")
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> LongType, "v" -> StringType, "w" -> LongType))
+    assert(rows(df.filter("id = 3")) == Seq("[3,3,6]"))
+  }
+
+  test("flipping nanosAsLong over the same TIMESTAMP(NANOS) files re-infers") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpDir("nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/n.parquet"))
+      .withConf(new Configuration()).withType(schema).build()
+    try nsValues.foreach(ns => writer.write(new SimpleGroupFactory(schema).newGroup().append("ts", ns)))
+    finally writer.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables(spark, dir, "n").schema("ts").dataType == LongType)
+      assert(jobsOf(Tables(spark, dir, "n"))._2 == 0)
+      spark.conf.set(key, "false")
+      // re-inferred: Spark has no non-legacy reading of TIMESTAMP(NANOS),
+      // so the open fails instead of returning the long schema
+      val err = intercept[Exception](Tables(spark, dir, "n"))
+      assert(err.getMessage.contains("NANOS"), err.getMessage)
+      spark.conf.set(key, "true")
+      val (df, jobs) = jobsOf(Tables(spark, dir, "n"))
+      assert(jobs == 0 && df.schema("ts").dataType == LongType)
+      assert(df.select("ts").as[Long].collect().sorted.toSeq == nsValues)
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("a reopen through eventsExclusiveRangeUs runs no Spark job") {
+    val dir = writeEncoded("ntz")
+    val lo = usValues.head
+    val hi = usValues.last
+    val first = Tables.eventsExclusiveRangeUs(spark, dir, lo, hi)
+    val (second, jobs) = jobsOf(Tables.eventsExclusiveRangeUs(spark, dir, lo, hi))
+    assert(jobs == 0, s"the reopen ran $jobs jobs")
+    assert(second.schema == first.schema)
+    assert(second.select("ts").as[Long].collect().toSeq == Seq(usValues(1) * 1000L))
+  }
+
+  test("four threads opening one table at once all get its schema") {
+    val dir = tmpDir("threads")
+    spark.range(20).selectExpr("id", "cast(id as double) as x")
+      .write.parquet(s"$dir/t.parquet")
+    val expected = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType)))
+    val start = new CountDownLatch(1)
+    val got = new LinkedBlockingQueue[Either[Throwable, StructType]]
+    val threads = (1 to 4).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        got.put(scala.util.Try(Tables(spark, dir, "t").schema).toEither)
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    val schemas = Iterator.fill(4)(got.take()).toSeq
+    assert(schemas.forall(_ == Right(expected)), s"schemas: $schemas")
+    assert(jobsOf(Tables(spark, dir, "t"))._2 == 0)
+  }
+
+  test("Tables.scala reads through exactly one spark.read site, the memo's") {
+    val f = new java.io.File("src/main/scala/graft/sources/Tables.scala")
+    assert(f.isFile, s"run from the project root: ${f.getAbsolutePath}")
+    val code = scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+      _.getLines().filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      }.toVector)
+    val sites = code.filter(_.contains("spark.read"))
+    assert(sites.map(_.trim) == Seq("val reader = spark.read"), s"spark.read sites: $sites")
   }
 }
